@@ -1,6 +1,6 @@
-"""Per-query isolation bench (guide §1.4) — bench.py is FROZEN for driver
-measurement, so all round-7 optimization measurements run here. Mirrors
-bench.py's session config and query construction exactly, but:
+"""Per-query isolation bench (guide §1.4). Builds the same headline query
+set as bench.py (``build_bench_set``, which bench.py imports) under the
+same session config, but:
 
 - runs only the queries named on the command line (default: all headline)
 - times each with the noop sink, configurable warm/repeat counts
@@ -29,21 +29,60 @@ def _force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def _settings() -> dict:
+    """Input amplification and kernel bucket settings, from the
+    environment.
+
+    - SPARK_GRAFT_REPL=N (default 64) amplifies the flagship input N×
+      deterministically: each replica gets a disjoint user_id range, which
+      keeps every per-entity timeline shape, so rows/sec measures kernel
+      compute rather than fixed stage overhead (REPL=8 undersold the
+      kernel ~3×).
+    - SPARK_GRAFT_IMG_REPL (default 8) does the same for the image table;
+      image_id is a string key, so replicas get a prefix.
+    - SPARK_GRAFT_BUCKETS pins the kernel bucket count. Bucket count is
+      JOB config, not cluster size: the scaling harness
+      (tools/bench_scaling) must hold it constant across its two
+      parallelism levels or the legs run different jobs.
+    - SPARK_GRAFT_IMG_DIR caches the synthetic image table.
+    """
+    return {
+        "repl": int(os.environ.get("SPARK_GRAFT_REPL", "64")),
+        "img_repl": int(os.environ.get("SPARK_GRAFT_IMG_REPL", "8")),
+        "buckets": os.environ.get("SPARK_GRAFT_BUCKETS"),
+        "img_dir": os.environ.get("SPARK_GRAFT_IMG_DIR", "/tmp/spark_pit_bench_images"),
+    }
+
+
+def input_rows(spark, sf_dir: str, with_images: bool) -> tuple[int, int]:
+    """Rows the amplified flagship and image flagship read; the image
+    count needs the image table, which the image flagship writes."""
+    cfg = _settings()
+    n_events = spark.read.parquet(f"{sf_dir}/events.parquet").count() * cfg["repl"]
+    n_img = 0
+    if with_images:
+        n_img = spark.read.parquet(f"{cfg['img_dir']}/images.parquet").count() * cfg["img_repl"]
+    return n_events, n_img
+
+
 def build_bench_set(spark, cpus: int):
-    """The same headline query set bench.py runs, built the same way."""
+    """The headline query set bench.py runs."""
     from pyspark.sql import functions as F
 
     from spark_pit.operators.pit import pit_features_bucketed
     from spark_pit.queries import EVENT_VOCAB, QUERIES
 
-    repl = int(os.environ.get("SPARK_GRAFT_REPL", "64"))
-    buckets_env = os.environ.get("SPARK_GRAFT_BUCKETS")
-    n_buckets_flagship = int(buckets_env) if buckets_env else cpus * 8
-    n_buckets_image = int(buckets_env) if buckets_env else cpus * 4
+    cfg = _settings()
+    repl, img_repl, img_dir = cfg["repl"], cfg["img_repl"], cfg["img_dir"]
+    n_buckets_flagship = int(cfg["buckets"]) if cfg["buckets"] else cpus * 8
+    n_buckets_image = int(cfg["buckets"]) if cfg["buckets"] else cpus * 4
 
     def _events(spark, sf_dir):
         ev = spark.read.parquet(f"{sf_dir}/events.parquet")
         if repl > 1:
+            # parallelize the amplification: the sf parquet is one small file
+            # (one scan task); without this the explode's shuffle write is a
+            # serial Amdahl term that poisons the scaling measurement
             ev = ev.repartition(cpus * 2)
             ev = ev.withColumn("__r", F.explode(F.lit(list(range(repl))))).select(
                 (F.col("user_id").cast("long")
@@ -65,10 +104,9 @@ def build_bench_set(spark, cpus: int):
             num_buckets=n_buckets_flagship,
         )
 
-    img_dir = os.environ.get("SPARK_GRAFT_IMG_DIR", "/tmp/spark_pit_bench_images")
-    img_repl = int(os.environ.get("SPARK_GRAFT_IMG_REPL", "8"))
-
     def _ensure_images(spark):
+        # the image-table flagship's own input shape, generated once and
+        # cached: payload encoding is generation cost, not query cost
         if not os.path.exists(f"{img_dir}/images.parquet"):
             from spark_pit.datagen import images_table, snapshots_table
 
@@ -80,6 +118,8 @@ def build_bench_set(spark, cpus: int):
             ).write.mode("overwrite").parquet(f"{img_dir}/snapshots.parquet")
 
     def _img_amplify(df):
+        # bytes are pruned pre-shuffle by the pipeline, so replication
+        # amplifies kernel work, not payload I/O
         if img_repl <= 1:
             return df
         df = df.repartition(cpus * 2)
@@ -110,7 +150,12 @@ def build_bench_set(spark, cpus: int):
         "autocorr": QUERIES["autocorr"],
         "asdc": QUERIES["asdc"],
         "ksc_triad": QUERIES["ksc_triad"],
+        # dedup marking, not pair emission: the sf0.1 documents table has a
+        # ~2,270-doc near-dup template cluster, so pair output is inherently
+        # quadratic (5.9M rows); marking is the 100 TB-shaped surface
         "minhash_dedup_mark": QUERIES["minhash_dedup_mark"],
+        # full clustering over the same table — linear star-edge candidates,
+        # so the 2,270-doc cluster costs O(cluster) edges + components
         "dedup_clusters": QUERIES["dedup_clusters"],
         "embedding_neardup": QUERIES["embedding_neardup"],
         "pricing_summary": QUERIES["pricing_summary"],

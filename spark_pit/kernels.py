@@ -73,6 +73,157 @@ def rolling_token_counts(codes: np.ndarray, n_tokens: int, width: int) -> np.nda
     return out / sizes[:, None]
 
 
+def segment_asof(
+    seg: np.ndarray, ts: np.ndarray,
+    snap_seg: np.ndarray, snap_ts: np.ndarray, snap_id: np.ndarray,
+) -> np.ndarray:
+    """For each event, the index into the snapshot arrays of the latest
+    snapshot of the same segment with snap_ts < ts (the largest snap_id
+    wins a timestamp tie); -1 when none. Inputs need no particular order.
+
+    Snapshot times are replaced by their rank among the distinct snapshot
+    times, so (segment, time) packs into one int64 key without overflow
+    and the match is one ``searchsorted`` over the sorted snapshot keys.
+    An event's key ranks its time by the count of distinct snapshot times
+    strictly below it, which is what makes the match strict."""
+    if len(snap_ts) == 0:
+        return np.full(len(ts), -1, dtype=np.int64)
+    times = np.unique(snap_ts)
+    span = len(times) + 1
+    s_key = snap_seg * span + np.searchsorted(times, snap_ts)
+    order = np.lexsort((snap_id, s_key))
+    pos = np.searchsorted(s_key[order], seg * span + np.searchsorted(times, ts)) - 1
+    hit = order[pos.clip(0)]
+    return np.where((pos >= 0) & (snap_seg[hit] == seg), hit, -1)
+
+
+def segment_features(
+    seg: np.ndarray,
+    ts: np.ndarray,
+    x: np.ndarray,
+    codes: np.ndarray,
+    n_tokens: int,
+    width: int,
+    gap_us: int,
+    snap_seg: np.ndarray,
+    snap_ts: np.ndarray,
+    snap_id: np.ndarray,
+    last_sess: np.ndarray | None = None,
+    open_run: np.ndarray | None = None,
+    bf_seed: np.ndarray | None = None,
+    next_first: np.ndarray | None = None,
+    margin: np.ndarray | None = None,
+) -> dict[str, np.ndarray]:
+    """The fused point-in-time feature block over many segments at once:
+    as-of match, lag-1/lead-1, gap sessions, backfill, trailing rolling
+    mean and trailing token composition.
+
+    Rows arrive sorted by (segment, ts, tiebreak). ``seg`` holds integer
+    segment codes, ``ts`` event microseconds, ``x`` the numeric channel
+    (NaN = null) and ``codes`` token codes (-1 = out of vocab). Every
+    window feature is a cumulative-array expression clipped at the row's
+    segment start, so no Python runs per segment.
+
+    A segment may be one slice of a longer timeline (a time chunk of one
+    entity). Then the caller supplies what precedes it:
+
+    - ``margin`` marks carried tail rows of earlier slices. They sort
+      first in their segment and only feed the trailing windows; no
+      feature is returned for them.
+    - Per-segment carries, indexed by segment code: ``last_sess`` (the
+      session id of the last earlier row, default -1), ``open_run``
+      (earlier rows of that session, default 0), ``bf_seed`` (last
+      earlier non-null value) and ``next_first`` (the next slice's first
+      value, for lead-1); both default to NaN.
+
+    With no carries and no margin rows every segment is a whole timeline.
+    Snapshots are (segment, µs, id) rows in any order; ids stay int64, so
+    ids above 2^53 come back exact. Needs at least one row.
+
+    Returns arrays for the non-margin rows in input order; ``wc`` is the
+    (rows, n_tokens) composition and ``asof_matched`` masks
+    ``asof_snapshot_id``.
+    """
+    n = len(seg)
+    idx = np.arange(n)
+    n_seg = int(seg.max()) + 1
+
+    def carry(a, fill):
+        return np.full(n_seg, fill) if a is None else a
+
+    last_sess, open_run = carry(last_sess, -1), carry(open_run, 0)
+    bf_seed, next_first = carry(bf_seed, np.nan), carry(next_first, np.nan)
+    if margin is None:
+        margin = np.zeros(n, dtype=bool)
+
+    new_seg = np.ones(n, dtype=bool)
+    new_seg[1:] = seg[1:] != seg[:-1]
+    starts = np.flatnonzero(new_seg)
+    ends = np.append(starts[1:] - 1, n - 1)
+    ordn = np.cumsum(new_seg) - 1  # row -> ordinal of its segment
+    seg_first = starts[ordn]
+
+    # sessions: a gap or a segment change breaks. A segment with margin
+    # rows continues the session of its last margin row (the anchor).
+    brk = new_seg.copy()
+    brk[1:] |= np.diff(ts) > gap_us
+    cum = np.cumsum(brk)
+    n_margin = np.add.reduceat(margin.astype(np.int64), starts)
+    anchor = (starts + np.maximum(n_margin - 1, 0))[ordn]
+    base = last_sess[seg[starts]] + (n_margin == 0)
+    session_id = cum - cum[anchor] + base[ordn]
+    sess_start = np.where(brk, idx, 0)
+    np.maximum.accumulate(sess_start, out=sess_start)
+    pos = idx - sess_start
+    cont = (cum == cum[anchor]) & (n_margin[ordn] > 0)
+    pos = np.where(cont, pos + open_run[seg] - (pos[anchor] + 1), pos)
+
+    lag1 = np.roll(x, 1)
+    lag1[new_seg] = np.nan
+    lead1 = np.roll(x, -1)
+    lead1[ends] = next_first[seg[ends]]
+
+    ffidx = np.where(~np.isnan(x), idx, -1)
+    np.maximum.accumulate(ffidx, out=ffidx)
+    bf = np.where(ffidx >= seg_first, x[ffidx.clip(0)], np.nan)
+    bf = np.where(np.isnan(bf), bf_seed[seg], bf)
+
+    body = np.flatnonzero(~margin)
+    w_s = np.maximum(body - width + 1, seg_first[body])
+    cs = np.concatenate([[0.0], np.nancumsum(np.nan_to_num(x))])
+    ccnt = np.concatenate([[0], np.cumsum(~np.isnan(x))])
+    rsum = cs[body + 1] - cs[w_s]
+    rcnt = (ccnt[body + 1] - ccnt[w_s]).astype(np.float64)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        roll_mean = np.where(rcnt > 0, rsum / rcnt, np.nan)
+
+    onehot = np.zeros((n, n_tokens), dtype=np.int64)
+    valid = codes >= 0
+    onehot[idx[valid], codes[valid]] = 1
+    ocs = np.concatenate([np.zeros((1, n_tokens)), np.cumsum(onehot, axis=0)])
+    wc = (ocs[body + 1] - ocs[w_s]) / (body + 1 - w_s)[:, None]
+
+    t_body = ts[body]
+    hit = segment_asof(seg[body], t_body, snap_seg, snap_ts, snap_id)
+    matched = hit >= 0
+    sid = np.zeros(len(body), dtype=np.int64)
+    sid[matched] = snap_id[hit[matched]]
+    age = np.full(len(body), np.nan)
+    age[matched] = (t_body[matched] - snap_ts[hit[matched]]) / 1e6
+    return {
+        "asof_snapshot_id": sid,
+        "asof_matched": matched,
+        "asof_age_sec": age,
+        "lag1": lag1[body],
+        "lead1": lead1[body],
+        "session_id": session_id[body],
+        "session_pos": pos[body],
+        "bf": bf[body],
+        "roll_mean": roll_mean,
+        "wc": wc,
+    }
+
+
 def lagk_pair_counts(codes: np.ndarray, n_tokens: int, k: int) -> np.ndarray:
     """CKSAAP/DPC analogue (feature.py:487-526, 528-555): counts of ordered
     token pairs (a, b) with b exactly k positions after a, over the whole

@@ -118,28 +118,6 @@ def minhash_signatures(
     return wide.select(id_col, F.expr(stack))
 
 
-def lsh_candidate_pairs(
-    sigs: DataFrame, id_col: str, bands: int = 4, rows_per_band: int = 4
-) -> DataFrame:
-    """Band the signature and equi-join on (band, band_signature) to get
-    candidate pairs (id_a < id_b). Band signature is the '-'-joined minhash
-    list in seed order — exact, no secondary hashing."""
-    banded = (
-        sigs.withColumn("band", (F.col("seed") / rows_per_band).cast("int"))
-        .groupBy(id_col, "band")
-        .agg(
-            F.concat_ws(
-                "-",
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("seed", "minhash"))),
-                    lambda s: s["minhash"].cast("string"),
-                ),
-            ).alias("band_sig")
-        )
-    )
-    return _band_join(banded, id_col)
-
-
 def _band_join(banded: DataFrame, id_col: str) -> DataFrame:
     a = banded.select(F.col(id_col).alias("id_a"), "band", "band_sig")
     b = banded.select(F.col(id_col).alias("id_b"), "band", "band_sig")

@@ -84,19 +84,6 @@ def phash_features(images: DataFrame, id_col: str = "image_id", phash_col: str =
     return base
 
 
-def phash_nibbles(images: DataFrame, id_col: str = "image_id", phash_col: str = "phash") -> DataFrame:
-    """Long-format nibble expansion: (id, nibble_idx 0..15, nibble 0..15).
-    posexplode of a transform — the XMAP per-position-encoding shape
-    (SURVEY.md §2.6) applied to the hash axis."""
-    nibbles = F.transform(
-        F.sequence(F.lit(0), F.lit(15)),
-        lambda i: F.shiftright(F.col(phash_col), (i * 4).cast("int")).bitwiseAND(F.lit(15)),
-    )
-    return images.select(
-        F.col(id_col), F.posexplode(nibbles).alias("nibble_idx", "nibble")
-    )
-
-
 def fidelity_check(images: DataFrame) -> DataFrame:
     """Decode → re-encode → byte-compare for lossless formats; decode-ok +
     idempotent re-encode for the lossy stand-in. The PSNR-vs-original gate

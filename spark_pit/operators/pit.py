@@ -10,15 +10,20 @@ Fuses into ONE per-entity pass — a single shuffle for the whole feature set:
 - trailing-window rolling mean of the numeric channel
 
 Physical shape (SURVEY.md §4 partitioning row): both sides are hash-
-partitioned on the entity by ``groupBy(entity).cogroup``, each group is
-sorted once in pandas, then every kernel (kernels.py) runs vectorized on the
-same sorted arrays. On a cluster the equivalent declarative plan would pay
-one exchange per window family; the fused cursor pays exactly one, which is
-the reason this operator exists.
+partitioned by entity bucket in one cogroup, each bucket is sorted once in
+pandas, then ``kernels.segment_features`` computes every feature
+vectorized over the sorted arrays. On a cluster the equivalent declarative
+plan would pay one exchange per window family; the fused kernel pays
+exactly one, which is the reason this operator exists. The salted skew
+path (spark_pit.operators.skew) calls the same kernel through the same
+``PitLayout``.
 
-A declarative twin (``pit_features_declarative``) builds the same columns
-from the windows/asof operator library; tests assert both paths are equal
-and the DuckDB oracle validates the declarative one.
+Two independent references build the same columns: the per-entity
+``pit_features_cursor`` and the declarative ``pit_features_declarative``
+(window/asof operator library). Tests assert the production paths equal
+the cursor and the cursor equals the declarative plan; the DuckDB oracle
+checks the production paths themselves (queries ``pit_fused``, bucketed,
+and ``pit_salted``).
 """
 
 from __future__ import annotations
@@ -143,6 +148,118 @@ def pit_features_cursor(
     return ev.groupBy(entity).cogroup(sn.groupBy(entity)).applyInPandas(kern, out_schema)
 
 
+class PitLayout:
+    """Column layout and Arrow boundary shared by the two cogroup kernels
+    (``pit_features_bucketed`` and the salted path in
+    spark_pit.operators.skew): the kernel input columns, the output schema,
+    the pandas decode/assemble steps around ``kernels.segment_features``
+    and the final JVM projection.
+
+    ``tiebreak`` may be one dedicated column (emitted in the output, e.g.
+    event_id) or a LIST of columns already among the kernel inputs
+    (numeric/token/passthrough). The list form gives a fully deterministic
+    sort without materializing a row_number() uid first, which would cost
+    a whole extra sort exchange before the kernel. ``passthrough`` columns
+    ride through the kernel untouched.
+    """
+
+    def __init__(self, events: DataFrame, entity: str, ts: str, numeric_col: str,
+                 token_col: str, vocab: list[str], tiebreak=None, passthrough=None):
+        if not vocab:
+            raise ValueError(
+                "vocab is empty: the window composition needs at least one token"
+            )
+        self.entity, self.ts = entity, ts
+        self.numeric_col, self.token_col = numeric_col, token_col
+        self.code = {t: i for i, t in enumerate(vocab)}
+        self.tb = [tiebreak] if isinstance(tiebreak, str) else list(tiebreak or [])
+        self.pt = list(passthrough or [])
+        shared = {numeric_col, token_col, *self.pt}
+        self.tb_ded = [c for c in self.tb if c not in shared]
+        self.wc = [f"__wc{i}" for i in range(len(vocab))]
+        # output column -> kernels.segment_features key
+        self.feats = {
+            "asof_snapshot_id": "asof_snapshot_id", "asof_age_sec": "asof_age_sec",
+            f"lag1_{numeric_col}": "lag1", f"lead1_{numeric_col}": "lead1",
+            "session_id": "session_id", "session_pos": "session_pos",
+            f"{numeric_col}_bf": "bf", f"roll_mean_{numeric_col}": "roll_mean",
+        }
+        self.inputs = [entity, ts, *self.tb_ded, numeric_col, token_col, *self.pt]
+        self.head = [entity, ts, *self.tb_ded, numeric_col, token_col]
+
+        def typ(c):
+            return events.schema[c].dataType.simpleString()
+
+        # the kernel emits the window composition as V separate double
+        # columns (zero-copy columnar Arrow); the caller-visible
+        # array<double> is assembled JVM-side in ``project``. A pandas
+        # object column of per-row ndarrays converts to an Arrow list per
+        # ELEMENT — at 64M rows that conversion dominated the kernel stage.
+        self.schema = ", ".join([
+            f"{entity} {typ(entity)}", f"{ts} timestamp_ntz",
+            *[f"{c} {typ(c)}" for c in self.tb_ded],
+            f"{numeric_col} double", f"{token_col} string",
+            "asof_snapshot_id long", "asof_age_sec double",
+            f"lag1_{numeric_col} double", f"lead1_{numeric_col} double",
+            "session_id long", "session_pos long",
+            f"{numeric_col}_bf double", f"roll_mean_{numeric_col} double",
+            *[f"{c} double" for c in self.wc],
+            *[f"{c} {typ(c)}" for c in self.pt],
+        ])
+
+    def empty(self) -> pd.DataFrame:
+        return pd.DataFrame(columns=[*self.head, *self.feats, *self.wc, *self.pt])
+
+    def codes(self, tokens) -> np.ndarray:
+        """Token codes, -1 for out-of-vocab and null tokens."""
+        return pd.Series(tokens, dtype=object).map(self.code).fillna(-1).to_numpy(np.int64)
+
+    def tiebreak_keys(self, pdf: pd.DataFrame) -> list[np.ndarray]:
+        """``np.lexsort`` keys for the tiebreak columns, least significant
+        first. String columns are factorized to order-preserving codes so
+        the sort never compares Python objects (~1.7x kernel wall on
+        string-keyed input); nulls sort LAST in every column, as the
+        salted path's JVM windows order them."""
+        keys = []
+        for c in reversed(self.tb):
+            col = pdf[c]
+            if col.dtype == object:
+                codes, uniq = pd.factorize(col, sort=True)
+                keys.append(np.where(codes < 0, len(uniq), codes))
+            else:
+                keys.append(col.to_numpy())
+        return keys
+
+    def frame(self, src: pd.DataFrame, f: dict) -> pd.DataFrame:
+        """Kernel output: the sorted source rows ``src`` plus the
+        ``kernels.segment_features`` columns ``f``."""
+        src = src.reset_index(drop=True)
+        out = pd.DataFrame({c: src[c] for c in self.head})
+        for name, key in self.feats.items():
+            out[name] = f[key]
+        # int64 values under a null mask: ids above 2^53 stay exact
+        out["asof_snapshot_id"] = pd.arrays.IntegerArray(
+            f["asof_snapshot_id"], ~f["asof_matched"]
+        )
+        for i, c in enumerate(self.wc):
+            out[c] = f["wc"][:, i]
+        for c in self.pt:
+            out[c] = src[c]
+        return out
+
+    def project(self, flat: DataFrame) -> DataFrame:
+        """Reassemble the ``wc`` array<double> contract from the kernel's
+        flat columns."""
+        return flat.select(
+            *self.head, *self.feats,
+            F.array(*[F.col(c) for c in self.wc]).alias("wc"), *self.pt,
+        )
+
+
+def to_us(series: pd.Series) -> np.ndarray:
+    return series.to_numpy().astype("datetime64[us]").astype(np.int64)
+
+
 def pit_features_bucketed(
     events: DataFrame,
     snapshots: DataFrame,
@@ -171,183 +288,37 @@ def pit_features_bucketed(
       a 1000-executor cluster; hot entities go through
       spark_pit.operators.skew instead.
 
-    Segment trick: rows sort by (entity, ts, tiebreak) inside the bucket;
-    ``seg_first[i]`` = index of row i's entity's first row. Every window
-    feature is then a cumulative-array expression clipped at seg_first, and
-    the as-of match is one ``pd.merge_asof(by=entity)`` (C implementation).
+    Each entity is one segment of ``kernels.segment_features``: rows sort
+    by (entity, ts, tiebreak) inside the bucket and every feature is a
+    cumulative-array expression clipped at the entity's first row.
     Equivalence with the per-entity cursor is asserted in tests.
     """
-    code = {t: i for i, t in enumerate(vocab)}
-    V = len(vocab)
-    ent_type = events.schema[entity].dataType.simpleString()
-    # tiebreak may be one dedicated column (emitted in the output, e.g.
-    # event_id) or a LIST of columns already among the kernel inputs
-    # (numeric/token/passthrough) — the list form lets callers get a fully
-    # deterministic sort without materializing a row_number() uid first,
-    # which would cost a whole extra sort exchange before the kernel
-    tb = [tiebreak] if isinstance(tiebreak, str) else list(tiebreak or [])
-    pt = list(passthrough or [])
-    shared = {numeric_col, token_col, *pt}
-    tb_ded = [c for c in tb if c not in shared]  # dedicated tiebreak columns
-    tb_field = "".join(
-        f"{c} {events.schema[c].dataType.simpleString()}, " for c in tb_ded
-    )
-    pt_fields = "".join(
-        f", {c} {events.schema[c].dataType.simpleString()}" for c in pt
-    )
-    # the kernel emits the window composition as V separate double columns
-    # (zero-copy columnar Arrow); the caller-visible array<double> is
-    # assembled JVM-side in the final projection. A pandas object column
-    # of per-row ndarrays converts to an Arrow list per ELEMENT — at 64M
-    # rows that conversion dominated the kernel stage (guide §4.1: control
-    # how efficiently columns cross the boundary).
-    wc_fields = ", ".join(f"__wc{i} double" for i in range(V))
-    out_schema = (
-        f"{entity} {ent_type}, {ts} timestamp_ntz, {tb_field}"
-        f"{numeric_col} double, {token_col} string, "
-        f"asof_snapshot_id long, asof_age_sec double, "
-        f"lag1_{numeric_col} double, lead1_{numeric_col} double, "
-        f"session_id long, session_pos long, "
-        f"{numeric_col}_bf double, roll_mean_{numeric_col} double, "
-        f"{wc_fields}" + pt_fields
-    )
+    lay = PitLayout(events, entity, ts, numeric_col, token_col, vocab, tiebreak, passthrough)
     gap_us = gap_seconds * 1_000_000
 
     def kern(ev: pd.DataFrame, sn: pd.DataFrame) -> pd.DataFrame:
         if len(ev) == 0:
-            return pd.DataFrame(
-                columns=[f.strip().split(" ")[0] for f in out_schema.split(",")]
-            )
-        # numeric lexsort instead of pandas sort_values: string keys
-        # (entity ids, token tiebreaks) are factorized to order-preserving
-        # codes first, so the per-bucket sort never compares Python objects
-        # — measured ~1.7x kernel wall on 6.4M-row string-keyed input
-        sort_keys = []
-        for c in reversed([entity, ts, *tb]):
-            col = ev[c]
-            if col.dtype == object:
-                codes, uniq = pd.factorize(col, sort=True)
-                # factorize maps nulls to -1 (sorts FIRST); remap to
-                # len(uniq) so nulls sort LAST, preserving the former
-                # sort_values NaN-last total order (judge round-2 advice)
-                sort_keys.append(np.where(codes < 0, len(uniq), codes))
-            else:
-                sort_keys.append(col.to_numpy())
-        ev = ev.iloc[np.lexsort(sort_keys)].reset_index(drop=True)
+            return lay.empty()
         n = len(ev)
-        ts_us = ev[ts].to_numpy().astype("datetime64[us]").astype(np.int64)
-        x = ev[numeric_col].to_numpy(dtype=np.float64)
-        codes = ev[token_col].map(code).fillna(-1).to_numpy(dtype=np.int64)
-
-        ids = ev[entity].to_numpy()
-        new_seg = np.empty(n, dtype=bool)
-        new_seg[0] = True
-        new_seg[1:] = ids[1:] != ids[:-1]
-        seg_first = np.where(new_seg, np.arange(n), 0)
-        np.maximum.accumulate(seg_first, out=seg_first)
-        # seg_last[i] = last index of row i's segment: map each segment's
-        # first index to its last, then gather through seg_first
-        ends = np.flatnonzero(np.append(new_seg[1:], True))
-        last_of_seg = np.zeros(n, dtype=np.int64)
-        last_of_seg[seg_first[ends]] = ends
-        seg_last = last_of_seg[seg_first]
-        idx_arr = np.arange(n)
-
-        out = pd.DataFrame(
-            {
-                entity: ev[entity],
-                ts: ev[ts],
-                **{c: ev[c] for c in tb_ded},
-                numeric_col: ev[numeric_col],
-                token_col: ev[token_col],
-            }
+        ent, _ = pd.factorize(np.concatenate([ev[entity].to_numpy(), sn["__se"].to_numpy()]))
+        seg, t = ent[:n], to_us(ev[ts])
+        order = np.lexsort((*lay.tiebreak_keys(ev), t, seg))
+        f = kernels.segment_features(
+            seg[order], t[order], ev[numeric_col].to_numpy(np.float64)[order],
+            lay.codes(ev[token_col])[order], len(lay.wc), width, gap_us,
+            ent[n:], to_us(sn[snap_ts]), sn[snap_id].to_numpy(np.int64),
         )
+        return lay.frame(ev.iloc[order], f)
 
-        # --- as-of via merge_asof (strictly before; max id wins ties) ---
-        if len(sn):
-            sn2 = sn.sort_values([snap_ts, snap_id], kind="stable")
-            left = pd.DataFrame({entity: ev[entity], ts: ev[ts], "__i": idx_arr})
-            left = left.sort_values(ts, kind="stable")
-            right = pd.DataFrame(
-                {
-                    entity: sn2["__se"] if "__se" in sn2 else sn2[entity],
-                    ts: sn2[snap_ts],
-                    "__sid": sn2[snap_id].to_numpy(dtype=np.int64),
-                    "__sts": sn2[snap_ts].to_numpy().astype("datetime64[us]").astype(np.int64),
-                }
-            ).sort_values(ts, kind="stable")
-            merged = pd.merge_asof(
-                left, right, on=ts, by=entity,
-                allow_exact_matches=False, direction="backward",
-            ).sort_values("__i", kind="stable")
-            out["asof_snapshot_id"] = merged["__sid"].astype("Int64").to_numpy()
-            age = (ts_us - merged["__sts"].to_numpy(dtype=np.float64)) / 1e6
-            age[merged["__sid"].isna().to_numpy()] = np.nan
-            out["asof_age_sec"] = age
-        else:
-            out["asof_snapshot_id"] = pd.array([pd.NA] * n, dtype="Int64")
-            out["asof_age_sec"] = np.nan
+    def bucket(c: str):
+        return F.pmod(F.xxhash64(F.col(c)), F.lit(num_buckets)).cast("int")
 
-        # --- lag/lead clipped at segment bounds ---
-        lag1 = np.roll(x, 1)
-        lag1[idx_arr == seg_first] = np.nan
-        lead1 = np.roll(x, -1)
-        lead1[idx_arr == seg_last] = np.nan
-        out[f"lag1_{numeric_col}"] = lag1
-        out[f"lead1_{numeric_col}"] = lead1
-
-        # --- sessionization: entity change forces a break ---
-        brk = np.empty(n, dtype=np.int64)
-        brk[0] = 1
-        brk[1:] = ((np.diff(ts_us) > gap_us) | new_seg[1:]).astype(np.int64)
-        gsid = np.cumsum(brk)  # 1-based global session counter
-        out["session_id"] = gsid - gsid[seg_first]
-        sess_start = np.where(brk > 0, idx_arr, 0)
-        np.maximum.accumulate(sess_start, out=sess_start)
-        out["session_pos"] = idx_arr - sess_start
-
-        # --- backfill clipped at segment start ---
-        ffidx = np.where(~np.isnan(x), idx_arr, -1)
-        np.maximum.accumulate(ffidx, out=ffidx)
-        out[f"{numeric_col}_bf"] = np.where(
-            ffidx >= seg_first, x[ffidx.clip(0)], np.nan
-        )
-
-        # --- rolling mean: window [max(i-w+1, seg_first), i] ---
-        w_s = np.maximum(idx_arr - width + 1, seg_first)
-        cs = np.concatenate([[0.0], np.nancumsum(np.nan_to_num(x))])
-        ccnt = np.concatenate([[0], np.cumsum(~np.isnan(x))])
-        rsum = cs[idx_arr + 1] - cs[w_s]
-        rcnt = (ccnt[idx_arr + 1] - ccnt[w_s]).astype(np.float64)
-        with np.errstate(invalid="ignore", divide="ignore"):
-            out[f"roll_mean_{numeric_col}"] = np.where(rcnt > 0, rsum / rcnt, np.nan)
-
-        # --- trailing window composition, same clipped window ---
-        onehot = np.zeros((n, V), dtype=np.int64)
-        valid = codes >= 0
-        onehot[idx_arr[valid], codes[valid]] = 1
-        ocs = np.concatenate([np.zeros((1, V)), np.cumsum(onehot, axis=0)])
-        wcm = (ocs[idx_arr + 1] - ocs[w_s]) / (idx_arr + 1 - w_s)[:, None]
-        for i in range(V):
-            out[f"__wc{i}"] = wcm[:, i]
-        for c in pt:
-            out[c] = ev[c]
-        return out
-
-    bkt = F.pmod(F.xxhash64(F.col(entity)), F.lit(num_buckets)).cast("int")
-    ev = events.select(entity, ts, *tb_ded, numeric_col, token_col, *pt).withColumn("__b", bkt)
+    ev = events.select(*lay.inputs).withColumn("__b", bucket(entity))
     sn = snapshots.select(
         F.col(entity).alias("__se"), F.col(snap_ts), F.col(snap_id)
-    ).withColumn("__b", F.pmod(F.xxhash64(F.col("__se")), F.lit(num_buckets)).cast("int"))
-    fused = ev.groupBy("__b").cogroup(sn.groupBy("__b")).applyInPandas(kern, out_schema)
-    # reassemble the array<double> contract from the V flat kernel columns
-    head = [entity, ts, *tb_ded, numeric_col, token_col,
-            "asof_snapshot_id", "asof_age_sec",
-            f"lag1_{numeric_col}", f"lead1_{numeric_col}",
-            "session_id", "session_pos",
-            f"{numeric_col}_bf", f"roll_mean_{numeric_col}"]
-    return fused.select(
-        *head, F.array(*[F.col(f"__wc{i}") for i in range(V)]).alias("wc"), *pt
+    ).withColumn("__b", bucket("__se"))
+    return lay.project(
+        ev.groupBy("__b").cogroup(sn.groupBy("__b")).applyInPandas(kern, lay.schema)
     )
 
 

@@ -271,46 +271,6 @@ def ann_mllib_lsh(
     )
 
 
-def _banded_signatures(
-    df: DataFrame, id_col: str, vec_col: str,
-    bands: int, band_bits: int, seed: int,
-) -> DataFrame:
-    """(id, band, sig): per vector, one row per LSH band with the band's
-    packed sign-bit signature from seeded random hyperplanes. The whole
-    projection is ONE Arrow-batched NumPy matmul per batch ((N×d)@(d×B·k)
-    then a sign-bit pack) — the Catalyst expression-tree formulation of the
-    same math (B·k nested zip_with/aggregate folds per row) evaluates
-    interpreted per element and measured ~5× slower at sf0.1. The plane
-    matrix is rebuilt per executor from the seed — tiny and deterministic."""
-    import pandas as pd
-    from collections.abc import Iterator
-
-    dim = len(df.select(vec_col).first()[0])
-    n_planes, bb, bands_n = bands * band_bits, band_bits, bands
-    id_type = df.schema[id_col].dataType.simpleString()
-
-    def sig_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        planes = np.asarray(_hyperplanes(n_planes, dim, seed)).T  # d × B·k
-        pw = np.array([2**j for j in range(bb)], dtype=np.int64)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            bits = (m @ planes > 0).reshape(len(m), bands_n, bb)
-            sigs = (bits * pw).sum(axis=2).astype(np.int32)  # N × bands
-            yield pd.DataFrame(
-                {
-                    id_col: np.repeat(pdf[id_col].to_numpy(), bands_n),
-                    "band": np.tile(np.arange(bands_n, dtype=np.int32), len(m)),
-                    "sig": sigs.ravel(),
-                }
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(
-        sig_kernel, schema=f"{id_col} {id_type}, band int, sig int"
-    )
-
-
 def embedding_neardup(
     df: DataFrame,
     id_col: str,

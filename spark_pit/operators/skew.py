@@ -33,10 +33,11 @@ entity's timeline fans out over many tasks, while keeping the output
    ``pmod(xxhash64(entity, chunk), B)``: carries and chunk snapshots ride
    the right side (no broadcast of the carry table — in all-salted
    equivalence mode it is O(populated chunks), far past broadcast size),
-   carried tails are materialized as margin rows, and every feature runs
-   segment-vectorized over (entity, chunk) segments exactly like
-   pit_features_bucketed — per-batch Python cost is paid B times total,
-   independent of how many (entity, chunk) groups exist.
+   carried tails are materialized as margin rows, and
+   ``kernels.segment_features`` — the kernel pit_features_bucketed calls,
+   here given the carries — computes every feature over (entity, chunk)
+   segments. Per-batch Python cost is paid B times total, independent of
+   how many (entity, chunk) groups exist.
 
 Equivalence proof sketch per feature (tests assert it empirically):
 - lag1 / rolling(width) / window-composition(width): any trailing
@@ -59,13 +60,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from spark_pit import kernels
+from spark_pit.operators.pit import PitLayout, pit_features_bucketed, to_us
 from spark_pit.util import ts_us
 
 CHUNK = "__chunk"
-
-
-def _to_us(series: pd.Series) -> np.ndarray:
-    return series.to_numpy().astype("datetime64[us]").astype(np.int64)
 
 
 def hot_entities(
@@ -175,16 +174,18 @@ def pit_features_salted(
     chunk_seconds: int = 86400,
     hot_ids: list | None = None,
     hot_threshold: int | None = None,
-    tiebreak: str | None = None,
+    tiebreak: str | list[str] | None = None,
     hot_detector: str = "countmin",
     num_buckets: int = 256,
+    passthrough: list[str] | None = None,
 ) -> DataFrame:
     """pit_features_cursor semantics with hot entities salted by time chunk.
 
     ``hot_ids`` (explicit) or ``hot_threshold`` (count-based detection)
-    select the salted population; everything else takes the unsalted
-    single-group path. With ``hot_ids=None, hot_threshold=None`` every
-    entity is salted (used by the equivalence tests).
+    select the salted population; everything else takes
+    pit_features_bucketed. With ``hot_ids=None, hot_threshold=None`` every
+    entity is salted (used by the equivalence tests). ``tiebreak`` and
+    ``passthrough`` mean what they mean for pit_features_bucketed.
 
     ``hot_detector`` picks the detection plan when ``hot_threshold`` is
     set: "countmin" (default — constant-memory CMS + sampled candidates,
@@ -192,10 +193,8 @@ def pit_features_salted(
     per-key groupBy; useful as the audit baseline). Detection only
     ROUTES keys; either detector yields identical output.
     """
-    from spark_pit.operators.pit import pit_features_bucketed
-
-    tb = [tiebreak] if tiebreak else []
-    ev = events.select(entity, ts, *tb, numeric_col, token_col)
+    lay = PitLayout(events, entity, ts, numeric_col, token_col, vocab, tiebreak, passthrough)
+    ev = events.select(*lay.inputs)
     sn = snapshots.select(entity, snap_ts, snap_id)
 
     if hot_ids is None and hot_threshold is not None:
@@ -206,51 +205,38 @@ def pit_features_salted(
         else:
             raise ValueError(f"unknown hot_detector {hot_detector!r}")
 
-    if hot_ids is not None:
-        if not hot_ids:
-            return pit_features_bucketed(
-                ev, sn, entity, ts, numeric_col, token_col, vocab,
-                snap_ts, snap_id, gap_seconds, width, tiebreak,
-                num_buckets=num_buckets,
-            )
-        cold = pit_features_bucketed(
-            ev.where(~F.col(entity).isin(hot_ids)),
-            sn.where(~F.col(entity).isin(hot_ids)),
-            entity, ts, numeric_col, token_col, vocab,
-            snap_ts, snap_id, gap_seconds, width, tiebreak,
-            num_buckets=num_buckets,
-        )
-        hot = _salted_path(
-            ev.where(F.col(entity).isin(hot_ids)),
-            sn.where(F.col(entity).isin(hot_ids)),
-            entity, ts, numeric_col, token_col, vocab,
-            snap_ts, snap_id, gap_seconds, width, chunk_seconds, tiebreak,
-            num_buckets=num_buckets,
-        )
-        return cold.unionByName(hot)
+    salted = (snap_ts, snap_id, gap_seconds, width, chunk_seconds, num_buckets)
+    if hot_ids is None:
+        return _salted_path(ev, sn, lay, *salted)
 
-    return _salted_path(
-        ev, sn, entity, ts, numeric_col, token_col, vocab,
-        snap_ts, snap_id, gap_seconds, width, chunk_seconds, tiebreak,
-        num_buckets=num_buckets,
-    )
+    def bucketed(e, s):
+        return pit_features_bucketed(
+            e, s, entity, ts, numeric_col, token_col, vocab, snap_ts, snap_id,
+            gap_seconds, width, tiebreak, num_buckets, passthrough,
+        )
+
+    if not hot_ids:
+        return bucketed(ev, sn)
+    is_hot = F.col(entity).isin(hot_ids)
+    cold = bucketed(ev.where(~is_hot), sn.where(~is_hot))
+    return cold.unionByName(_salted_path(ev.where(is_hot), sn.where(is_hot), lay, *salted))
+
+
+# right-side row kinds of the salted cogroup, as bit flags: a carry row
+# may also hold the carried pre-chunk snapshot
+CARRY, SNAP = 1, 2
 
 
 def _salted_path(
     ev: DataFrame,
     sn: DataFrame,
-    entity: str,
-    ts: str,
-    numeric_col: str,
-    token_col: str,
-    vocab: list[str],
+    lay: PitLayout,
     snap_ts: str,
     snap_id: str,
     gap_seconds: int,
     width: int,
     chunk_seconds: int,
-    tiebreak: str | None = None,
-    num_buckets: int = 256,
+    num_buckets: int,
 ) -> DataFrame:
     """Salted PIT kernel with zero per-group Python overhead.
 
@@ -266,7 +252,8 @@ def _salted_path(
        non-null value and the trailing ``width-1`` (ts, value, token)
        tail — via lag / row_number / conditional struct min-max /
        bounded collect_list. groupBy reuses the window's partitioning:
-       ONE exchange of the events, no Python.
+       ONE exchange of the events, no Python. Tiebreak columns order
+       nulls-last, as the kernel's lexsort does.
     2. **Carry scan — pure JVM.** The per-entity recurrences over chunk
        summaries are all window-expressible: session offset is a prefix
        sum, the open-run length is a max-of-reset-struct + prefix-count
@@ -278,30 +265,26 @@ def _salted_path(
        these exchanges are negligible.
     3. **Bucketed margin-row kernel.** Carries (scalars + tail arrays)
        and chunk snapshots ride the cogroup's RIGHT side keyed by
-       pmod(xxhash64(entity, chunk), B) — the former broadcast join of
-       carries onto the event stream is gone (it was itself an at-scale
-       hazard: in all-salted equivalence mode the carry table is
-       O(populated chunks), far past broadcast size). Inside the kernel
-       the carried tails are materialized as margin rows, concatenated
-       with the bucket's body rows, and every feature runs
-       segment-vectorized over (entity, chunk) segments exactly like
-       pit_features_bucketed — per-batch cost is paid B times total,
+       pmod(xxhash64(entity, chunk), B) — no broadcast of the carry
+       table, which in all-salted mode is O(populated chunks). The
+       carried pre-chunk snapshot travels on its chunk's carry row as an
+       ordinary snapshot, so the snapshot id column is never null and
+       stays int64. Inside the kernel the carried tails become margin
+       rows ahead of the chunk's body rows, and one call to
+       ``kernels.segment_features`` over (entity, chunk) segments —
+       the same call pit_features_bucketed makes, plus the carries —
+       computes every feature. Per-batch cost is paid B times total,
        independent of how many (entity, chunk) groups exist.
 
-    Bit-identical to pit_features_cursor by the same margin/carry
-    algebra as before (module docstring); tests/test_skew.py asserts it.
+    Bit-identical to pit_features_cursor by the margin/carry algebra of
+    the module docstring; tests/test_skew.py asserts it.
     """
     from pyspark.sql import Window
 
-    code = {t: i for i, t in enumerate(vocab)}
-    V = len(vocab)
-    ent_type = ev.schema[entity].dataType.simpleString()
+    entity, ts, numeric_col, token_col = lay.entity, lay.ts, lay.numeric_col, lay.token_col
     chunk_us = chunk_seconds * 1_000_000
     gap_us = gap_seconds * 1_000_000
     tail_n = max(width - 1, 1)
-    tb_field = (
-        f"{tiebreak} {ev.schema[tiebreak].dataType.simpleString()}, " if tiebreak else ""
-    )
 
     ev_c = ev.withColumn("__tus", ts_us(ts)).withColumn(
         CHUNK, F.floor(F.col("__tus") / F.lit(chunk_us))
@@ -311,26 +294,26 @@ def _salted_path(
     )
 
     # ---- 1. chunk summaries: one JVM window + agg on the salted key -----
-    tb_cols = [tiebreak] if tiebreak else []
-    asc = [F.col("__tus").asc()] + [F.col(c).asc() for c in tb_cols]
-    desc = [F.col("__tus").desc()] + [F.col(c).desc() for c in tb_cols]
+    tb = lay.tb
+    asc = [F.col("__tus").asc()] + [F.col(c).asc_nulls_last() for c in tb]
+    desc = [F.col("__tus").desc()] + [F.col(c).desc_nulls_first() for c in tb]
     W = Window.partitionBy(entity, CHUNK).orderBy(*asc)
     Wd = Window.partitionBy(entity, CHUNK).orderBy(*desc)
 
     brk = F.when(
         F.col("__tus") - F.lag("__tus").over(W) > F.lit(gap_us), F.lit(1)
     ).otherwise(F.lit(0))
-    # struct field order (t, [k], ...) makes sort_array/min/max follow the
-    # kernel's (ts, tiebreak) sort exactly, ties included
+    # struct field order (t, [null flag, key]..., payload) makes
+    # sort_array/min/max follow the kernel's (ts, tiebreak nulls-last)
+    # sort exactly, ties included
     def _keyed(*payload):
-        return F.struct(
-            F.col("__tus").alias("t"),
-            *[F.col(c).alias("k") for c in tb_cols],
-            *payload,
-        )
+        keys = []
+        for i, c in enumerate(tb):
+            keys += [F.col(c).isNull().alias(f"n{i}"), F.col(c).alias(f"k{i}")]
+        return F.struct(F.col("__tus").alias("t"), *keys, *payload)
 
     evw = ev_c.select(
-        entity, CHUNK, "__tus", *tb_cols, numeric_col, token_col,
+        entity, CHUNK, "__tus", *dict.fromkeys([*tb, numeric_col, token_col]),
         brk.alias("__brk"),
         F.row_number().over(W).alias("__rn"),
         F.row_number().over(Wd).alias("__rnd"),
@@ -465,14 +448,13 @@ def _salted_path(
     carries = u.where(F.col("__tag") == 0).select(
         F.col(entity).alias("__re"),
         F.col(CHUNK).alias("__rc"),
-        F.lit(1).alias("__tag"),
-        F.lit(None).cast("long").alias("s_t"),
-        F.lit(None).cast("long").alias("s_i"),
+        F.when(F.col("__csnap").isNull(), F.lit(CARRY))
+        .otherwise(F.lit(CARRY | SNAP)).alias("__tag"),
+        F.coalesce(F.col("__csnap.t"), F.lit(0)).alias("s_t"),
+        F.coalesce(F.col("__csnap.i"), F.lit(0)).alias("s_i"),
         "c_last_sess",
         "c_open_run",
         "c_bf_seed",
-        F.col("__csnap.t").alias("c_snap_ts"),
-        F.col("__csnap.i").alias("c_snap_id"),
         "c_next_first",
         F.transform("c_tail", lambda s: s["t"]).alias("c_tail_ts"),
         F.transform("c_tail", lambda s: s["v"]).alias("c_tail_val"),
@@ -484,8 +466,6 @@ def _salted_path(
         F.lit(None).cast("long").alias("c_last_sess"),
         F.lit(None).cast("long").alias("c_open_run"),
         F.lit(None).cast("double").alias("c_bf_seed"),
-        F.lit(None).cast("long").alias("c_snap_ts"),
-        F.lit(None).cast("long").alias("c_snap_id"),
         F.lit(None).cast("double").alias("c_next_first"),
         F.lit(None).cast("array<long>").alias("c_tail_ts"),
         F.lit(None).cast("array<double>").alias("c_tail_val"),
@@ -494,7 +474,7 @@ def _salted_path(
     r_sn = sn_c.select(
         F.col(entity).alias("__re"),
         F.col(CHUNK).alias("__rc"),
-        F.lit(0).alias("__tag"),
+        F.lit(SNAP).alias("__tag"),
         F.col("__stus").alias("s_t"),
         F.col(snap_id).cast("long").alias("s_i"),
         *nulls,
@@ -503,237 +483,71 @@ def _salted_path(
         "__b",
         F.pmod(F.xxhash64(F.col("__re"), F.col("__rc")), F.lit(num_buckets)).cast("int"),
     )
-    left = ev_c.select(entity, CHUNK, ts, *tb_cols, numeric_col, token_col).withColumn(
+    left = ev_c.select(*lay.inputs, CHUNK).withColumn(
         "__b",
         F.pmod(F.xxhash64(F.col(entity), F.col(CHUNK)), F.lit(num_buckets)).cast("int"),
     )
 
-    out_schema = (
-        f"{entity} {ent_type}, {ts} timestamp_ntz, {tb_field}"
-        f"{numeric_col} double, {token_col} string, "
-        f"asof_snapshot_id long, asof_age_sec double, "
-        f"lag1_{numeric_col} double, lead1_{numeric_col} double, "
-        f"session_id long, session_pos long, "
-        f"{numeric_col}_bf double, roll_mean_{numeric_col} double, "
-        f"wc array<double>"
-    )
-
     def kern(ev_pdf: pd.DataFrame, r_pdf: pd.DataFrame) -> pd.DataFrame:
         if len(ev_pdf) == 0:
-            return pd.DataFrame(
-                columns=[f.strip().split(" ")[0] for f in out_schema.split(",")]
-            )
-        cy = r_pdf[r_pdf["__tag"] == 1]
-        sns = r_pdf[r_pdf["__tag"] == 0]
-        n_b = len(ev_pdf)
+            return lay.empty()
+        tag = r_pdf["__tag"].to_numpy()
+        cy = r_pdf[(tag & CARRY) > 0]
+        sns = r_pdf[(tag & SNAP) > 0]
+        n_b, n_c = len(ev_pdf), len(cy)
 
-        # --- margin rows from carried tails ---
-        tails_t = list(cy["c_tail_ts"]) if len(cy) else []
-        lens = np.fromiter((len(a) for a in tails_t), dtype=np.int64, count=len(tails_t))
-        n_m = int(lens.sum()) if len(lens) else 0
-        if n_m:
-            m_t = np.concatenate([np.asarray(a, dtype=np.int64) for a in tails_t if len(a)])
-            m_v = np.concatenate(
-                [np.asarray(a, dtype=np.float64) for a in cy["c_tail_val"] if len(a)]
-            )
-            m_tok = [t for a in cy["c_tail_tok"] for t in a]
-        else:
-            m_t = np.zeros(0, dtype=np.int64)
-            m_v = np.zeros(0, dtype=np.float64)
-            m_tok = []
+        # (entity, chunk) segment codes over body rows, carries, snapshots
+        ent, _ = pd.factorize(np.concatenate(
+            [ev_pdf[entity].to_numpy(), cy["__re"].to_numpy(), sns["__re"].to_numpy()]
+        ))
+        chk = np.concatenate([ev_pdf[CHUNK], cy["__rc"], sns["__rc"]]).astype(np.int64)
+        chk -= chk.min()
+        seg_all, _ = pd.factorize(ent * (int(chk.max()) + 1) + chk)
+        b_seg, c_seg, s_seg = np.split(seg_all, [n_b, n_b + n_c])
 
-        # --- composite integer segment key over body + margin + right ---
-        b_ent = ev_pdf[entity].to_numpy()
-        all_ent = np.concatenate(
-            [b_ent, cy["__re"].to_numpy(), sns["__re"].to_numpy()]
+        # per-segment carries, indexed by segment code
+        n_seg = int(seg_all.max()) + 1
+        carried = {}
+        for name, col, fill in (
+            ("last_sess", "c_last_sess", -1), ("open_run", "c_open_run", 0),
+            ("bf_seed", "c_bf_seed", np.nan), ("next_first", "c_next_first", np.nan),
+        ):
+            carried[name] = np.full(n_seg, fill)
+            carried[name][c_seg] = cy[col].to_numpy(carried[name].dtype)
+
+        # margin rows from the carried tails, ahead of the body rows. Their
+        # ts is strictly before every body ts of their chunk, so the
+        # tiebreak only orders body rows; a stable sort keeps each tail's
+        # own (ts, tiebreak) order.
+        n_tail = cy["c_tail_ts"].map(len).to_numpy(np.int64)
+        n_m = int(n_tail.sum())
+
+        t = np.concatenate([*cy["c_tail_ts"], to_us(ev_pdf[ts])]).astype(np.int64)
+        x = np.concatenate(
+            [*cy["c_tail_val"], ev_pdf[numeric_col].to_numpy(np.float64)]
+        ).astype(np.float64)
+        codes = np.concatenate([
+            lay.codes(np.concatenate([[], *cy["c_tail_tok"]])),
+            lay.codes(ev_pdf[token_col]),
+        ])
+        seg = np.concatenate([np.repeat(c_seg, n_tail), b_seg])
+        keys = [
+            np.concatenate([np.zeros(n_m, dtype=k.dtype), k])
+            for k in lay.tiebreak_keys(ev_pdf)
+        ]
+        order = np.lexsort((*keys, t, seg))
+        margin = order < n_m
+        f = kernels.segment_features(
+            seg[order], t[order], x[order], codes[order],
+            len(lay.wc), width, gap_us,
+            s_seg, sns["s_t"].to_numpy(np.int64), sns["s_i"].to_numpy(np.int64),
+            margin=margin, **carried,
         )
-        ecode, _ = pd.factorize(pd.Series(all_ent), sort=False)
-        b_chk = ev_pdf[CHUNK].to_numpy(dtype=np.int64)
-        cy_chk = cy["__rc"].to_numpy(dtype=np.int64)
-        sn_chk = sns["__rc"].to_numpy(dtype=np.int64)
-        all_chk = np.concatenate([b_chk, cy_chk, sn_chk])
-        cmin = int(all_chk.min()) if len(all_chk) else 0
-        K = int(all_chk.max()) - cmin + 1 if len(all_chk) else 1
-        all_seg = ecode.astype(np.int64) * K + (all_chk - cmin)
-        b_seg = all_seg[:n_b]
-        cy_seg = all_seg[n_b : n_b + len(cy)]
-        sn_seg = all_seg[n_b + len(cy) :]
+        return lay.frame(ev_pdf.iloc[order[~margin] - n_m], f)
 
-        # --- combined (margin + body) arrays, sorted by (seg, ts, tie) ---
-        b_t = _to_us(ev_pdf[ts])
-        b_v = ev_pdf[numeric_col].to_numpy(dtype=np.float64)
-        m_seg = np.repeat(cy_seg, lens) if n_m else np.zeros(0, dtype=np.int64)
-        t_all = np.concatenate([m_t, b_t])
-        x = np.concatenate([m_v, b_v])
-        seg = np.concatenate([m_seg, b_seg])
-        # margin ts is strictly before body ts (previous chunks), so ties
-        # only occur body-vs-body (tiebreak rank) or inside one pre-sorted
-        # tail (stable lexsort keeps tail order)
-        if tiebreak:
-            tbcol = ev_pdf[tiebreak]
-            if tbcol.dtype == object:
-                tcodes, uq = pd.factorize(tbcol, sort=True)
-                tcodes = np.where(tcodes < 0, len(uq), tcodes).astype(np.int64)
-            else:
-                tcodes = tbcol.to_numpy()
-            rank = np.concatenate([np.zeros(n_m, dtype=np.int64), tcodes.astype(np.int64)])
-        else:
-            rank = np.zeros(n_m + n_b, dtype=np.int64)
-        orig = np.concatenate([np.full(n_m, -1, dtype=np.int64), np.arange(n_b)])
-        order = np.lexsort((rank, t_all, seg))
-        t_all, x, seg, orig = t_all[order], x[order], seg[order], orig[order]
-        tok_all = np.concatenate(
-            [np.asarray(m_tok, dtype=object), ev_pdf[token_col].to_numpy(dtype=object)]
-        )[order]
-        codes = np.fromiter(
-            (code.get(tk, -1) for tk in tok_all), dtype=np.int64, count=len(tok_all)
-        )
-        n = len(t_all)
-        idx_arr = np.arange(n)
-        is_m = orig < 0
-
-        new_seg = np.empty(n, dtype=bool)
-        new_seg[0] = True
-        new_seg[1:] = seg[1:] != seg[:-1]
-        seg_first = np.where(new_seg, idx_arr, 0)
-        np.maximum.accumulate(seg_first, out=seg_first)
-        ends = np.flatnonzero(np.append(new_seg[1:], True))
-        last_of_seg = np.zeros(n, dtype=np.int64)
-        last_of_seg[seg_first[ends]] = ends
-        seg_last = last_of_seg[seg_first]
-
-        # --- per-segment carried scalars, aligned to segment ordinals ---
-        uniq_seg, uniq_first = np.unique(seg, return_index=True)
-        nseg = len(uniq_seg)
-        row_ord = np.searchsorted(uniq_seg, seg)
-        c_last_sess = np.full(nseg, -1, dtype=np.int64)
-        c_open_run = np.zeros(nseg, dtype=np.int64)
-        c_bf_seed = np.full(nseg, np.nan)
-        c_next_first = np.full(nseg, np.nan)
-        if len(cy):
-            cord = np.searchsorted(uniq_seg, cy_seg)
-            # carries exist only for populated chunks → every cord is a
-            # real body segment
-            c_last_sess[cord] = cy["c_last_sess"].to_numpy(dtype=np.int64)
-            c_open_run[cord] = cy["c_open_run"].to_numpy(dtype=np.int64)
-            c_bf_seed[cord] = cy["c_bf_seed"].to_numpy(dtype=np.float64)
-            c_next_first[cord] = cy["c_next_first"].to_numpy(dtype=np.float64)
-        m_count = np.bincount(row_ord[is_m], minlength=nseg) if n_m else np.zeros(nseg, dtype=np.int64)
-        anchor = np.where(
-            m_count > 0, uniq_first + m_count - 1, uniq_first
-        )
-        base = np.where(m_count > 0, c_last_sess, c_last_sess + 1)
-
-        # --- sessionization with carried anchors ---
-        brk_a = np.empty(n, dtype=np.int64)
-        brk_a[0] = 1
-        brk_a[1:] = ((np.diff(t_all) > gap_us) | new_seg[1:]).astype(np.int64)
-        cum = np.cumsum(brk_a)
-        sess_id = cum - cum[anchor[row_ord]] + base[row_ord]
-        sess_start = np.where(brk_a > 0, idx_arr, 0)
-        np.maximum.accumulate(sess_start, out=sess_start)
-        pos = idx_arr - sess_start
-        cont = (cum == cum[anchor[row_ord]]) & (m_count[row_ord] > 0)
-        corr = c_open_run[row_ord] - (pos[anchor[row_ord]] + 1)
-        pos = np.where(cont & ~is_m, pos + corr, pos)
-
-        # --- lag / lead ---
-        lag1 = np.roll(x, 1)
-        lag1[idx_arr == seg_first] = np.nan
-        lead1 = np.roll(x, -1)
-        at_last = idx_arr == seg_last
-        lead1[at_last] = c_next_first[row_ord[at_last]]
-
-        # --- backfill with carried seed ---
-        ffidx = np.where(~np.isnan(x), idx_arr, -1)
-        np.maximum.accumulate(ffidx, out=ffidx)
-        bf = np.where(ffidx >= seg_first, x[ffidx.clip(0)], np.nan)
-        bf = np.where(np.isnan(bf), c_bf_seed[row_ord], bf)
-
-        # --- rolling mean + window composition over margin+body ---
-        w_s = np.maximum(idx_arr - width + 1, seg_first)
-        cs = np.concatenate([[0.0], np.nancumsum(np.nan_to_num(x))])
-        ccnt = np.concatenate([[0], np.cumsum(~np.isnan(x))])
-        rsum = cs[idx_arr + 1] - cs[w_s]
-        rcnt = (ccnt[idx_arr + 1] - ccnt[w_s]).astype(np.float64)
-        with np.errstate(invalid="ignore", divide="ignore"):
-            rmean = np.where(rcnt > 0, rsum / rcnt, np.nan)
-        onehot = np.zeros((n, V), dtype=np.int64)
-        valid = codes >= 0
-        onehot[idx_arr[valid], codes[valid]] = 1
-        ocs = np.concatenate([np.zeros((1, V)), np.cumsum(onehot, axis=0)])
-        wcm = (ocs[idx_arr + 1] - ocs[w_s]) / (idx_arr + 1 - w_s)[:, None]
-
-        # --- as-of: chunk snapshots + carried pre-chunk snapshot ---
-        body = ~is_m
-        bt = t_all[body]
-        bseg2 = seg[body]
-        nb = int(body.sum())
-        sid_out = pd.array([pd.NA] * nb, dtype="Int64")
-        age_out = np.full(nb, np.nan)
-        s_t_parts, s_i_parts, s_seg_parts = [], [], []
-        if len(sns):
-            s_t_parts.append(sns["s_t"].to_numpy(dtype=np.int64))
-            s_i_parts.append(sns["s_i"].to_numpy(dtype=np.int64))
-            s_seg_parts.append(sn_seg)
-        if len(cy):
-            csn_t = cy["c_snap_ts"].to_numpy(dtype=np.float64)
-            has = ~np.isnan(csn_t)
-            if has.any():
-                s_t_parts.append(csn_t[has].astype(np.int64))
-                s_i_parts.append(
-                    cy["c_snap_id"].to_numpy(dtype=np.float64)[has].astype(np.int64)
-                )
-                s_seg_parts.append(cy_seg[has])
-        if s_t_parts:
-            s_t = np.concatenate(s_t_parts)
-            s_i = np.concatenate(s_i_parts)
-            s_seg = np.concatenate(s_seg_parts)
-            lorder = np.argsort(bt, kind="stable")
-            rorder = np.lexsort((s_i, s_t))
-            merged = pd.merge_asof(
-                pd.DataFrame({"t": bt[lorder], "g": bseg2[lorder], "i": lorder}),
-                pd.DataFrame({"t": s_t[rorder], "g": s_seg[rorder], "sid": s_i[rorder], "st": s_t[rorder]}),
-                on="t", by="g", allow_exact_matches=False, direction="backward",
-            )
-            back = merged["i"].to_numpy()
-            sid_v = merged["sid"].to_numpy(dtype=np.float64)
-            st_v = merged["st"].to_numpy(dtype=np.float64)
-            sid_full = np.full(nb, np.nan)
-            st_full = np.full(nb, np.nan)
-            sid_full[back] = sid_v
-            st_full[back] = st_v
-            ok = ~np.isnan(sid_full)
-            sid_out = pd.array(
-                np.where(ok, sid_full, 0).astype(np.int64), dtype="Int64"
-            )
-            sid_out[~ok] = pd.NA
-            age_out = (bt - st_full) / 1e6
-
-        # --- assemble body rows (original columns via inverse index) ---
-        take = orig[body]
-        src = ev_pdf.iloc[take].reset_index(drop=True)
-        out = pd.DataFrame(
-            {
-                entity: src[entity],
-                ts: src[ts],
-                **({tiebreak: src[tiebreak]} if tiebreak else {}),
-                numeric_col: src[numeric_col],
-                token_col: src[token_col],
-            }
-        )
-        out["asof_snapshot_id"] = sid_out
-        out["asof_age_sec"] = age_out
-        out[f"lag1_{numeric_col}"] = lag1[body]
-        out[f"lead1_{numeric_col}"] = lead1[body]
-        out["session_id"] = sess_id[body]
-        out["session_pos"] = pos[body]
-        out[f"{numeric_col}_bf"] = bf[body]
-        out[f"roll_mean_{numeric_col}"] = rmean[body]
-        out["wc"] = list(wcm[body])
-        return out
-
-    return left.groupBy("__b").cogroup(right.groupBy("__b")).applyInPandas(kern, out_schema)
+    return lay.project(
+        left.groupBy("__b").cogroup(right.groupBy("__b")).applyInPandas(kern, lay.schema)
+    )
 
 
 def morton_code(x, y, bits: int = 16):

@@ -102,23 +102,6 @@ def with_window_composition(
     return df
 
 
-def with_rolling_stats(
-    df: DataFrame,
-    entity: str,
-    ts: str,
-    col: str,
-    width: int = 5,
-    tiebreak: str | None = None,
-) -> DataFrame:
-    """Trailing-window mean/min/max of a numeric channel."""
-    w = entity_window(entity, ts, tiebreak).rowsBetween(-(width - 1), Window.currentRow)
-    return (
-        df.withColumn(f"roll_mean_{col}", F.avg(col).over(w))
-        .withColumn(f"roll_min_{col}", F.min(col).over(w))
-        .withColumn(f"roll_max_{col}", F.max(col).over(w))
-    )
-
-
 def decayed_features(
     df: DataFrame,
     entity: str,

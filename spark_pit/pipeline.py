@@ -11,7 +11,7 @@ verified by tools/explain_audit.py ReadSchema):
 - aspect      = w / h                      (shape stat)
 - fmt         = the token channel
 
-The fused bucketed PIT kernel then emits leakage-free as-of matches,
+The fused PIT kernel then emits leakage-free as-of matches,
 lag/lead, session ids, backfill, rolling mean and trailing fmt-composition
 per (image_id, event_ts). Golden-fixture parity for this exact pipeline is
 pinned in tests/golden/ (north rule: "golden feature-table fixtures").
@@ -121,39 +121,21 @@ def image_pit_features(
     extra_cols = ["caption_len", "aspect"] + (
         ["mean_lum", "std_gray"] if with_pixel_stats else []
     )
-    if hot_threshold is not None:
-        from pyspark.sql import Window
-
-        from spark_pit.operators.skew import pit_features_salted
-
-        # the salted path needs ONE unique per-entity key for the extras
-        # join, so it materializes a row_number uid; (image_id, event_ts)
-        # is NOT unique (the generator deliberately emits timestamp
-        # collisions for as-of tie tests)
-        uid_w = Window.partitionBy("image_id").orderBy(
-            "event_ts", "fmt", "phash_pop", "caption_len", "aspect"
-        )
-        ch = ch.withColumn("uid", F.row_number().over(uid_w))
-        fused = pit_features_salted(
-            ch, snaps,
-            entity="image_id", ts="event_ts",
-            numeric_col="phash_pop", token_col="fmt", vocab=FMT_VOCAB,
-            gap_seconds=gap_seconds, width=width,
-            chunk_seconds=chunk_seconds, hot_threshold=hot_threshold,
-            tiebreak="uid",
-        )
-        extra = ch.select("image_id", "uid", *extra_cols)
-        return fused.join(extra, ["image_id", "uid"]).drop("uid")
-    # bucketed path: extra channels ride through the kernel (passthrough,
-    # no extras join) and the deterministic tiebreak is the channel columns
-    # THEMSELVES — same total order a row_number uid would give, without the
-    # extra per-entity sort exchange the uid window used to cost
-    fused = pit_features_bucketed(
-        ch, snaps,
+    # extra channels ride through the kernel (passthrough, no extras
+    # join) and the deterministic tiebreak is the channel columns
+    # THEMSELVES — same total order a row_number uid would give, without
+    # the extra per-entity sort exchange a uid window costs
+    kw = dict(
         entity="image_id", ts="event_ts",
         numeric_col="phash_pop", token_col="fmt", vocab=FMT_VOCAB,
         gap_seconds=gap_seconds, width=width, num_buckets=num_buckets,
         tiebreak=["fmt", "phash_pop", "caption_len", "aspect"],
         passthrough=extra_cols,
     )
-    return fused
+    if hot_threshold is None:
+        return pit_features_bucketed(ch, snaps, **kw)
+    from spark_pit.operators.skew import pit_features_salted
+
+    return pit_features_salted(
+        ch, snaps, chunk_seconds=chunk_seconds, hot_threshold=hot_threshold, **kw
+    )

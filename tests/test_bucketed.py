@@ -4,11 +4,14 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from spark_pit.operators.pit import pit_features_bucketed, pit_features_cursor
+from spark_pit.operators.skew import pit_features_salted
 
 VOCAB = ["click", "error", "purchase", "signup", "view"]
+BIG_ID = 2**53 + 1  # the first integer a float64 cannot hold
 
 
 def _frames(spark, sf_dir):
@@ -16,10 +19,23 @@ def _frames(spark, sf_dir):
     snaps = ev.where("event_type = 'purchase'").selectExpr(
         "user_id", "ts as snapshot_ts", "event_id as snapshot_id"
     )
-    return ev, snaps
+    # a twin of the first snapshot with an id above 2^53: it wins the tie
+    # on its timestamp, so events match it, and any float round trip of
+    # the id shows
+    big = snaps.orderBy("snapshot_id").limit(1).withColumn("snapshot_id", F.lit(BIG_ID))
+    return ev, snaps.unionByName(big)
+
+
+def _exact_ids(df) -> pd.DataFrame:
+    """toPandas with the nullable id as a string: pandas holds a nullable
+    long as float64, which would round ids above 2^53."""
+    return df.withColumn(
+        "asof_snapshot_id", F.col("asof_snapshot_id").cast("string")
+    ).toPandas()
 
 
 def _cmp(a: pd.DataFrame, b: pd.DataFrame):
+    assert (a["asof_snapshot_id"] == str(BIG_ID)).any()
     a = a.sort_values(["user_id", "ts", "event_id"]).reset_index(drop=True)
     b = b.sort_values(["user_id", "ts", "event_id"]).reset_index(drop=True)
     assert len(a) == len(b)
@@ -45,8 +61,8 @@ def test_bucketed_equals_cursor(spark, sf_dir):
         token_col="event_type", vocab=VOCAB, gap_seconds=1800, width=5,
         tiebreak="event_id",
     )
-    a = pit_features_cursor(ev, snaps, **kw).toPandas()
-    b = pit_features_bucketed(ev, snaps, num_buckets=7, **kw).toPandas()
+    a = _exact_ids(pit_features_cursor(ev, snaps, **kw))
+    b = _exact_ids(pit_features_bucketed(ev, snaps, num_buckets=7, **kw))
     _cmp(a, b)
 
 
@@ -58,8 +74,8 @@ def test_bucketed_single_bucket(spark, sf_dir):
         token_col="event_type", vocab=VOCAB, gap_seconds=1800, width=5,
         tiebreak="event_id",
     )
-    a = pit_features_cursor(ev, snaps, **kw).toPandas()
-    b = pit_features_bucketed(ev, snaps, num_buckets=1, **kw).toPandas()
+    a = _exact_ids(pit_features_cursor(ev, snaps, **kw))
+    b = _exact_ids(pit_features_bucketed(ev, snaps, num_buckets=1, **kw))
     _cmp(a, b)
 
 
@@ -74,3 +90,13 @@ def test_bucketed_no_snapshots(spark, sf_dir):
     ).toPandas()
     assert out["asof_snapshot_id"].isna().all()
     assert len(out) == ev.count()
+
+
+@pytest.mark.parametrize("pit", [pit_features_bucketed, pit_features_salted])
+def test_empty_vocab_rejected(spark, sf_dir, pit):
+    """With no tokens the window composition has no columns: both kernel
+    paths refuse at plan time instead of building a malformed schema."""
+    ev, snaps = _frames(spark, sf_dir)
+    with pytest.raises(ValueError, match="vocab is empty"):
+        pit(ev, snaps, entity="user_id", ts="ts", numeric_col="value",
+            token_col="event_type", vocab=[])

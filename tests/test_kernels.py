@@ -41,6 +41,78 @@ def test_asof_indices_property(ev, snap):
         assert idx[i] == want
 
 
+@given(
+    st.lists(st.tuples(st.integers(0, 3), st.integers(0, 14)), min_size=1, max_size=40),
+    st.lists(
+        st.tuples(st.integers(0, 4), st.integers(0, 12), st.integers(0, 3)),
+        min_size=0, max_size=30,
+    ),
+)
+@settings(max_examples=150, deadline=None)
+def test_segment_asof_matches_bruteforce(events, snaps):
+    """Latest same-segment snapshot strictly before each event, the
+    largest id winning a time tie; ids above 2^53 come back exact."""
+    seg = np.array([e[0] for e in events], dtype=np.int64)
+    ts = np.array([e[1] for e in events], dtype=np.int64)
+    s_seg = np.array([s[0] for s in snaps], dtype=np.int64)
+    s_ts = np.array([s[1] for s in snaps], dtype=np.int64)
+    s_id = np.array([2**53 + s[2] for s in snaps], dtype=np.int64)
+    hit = kernels.segment_asof(seg, ts, s_seg, s_ts, s_id)
+    for i in range(len(events)):
+        cands = [(s_ts[j], s_id[j]) for j in range(len(snaps))
+                 if s_seg[j] == seg[i] and s_ts[j] < ts[i]]
+        got = (s_ts[hit[i]], s_id[hit[i]]) if hit[i] >= 0 else None
+        assert got == (max(cands) if cands else None)
+
+
+@given(
+    st.lists(
+        st.tuples(st.integers(0, 3000), st.one_of(st.none(), st.floats(-5, 5)),
+                  st.integers(-1, 2)),
+        min_size=2, max_size=40,
+    ),
+    st.integers(1, 39),
+    st.integers(1, 6),
+)
+@settings(max_examples=150, deadline=None)
+def test_segment_features_carries_continue_a_timeline(rows, cut, width):
+    """One timeline split into two segments, the second given margin rows
+    and carries as the salted path supplies them, gives the features of
+    the unsplit timeline."""
+    rows = sorted(rows, key=lambda r: r[0])
+    cut = min(cut, len(rows) - 1)
+    ts = np.array([r[0] for r in rows], dtype=np.int64)
+    x = np.array([np.nan if r[1] is None else r[1] for r in rows])
+    codes = np.array([r[2] for r in rows], dtype=np.int64)
+    s_ts = ts[::3] - 1
+    s_id = np.arange(len(s_ts), dtype=np.int64)
+    gap, n_tok = 100, 3
+
+    def run(seg, sl, s_seg, **carry):
+        return kernels.segment_features(
+            seg, ts[sl], x[sl], codes[sl], n_tok, width, gap,
+            s_seg, s_ts, s_id, **carry,
+        )
+
+    whole = run(np.zeros(len(ts), dtype=np.int64), slice(None), np.zeros(len(s_ts), dtype=np.int64))
+    m = min(max(width - 1, 1), cut)  # carried tail rows
+    head = run(np.zeros(cut, dtype=np.int64), slice(0, cut), np.zeros(len(s_ts), dtype=np.int64),
+               next_first=np.array([x[cut]]))
+    tail = run(
+        np.ones(len(ts) - cut + m, dtype=np.int64), slice(cut - m, None),
+        np.ones(len(s_ts), dtype=np.int64),
+        last_sess=np.array([0, whole["session_id"][cut - 1]]),
+        open_run=np.array([0, whole["session_pos"][cut - 1] + 1]),
+        bf_seed=np.array([np.nan, whole["bf"][cut - 1]]),
+        next_first=np.array([np.nan, np.nan]),
+        margin=np.arange(len(ts) - cut + m) < m,
+    )
+    for k, v in whole.items():
+        np.testing.assert_allclose(
+            np.concatenate([head[k], tail[k]]), v, rtol=1e-9, atol=1e-9, err_msg=k
+        )
+
+
 def test_session_ids():
     ts = np.array([0, 10, 2000, 2005, 9000], dtype=np.int64)
     assert kernels.session_ids(ts, gap_us=1000).tolist() == [0, 0, 1, 1, 2]

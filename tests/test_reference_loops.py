@@ -11,6 +11,8 @@ aggregation structure against the reference's formula exactly.
 
 from __future__ import annotations
 
+import functools
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F  # noqa: F401 (parity with sibling tests)
@@ -22,6 +24,23 @@ SEQS = {
 }
 PROP = {"click": 0.3, "view": -0.2, "purchase": 1.1, "signup": 0.7, "error": -0.9}
 VOCAB = list(PROP)
+
+
+def _needs_reference_source(test):
+    """The literal-equality tests read the reference's feature.py, which
+    is not vendored into this repository: skip, with the path, where it is
+    absent, and compare as before where it exists."""
+
+    @functools.wraps(test)
+    def run(*args, **kwargs):
+        try:
+            return test(*args, **kwargs)
+        except FileNotFoundError as e:
+            if not str(e.filename).endswith("reference/feature.py"):
+                raise
+            pytest.skip(f"reference source {e.filename} is not present")
+
+    return run
 
 
 def _seq_df(spark):
@@ -217,6 +236,7 @@ def test_ctdt_transitions_match_reference_loop(spark):
             assert got[key] == pytest.approx(c / n_adj, abs=1e-9), (ent, key)
 
 
+@_needs_reference_source
 def test_psekraac_cluster_tables_match_reference_literals():
     """Round-4 judge ask #2: the 250 shipped (type, raactype) RAAC cluster
     tables must equal the reference's per-type AAGroup dict literals
@@ -284,6 +304,7 @@ def test_psekraac_alphabet_gap_model_parity():
         assert cnt == cnt2, (ptype, k)
 
 
+@_needs_reference_source
 def test_opf_tables_match_reference_literals():
     """OPF group lists shipped in alphabets.OPF_TABLES equal the reference's
     physicochemical_properties_list literals (feature.py:2386-2514),
@@ -328,6 +349,7 @@ def test_positional_multihot_matches_reference_loop(spark):
             assert got == want, (key, i, aa)
 
 
+@_needs_reference_source
 def test_blosum62_matches_reference_literal():
     """alphabets.BLOSUM62 equals the reference's blosum62 dict literal
     (feature.py:1387-1409), extracted from source at test time, and feeds

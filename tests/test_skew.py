@@ -16,6 +16,7 @@ from spark_pit.operators.skew import hot_entities, pit_features_salted
 
 VOCAB = ["view", "click", "purchase"]
 EPOCH = dt.datetime(2024, 1, 1)
+BIG_ID = 2**53 + 1  # the first integer a float64 cannot hold
 
 
 def _mk(spark, seed=7, n_hot=4000, n_cold=60):
@@ -45,16 +46,27 @@ def _mk(spark, seed=7, n_hot=4000, n_cold=60):
     snaps = ev.where(F.col("event_type") == "purchase").select(
         "user_id", F.col("ts").alias("snapshot_ts"), F.col("event_id").alias("snapshot_id")
     )
-    return ev, snaps
+    # a twin of the hot entity's first snapshot with an id above 2^53: it
+    # wins the tie on its timestamp and is carried across later chunks
+    big = (
+        snaps.where(F.col("user_id") == "hot").orderBy("snapshot_id").limit(1)
+        .withColumn("snapshot_id", F.lit(BIG_ID))
+    )
+    return ev, snaps.unionByName(big)
 
 
 def _collect(df) -> pd.DataFrame:
-    pdf = df.toPandas()
+    # the nullable id as a string: pandas holds a nullable long as
+    # float64, which would round ids above 2^53
+    pdf = df.withColumn(
+        "asof_snapshot_id", F.col("asof_snapshot_id").cast("string")
+    ).toPandas()
     return pdf.sort_values(["user_id", "ts"], kind="stable").reset_index(drop=True)
 
 
 def _assert_same(a: pd.DataFrame, b: pd.DataFrame):
     assert len(a) == len(b)
+    assert (a["asof_snapshot_id"] == str(BIG_ID)).any()
     for col in a.columns:
         av, bv = a[col], b[col]
         if col == "wc":
