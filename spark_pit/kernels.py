@@ -224,6 +224,127 @@ def segment_features(
     }
 
 
+def chunk_summaries(
+    seg: np.ndarray, ts: np.ndarray, x: np.ndarray, gap_us: int, tail_n: int
+) -> dict[str, np.ndarray]:
+    """What each slice of a chunked timeline hands on to later slices.
+
+    Rows arrive sorted by (segment, ts, tiebreak), as for
+    ``segment_features``; each segment is one time chunk of one entity.
+    Returns the segment's tail (its last ``tail_n`` rows) in input order:
+    ``row`` (input index), ``rank`` (rows after it in its segment),
+    ``ts``, ``x``, and on every tail row its segment's summary: ``n``
+    (rows), ``first_ts``, ``first_x``, ``last_nn`` (last non-null value,
+    NaN if none), ``breaks`` (session breaks inside the segment) and
+    ``trail`` (rows of its last session). Needs at least one row."""
+    n = len(seg)
+    idx = np.arange(n)
+    new_seg = np.ones(n, dtype=bool)
+    new_seg[1:] = seg[1:] != seg[:-1]
+    starts = np.flatnonzero(new_seg)
+    ordn = np.cumsum(new_seg) - 1
+    end = np.append(starts[1:], n)[ordn]  # one past each row's segment
+
+    brk = np.zeros(n, dtype=bool)
+    brk[1:] = ~new_seg[1:] & (np.diff(ts) > gap_us)
+    cum_brk = np.cumsum(brk)
+    run = np.where(brk | new_seg, idx, 0)
+    np.maximum.accumulate(run, out=run)
+    ff = np.where(np.isnan(x), -1, idx)
+    np.maximum.accumulate(ff, out=ff)
+
+    rows = np.flatnonzero(end - idx <= tail_n)
+    first, last = starts[ordn[rows]], end[rows] - 1
+    nn = ff[last]
+    return {
+        "row": rows,
+        "rank": last - rows,
+        "ts": ts[rows],
+        "x": x[rows],
+        "n": last + 1 - first,
+        "first_ts": ts[first],
+        "first_x": x[first],
+        "last_nn": np.where(nn >= first, x[nn.clip(0)], np.nan),
+        "breaks": cum_brk[last] - cum_brk[first],
+        "trail": last + 1 - run[last],
+    }
+
+
+def chunk_carries(
+    ent: np.ndarray,
+    chunk: np.ndarray,
+    tail: dict[str, np.ndarray],
+    gap_us: int,
+    tail_n: int,
+    chunk_us: int,
+    snap_ent: np.ndarray,
+    snap_ts: np.ndarray,
+    snap_id: np.ndarray,
+) -> dict[str, np.ndarray]:
+    """The carries ``segment_features`` needs for each time chunk, from
+    the ``chunk_summaries`` tails of every earlier chunk of its entity.
+
+    ``tail`` holds those tails sorted by (entity, chunk, row order), with
+    ``ent`` and ``chunk`` their entity codes and chunk ids. Returns, per
+    chunk in that order: ``first`` (its first tail row), ``last_sess``,
+    ``open_run``, ``bf_seed`` and ``next_first`` as ``segment_features``
+    takes them, and ``snap``, the index of the entity's latest snapshot
+    before the chunk starts at ``chunk * chunk_us`` (-1 when none). The
+    carried tail of each chunk, its entity's last ``tail_n`` earlier rows,
+    comes back flat: ``tail_row`` (index into ``tail``), ``tail_chunk``
+    (chunk ordinal) and ``tail_pos`` (order within the carried tail)."""
+    m = len(ent)
+    new_chunk = np.ones(m, dtype=bool)
+    new_chunk[1:] = (ent[1:] != ent[:-1]) | (chunk[1:] != chunk[:-1])
+    first = np.flatnonzero(new_chunk)
+    last = np.append(first[1:], m) - 1  # the chunk's last row
+    k = np.arange(len(first))
+    c_ent = ent[first]
+    new_ent = np.ones(len(first), dtype=bool)
+    new_ent[1:] = c_ent[1:] != c_ent[:-1]
+    e0 = np.where(new_ent, k, 0)  # the entity's first chunk
+    np.maximum.accumulate(e0, out=e0)
+    n, first_x, last_nn, trail = (tail[c][first] for c in ("n", "first_x", "last_nn", "trail"))
+
+    # sessions each chunk opens: its inner breaks plus one if it starts
+    # the entity or follows the previous chunk's last row by > gap
+    gap = np.ones(len(first), dtype=bool)
+    gap[1:] = tail["first_ts"][first[1:]] - tail["ts"][last[:-1]] > gap_us
+    opened = tail["breaks"][first] + (new_ent | gap)
+    before = np.cumsum(opened) - opened
+    last_sess = before - before[e0] - 1
+
+    # rows of the session still open after each chunk: the trail of the
+    # last chunk that opened one, plus every row since
+    cum_n = np.cumsum(n)
+    reset = np.where(opened > 0, k, 0)
+    np.maximum.accumulate(reset, out=reset)
+    run_end = trail[reset] + cum_n - cum_n[reset]
+    open_run = np.where(new_ent, 0, np.roll(run_end, 1))
+
+    ff = np.where(np.isnan(last_nn), -1, k)
+    np.maximum.accumulate(ff, out=ff)
+    prev = np.roll(ff, 1)
+    bf_seed = np.where(~new_ent & (prev >= e0), last_nn[prev.clip(0)], np.nan)
+    next_first = np.append(np.where(new_ent[1:], np.nan, first_x[1:]), np.nan)
+
+    lo = np.maximum(first - tail_n, first[e0])
+    cnt = first - lo
+    dst = np.repeat(k, cnt)
+    pos = np.arange(len(dst)) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+    return {
+        "first": first,
+        "last_sess": last_sess,
+        "open_run": open_run,
+        "bf_seed": bf_seed,
+        "next_first": next_first,
+        "snap": segment_asof(c_ent, chunk[first] * chunk_us, snap_ent, snap_ts, snap_id),
+        "tail_row": lo[dst] + pos,
+        "tail_chunk": dst,
+        "tail_pos": pos,
+    }
+
+
 def lagk_pair_counts(codes: np.ndarray, n_tokens: int, k: int) -> np.ndarray:
     """CKSAAP/DPC analogue (feature.py:487-526, 528-555): counts of ordered
     token pairs (a, b) with b exactly k positions after a, over the whole

@@ -16,7 +16,8 @@ vectorized over the sorted arrays. On a cluster the equivalent declarative
 plan would pay one exchange per window family; the fused kernel pays
 exactly one, which is the reason this operator exists. The salted skew
 path (spark_pit.operators.skew) calls the same kernel through the same
-``PitLayout``.
+``PitLayout``, after two NumPy passes that derive each time chunk's
+carries; its cold entities ride the same cogroup as whole timelines.
 
 Two independent references build the same columns: the per-entity
 ``pit_features_cursor`` and the declarative ``pit_features_declarative``
@@ -218,8 +219,8 @@ class PitLayout:
         """``np.lexsort`` keys for the tiebreak columns, least significant
         first. String columns are factorized to order-preserving codes so
         the sort never compares Python objects (~1.7x kernel wall on
-        string-keyed input); nulls sort LAST in every column, as the
-        salted path's JVM windows order them."""
+        string-keyed input); nulls sort LAST in every column. The salted
+        path sorts its chunk summaries with the same keys."""
         keys = []
         for c in reversed(self.tb):
             col = pdf[c]

@@ -10,34 +10,37 @@ into **time chunks** (the salt = ``floor(ts / chunk_seconds)``) so one
 entity's timeline fans out over many tasks, while keeping the output
 *bit-identical* to the unsalted cursor:
 
-1. **Chunk summaries** — one tiny row per (entity, chunk): row count,
-   first/last ts, the trailing ``width-1`` (ts, value, token) rows, last
-   non-null value, internal session-break count, trailing-run length,
-   first value. Pure JVM: one window pass partitioned on the salted key +
-   a groupBy that reuses its partitioning — hash-partitioned, so no skew,
-   and no per-group Python (the original applyInPandas version paid one
-   pandas call per (entity, chunk); at the 10M-row tier that is ~9M
-   near-singleton Arrow batches — hours of dispatch overhead, found by
-   the round-6 full-registry gate).
+1. **Chunk summaries** — per (entity, chunk): its trailing ``width-1``
+   rows, each carrying the chunk's row count, first ts and value, last
+   non-null value, internal session-break count and trailing-run length.
+   One pandas pass grouped by the kernel's salted bucket
+   ``pmod(xxhash64(entity, chunk), B)`` runs ``kernels.chunk_summaries``
+   — hash-partitioned, so no skew, and one pandas call per bucket, not
+   per chunk (the original version paid one per (entity, chunk); at the
+   10M-row tier that is ~9M near-singleton Arrow batches — hours of
+   dispatch overhead, found by the round-6 full-registry gate).
 2. **Carry scan** — the exact pre-chunk state each chunk needs:
    session-id offset, open-run length, accumulated margin tail (exact
    across sparse chunks — the tail is re-accumulated, not just "previous
    chunk's rows"), backfill seed, latest strictly-before snapshot, and
-   the next populated chunk's first value (for lead-1). Pure JVM window
-   algebra over the tiny summary table: prefix sums, a
-   max-of-reset-struct + prefix-count difference for the open-run
-   recurrence, last(ignorenulls) cursors over a union frame ordered
-   (chunk, tag) for the strictly-before snapshot, and a bounded
-   ``rows between -k and -1`` flatten+slice for the carried tails.
+   the next populated chunk's first value (for lead-1). One pandas pass
+   cogrouping the summaries with the snapshots by
+   ``pmod(xxhash64(entity), B)`` runs ``kernels.chunk_carries``: prefix
+   sums and running maxima over each entity's chunks, and
+   ``kernels.segment_asof`` at each chunk's start for the snapshot. Its
+   output, flat rows with the tails included, is the kernel's whole right
+   side; every snapshot passes through it.
 3. **Salted kernel** — ONE bucketed cogroup on
-   ``pmod(xxhash64(entity, chunk), B)``: carries and chunk snapshots ride
-   the right side (no broadcast of the carry table — in all-salted
-   equivalence mode it is O(populated chunks), far past broadcast size),
-   carried tails are materialized as margin rows, and
+   ``pmod(xxhash64(entity, chunk), B)``: carries, carried tails and chunk
+   snapshots ride the right side (no broadcast of the carry table — in
+   all-salted equivalence mode it is O(populated chunks), far past
+   broadcast size), tails become margin rows, and
    ``kernels.segment_features`` — the kernel pit_features_bucketed calls,
    here given the carries — computes every feature over (entity, chunk)
-   segments. Per-batch Python cost is paid B times total, independent of
-   how many (entity, chunk) groups exist.
+   segments. Cold entities share the cogroup as one constant chunk each,
+   a whole-timeline segment with no carries. Per-batch Python cost is
+   paid about B times per pass, independent of how many (entity, chunk)
+   groups exist.
 
 Equivalence proof sketch per feature (tests assert it empirically):
 - lag1 / rolling(width) / window-composition(width): any trailing
@@ -182,10 +185,12 @@ def pit_features_salted(
     """pit_features_cursor semantics with hot entities salted by time chunk.
 
     ``hot_ids`` (explicit) or ``hot_threshold`` (count-based detection)
-    select the salted population; everything else takes
-    pit_features_bucketed. With ``hot_ids=None, hot_threshold=None`` every
-    entity is salted (used by the equivalence tests). ``tiebreak`` and
-    ``passthrough`` mean what they mean for pit_features_bucketed.
+    select the salted population; every other entity is one whole-timeline
+    segment of the same kernel cogroup, and with no hot entity at all the
+    plan is pit_features_bucketed's. With ``hot_ids=None,
+    hot_threshold=None`` every entity is salted (used by the equivalence
+    tests). ``tiebreak`` and ``passthrough`` mean what they mean for
+    pit_features_bucketed.
 
     ``hot_detector`` picks the detection plan when ``hot_threshold`` is
     set: "countmin" (default — constant-memory CMS + sampled candidates,
@@ -204,33 +209,57 @@ def pit_features_salted(
             hot_ids = hot_entities(ev, entity, hot_threshold)
         else:
             raise ValueError(f"unknown hot_detector {hot_detector!r}")
-
-    salted = (snap_ts, snap_id, gap_seconds, width, chunk_seconds, num_buckets)
-    if hot_ids is None:
-        return _salted_path(ev, sn, lay, *salted)
-
-    def bucketed(e, s):
+    if hot_ids is not None and not hot_ids:
         return pit_features_bucketed(
-            e, s, entity, ts, numeric_col, token_col, vocab, snap_ts, snap_id,
+            ev, sn, entity, ts, numeric_col, token_col, vocab, snap_ts, snap_id,
             gap_seconds, width, tiebreak, num_buckets, passthrough,
         )
-
-    if not hot_ids:
-        return bucketed(ev, sn)
-    is_hot = F.col(entity).isin(hot_ids)
-    cold = bucketed(ev.where(~is_hot), sn.where(~is_hot))
-    return cold.unionByName(_salted_path(ev.where(is_hot), sn.where(is_hot), lay, *salted))
+    return _salted_path(
+        ev, sn, lay, hot_ids, snap_ts, snap_id, gap_seconds, width, chunk_seconds, num_buckets
+    )
 
 
-# right-side row kinds of the salted cogroup, as bit flags: a carry row
-# may also hold the carried pre-chunk snapshot
-CARRY, SNAP = 1, 2
+# right-side row kinds of the kernel cogroup: a chunk's carries, a
+# snapshot, and one row of a chunk's carried tail
+CARRY, SNAP, TAIL = 1, 2, 3
+# the right side's other columns and their types. (t, i) is a snapshot's
+# time and id, or a tail row's time and place in its carried tail; x and
+# code are a tail row's value and token code; the rest are a chunk's
+# carries. Long columns are never null, so ids stay int64 in pandas.
+RIGHT = {
+    "t": "long", "i": "long", "x": "double", "code": "long",
+    "last_sess": "long", "open_run": "long", "bf_seed": "double", "next_first": "double",
+}
+# what chunk_summaries returns per tail row, besides its row index
+SUMMARY = {
+    "rank": "long", "ts": "long", "x": "double", "n": "long", "first_ts": "long",
+    "first_x": "double", "last_nn": "double", "breaks": "long", "trail": "long",
+}
+# the one chunk of every cold entity: a whole timeline, no carry row
+COLD_CHUNK = 0
+
+
+def _segments(ents: list, chunks: list) -> np.ndarray:
+    """(entity, chunk) segment codes over several row sets at once."""
+    ent, _ = pd.factorize(np.concatenate([np.asarray(e) for e in ents]))
+    chk = np.concatenate([np.asarray(c) for c in chunks]).astype(np.int64)
+    chk -= chk.min()
+    seg, _ = pd.factorize(ent * (int(chk.max()) + 1) + chk)
+    return seg
+
+
+def _right(kind: int, re, rc, **cols) -> pd.DataFrame:
+    """Right-side rows of one kind; unset columns get 0 or NaN."""
+    n = len(re)
+    fill = {c: np.full(n, 0 if t == "long" else np.nan) for c, t in RIGHT.items()}
+    return pd.DataFrame({"__re": re, CHUNK: rc, "__tag": np.full(n, kind), **fill, **cols})
 
 
 def _salted_path(
     ev: DataFrame,
     sn: DataFrame,
     lay: PitLayout,
+    hot_ids: list | None,
     snap_ts: str,
     snap_id: str,
     gap_seconds: int,
@@ -238,309 +267,162 @@ def _salted_path(
     chunk_seconds: int,
     num_buckets: int,
 ) -> DataFrame:
-    """Salted PIT kernel with zero per-group Python overhead.
+    """Salted PIT kernel: three bucketed pandas passes, no per-chunk Python.
 
     The first version of this path ran one pandas call per (entity, chunk)
     group three times over. At the 10M-row scale tier (150k entities x 6h
     chunks over 30 days) that is ~9M near-singleton Arrow batches — hours
     of pure Python dispatch for seconds of real work, found by the round-6
-    full-registry gate at the tier. The rebuilt plan:
+    full-registry gate at the tier. Its successor computed steps 1-2 with
+    JVM windows; their generated classes overflowed Spark's codegen cache,
+    so every pass recompiled. Now every step is one bucketed pandas pass
+    whose NumPy body lives in ``kernels``:
 
-    1. **Chunk summaries — pure JVM.** One window pass partitioned on the
-       salted key (entity, chunk) computes row counts, first/last
-       timestamps, internal session breaks, trailing-run length, the last
-       non-null value and the trailing ``width-1`` (ts, value, token)
-       tail — via lag / row_number / conditional struct min-max /
-       bounded collect_list. groupBy reuses the window's partitioning:
-       ONE exchange of the events, no Python. Tiebreak columns order
-       nulls-last, as the kernel's lexsort does.
-    2. **Carry scan — pure JVM.** The per-entity recurrences over chunk
-       summaries are all window-expressible: session offset is a prefix
-       sum, the open-run length is a max-of-reset-struct + prefix-count
-       difference, the backfill seed is last(ignorenulls), the carried
-       tail is a bounded ``rows between -k and -1`` flatten+slice, and
-       the strictly-before snapshot carry comes from a union frame
-       ordered (chunk, tag) with snapshots sorting AFTER events of the
-       same chunk. Summaries are tiny (one row per populated chunk), so
-       these exchanges are negligible.
-    3. **Bucketed margin-row kernel.** Carries (scalars + tail arrays)
-       and chunk snapshots ride the cogroup's RIGHT side keyed by
-       pmod(xxhash64(entity, chunk), B) — no broadcast of the carry
-       table, which in all-salted mode is O(populated chunks). The
-       carried pre-chunk snapshot travels on its chunk's carry row as an
-       ordinary snapshot, so the snapshot id column is never null and
-       stays int64. Inside the kernel the carried tails become margin
-       rows ahead of the chunk's body rows, and one call to
-       ``kernels.segment_features`` over (entity, chunk) segments —
-       the same call pit_features_bucketed makes, plus the carries —
-       computes every feature. Per-batch cost is paid B times total,
-       independent of how many (entity, chunk) groups exist.
+    1. **Chunk summaries.** The hot events, grouped by the kernel's own
+       salted bucket pmod(xxhash64(entity, chunk), B), go through
+       ``kernels.chunk_summaries``: each chunk's last ``width-1`` rows as
+       flat rows, each carrying the chunk's row count, first ts and value,
+       last non-null value, inner session breaks and last-session length.
+       Rows sort by (ts, tiebreak) with nulls last, as in the kernel.
+    2. **Carry scan.** The summaries, cogrouped with the snapshots by
+       pmod(xxhash64(entity), B), go through ``kernels.chunk_carries``:
+       per chunk its session offset, open run, backfill seed, next first
+       value, carried tail and the latest snapshot of a strictly earlier
+       chunk (``kernels.segment_asof`` at the chunk's start). It emits
+       the kernel's whole right side: every snapshot as a SNAP row, and
+       per chunk one CARRY row, its carried snapshot as another SNAP row
+       and its tail as TAIL rows.
+    3. **Bucketed margin-row kernel.** Events and step 2's rows cogroup
+       on pmod(xxhash64(entity, chunk), B). Cold entities
+       take the constant chunk COLD_CHUNK and no carry row: one
+       whole-timeline segment each. TAIL rows become margin rows ahead of
+       their chunk's body rows, and one call to
+       ``kernels.segment_features`` over (entity, chunk) segments — the
+       call pit_features_bucketed makes, plus the carries — computes every
+       feature.
 
-    Bit-identical to pit_features_cursor by the margin/carry algebra of
-    the module docstring; tests/test_skew.py asserts it.
+    Per-batch Python cost is paid about B times per pass, independent of
+    how many (entity, chunk) groups exist. Bit-identical to
+    pit_features_cursor by the margin/carry algebra of the module
+    docstring; tests/test_skew.py asserts it.
     """
-    from pyspark.sql import Window
-
     entity, ts, numeric_col, token_col = lay.entity, lay.ts, lay.numeric_col, lay.token_col
     chunk_us = chunk_seconds * 1_000_000
     gap_us = gap_seconds * 1_000_000
     tail_n = max(width - 1, 1)
+    etype = ev.schema[entity].dataType.simpleString()
 
-    ev_c = ev.withColumn("__tus", ts_us(ts)).withColumn(
-        CHUNK, F.floor(F.col("__tus") / F.lit(chunk_us))
-    )
-    sn_c = sn.withColumn("__stus", ts_us(snap_ts)).withColumn(
-        CHUNK, F.floor(F.col("__stus") / F.lit(chunk_us))
-    )
+    is_hot = F.lit(True) if hot_ids is None else F.col(entity).isin(hot_ids)
 
-    # ---- 1. chunk summaries: one JVM window + agg on the salted key -----
-    tb = lay.tb
-    asc = [F.col("__tus").asc()] + [F.col(c).asc_nulls_last() for c in tb]
-    desc = [F.col("__tus").desc()] + [F.col(c).desc_nulls_first() for c in tb]
-    W = Window.partitionBy(entity, CHUNK).orderBy(*asc)
-    Wd = Window.partitionBy(entity, CHUNK).orderBy(*desc)
+    def chunk_of(t: str):
+        salt = F.floor(ts_us(t) / F.lit(chunk_us))
+        return F.when(is_hot, salt).otherwise(F.lit(COLD_CHUNK).cast("long"))
 
-    brk = F.when(
-        F.col("__tus") - F.lag("__tus").over(W) > F.lit(gap_us), F.lit(1)
-    ).otherwise(F.lit(0))
-    # struct field order (t, [null flag, key]..., payload) makes
-    # sort_array/min/max follow the kernel's (ts, tiebreak nulls-last)
-    # sort exactly, ties included
-    def _keyed(*payload):
-        keys = []
-        for i, c in enumerate(tb):
-            keys += [F.col(c).isNull().alias(f"n{i}"), F.col(c).alias(f"k{i}")]
-        return F.struct(F.col("__tus").alias("t"), *keys, *payload)
+    def bucket(*cols: str):
+        return F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(num_buckets)).cast("int")
 
-    evw = ev_c.select(
-        entity, CHUNK, "__tus", *dict.fromkeys([*tb, numeric_col, token_col]),
-        brk.alias("__brk"),
-        F.row_number().over(W).alias("__rn"),
-        F.row_number().over(Wd).alias("__rnd"),
-    )
-    tail_struct = F.when(
-        F.col("__rnd") <= F.lit(tail_n),
-        _keyed(
-            F.col(numeric_col).alias("v"), F.col(token_col).alias("tok")
-        ),
-    )
-    summ = (
-        evw.groupBy(entity, CHUNK)
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.min("__tus").alias("first_ts_us"),
-            F.max("__tus").alias("last_ts_us"),
-            F.min(_keyed(F.col(numeric_col).alias("v"))).alias("__fv"),
-            F.max(
-                F.when(
-                    F.col(numeric_col).isNotNull(),
-                    _keyed(F.col(numeric_col).alias("v")),
-                )
-            ).alias("__lnn"),
-            F.sum("__brk").alias("internal_breaks"),
-            F.max(F.when(F.col("__brk") == 1, F.col("__rn"))).alias("__lastbrk"),
-            F.sort_array(F.collect_list(tail_struct)).alias("tail"),
-        )
-        .select(
-            entity, CHUNK, "n_rows", "first_ts_us", "last_ts_us",
-            F.col("__fv.v").alias("first_value"),
-            F.col("__lnn.v").alias("last_nonnull"),
-            "internal_breaks",
-            F.when(F.col("__lastbrk").isNull(), F.col("n_rows"))
-            .otherwise(F.col("n_rows") - F.col("__lastbrk") + 1)
-            .alias("trail_run"),
-            "tail",
-        )
+    left = ev.withColumn(CHUNK, chunk_of(ts)).withColumn("__b", bucket(entity, CHUNK))
+    sn_c = sn.select(
+        F.col(entity).alias("__re"), chunk_of(snap_ts).alias(CHUNK),
+        ts_us(snap_ts).alias("t"), F.col(snap_id).cast("long").alias("i"),
     )
 
-    # ---- 2. per-entity carries: JVM windows over the tiny summary table -
-    We = Window.partitionBy(entity).orderBy(CHUNK)
-    flat = F.flatten(
-        F.collect_list("tail").over(We.rowsBetween(-tail_n, -1))
-    )
-    summ2 = summ.select(
-        "*",
-        F.when(
-            F.size(flat) > tail_n,
-            F.slice(flat, F.size(flat) - F.lit(tail_n - 1), tail_n),
+    # ---- 1. chunk summaries of the hot events ---------------------------
+    def summarize(pdf: pd.DataFrame) -> pd.DataFrame:
+        t = to_us(pdf[ts])
+        seg = _segments([pdf[entity]], [pdf[CHUNK]])
+        order = np.lexsort((*lay.tiebreak_keys(pdf), t, seg))
+        s = kernels.chunk_summaries(
+            seg[order], t[order], pdf[numeric_col].to_numpy(np.float64)[order], gap_us, tail_n
         )
-        .otherwise(flat)
-        .alias("c_tail"),
-        F.lead("first_value").over(We).alias("c_next_first"),
+        rows = order[s.pop("row")]
+        return pd.DataFrame({
+            "__re": pdf[entity].to_numpy()[rows], CHUNK: pdf[CHUNK].to_numpy()[rows],
+            "code": lay.codes(pdf[token_col].to_numpy()[rows]), **s,
+        })
+
+    summ_schema = ", ".join(
+        [f"__re {etype}", f"{CHUNK} long", "code long", *[f"{c} {t}" for c, t in SUMMARY.items()]]
+    )
+    summ = left.where(is_hot).groupBy("__b").applyInPandas(summarize, summ_schema)
+
+    # ---- 2. per-entity carry scan: the kernel's whole right side --------
+    def scan(s_pdf: pd.DataFrame, sn_pdf: pd.DataFrame) -> pd.DataFrame:
+        s_t, s_i = sn_pdf["t"].to_numpy(np.int64), sn_pdf["i"].to_numpy(np.int64)
+        snaps = _right(SNAP, sn_pdf["__re"].to_numpy(), sn_pdf[CHUNK].to_numpy(), t=s_t, i=s_i)
+        if len(s_pdf) == 0:
+            return snaps
+        ent, _ = pd.factorize(np.concatenate([s_pdf["__re"].to_numpy(), sn_pdf["__re"].to_numpy()]))
+        e, chk = ent[: len(s_pdf)], s_pdf[CHUNK].to_numpy(np.int64)
+        order = np.lexsort((-s_pdf["rank"].to_numpy(), chk, e))
+        tail = {c: s_pdf[c].to_numpy()[order] for c in [*SUMMARY, "code"]}
+        c = kernels.chunk_carries(
+            e[order], chk[order], tail, gap_us, tail_n, chunk_us, ent[len(s_pdf):], s_t, s_i
+        )
+        re, rc = s_pdf["__re"].to_numpy()[order][c["first"]], chk[order][c["first"]]
+        has = c["snap"] >= 0
+        hit = c["snap"][has]
+        dst, src = c["tail_chunk"], c["tail_row"]
+        carried = {k: c[k] for k in ("last_sess", "open_run", "bf_seed", "next_first")}
+        return pd.concat([
+            snaps,
+            _right(CARRY, re, rc, **carried),
+            _right(SNAP, re[has], rc[has], t=s_t[hit], i=s_i[hit]),
+            _right(TAIL, re[dst], rc[dst], t=tail["ts"][src], i=c["tail_pos"],
+                   x=tail["x"][src], code=tail["code"][src]),
+        ], ignore_index=True)
+
+    right_schema = ", ".join(
+        [f"__re {etype}", f"{CHUNK} long", "__tag long", *[f"{c} {t}" for c, t in RIGHT.items()]]
+    )
+    right = (
+        summ.withColumn("__eb", bucket("__re")).groupBy("__eb")
+        .cogroup(sn_c.withColumn("__eb", bucket("__re")).groupBy("__eb"))
+        .applyInPandas(scan, right_schema)
+        .withColumn("__b", bucket("__re", CHUNK))
     )
 
-    sn_summ = sn_c.groupBy(entity, CHUNK).agg(
-        F.max(
-            F.struct(F.col("__stus").alias("t"), F.col(snap_id).cast("long").alias("i"))
-        ).alias("__snap")
-    )
-    # union frame: snapshots sort AFTER the event summary of the same
-    # chunk (tag 1 > 0), so last(ignorenulls) over (unbounded, -1) yields
-    # the latest snapshot of a STRICTLY smaller chunk — the scan cursor.
-    u = summ2.select(
-        "*", F.lit(0).alias("__tag"),
-        F.lit(None).cast("struct<t:bigint,i:bigint>").alias("__snap"),
-    ).unionByName(
-        sn_summ.select(
-            entity, CHUNK,
-            F.lit(None).cast("long").alias("n_rows"),
-            F.lit(None).cast("long").alias("first_ts_us"),
-            F.lit(None).cast("long").alias("last_ts_us"),
-            F.lit(None).cast("double").alias("first_value"),
-            F.lit(None).cast("double").alias("last_nonnull"),
-            F.lit(None).cast("long").alias("internal_breaks"),
-            F.lit(None).cast("long").alias("trail_run"),
-            F.lit(None).cast(summ.schema["tail"].dataType).alias("tail"),
-            F.lit(None).cast(summ.schema["tail"].dataType).alias("c_tail"),
-            F.lit(None).cast("double").alias("c_next_first"),
-            F.lit(1).alias("__tag"),
-            F.col("__snap"),
-        )
-    )
-    Wu = Window.partitionBy(entity).orderBy(CHUNK, "__tag")
-    Wp = Wu.rowsBetween(Window.unboundedPreceding, -1)
-    u = (
-        u.withColumn("__prev_last", F.last("last_ts_us", ignorenulls=True).over(Wp))
-        .withColumn(
-            "__sessions_in",
-            F.when(F.col("__tag") == 1, F.lit(None).cast("long")).otherwise(
-                F.col("internal_breaks")
-                + F.when(
-                    F.col("__prev_last").isNull()
-                    | (F.col("first_ts_us") - F.col("__prev_last") > F.lit(gap_us)),
-                    1,
-                ).otherwise(0)
-            ),
-        )
-        .withColumn(
-            "c_last_sess",
-            F.coalesce(F.sum("__sessions_in").over(Wp), F.lit(0)) - F.lit(1),
-        )
-        .withColumn(
-            "__cumn",
-            F.sum("n_rows").over(Wu.rowsBetween(Window.unboundedPreceding, 0)),
-        )
-        .withColumn("__rnu", F.row_number().over(Wu))
-        .withColumn(
-            "__reset",
-            F.max(
-                F.when(
-                    F.col("__sessions_in") > 0,
-                    F.struct(
-                        F.col("__rnu").alias("r"),
-                        F.col("trail_run").alias("tr"),
-                        F.col("__cumn").alias("cn"),
-                    ),
-                )
-            ).over(Wp),
-        )
-        .withColumn(
-            "c_open_run",
-            F.when(F.col("__reset").isNull(), F.lit(0)).otherwise(
-                F.col("__reset.tr")
-                + (F.col("__cumn") - F.col("n_rows"))
-                - F.col("__reset.cn")
-            ),
-        )
-        .withColumn("c_bf_seed", F.last("last_nonnull", ignorenulls=True).over(Wp))
-        .withColumn("__csnap", F.last("__snap", ignorenulls=True).over(Wp))
-    )
-    carries = u.where(F.col("__tag") == 0).select(
-        F.col(entity).alias("__re"),
-        F.col(CHUNK).alias("__rc"),
-        F.when(F.col("__csnap").isNull(), F.lit(CARRY))
-        .otherwise(F.lit(CARRY | SNAP)).alias("__tag"),
-        F.coalesce(F.col("__csnap.t"), F.lit(0)).alias("s_t"),
-        F.coalesce(F.col("__csnap.i"), F.lit(0)).alias("s_i"),
-        "c_last_sess",
-        "c_open_run",
-        "c_bf_seed",
-        "c_next_first",
-        F.transform("c_tail", lambda s: s["t"]).alias("c_tail_ts"),
-        F.transform("c_tail", lambda s: s["v"]).alias("c_tail_val"),
-        F.transform("c_tail", lambda s: s["tok"]).alias("c_tail_tok"),
-    )
-
-    # ---- 3. bucketed kernel: carries + snapshots on the cogroup right ---
-    nulls = [
-        F.lit(None).cast("long").alias("c_last_sess"),
-        F.lit(None).cast("long").alias("c_open_run"),
-        F.lit(None).cast("double").alias("c_bf_seed"),
-        F.lit(None).cast("double").alias("c_next_first"),
-        F.lit(None).cast("array<long>").alias("c_tail_ts"),
-        F.lit(None).cast("array<double>").alias("c_tail_val"),
-        F.lit(None).cast("array<string>").alias("c_tail_tok"),
-    ]
-    r_sn = sn_c.select(
-        F.col(entity).alias("__re"),
-        F.col(CHUNK).alias("__rc"),
-        F.lit(SNAP).alias("__tag"),
-        F.col("__stus").alias("s_t"),
-        F.col(snap_id).cast("long").alias("s_i"),
-        *nulls,
-    )
-    right = r_sn.unionByName(carries).withColumn(
-        "__b",
-        F.pmod(F.xxhash64(F.col("__re"), F.col("__rc")), F.lit(num_buckets)).cast("int"),
-    )
-    left = ev_c.select(*lay.inputs, CHUNK).withColumn(
-        "__b",
-        F.pmod(F.xxhash64(F.col(entity), F.col(CHUNK)), F.lit(num_buckets)).cast("int"),
-    )
-
+    # ---- 3. bucketed kernel: carries, tails and snapshots on the right --
     def kern(ev_pdf: pd.DataFrame, r_pdf: pd.DataFrame) -> pd.DataFrame:
         if len(ev_pdf) == 0:
             return lay.empty()
-        tag = r_pdf["__tag"].to_numpy()
-        cy = r_pdf[(tag & CARRY) > 0]
-        sns = r_pdf[(tag & SNAP) > 0]
-        n_b, n_c = len(ev_pdf), len(cy)
+        kind = r_pdf["__tag"].to_numpy()
+        cy, sns, tl = (r_pdf[kind == k] for k in (CARRY, SNAP, TAIL))
+        n_b, n_m = len(ev_pdf), len(tl)
+        seg_all = _segments(
+            [ev_pdf[entity], cy["__re"], sns["__re"], tl["__re"]],
+            [ev_pdf[CHUNK], cy[CHUNK], sns[CHUNK], tl[CHUNK]],
+        )
+        b_seg, c_seg, s_seg, m_seg = np.split(seg_all, np.cumsum([n_b, len(cy), len(sns)]))
 
-        # (entity, chunk) segment codes over body rows, carries, snapshots
-        ent, _ = pd.factorize(np.concatenate(
-            [ev_pdf[entity].to_numpy(), cy["__re"].to_numpy(), sns["__re"].to_numpy()]
-        ))
-        chk = np.concatenate([ev_pdf[CHUNK], cy["__rc"], sns["__rc"]]).astype(np.int64)
-        chk -= chk.min()
-        seg_all, _ = pd.factorize(ent * (int(chk.max()) + 1) + chk)
-        b_seg, c_seg, s_seg = np.split(seg_all, [n_b, n_b + n_c])
-
-        # per-segment carries, indexed by segment code
+        # per-segment carries, indexed by segment code; cold segments and
+        # an entity's first chunk keep the defaults
         n_seg = int(seg_all.max()) + 1
         carried = {}
-        for name, col, fill in (
-            ("last_sess", "c_last_sess", -1), ("open_run", "c_open_run", 0),
-            ("bf_seed", "c_bf_seed", np.nan), ("next_first", "c_next_first", np.nan),
+        for name, fill in (
+            ("last_sess", -1), ("open_run", 0), ("bf_seed", np.nan), ("next_first", np.nan),
         ):
             carried[name] = np.full(n_seg, fill)
-            carried[name][c_seg] = cy[col].to_numpy(carried[name].dtype)
+            carried[name][c_seg] = cy[name].to_numpy(carried[name].dtype)
 
-        # margin rows from the carried tails, ahead of the body rows. Their
-        # ts is strictly before every body ts of their chunk, so the
-        # tiebreak only orders body rows; a stable sort keeps each tail's
-        # own (ts, tiebreak) order.
-        n_tail = cy["c_tail_ts"].map(len).to_numpy(np.int64)
-        n_m = int(n_tail.sum())
-
-        t = np.concatenate([*cy["c_tail_ts"], to_us(ev_pdf[ts])]).astype(np.int64)
-        x = np.concatenate(
-            [*cy["c_tail_val"], ev_pdf[numeric_col].to_numpy(np.float64)]
-        ).astype(np.float64)
-        codes = np.concatenate([
-            lay.codes(np.concatenate([[], *cy["c_tail_tok"]])),
-            lay.codes(ev_pdf[token_col]),
-        ])
-        seg = np.concatenate([np.repeat(c_seg, n_tail), b_seg])
+        # margin rows ahead of the body rows. Their ts is strictly before
+        # every body ts of their chunk, so the tiebreak only orders body
+        # rows and the tail position only margin rows.
+        t = np.concatenate([tl["t"].to_numpy(np.int64), to_us(ev_pdf[ts])])
+        x = np.concatenate([tl["x"].to_numpy(np.float64), ev_pdf[numeric_col].to_numpy(np.float64)])
+        codes = np.concatenate([tl["code"].to_numpy(np.int64), lay.codes(ev_pdf[token_col])])
+        seg = np.concatenate([m_seg, b_seg])
         keys = [
             np.concatenate([np.zeros(n_m, dtype=k.dtype), k])
             for k in lay.tiebreak_keys(ev_pdf)
         ]
-        order = np.lexsort((*keys, t, seg))
+        pos = np.concatenate([tl["i"].to_numpy(np.int64), np.zeros(n_b, dtype=np.int64)])
+        order = np.lexsort((*keys, pos, t, seg))
         margin = order < n_m
         f = kernels.segment_features(
             seg[order], t[order], x[order], codes[order],
             len(lay.wc), width, gap_us,
-            s_seg, sns["s_t"].to_numpy(np.int64), sns["s_i"].to_numpy(np.int64),
+            s_seg, sns["t"].to_numpy(np.int64), sns["i"].to_numpy(np.int64),
             margin=margin, **carried,
         )
         return lay.frame(ev_pdf.iloc[order[~margin] - n_m], f)

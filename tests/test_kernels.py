@@ -113,6 +113,87 @@ def test_segment_features_carries_continue_a_timeline(rows, cut, width):
         )
 
 
+@given(
+    st.integers(-1500, 200),
+    st.lists(
+        st.tuples(st.sampled_from([0, 1, 37, 100, 101, 250, 700]),
+                  st.one_of(st.none(), st.floats(-5, 5)), st.integers(-1, 2)),
+        min_size=1, max_size=40,
+    ),
+    st.lists(st.tuples(st.integers(-1700, 4000), st.integers(0, 3)), min_size=1, max_size=12),
+    st.integers(1, 6),
+    st.data(),
+)
+@settings(max_examples=200, deadline=None)
+def test_chunk_carries_continue_a_timeline(t0, rows, snaps, width, data):
+    """A timeline cut into time chunks, each given the margin rows and
+    carries that ``chunk_summaries`` and ``chunk_carries`` derive from the
+    chunks before it (as the salted path does), gives the features of the
+    unsplit timeline. Steps of 0 tie timestamps (a drawn tiebreak orders
+    them), steps of exactly ``gap`` do not break a session, long steps
+    leave one-row chunks, and a negative start gives negative chunk ids."""
+    gap, chunk_us, n_tok = 100, 250, 3
+    tail_n = max(width - 1, 1)
+    tb = np.array(data.draw(st.permutations(range(len(rows)))), dtype=np.int64)
+    ts = t0 + np.cumsum([r[0] for r in rows]).astype(np.int64)
+    order = np.lexsort((tb, ts))
+    ts, tb = ts[order], tb[order]
+    x = np.array([np.nan if r[1] is None else r[1] for r in rows])[order]
+    codes = np.array([r[2] for r in rows], dtype=np.int64)[order]
+    # the first snapshot's twin with id 2^53+1 wins their tie
+    s_ts = np.array([s[0] for s in snaps] + [snaps[0][0]], dtype=np.int64)
+    s_id = np.array([s[1] for s in snaps] + [2**53 + 1], dtype=np.int64)
+    zeros = np.zeros(len(ts), dtype=np.int64)
+
+    whole = kernels.segment_features(
+        zeros, ts, x, codes, n_tok, width, gap, np.zeros(len(s_ts), dtype=np.int64), s_ts, s_id,
+    )
+
+    chunk = ts // chunk_us
+    summ = kernels.chunk_summaries(chunk - chunk.min(), ts, x, gap, tail_n)
+    # the scan gets the summaries in shuffle order and sorts them back
+    mix = np.array(data.draw(st.permutations(range(len(summ["row"])))), dtype=np.int64)
+    back = mix[np.lexsort((-summ["rank"][mix], chunk[summ["row"]][mix]))]
+    summ = {k: v[back] for k, v in summ.items()}
+    c = kernels.chunk_carries(
+        np.zeros(len(summ["row"]), dtype=np.int64), chunk[summ["row"]], summ,
+        gap, tail_n, chunk_us, np.zeros(len(s_ts), dtype=np.int64), s_ts, s_id,
+    )
+    # one segment per chunk: body rows, margin rows from the carried
+    # tails, the chunk's own snapshots and its carried snapshot
+    seg_of = {ch: i for i, ch in enumerate(chunk[summ["row"][c["first"]]])}
+    b_seg = np.array([seg_of[ch] for ch in chunk])
+    m_seg = c["tail_chunk"]
+    own = np.isin(s_ts // chunk_us, list(seg_of))
+    hit = c["snap"] >= 0
+    sn_seg = np.concatenate([[seg_of[ch] for ch in s_ts[own] // chunk_us],
+                             np.flatnonzero(hit)]).astype(np.int64)
+    sn_ts = np.concatenate([s_ts[own], s_ts[c["snap"][hit]]])
+    sn_id = np.concatenate([s_id[own], s_id[c["snap"][hit]]])
+
+    src = summ["row"][c["tail_row"]]
+    n_m = len(src)
+    seg = np.concatenate([m_seg, b_seg])
+    t = np.concatenate([ts[src], ts])
+    keys = np.concatenate([np.zeros(n_m, dtype=np.int64), tb])
+    pos = np.concatenate([c["tail_pos"], zeros])
+    srt = np.lexsort((keys, pos, t, seg))
+    margin = srt < n_m
+    got = kernels.segment_features(
+        seg[srt], t[srt], np.concatenate([x[src], x])[srt],
+        np.concatenate([codes[src], codes])[srt], n_tok, width, gap,
+        sn_seg, sn_ts, sn_id, margin=margin,
+        last_sess=c["last_sess"], open_run=c["open_run"],
+        bf_seed=c["bf_seed"], next_first=c["next_first"],
+    )
+    assert (srt[~margin] - n_m == np.arange(len(ts))).all()
+    for k, v in whole.items():
+        if k == "asof_snapshot_id":
+            assert (got[k] == v).all()  # exact int64, no float rounding
+        else:
+            np.testing.assert_allclose(got[k], v, rtol=1e-9, atol=1e-9, err_msg=k)
+
+
 def test_session_ids():
     ts = np.array([0, 10, 2000, 2005, 9000], dtype=np.int64)
     assert kernels.session_ids(ts, gap_us=1000).tolist() == [0, 0, 1, 1, 2]

@@ -37,14 +37,16 @@ EMB = ["embedding", "vec_id"]
 # (exchanges, bcast, smj, nlj, pushed, pyrow, arrow, scan_fields)
 EXPECTED: dict[str, tuple] = {
     # flagship pair: bytes/value pruned pre-shuffle. The salted path is
-    # the round-6 rework: JVM summaries + JVM carry windows + ONE bucketed
-    # margin-row kernel — 2 Arrow stages total (was 6) and ZERO broadcast
-    # (the former broadcast of the carry table was an at-scale hazard in
-    # all-salted mode); 6 physical exchanges, but only 2 move the events
-    # (summaries window + kernel cogroup), the rest move the tiny
-    # chunk-summary table
+    # three bucketed pandas passes and ZERO broadcast (a broadcast of the
+    # carry table would be an at-scale hazard in all-salted mode): chunk
+    # summaries and the margin-row kernel share the salted bucket, the
+    # carry scan cogroups summaries with snapshots by entity bucket and
+    # emits the kernel's whole right side. Its NumPy summaries and carry
+    # scan replaced JVM windows whose generated classes overflowed the
+    # codegen cache: 3 Arrow nodes (was 1), 5 physical exchanges (was 6),
+    # 2 of them moving the events, and one snapshot scan (was 2)
     "pit_fused": (4, 0, 0, 0, 1, 0, 2, [EVV, EV]),
-    "pit_salted": (12, 0, 0, 0, 2, 0, 2, [EVV, EV, EVV, EV]),
+    "pit_salted": (10, 0, 0, 0, 1, 0, 6, [EVV, EVV, EV]),
     "image_pit_checksums": (8, 0, 0, 0, 0, 0, 4, []),  # fixture-gen input
     # star-edge dedup (round-7 rework): candidates+verify are join-free
     # (carried token arrays + window min(struct)), CC rounds run eagerly

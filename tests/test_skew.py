@@ -19,7 +19,7 @@ EPOCH = dt.datetime(2024, 1, 1)
 BIG_ID = 2**53 + 1  # the first integer a float64 cannot hold
 
 
-def _mk(spark, seed=7, n_hot=4000, n_cold=60):
+def _mk(spark, seed=7, n_hot=4000, n_cold=60, epoch=EPOCH):
     """One hot entity with a dense, NaN-pocked, session-gapped timeline plus
     a few cold entities; snapshots from the purchase events."""
     rng = np.random.default_rng(seed)
@@ -39,7 +39,7 @@ def _mk(spark, seed=7, n_hot=4000, n_cold=60):
             rows.append((f"cold{e}", tc, float(rng.normal()) if rng.random() > 0.2 else None,
                          VOCAB[int(rng.integers(0, 3))]))
     pdf = pd.DataFrame(rows, columns=["user_id", "off", "value", "event_type"])
-    pdf["ts"] = pdf["off"].map(lambda s: EPOCH + dt.timedelta(seconds=s))
+    pdf["ts"] = pdf["off"].map(lambda s: epoch + dt.timedelta(seconds=s))
     pdf["event_id"] = np.arange(len(pdf), dtype=np.int64)
     ev = spark.createDataFrame(pdf[["user_id", "ts", "value", "event_type", "event_id"]])
     ev = ev.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
@@ -110,6 +110,60 @@ def test_hot_threshold_split_path(spark):
         gap_seconds=1800, width=5, chunk_seconds=7200, hot_threshold=1000,
     ))
     _assert_same(base, mixed)
+
+
+def test_mixed_hot_cold_around_the_cold_chunk(spark):
+    """A hot entity whose timeline starts before 1970, so its chunk ids run
+    from negative through COLD_CHUNK, shares the kernel cogroup with cold
+    entities that each sit in that one constant chunk."""
+    from spark_pit.operators.skew import COLD_CHUNK
+    from spark_pit.util import ts_us
+
+    ev, snaps = _mk(spark, epoch=dt.datetime(1969, 12, 31, 12))
+    lo, hi = (
+        ev.where(F.col("user_id") == "hot")
+        .select(F.floor(ts_us("ts") / F.lit(3600 * 1_000_000)).alias("c"))
+        .agg(F.min("c"), F.max("c")).first()
+    )
+    assert lo < COLD_CHUNK < hi
+    base = _collect(pit_features_cursor(
+        ev, snaps, "user_id", "ts", "value", "event_type", VOCAB,
+        gap_seconds=1800, width=5,
+    ))
+    mixed = _collect(pit_features_salted(
+        ev, snaps, "user_id", "ts", "value", "event_type", VOCAB,
+        gap_seconds=1800, width=5, chunk_seconds=3600, hot_ids=["hot"], num_buckets=4,
+    ))
+    _assert_same(base, mixed)
+
+
+def test_hot_threshold_above_every_entity(spark):
+    ev, snaps = _mk(spark)
+    assert hot_entities(ev, "user_id", threshold=5000) == []
+    base = _collect(pit_features_cursor(
+        ev, snaps, "user_id", "ts", "value", "event_type", VOCAB,
+        gap_seconds=1800, width=5,
+    ))
+    none_hot = _collect(pit_features_salted(
+        ev, snaps, "user_id", "ts", "value", "event_type", VOCAB,
+        gap_seconds=1800, width=5, chunk_seconds=7200, hot_threshold=5000,
+    ))
+    _assert_same(base, none_hot)
+
+
+def test_hot_and_cold_share_one_feature_cogroup(spark):
+    """With hot ids present the image pipeline plans ONE feature kernel:
+    cold ids ride its cogroup instead of a second, unioned kernel plan."""
+    from spark_pit.datagen import images_table, snapshots_table
+    from spark_pit.pipeline import image_pit_features
+
+    images = images_table(spark, n_entities=30, n_rows=900, seed=11)
+    snaps = snapshots_table(spark, n_entities=30, snaps_per_entity=6, seed=11)
+    out = image_pit_features(images, snaps, hot_threshold=40, chunk_seconds=6 * 3600)
+    plan = out._jdf.queryExecution().optimizedPlan().toString().splitlines()
+    feature = [i for i, ln in enumerate(plan) if "FlatMapCoGroupsInPandas" in ln and "__wc0" in ln]
+    assert len(feature) == 1
+    assert not any("Union" in ln for ln in plan[: feature[0]])
 
 
 def test_salted_fans_out_tasks(spark):
