@@ -345,49 +345,6 @@ def chunk_carries(
     }
 
 
-def lagk_pair_counts(codes: np.ndarray, n_tokens: int, k: int) -> np.ndarray:
-    """CKSAAP/DPC analogue (feature.py:487-526, 528-555): counts of ordered
-    token pairs (a, b) with b exactly k positions after a, over the whole
-    entity. Returns flat (n_tokens*n_tokens,) counts; caller normalizes by
-    (L - k) to match the reference's type-1 normalization."""
-    out = np.zeros(n_tokens * n_tokens, dtype=np.int64)
-    if len(codes) <= k:
-        return out
-    a, b = codes[:-k], codes[k:]
-    m = (a >= 0) & (b >= 0)
-    np.add.at(out, a[m] * n_tokens + b[m], 1)
-    return out
-
-
-def autocorr_features(x: np.ndarray, nlags: int) -> dict[str, np.ndarray]:
-    """Autocorrelation family on one numeric channel (feature.py §2.5):
-
-    - nmbroto[n] = sum(x_j * x_{j+n}) / (L - n)            (feature.py:1428-1485)
-    - moran[n]   = [sum((x_j-m)(x_{j+n}-m))/(L-n)] / [sum((x_j-m)^2)/L]
-                                                           (feature.py:1487-1548)
-    - geary[n]   = (L-1)/(2(L-n)) * sum((x_j-x_{j+n})^2) / sum((x_j-m)^2)
-                                                           (feature.py:1550-1610)
-    - ac[n]      = sum((x_j-m)(x_{j+n}-m)) / (L-n)         (feature.py:1620-1668)
-
-    Returns dict of arrays of length nlags (NaN where L <= n or var==0).
-    """
-    L = len(x)
-    m = x.mean() if L else np.nan
-    ss = float(((x - m) ** 2).sum()) if L else np.nan
-    out = {k: np.full(nlags, np.nan) for k in ("nmbroto", "moran", "geary", "ac")}
-    for n in range(1, nlags + 1):
-        if L <= n:
-            continue
-        a, b = x[:-n], x[n:]
-        out["nmbroto"][n - 1] = float((a * b).sum()) / (L - n)
-        cov = float(((a - m) * (b - m)).sum()) / (L - n)
-        out["ac"][n - 1] = cov
-        if ss > 0:
-            out["moran"][n - 1] = cov / (ss / L)
-            out["geary"][n - 1] = (L - 1) / (2.0 * (L - n)) * float(((a - b) ** 2).sum()) / ss
-    return out
-
-
 def cross_cov(x1: np.ndarray, x2: np.ndarray, nlags: int) -> np.ndarray:
     """CC analogue (feature.py:1670-1721): cross-covariance of two channels
     at lags 1..nlags: sum((x1_j-m1)(x2_{j+n}-m2)) / (L-n)."""

@@ -1,19 +1,22 @@
 """Point-in-time (as-of) join — the engine's core operator.
 
-Spark has no SQL ASOF JOIN; we provide two implementations with identical
-semantics (tested equal, oracle'd against DuckDB ASOF JOIN):
+Spark has no SQL ASOF JOIN. The production joins are pure JVM plans built by
+one private function, ``_tagged_asof``: tag + union + ``last``/``first
+(ignorenulls)`` over a (key, ts, tag, seq) window. One shuffle, whole-stage
+codegen, no Python; at 100 TB it is a single sort-based exchange that AQE can
+skew-split, and the `bytes` payload column (if any) must be projected away by
+the caller before it (SURVEY.md §7 hard-point 3).
 
-1. ``asof_join_window`` — pure JVM path: tag + union + ``last(ignorenulls)``
-   over a (key, ts, tag) window. One shuffle, whole-stage codegen, no Python.
-   This is the default: at 100 TB it is a single sort-based exchange that AQE
-   can skew-split, and the `bytes` payload column (if any) must be projected
-   away by the caller before it (SURVEY.md §7 hard-point 3).
+- ``asof_join_window`` — backward (most recent snapshot) join, the default.
+- ``asof_join_multi`` — backward join against K snapshot groups in one pass.
+- ``asof_join_forward`` — forward (next snapshot) join, for labels.
+- ``asof_join_nearest`` — nearest snapshot within a tolerance; it arbitrates
+  a backward and a forward candidate, so it has its own plan.
 
-2. ``asof_join_cursor`` — the sort-merge cursor the north rule names:
-   ``left.groupBy(k).cogroup(right.groupBy(k)).applyInPandas`` with a
-   vectorized ``searchsorted`` merge per entity (kernels.asof_indices).
-   Preferable when the caller is already fusing many per-entity kernels into
-   one pass (see operators/pit.py) — the shuffle is paid once for all of them.
+``asof_join_cursor`` is the independent reference the tests compare the window
+joins with: ``left.groupBy(k).cogroup(right.groupBy(k)).applyInPandas`` with a
+vectorized ``searchsorted`` merge per entity (kernels.asof_indices). All of
+them are oracle'd against DuckDB ASOF JOIN.
 
 Tie semantics (SURVEY.md §7 hard-point 1): ``strict=True`` (default) matches
 only snapshots with ``snapshot_ts`` **strictly before** ``event_ts`` — the
@@ -36,6 +39,65 @@ _TAG = "__pit_tag"
 _SEQ = "__pit_seq"
 
 
+def _tagged_asof(
+    left: DataFrame,
+    groups: list[tuple],
+    on: list[str],
+    left_ts: str,
+    strict: bool,
+    forward: bool = False,
+) -> DataFrame:
+    """The union-window as-of plan shared by the window, multi and forward
+    joins. ``groups`` holds (prefix, df, right_ts, value_cols, order_col).
+    Left rows carry null ``{prefix}{c}`` / ``{prefix}ts`` columns, each
+    group's rows carry nulls for every column but its own, and all of them
+    are unioned and sorted by (key, ts, tag, seq) in ONE exchange. Each
+    carried column is ``last`` (backward) or ``first`` (forward) ignoring
+    nulls, so the groups' window states never interact. At equal timestamps
+    the tag orders a right row before the left row exactly when the frame
+    should include it; among equal right timestamps ``order_col`` breaks the
+    tie (the latest wins backward, the earliest forward)."""
+    left_tag, right_tag = (0, 1) if strict != forward else (1, 0)
+    lhs = left.withColumn(_TAG, F.lit(left_tag)).withColumn(_SEQ, F.lit(0))
+    carried: list[str] = []
+    for prefix, rdf, rts, vcols, _ in groups:
+        for c in vcols:
+            lhs = lhs.withColumn(f"{prefix}{c}", F.lit(None).cast(rdf.schema[c].dataType))
+        lhs = lhs.withColumn(f"{prefix}ts", F.lit(None).cast(rdf.schema[rts].dataType))
+        carried += [f"{prefix}{c}" for c in vcols] + [f"{prefix}ts"]
+
+    unioned = lhs
+    for prefix, rdf, rts, vcols, order_col in groups:
+        rhs = rdf.select(
+            *on,
+            F.col(rts).alias(left_ts),
+            F.lit(right_tag).alias(_TAG),
+            (F.col(order_col) if order_col else F.lit(0)).cast("long").alias(_SEQ),
+            *[F.col(c).alias(f"{prefix}{c}") for c in vcols],
+            F.col(rts).alias(f"{prefix}ts"),
+        )
+        have = set(rhs.columns)
+        for f in lhs.schema.fields:
+            if f.name not in have:
+                rhs = rhs.withColumn(f.name, F.lit(None).cast(f.dataType))
+        unioned = unioned.unionByName(rhs.select(*lhs.columns))
+
+    frame = (
+        (Window.currentRow, Window.unboundedFollowing)
+        if forward
+        else (Window.unboundedPreceding, Window.currentRow)
+    )
+    w = (
+        Window.partitionBy(*on)
+        .orderBy(F.col(left_ts).asc(), F.col(_TAG).asc(), F.col(_SEQ).asc())
+        .rowsBetween(*frame)
+    )
+    pick = F.first if forward else F.last
+    for c in carried:
+        unioned = unioned.withColumn(c, pick(c, ignorenulls=True).over(w))
+    return unioned.where(F.col(_TAG) == left_tag).drop(_TAG, _SEQ)
+
+
 def asof_join_window(
     left: DataFrame,
     right: DataFrame,
@@ -49,36 +111,9 @@ def asof_join_window(
 ) -> DataFrame:
     """As-of join via union + last-ignore-nulls window. Returns all left rows
     + columns ``{prefix}{c}`` for c in value_cols and ``{prefix}ts``."""
-    left_tag, right_tag = (0, 1) if strict else (1, 0)
-    carried = [f"{prefix}{c}" for c in value_cols]
-
-    lhs = left.withColumn(_TAG, F.lit(left_tag)).withColumn(_SEQ, F.lit(0))
-    for c in value_cols:
-        lhs = lhs.withColumn(f"{prefix}{c}", F.lit(None).cast(right.schema[c].dataType))
-    lhs = lhs.withColumn(f"{prefix}ts", F.lit(None).cast(right.schema[right_ts].dataType))
-
-    rhs = right.select(
-        *on,
-        F.col(right_ts).alias(left_ts),
-        F.lit(right_tag).alias(_TAG),
-        (F.col(right_order) if right_order else F.lit(0)).cast("long").alias(_SEQ),
-        *[F.col(c).alias(f"{prefix}{c}") for c in value_cols],
-        F.col(right_ts).alias(f"{prefix}ts"),
+    return _tagged_asof(
+        left, [(prefix, right, right_ts, value_cols, right_order)], on, left_ts, strict
     )
-    for f in left.schema.fields:
-        if f.name not in on and f.name != left_ts:
-            rhs = rhs.withColumn(f.name, F.lit(None).cast(f.dataType))
-    rhs = rhs.select(*lhs.columns)
-
-    w = (
-        Window.partitionBy(*on)
-        .orderBy(F.col(left_ts).asc(), F.col(_TAG).asc(), F.col(_SEQ).asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    unioned = lhs.unionByName(rhs)
-    for c in [*carried, f"{prefix}ts"]:
-        unioned = unioned.withColumn(c, F.last(c, ignorenulls=True).over(w))
-    return unioned.where(F.col(_TAG) == left_tag).drop(_TAG, _SEQ)
 
 
 def asof_join_nearest(
@@ -209,36 +244,9 @@ def asof_join_forward(
     timestamps the EARLIEST in ``right_order`` wins (mirror of the
     backward rule). Returns all left rows + ``{prefix}{c}`` and
     ``{prefix}ts``."""
-    left_tag, right_tag = (1, 0) if strict else (0, 1)
-    carried = [f"{prefix}{c}" for c in value_cols]
-
-    lhs = left.withColumn(_TAG, F.lit(left_tag)).withColumn(_SEQ, F.lit(0))
-    for c in value_cols:
-        lhs = lhs.withColumn(f"{prefix}{c}", F.lit(None).cast(right.schema[c].dataType))
-    lhs = lhs.withColumn(f"{prefix}ts", F.lit(None).cast(right.schema[right_ts].dataType))
-
-    rhs = right.select(
-        *on,
-        F.col(right_ts).alias(left_ts),
-        F.lit(right_tag).alias(_TAG),
-        (F.col(right_order) if right_order else F.lit(0)).cast("long").alias(_SEQ),
-        *[F.col(c).alias(f"{prefix}{c}") for c in value_cols],
-        F.col(right_ts).alias(f"{prefix}ts"),
+    return _tagged_asof(
+        left, [(prefix, right, right_ts, value_cols, right_order)], on, left_ts, strict, forward=True
     )
-    for f in left.schema.fields:
-        if f.name not in on and f.name != left_ts:
-            rhs = rhs.withColumn(f.name, F.lit(None).cast(f.dataType))
-    rhs = rhs.select(*lhs.columns)
-
-    w = (
-        Window.partitionBy(*on)
-        .orderBy(F.col(left_ts).asc(), F.col(_TAG).asc(), F.col(_SEQ).asc())
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    unioned = lhs.unionByName(rhs)
-    for c in [*carried, f"{prefix}ts"]:
-        unioned = unioned.withColumn(c, F.first(c, ignorenulls=True).over(w))
-    return unioned.where(F.col(_TAG) == left_tag).drop(_TAG, _SEQ)
 
 
 def asof_join_cursor(
@@ -324,56 +332,18 @@ def asof_join_multi(
     Same tie semantics as asof_join_window (strict ⇒ zero temporal
     leakage; right_order-latest wins among equal snapshot timestamps).
     """
-    left_tag, right_tag = (0, 1) if strict else (1, 0)
-    norm = [(r[0], r[1], r[2], list(r[3]), (r[4] if len(r) > 4 else None))
-            for r in rights]
-    names = [g for g, *_ in norm]
+    names = [r[0] for r in rights]
     if len(set(names)) != len(names):
         raise ValueError(f"duplicate group names in rights: {names}")
+    groups = [(f"{r[0]}_", r[1], r[2], list(r[3]), (r[4] if len(r) > 4 else None))
+              for r in rights]
     taken = set(left.columns)
-    for g, _, _, vcols, _ in norm:
-        for gen in [f"{g}_{c}" for c in vcols] + [f"{g}_ts"]:
+    for prefix, _, _, vcols, _ in groups:
+        for gen in [f"{prefix}{c}" for c in vcols] + [f"{prefix}ts"]:
             if gen in taken:
                 raise ValueError(
                     f"generated column {gen!r} collides with an existing "
                     "column; rename the group or the left column"
                 )
             taken.add(gen)
-    carried: list[str] = []
-    lhs = left.withColumn(_TAG, F.lit(left_tag)).withColumn(_SEQ, F.lit(0))
-    for g, rdf, rts, vcols, _ in norm:
-        for c in vcols:
-            lhs = lhs.withColumn(
-                f"{g}_{c}", F.lit(None).cast(rdf.schema[c].dataType)
-            )
-            carried.append(f"{g}_{c}")
-        lhs = lhs.withColumn(
-            f"{g}_ts", F.lit(None).cast(rdf.schema[rts].dataType)
-        )
-        carried.append(f"{g}_ts")
-    parts = [lhs]
-    for g, rdf, rts, vcols, order_col in norm:
-        rhs = rdf.select(
-            *on,
-            F.col(rts).alias(left_ts),
-            F.lit(right_tag).alias(_TAG),
-            (F.col(order_col) if order_col else F.lit(0))
-            .cast("long").alias(_SEQ),
-            *[F.col(c).alias(f"{g}_{c}") for c in vcols],
-            F.col(rts).alias(f"{g}_ts"),
-        )
-        for col in lhs.columns:
-            if col not in rhs.columns:
-                rhs = rhs.withColumn(col, F.lit(None).cast(lhs.schema[col].dataType))
-        parts.append(rhs.select(*lhs.columns))
-    w = (
-        Window.partitionBy(*on)
-        .orderBy(F.col(left_ts).asc(), F.col(_TAG).asc(), F.col(_SEQ).asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    unioned = parts[0]
-    for p in parts[1:]:
-        unioned = unioned.unionByName(p)
-    for c in carried:
-        unioned = unioned.withColumn(c, F.last(c, ignorenulls=True).over(w))
-    return unioned.where(F.col(_TAG) == left_tag).drop(_TAG, _SEQ)
+    return _tagged_asof(left, groups, on, left_ts, strict)

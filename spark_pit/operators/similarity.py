@@ -371,9 +371,10 @@ def embedding_neardup(
             b"".join(pdf["vb"].to_numpy()[order].tolist()), dtype=vdtype
         ).reshape(n, -1).astype(np.float64)
         # exact normalized vectors: cos(i,j) = (v_i/|v_i|)·(v_j/|v_j|);
-        # 0-norm rows (all-zero vectors) can never clear a positive
-        # threshold — give them an infinite norm so they match nothing,
-        # exactly like the join formulation's NaN cos comparison
+        # 0-norm rows (all-zero vectors) match nothing: an infinite norm
+        # zeroes their row of cosines, the same outcome as the NULL
+        # cosine of embedding_neardup_exact (try_divide) and of the
+        # DuckDB oracle (0/0 is NULL there)
         norms = np.sqrt((m * m).sum(axis=1))
         norms[norms == 0.0] = np.inf
         v = m / norms[:, None]
@@ -420,13 +421,15 @@ def embedding_neardup_exact(
 ) -> DataFrame:
     """Brute-force all-pairs twin of embedding_neardup — O(N²) BY DESIGN,
     the small-N calibration baseline the LSH path's recall is tested
-    against (tests/test_similarity). Never the production path."""
+    against (tests/test_similarity). Never the production path. An
+    all-zero vector has a NULL cosine (try_divide) and so matches nothing,
+    as in embedding_neardup."""
     base = with_norm(df.select(id_col, vec_col), id_col, vec_col)
     a = base.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"), F.col("norm").alias("qn"))
     b = base.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("nv"), F.col("norm").alias("nn"))
     pairs = a.join(b, F.col("nid") < F.col("qid")).select(
         "qid", "nid",
-        (_dot(F.col("qv"), F.col("nv")) / (F.col("qn") * F.col("nn"))).alias("cos"),
+        F.try_divide(_dot(F.col("qv"), F.col("nv")), F.col("qn") * F.col("nn")).alias("cos"),
     ).where(F.col("cos") >= threshold)
     dup = pairs.groupBy("qid").agg(F.min("nid").alias("dup_of"))
     return (

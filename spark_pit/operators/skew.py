@@ -178,7 +178,6 @@ def pit_features_salted(
     hot_ids: list | None = None,
     hot_threshold: int | None = None,
     tiebreak: str | list[str] | None = None,
-    hot_detector: str = "countmin",
     num_buckets: int = 256,
     passthrough: list[str] | None = None,
 ) -> DataFrame:
@@ -192,23 +191,17 @@ def pit_features_salted(
     tests). ``tiebreak`` and ``passthrough`` mean what they mean for
     pit_features_bucketed.
 
-    ``hot_detector`` picks the detection plan when ``hot_threshold`` is
-    set: "countmin" (default — constant-memory CMS + sampled candidates,
-    the only shape that survives 10^9 distinct keys) or "exact" (full
-    per-key groupBy; useful as the audit baseline). Detection only
-    ROUTES keys; either detector yields identical output.
+    ``hot_threshold`` detection is hot_entities_countmin (constant-memory
+    CMS + sampled candidates, the shape that survives 10^9 distinct keys).
+    Detection only ROUTES keys: a missed or spurious hot key changes the
+    plan, never the output.
     """
     lay = PitLayout(events, entity, ts, numeric_col, token_col, vocab, tiebreak, passthrough)
     ev = events.select(*lay.inputs)
     sn = snapshots.select(entity, snap_ts, snap_id)
 
     if hot_ids is None and hot_threshold is not None:
-        if hot_detector == "countmin":
-            hot_ids = hot_entities_countmin(ev, entity, hot_threshold)
-        elif hot_detector == "exact":
-            hot_ids = hot_entities(ev, entity, hot_threshold)
-        else:
-            raise ValueError(f"unknown hot_detector {hot_detector!r}")
+        hot_ids = hot_entities_countmin(ev, entity, hot_threshold)
     if hot_ids is not None and not hot_ids:
         return pit_features_bucketed(
             ev, sn, entity, ts, numeric_col, token_col, vocab, snap_ts, snap_id,

@@ -6839,584 +6839,216 @@ Q_PQ_TOPK_SQL = _pinned_rows_oracle(
 )
 
 
-# correctness gate evaluates only the FIRST 50 entries (judge round-1
-# diagnosis). Round-3 rotation (judge round-2 ask #2): the window now
-# Registry ordering IS the driver window: the driver checks the FIRST 50
-# entries. Round-4 rotation (judge round-3 ask #1): the window LEADS with
-# chunk_stats, pack_documents, gmm_fixture — the only 3 oracle-backed
-# queries no driver CORRECTNESS file had ever certified — then the pinned
-# flagship family, then every round-4 addition (PseKRAAC gap/lambda, OPF
-# multi-hot, AAIndex multi-property, true-3-D HSE, the ivf/bisecting
-# full-row checksum twins), then the highest-value dedup/ANN/analysis
-# operators. Positions 51+ are r02/r03-green overflow, still verified
-# every round by the driver-faithful tools/check_oracle.py; rows-only
-# queries come last, each with a value-verified twin in-window.
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    # --- driver window: never-certified leaders (ask #1)
-    "chunk_stats": q_chunk_stats,
-    "pack_documents": q_pack_documents,
-    "gmm_fixture": q_gmm_fixture,
-    # --- flagship family, pinned in-window
-    "pit_fused": q_pit_fused,
-    "pit_salted": q_pit_salted,
-    "asof_join": q_asof_join,
-    "asof_join_multi": q_asof_join_multi,
-    "image_pit_checksums": q_image_pit_checksums,
-    # --- round-4 late additions (never certified — in-window; three
-    # r03-certified rows moved to positions 51+ to make room)
-    "decayed_features": q_decayed_features,
-    "augment_plan": q_augment_plan,
-    "patch_grid_checksums": q_patch_grid_checksums,
-    # --- round-4 additions
-    "half_exposure_3d": q_half_exposure_3d,
-    "surface_depth_3d": q_surface_depth_3d,
-    "psekraac_gap": q_psekraac_gap,
-    "psekraac_lambda": q_psekraac_lambda,
-    "psekraac_gap3": q_psekraac_gap3,
-    "opf_multihot": q_opf_multihot,
-    "aaindex_multi": q_aaindex_multi,
-    "ivf_topk_checksums": q_ivf_topk_checksums,
-    "bisecting_checksums": q_bisecting_checksums,
-    "pq_fixture": q_pq_fixture,
-    "pq_topk": q_pq_topk,
-    "pagerank": q_pagerank,
-    "sketch_accuracy": q_sketch_accuracy,
-    "zorder_layout": q_zorder_layout,
-    "countmin_hotkeys": q_countmin_hotkeys,
-    # --- round-4 corpus-hygiene / corpus-LM additions (never certified;
-    # dup_ngram_stats + decontaminate were accidentally registered at
-    # 107-108, outside every window — moved up before first certification)
-    "dup_ngram_stats": q_dup_ngram_stats,
-    "dup_span_stats": q_dup_span_stats,
-    "horizon_dedup": q_horizon_dedup,
-    "target_encode": q_target_encode,
-    "decontaminate": q_decontaminate,
-    "unigram_surprisal": q_unigram_surprisal,
-    "build_vocab": q_build_vocab,
-    "top_terms": q_top_terms,
-    "phash_clusters": q_phash_clusters,
-    "asof_join_nearest": q_asof_join_nearest,
-    "diverse_sample": q_diverse_sample,
-    "robust_quantiles": q_robust_quantiles,
-    "winsorize_stats": q_winsorize_stats,
-    "asof_join_forward": q_asof_join_forward,
-    "chunk_overlap": q_chunk_overlap,
-    # --- highest-value operators (r02/r03-green, re-certified)
-    "dedup_clusters": q_dedup_clusters,
-    "minhash_dedup_mark": q_minhash_dedup_mark,
-    "streaming_session_parity": q_streaming_session_parity,
-    "streaming_decay_parity": q_streaming_decay_parity,
-    "streaming_target_parity": q_streaming_target_parity,
-    "streaming_scd2_parity": q_streaming_scd2_parity,
-    "streaming_funnel_parity": q_streaming_funnel_parity,
-    "negative_sample": q_negative_sample,
-    "auc_by_group": q_auc_by_group,
-    "pr_auc_by_group": q_pr_auc_by_group,
-    "calibration_bins": q_calibration_bins,
-    "brier_ece": q_brier_ece,
-    "ks_statistic": q_ks_statistic,
-    "ndcg_at_k": q_ndcg_at_k,
-    "lift_deciles": q_lift_deciles,
-    "tv_drift": q_tv_drift,
-    "group_kfold": q_group_kfold,
-    "quantile_binning": q_quantile_binning,
-    "spearman_corr": q_spearman,
-    "chi2_independence": q_chi2_independence,
-    "retrieval_at_k": q_retrieval_at_k,
-    "gini_diversity": q_gini_diversity,
-    "oof_target_encode": q_oof_target_encode,
-    "data_profile": q_data_profile,
-    "streaming_drift_parity": q_streaming_drift_parity,
-    "mad_robust_scale": q_mad,
-    "cohort_retention": q_cohort_retention,
-    "rfm_segments": q_rfm_segments,
-    "ab_test": q_ab_test,
-    "confusion_matrix": q_confusion_matrix,
-    "time_rollup": q_time_rollup,
-    "funnel_steps": q_funnel_steps,
-    "scd2_history": q_scd2_history,
-    "phash_neardup": q_phash_neardup,
-    "aspect_buckets": q_aspect_buckets,
-    "leakage_safe_split": q_leakage_safe_split,
-    "redact_pii": q_redact_pii,
-    "temperature_resample": q_temperature_resample,
-    # --- r03-certified rows displaced from the window by the round-4
-    # late additions (still verified every round by check_oracle)
-    "ivf_recall": q_ivf_recall,
-    "ann_mllib_recall": q_ann_mllib_recall,
-    "decode_stats_checksums": q_decode_stats_checksums,
-    "lda_fixture": q_lda_fixture,
-    "agglomerative_fixture": q_agglomerative_fixture,
-    "bisecting_fixture": q_bisecting_fixture,
-    "kmeans_fixture": q_kmeans_fixture,
-    "streaming_asof_parity": q_streaming_asof_parity,
-    "knn_ann": q_knn_ann,
-    "ann_lsh": q_ann_lsh,
-    "simhash_neardup": q_simhash_neardup,
-    "embedding_neardup": q_embedding_neardup,
-    "shell_composition_3d": q_shell_composition_3d,
-    "pca_checksums": q_pca_checksums,
-    "repetition_stats": q_repetition_stats,
-    "audio_checksums": q_audio_checksums,
-    "frame_sample_checksums": q_frame_sample_checksums,
-    "mean_shift": q_mean_shift,
-    "affinity_clusters": q_affinity_clusters,
-    "dbscan": q_dbscan,
-    "asof_join_inclusive": q_asof_join_inclusive,
-    "lambda_tuples": q_lambda_tuples,
-    # --- 51+: green overflow (driver rows exist in CORRECTNESS_r02/_r03)
-    "stratified_sample": q_stratified_sample,
-    "image_fidelity": q_image_fidelity,
-    "tsne_fixture": q_tsne_fixture,
-    "embed_checksums": q_embed_checksums,
-    "phash_checksums": q_phash_checksums,
-    "pic_clusters": q_pic_clusters,
-    "betweenness": q_betweenness,
-    "closeness_centrality": q_closeness_centrality,
-    "ksc_triad": q_ksc_triad,
-    "ctriad_minmax": q_ctriad_minmax,
-    "bpe_token_stats": q_bpe_token_stats,
-    "quantize_embeddings": q_quantize_embeddings,
-    "surface_depth": q_surface_depth,
-    "half_exposure": q_half_exposure,
-    "minmax": q_minmax,
-    "zip_label_join": q_zip_label_join,
-    "trigrams": q_trigrams,
-    "cross_cov": q_cross_cov,
-    "paac_weights": q_paac_weights,
-    "grouped_window_composition": q_grouped_window_composition,
-    "ball_composition": q_ball_composition,
-    "pricing_summary": q_pricing_summary,
-    "revenue_by_nation": q_revenue_by_nation,
-    "topk_orders": q_topk_orders,
-    "lag_lead": q_lag_lead,
-    "sessionize": q_sessionize,
-    "backfill": q_backfill,
-    "window_composition": q_window_composition,
-    "rolling_stats": q_rolling_stats,
-    "token_composition": q_token_composition,
-    "lagk_pairs": q_lagk_pairs,
-    "transitions": q_transitions,
-    "asdc": q_asdc,
-    "dde": q_dde,
-    "autocorr": q_autocorr,
-    "soc_number": q_soc_number,
-    "qso_order": q_qso_order,
-    "distribution": q_distribution,
-    "grouped_composition": q_grouped_composition,
-    "stride_pairs": q_stride_pairs,
-    "distance_pair": q_distance_pair,
-    "positional_onehot": q_positional_onehot,
-    "zscore": q_zscore,
-    "mean_impute": q_mean_impute,
-    "shell_composition": q_shell_composition,
-    "knn_label_fractions": q_knn_label_fractions,
-    "equal_length_stats": q_equal_length_stats,
-    "grouped_kspaced_pairs": q_grouped_kspaced_pairs,
-    "resize_checksums": q_resize_checksums,
-    "contact_graph_stats": q_contact_graph_stats,
-    "eigen_centrality": q_eigen_centrality,
-    "connected_components": q_connected_components,
-    "graph_path_stats": q_graph_path_stats,
-    "mcl_clusters": q_mcl_clusters,
-    "channel_correlation": q_channel_correlation,
-    "token_stats": q_token_stats,
-    "text_quality": q_text_quality,
-    "lang_id": q_lang_id,
-    "doc_fingerprint": q_doc_fingerprint,
-    "dedup_exact": q_dedup_exact,
-    "minhash_signatures": q_minhash_signatures,
-    "minhash_lsh_dedup": q_minhash_lsh_dedup,
-    "simhash": q_simhash,
-    "ngram_jaccard": q_ngram_jaccard,
-    "cosine_topk": q_cosine_topk,
-    "centroid_per_label": q_centroid_per_label,
-    "ann_mllib_lsh": q_ann_mllib_lsh,
-    "ivf_topk": q_ivf_topk,
-    "image_pit": q_image_pit,
-    "embed_documents": q_embed_documents,
-    "pca_embeddings": q_pca_embeddings,
-    "kmeans_embeddings": q_kmeans_embeddings,
-    "gmm_embeddings": q_gmm_embeddings,
-    "lda_topics": q_lda_topics,
-    "bisecting_kmeans": q_bisecting_kmeans,
-    "tsne_sample": q_tsne_sample,
-}
-
-ORACLES: dict[str, str] = {
-    "pit_fused": Q_PIT_FUSED_SQL,
-    "pit_salted": Q_PIT_FUSED_SQL,
-    "asof_join": Q_ASOF_SQL,
-    "asof_join_multi": Q_ASOF_MULTI_SQL,
-    "asof_join_inclusive": Q_ASOF_INCLUSIVE_SQL,
-    "asof_join_nearest": Q_ASOF_NEAREST_SQL,
-    "diverse_sample": Q_DIVERSE_SAMPLE_SQL,
-    "robust_quantiles": Q_ROBUST_QUANTILES_SQL,
-    "winsorize_stats": Q_WINSORIZE_SQL,
-    "asof_join_forward": Q_ASOF_FORWARD_SQL,
-    "chunk_overlap": Q_CHUNK_OVERLAP_SQL,
-    "lag_lead": Q_LAG_LEAD_SQL,
-    "sessionize": Q_SESSIONIZE_SQL,
-    "backfill": Q_BACKFILL_SQL,
-    "window_composition": Q_WINDOW_COMPOSITION_SQL,
-    "rolling_stats": Q_ROLLING_STATS_SQL,
-    "token_composition": Q_TOKEN_COMPOSITION_SQL,
-    "lagk_pairs": Q_LAGK_PAIRS_SQL,
-    "trigrams": Q_TRIGRAMS_SQL,
-    "transitions": Q_TRANSITIONS_SQL,
-    "asdc": Q_ASDC_SQL,
-    "dde": Q_DDE_SQL,
-    "autocorr": Q_AUTOCORR_SQL,
-    "cross_cov": Q_CROSS_COV_SQL,
-    "distribution": Q_DISTRIBUTION_SQL,
-    "pricing_summary": Q_PRICING_SUMMARY_SQL,
-    "revenue_by_nation": Q_REVENUE_BY_NATION_SQL,
-    "topk_orders": Q_TOPK_ORDERS_SQL,
-    "grouped_composition": Q_GROUPED_COMPOSITION_SQL,
-    "stride_pairs": Q_STRIDE_PAIRS_SQL,
-    "lambda_tuples": Q_LAMBDA_TUPLES_SQL,
-    "ctriad_minmax": Q_CTRIAD_SQL,
-    "soc_number": Q_SOC_NUMBER_SQL,
-    "qso_order": Q_QSO_ORDER_SQL,
-    "paac_weights": Q_PAAC_SQL,
-    "positional_onehot": Q_POSITIONAL_ONEHOT_SQL,
-    "zscore": Q_ZSCORE_SQL,
-    "minmax": Q_MINMAX_SQL,
-    "shell_composition": Q_SHELL_COMPOSITION_SQL,
-    "knn_label_fractions": Q_KNN_LABEL_FRACTIONS_SQL,
-    "equal_length_stats": Q_EQUAL_LENGTH_STATS_SQL,
-    "zip_label_join": Q_ZIP_LABEL_JOIN_SQL,
-    "grouped_window_composition": Q_GROUPED_WINDOW_COMPOSITION_SQL,
-    "grouped_kspaced_pairs": Q_GROUPED_KSPACED_PAIRS_SQL,
-    "ball_composition": Q_BALL_COMPOSITION_SQL,
-    "chunk_stats": Q_CHUNK_STATS_SQL,
-    "pack_documents": Q_PACK_DOCUMENTS_SQL,
-    "kmeans_fixture": Q_KMEANS_FIXTURE_SQL,
-    "gmm_fixture": Q_GMM_FIXTURE_SQL,
-    "bisecting_fixture": Q_BISECTING_FIXTURE_SQL,
-    "agglomerative_fixture": Q_AGGLOMERATIVE_FIXTURE_SQL,
-    "pca_checksums": Q_PCA_CHECKSUMS_SQL,
-    "lda_fixture": Q_LDA_FIXTURE_SQL,
-    "tsne_fixture": Q_TSNE_FIXTURE_SQL,
-    "ivf_recall": Q_IVF_RECALL_SQL,
-    "ann_mllib_recall": Q_ANN_MLLIB_RECALL_SQL,
-    "embed_checksums": Q_EMBED_CHECKSUMS_SQL,
-    "decode_stats_checksums": Q_DECODE_STATS_CHECKSUMS_SQL,
-    "phash_checksums": Q_PHASH_CHECKSUMS_SQL,
-    "pic_clusters": Q_PIC_CLUSTERS_SQL,
-    "image_fidelity": Q_IMAGE_FIDELITY_SQL,
-    "shell_composition_3d": Q_SHELL_COMPOSITION_3D_SQL,
-    "streaming_asof_parity": Q_STREAMING_ASOF_PARITY_SQL,
-    "streaming_session_parity": Q_STREAMING_SESSION_PARITY_SQL,
-    "streaming_decay_parity": Q_STREAMING_DECAY_PARITY_SQL,
-    "streaming_target_parity": Q_STREAMING_TARGET_PARITY_SQL,
-    "streaming_scd2_parity": Q_STREAMING_SCD2_PARITY_SQL,
-    "streaming_funnel_parity": Q_STREAMING_FUNNEL_PARITY_SQL,
-    "negative_sample": Q_NEGATIVE_SAMPLE_SQL,
-    "auc_by_group": Q_AUC_BY_GROUP_SQL,
-    "pr_auc_by_group": Q_PR_AUC_BY_GROUP_SQL,
-    "calibration_bins": Q_CALIBRATION_BINS_SQL,
-    "brier_ece": Q_BRIER_ECE_SQL,
-    "ks_statistic": Q_KS_STATISTIC_SQL,
-    "ndcg_at_k": Q_NDCG_AT_K_SQL,
-    "lift_deciles": Q_LIFT_DECILES_SQL,
-    "tv_drift": Q_TV_DRIFT_SQL,
-    "group_kfold": Q_GROUP_KFOLD_SQL,
-    "quantile_binning": Q_QUANTILE_BINNING_SQL,
-    "spearman_corr": Q_SPEARMAN_SQL,
-    "chi2_independence": Q_CHI2_INDEPENDENCE_SQL,
-    "retrieval_at_k": Q_RETRIEVAL_AT_K_SQL,
-    "gini_diversity": Q_GINI_DIVERSITY_SQL,
-    "oof_target_encode": Q_OOF_TARGET_ENCODE_SQL,
-    "data_profile": Q_DATA_PROFILE_SQL,
-    "streaming_drift_parity": Q_STREAMING_DRIFT_PARITY_SQL,
-    "mad_robust_scale": Q_MAD_SQL,
-    "cohort_retention": Q_COHORT_RETENTION_SQL,
-    "rfm_segments": Q_RFM_SEGMENTS_SQL,
-    "ab_test": Q_AB_TEST_SQL,
-    "confusion_matrix": Q_CONFUSION_MATRIX_SQL,
-    "time_rollup": Q_TIME_ROLLUP_SQL,
-    "funnel_steps": Q_FUNNEL_STEPS_SQL,
-    "scd2_history": Q_SCD2_HISTORY_SQL,
-    "pq_fixture": Q_PQ_FIXTURE_SQL,
-    "pq_topk": Q_PQ_TOPK_SQL,
-    "pagerank": Q_PAGERANK_SQL,
-    "sketch_accuracy": Q_SKETCH_ACCURACY_SQL,
-    "zorder_layout": Q_ZORDER_SQL,
-    "countmin_hotkeys": Q_COUNTMIN_SQL,
-    "embedding_neardup": Q_EMBEDDING_NEARDUP_SQL,
-    "contact_graph_stats": Q_CONTACT_GRAPH_STATS_SQL,
-    "ksc_triad": Q_KSC_TRIAD_SQL,
-    "distance_pair": Q_DISTANCE_PAIR_SQL,
-    "mean_impute": Q_MEAN_IMPUTE_SQL,
-    "eigen_centrality": Q_EIGEN_CENTRALITY_SQL,
-    "connected_components": Q_CONNECTED_COMPONENTS_SQL,
-    "graph_path_stats": Q_GRAPH_PATH_STATS_SQL,
-    "dbscan": Q_DBSCAN_SQL,
-    "closeness_centrality": Q_CLOSENESS_SQL,
-    "betweenness": Q_BETWEENNESS_SQL,
-    "mcl_clusters": Q_MCL_CLUSTERS_SQL,
-    "channel_correlation": Q_CHANNEL_CORRELATION_SQL,
-    # embed_documents, pca_embeddings, kmeans_embeddings: rows-only
-    # (hash-projector / eigen-sign / centroid-init not SQL-reproducible)
-    "token_stats": Q_TOKEN_STATS_SQL,
-    "text_quality": Q_TEXT_QUALITY_SQL,
-    "lang_id": Q_LANG_ID_SQL,
-    "doc_fingerprint": Q_DOC_FINGERPRINT_SQL,
-    "dedup_exact": Q_DEDUP_EXACT_SQL,
-    "dup_ngram_stats": Q_DUP_NGRAM_STATS_SQL,
-    "dup_span_stats": Q_DUP_SPAN_STATS_SQL,
-    "horizon_dedup": Q_HORIZON_DEDUP_SQL,
-    "target_encode": Q_TARGET_ENCODE_SQL,
-    "decontaminate": Q_DECONTAMINATE_SQL,
-    "unigram_surprisal": Q_UNIGRAM_SURPRISAL_SQL,
-    "build_vocab": Q_BUILD_VOCAB_SQL,
-    "top_terms": Q_TOP_TERMS_SQL,
-    "phash_clusters": Q_PHASH_CLUSTERS_SQL,
-    "redact_pii": Q_REDACT_PII_SQL,
-    "temperature_resample": Q_TEMPERATURE_RESAMPLE_SQL,
-    "phash_neardup": Q_PHASH_NEARDUP_SQL,
-    "aspect_buckets": Q_ASPECT_BUCKETS_SQL,
-    "leakage_safe_split": Q_LEAKAGE_SPLIT_SQL,
-    "minhash_signatures": Q_MINHASH_SQL,
-    "minhash_lsh_dedup": Q_MINHASH_LSH_SQL,
-    "minhash_dedup_mark": Q_MINHASH_MARK_SQL,
-    "simhash_neardup": Q_SIMHASH_NEARDUP_SQL,
-    "ann_lsh": Q_ANN_LSH_SQL,
-    "image_pit_checksums": Q_IMAGE_PIT_CHECKSUMS_SQL,
-    "decayed_features": Q_DECAYED_FEATURES_SQL,
-    "augment_plan": Q_AUGMENT_PLAN_SQL,
-    "patch_grid_checksums": Q_PATCH_GRID_SQL,
-    "surface_depth": Q_SURFACE_DEPTH_SQL,
-    "half_exposure": Q_HALF_EXPOSURE_SQL,
-    "half_exposure_3d": Q_HALF_EXPOSURE_3D_SQL,
-    "surface_depth_3d": Q_SURFACE_DEPTH_3D_SQL,
-    "psekraac_gap": Q_PSEKRAAC_GAP_SQL,
-    "psekraac_lambda": Q_PSEKRAAC_LAMBDA_SQL,
-    "psekraac_gap3": Q_PSEKRAAC_GAP3_SQL,
-    "opf_multihot": Q_OPF_MULTIHOT_SQL,
-    "aaindex_multi": Q_AAINDEX_MULTI_SQL,
-    "ivf_topk_checksums": Q_IVF_TOPK_CHECKSUMS_SQL,
-    "bisecting_checksums": Q_BISECTING_CHECKSUMS_SQL,
-    "mean_shift": Q_MEAN_SHIFT_SQL,
-    "affinity_clusters": Q_AFFINITY_CLUSTERS_SQL,
-    "resize_checksums": Q_RESIZE_CHECKSUMS_SQL,
-    "frame_sample_checksums": Q_FRAME_SAMPLE_CHECKSUMS_SQL,
-    "dedup_clusters": Q_DEDUP_CLUSTERS_SQL,
-    "bpe_token_stats": Q_BPE_TOKEN_STATS_SQL,
-    "knn_ann": Q_KNN_ANN_SQL,
-    "stratified_sample": Q_STRATIFIED_SAMPLE_SQL,
-    "quantize_embeddings": Q_QUANTIZE_EMB_SQL,
-    "repetition_stats": Q_REPETITION_STATS_SQL,
-    "audio_checksums": Q_AUDIO_CHECKSUMS_SQL,
-    "simhash": Q_SIMHASH_SQL,
-    "ngram_jaccard": Q_NGRAM_JACCARD_SQL,
-    "cosine_topk": Q_COSINE_TOPK_SQL,
-    "centroid_per_label": Q_CENTROID_SQL,
-    # ann_lsh, image_decode_stats, phash_features: rows-only
-    # (engine-internal hyperplanes / binary payloads absent from oracle views)
-}
-
-
-# Gate-window rotation (round 7, per the round-6 verdict ask #1): the
-# driver certifies the FIRST 50 entries of queries(); window = the 19
-# round-6 post-freeze additions (never driver-certified) + every query
-# whose code changed after its last driver cert (r6 rewrites:
-# pit_salted/decayed_features/minhash seed fix; r7 optimization rebuilds:
-# embedding_neardup bucket kernel, minhash star family, connected
-# components, pit wc columns) + the six _whole_group streaming parity
-# twins + oldest-cert-first fill (r02/r03-era). Union coverage across
-# CORRECTNESS_r01..r07 stays total. Rotate by editing this list only —
-# the QUERIES literal above is the registry, this is the window.
-GATE_ORDER: list[str] = [
+# The registry: each query once, as "name": (plan function, DuckDB oracle SQL
+# or None for a rows-only query), in gate order. QUERIES, ORACLES and
+# GATE_ORDER below are views of this one table, and queries() hands the
+# driver its order.
+#
+# Gate-window rotation (round 7): the driver certifies the FIRST 50 entries
+# of queries(); window = the 19 round-6 post-freeze additions (never
+# driver-certified) + every query whose code changed after its last driver
+# cert (r6 rewrites: pit_salted/decayed_features/minhash seed fix; r7
+# optimization rebuilds: embedding_neardup bucket kernel, minhash star
+# family, connected components, pit wc columns) + the six _whole_group
+# streaming parity twins + oldest-cert-first fill (r02/r03-era). Union
+# coverage across CORRECTNESS_r01..r07 stays total. Rotate by reordering
+# this table; rows-only entries stay out of the window
+# (tests/test_registry.py).
+REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {
     # --- round-7 window head (50 = driver certification window) ---
     # 1-19: the round-6 post-freeze additions, never driver-certified
-    "brier_ece",
-    "ks_statistic",
-    "ndcg_at_k",
-    "lift_deciles",
-    "tv_drift",
-    "group_kfold",
-    "quantile_binning",
-    "spearman_corr",
-    "chi2_independence",
-    "retrieval_at_k",
-    "gini_diversity",
-    "oof_target_encode",
-    "data_profile",
-    "streaming_drift_parity",
-    "mad_robust_scale",
-    "cohort_retention",
-    "rfm_segments",
-    "ab_test",
-    "confusion_matrix",
+    "brier_ece": (q_brier_ece, Q_BRIER_ECE_SQL),
+    "ks_statistic": (q_ks_statistic, Q_KS_STATISTIC_SQL),
+    "ndcg_at_k": (q_ndcg_at_k, Q_NDCG_AT_K_SQL),
+    "lift_deciles": (q_lift_deciles, Q_LIFT_DECILES_SQL),
+    "tv_drift": (q_tv_drift, Q_TV_DRIFT_SQL),
+    "group_kfold": (q_group_kfold, Q_GROUP_KFOLD_SQL),
+    "quantile_binning": (q_quantile_binning, Q_QUANTILE_BINNING_SQL),
+    "spearman_corr": (q_spearman, Q_SPEARMAN_SQL),
+    "chi2_independence": (q_chi2_independence, Q_CHI2_INDEPENDENCE_SQL),
+    "retrieval_at_k": (q_retrieval_at_k, Q_RETRIEVAL_AT_K_SQL),
+    "gini_diversity": (q_gini_diversity, Q_GINI_DIVERSITY_SQL),
+    "oof_target_encode": (q_oof_target_encode, Q_OOF_TARGET_ENCODE_SQL),
+    "data_profile": (q_data_profile, Q_DATA_PROFILE_SQL),
+    "streaming_drift_parity": (q_streaming_drift_parity, Q_STREAMING_DRIFT_PARITY_SQL),
+    "mad_robust_scale": (q_mad, Q_MAD_SQL),
+    "cohort_retention": (q_cohort_retention, Q_COHORT_RETENTION_SQL),
+    "rfm_segments": (q_rfm_segments, Q_RFM_SEGMENTS_SQL),
+    "ab_test": (q_ab_test, Q_AB_TEST_SQL),
+    "confusion_matrix": (q_confusion_matrix, Q_CONFUSION_MATRIX_SQL),
     # 20-29: code-changed queries whose last driver cert predates the
     # rewrite (r6: pit_salted/decayed_features/minhash seeds; r7: the
     # optimization-round rebuilds of embedding_neardup, the minhash
     # star family, connected_components, and the pit kernel)
-    "pit_salted",
-    "decayed_features",
-    "minhash_signatures",
-    "minhash_dedup_mark",
-    "dedup_clusters",
-    "embedding_neardup",
-    "minhash_lsh_dedup",
-    "connected_components",
-    "pit_fused",
-    "image_pit_checksums",
+    "pit_salted": (q_pit_salted, Q_PIT_FUSED_SQL),
+    "decayed_features": (q_decayed_features, Q_DECAYED_FEATURES_SQL),
+    "minhash_signatures": (q_minhash_signatures, Q_MINHASH_SQL),
+    "minhash_dedup_mark": (q_minhash_dedup_mark, Q_MINHASH_MARK_SQL),
+    "dedup_clusters": (q_dedup_clusters, Q_DEDUP_CLUSTERS_SQL),
+    "embedding_neardup": (q_embedding_neardup, Q_EMBEDDING_NEARDUP_SQL),
+    "minhash_lsh_dedup": (q_minhash_lsh_dedup, Q_MINHASH_LSH_SQL),
+    "connected_components": (q_connected_components, Q_CONNECTED_COMPONENTS_SQL),
+    "pit_fused": (q_pit_fused, Q_PIT_FUSED_SQL),
+    "image_pit_checksums": (q_image_pit_checksums, Q_IMAGE_PIT_CHECKSUMS_SQL),
     # 30-35: the six _whole_group-touched streaming parity twins
-    "streaming_decay_parity",
-    "streaming_session_parity",
-    "streaming_funnel_parity",
-    "streaming_scd2_parity",
-    "streaming_target_parity",
-    "streaming_asof_parity",
+    "streaming_decay_parity": (q_streaming_decay_parity, Q_STREAMING_DECAY_PARITY_SQL),
+    "streaming_session_parity": (q_streaming_session_parity, Q_STREAMING_SESSION_PARITY_SQL),
+    "streaming_funnel_parity": (q_streaming_funnel_parity, Q_STREAMING_FUNNEL_PARITY_SQL),
+    "streaming_scd2_parity": (q_streaming_scd2_parity, Q_STREAMING_SCD2_PARITY_SQL),
+    "streaming_target_parity": (q_streaming_target_parity, Q_STREAMING_TARGET_PARITY_SQL),
+    "streaming_asof_parity": (q_streaming_asof_parity, Q_STREAMING_ASOF_PARITY_SQL),
     # 36-50: oldest-cert-first (r02-era, then r03-era)
-    "transitions",
-    "window_composition",
-    "zscore",
-    "affinity_clusters",
-    "agglomerative_fixture",
-    "ann_lsh",
-    "ann_mllib_recall",
-    "asof_join_inclusive",
-    "audio_checksums",
-    "ball_composition",
-    "betweenness",
-    "bisecting_fixture",
-    "bpe_token_stats",
-    "closeness_centrality",
-    "cross_cov",
+    "transitions": (q_transitions, Q_TRANSITIONS_SQL),
+    "window_composition": (q_window_composition, Q_WINDOW_COMPOSITION_SQL),
+    "zscore": (q_zscore, Q_ZSCORE_SQL),
+    "affinity_clusters": (q_affinity_clusters, Q_AFFINITY_CLUSTERS_SQL),
+    "agglomerative_fixture": (q_agglomerative_fixture, Q_AGGLOMERATIVE_FIXTURE_SQL),
+    "ann_lsh": (q_ann_lsh, Q_ANN_LSH_SQL),
+    "ann_mllib_recall": (q_ann_mllib_recall, Q_ANN_MLLIB_RECALL_SQL),
+    "asof_join_inclusive": (q_asof_join_inclusive, Q_ASOF_INCLUSIVE_SQL),
+    "audio_checksums": (q_audio_checksums, Q_AUDIO_CHECKSUMS_SQL),
+    "ball_composition": (q_ball_composition, Q_BALL_COMPOSITION_SQL),
+    "betweenness": (q_betweenness, Q_BETWEENNESS_SQL),
+    "bisecting_fixture": (q_bisecting_fixture, Q_BISECTING_FIXTURE_SQL),
+    "bpe_token_stats": (q_bpe_token_stats, Q_BPE_TOKEN_STATS_SQL),
+    "closeness_centrality": (q_closeness_centrality, Q_CLOSENESS_SQL),
+    "cross_cov": (q_cross_cov, Q_CROSS_COV_SQL),
     # 51+: remaining r03-era, then r04/r05-era oldest-first;
     # r06-certified head trio near the end (freshest certs)
-    "ctriad_minmax",
-    "decode_stats_checksums",
-    "embed_checksums",
-    "frame_sample_checksums",
-    "grouped_window_composition",
-    "half_exposure",
-    "image_fidelity",
-    "ivf_recall",
-    "kmeans_fixture",
-    "knn_ann",
-    "ksc_triad",
-    "lambda_tuples",
-    "lda_fixture",
-    "mean_shift",
-    "minmax",
-    "paac_weights",
-    "pca_checksums",
-    "phash_checksums",
-    "pic_clusters",
-    "pricing_summary",
-    "quantize_embeddings",
-    "repetition_stats",
-    "revenue_by_nation",
-    "shell_composition_3d",
-    "simhash_neardup",
-    "stratified_sample",
-    "surface_depth",
-    "topk_orders",
-    "trigrams",
-    "tsne_fixture",
-    "zip_label_join",
-    "aaindex_multi",
-    "asof_join",
-    "asof_join_forward",
-    "asof_join_multi",
-    "asof_join_nearest",
-    "aspect_buckets",
-    "augment_plan",
-    "bisecting_checksums",
-    "build_vocab",
-    "chunk_overlap",
-    "chunk_stats",
-    "countmin_hotkeys",
-    "decontaminate",
-    "diverse_sample",
-    "dup_ngram_stats",
-    "dup_span_stats",
-    "gmm_fixture",
-    "half_exposure_3d",
-    "horizon_dedup",
-    "ivf_topk_checksums",
-    "leakage_safe_split",
-    "opf_multihot",
-    "pack_documents",
-    "pagerank",
-    "patch_grid_checksums",
-    "phash_clusters",
-    "phash_neardup",
-    "pq_fixture",
-    "pq_topk",
-    "psekraac_gap",
-    "psekraac_gap3",
-    "psekraac_lambda",
-    "redact_pii",
-    "robust_quantiles",
-    "sketch_accuracy",
-    "surface_depth_3d",
-    "target_encode",
-    "temperature_resample",
-    "top_terms",
-    "unigram_surprisal",
-    "winsorize_stats",
-    "zorder_layout",
-    "asdc",
-    "auc_by_group",
-    "autocorr",
-    "backfill",
-    "calibration_bins",
-    "centroid_per_label",
-    "channel_correlation",
-    "contact_graph_stats",
-    "cosine_topk",
-    "dbscan",
-    "dde",
-    "dedup_exact",
-    "distance_pair",
-    "distribution",
-    "doc_fingerprint",
-    "eigen_centrality",
-    "equal_length_stats",
-    "graph_path_stats",
-    "grouped_composition",
-    "grouped_kspaced_pairs",
-    "knn_label_fractions",
-    "lag_lead",
-    "lagk_pairs",
-    "lang_id",
-    "mcl_clusters",
-    "mean_impute",
-    "ngram_jaccard",
-    "positional_onehot",
-    "qso_order",
-    "resize_checksums",
-    "rolling_stats",
-    "scd2_history",
-    "sessionize",
-    "shell_composition",
-    "simhash",
-    "soc_number",
-    "stride_pairs",
-    "text_quality",
-    "time_rollup",
-    "token_composition",
-    "token_stats",
-    "pr_auc_by_group",
-    "negative_sample",
-    "funnel_steps",
-    # rows-only (no oracle; certified via value twins)
-    "ann_mllib_lsh",
-    "bisecting_kmeans",
-    "embed_documents",
-    "gmm_embeddings",
-    "image_pit",
-    "ivf_topk",
-    "kmeans_embeddings",
-    "lda_topics",
-    "pca_embeddings",
-    "tsne_sample",
-]
+    "ctriad_minmax": (q_ctriad_minmax, Q_CTRIAD_SQL),
+    "decode_stats_checksums": (q_decode_stats_checksums, Q_DECODE_STATS_CHECKSUMS_SQL),
+    "embed_checksums": (q_embed_checksums, Q_EMBED_CHECKSUMS_SQL),
+    "frame_sample_checksums": (q_frame_sample_checksums, Q_FRAME_SAMPLE_CHECKSUMS_SQL),
+    "grouped_window_composition": (q_grouped_window_composition, Q_GROUPED_WINDOW_COMPOSITION_SQL),
+    "half_exposure": (q_half_exposure, Q_HALF_EXPOSURE_SQL),
+    "image_fidelity": (q_image_fidelity, Q_IMAGE_FIDELITY_SQL),
+    "ivf_recall": (q_ivf_recall, Q_IVF_RECALL_SQL),
+    "kmeans_fixture": (q_kmeans_fixture, Q_KMEANS_FIXTURE_SQL),
+    "knn_ann": (q_knn_ann, Q_KNN_ANN_SQL),
+    "ksc_triad": (q_ksc_triad, Q_KSC_TRIAD_SQL),
+    "lambda_tuples": (q_lambda_tuples, Q_LAMBDA_TUPLES_SQL),
+    "lda_fixture": (q_lda_fixture, Q_LDA_FIXTURE_SQL),
+    "mean_shift": (q_mean_shift, Q_MEAN_SHIFT_SQL),
+    "minmax": (q_minmax, Q_MINMAX_SQL),
+    "paac_weights": (q_paac_weights, Q_PAAC_SQL),
+    "pca_checksums": (q_pca_checksums, Q_PCA_CHECKSUMS_SQL),
+    "phash_checksums": (q_phash_checksums, Q_PHASH_CHECKSUMS_SQL),
+    "pic_clusters": (q_pic_clusters, Q_PIC_CLUSTERS_SQL),
+    "pricing_summary": (q_pricing_summary, Q_PRICING_SUMMARY_SQL),
+    "quantize_embeddings": (q_quantize_embeddings, Q_QUANTIZE_EMB_SQL),
+    "repetition_stats": (q_repetition_stats, Q_REPETITION_STATS_SQL),
+    "revenue_by_nation": (q_revenue_by_nation, Q_REVENUE_BY_NATION_SQL),
+    "shell_composition_3d": (q_shell_composition_3d, Q_SHELL_COMPOSITION_3D_SQL),
+    "simhash_neardup": (q_simhash_neardup, Q_SIMHASH_NEARDUP_SQL),
+    "stratified_sample": (q_stratified_sample, Q_STRATIFIED_SAMPLE_SQL),
+    "surface_depth": (q_surface_depth, Q_SURFACE_DEPTH_SQL),
+    "topk_orders": (q_topk_orders, Q_TOPK_ORDERS_SQL),
+    "trigrams": (q_trigrams, Q_TRIGRAMS_SQL),
+    "tsne_fixture": (q_tsne_fixture, Q_TSNE_FIXTURE_SQL),
+    "zip_label_join": (q_zip_label_join, Q_ZIP_LABEL_JOIN_SQL),
+    "aaindex_multi": (q_aaindex_multi, Q_AAINDEX_MULTI_SQL),
+    "asof_join": (q_asof_join, Q_ASOF_SQL),
+    "asof_join_forward": (q_asof_join_forward, Q_ASOF_FORWARD_SQL),
+    "asof_join_multi": (q_asof_join_multi, Q_ASOF_MULTI_SQL),
+    "asof_join_nearest": (q_asof_join_nearest, Q_ASOF_NEAREST_SQL),
+    "aspect_buckets": (q_aspect_buckets, Q_ASPECT_BUCKETS_SQL),
+    "augment_plan": (q_augment_plan, Q_AUGMENT_PLAN_SQL),
+    "bisecting_checksums": (q_bisecting_checksums, Q_BISECTING_CHECKSUMS_SQL),
+    "build_vocab": (q_build_vocab, Q_BUILD_VOCAB_SQL),
+    "chunk_overlap": (q_chunk_overlap, Q_CHUNK_OVERLAP_SQL),
+    "chunk_stats": (q_chunk_stats, Q_CHUNK_STATS_SQL),
+    "countmin_hotkeys": (q_countmin_hotkeys, Q_COUNTMIN_SQL),
+    "decontaminate": (q_decontaminate, Q_DECONTAMINATE_SQL),
+    "diverse_sample": (q_diverse_sample, Q_DIVERSE_SAMPLE_SQL),
+    "dup_ngram_stats": (q_dup_ngram_stats, Q_DUP_NGRAM_STATS_SQL),
+    "dup_span_stats": (q_dup_span_stats, Q_DUP_SPAN_STATS_SQL),
+    "gmm_fixture": (q_gmm_fixture, Q_GMM_FIXTURE_SQL),
+    "half_exposure_3d": (q_half_exposure_3d, Q_HALF_EXPOSURE_3D_SQL),
+    "horizon_dedup": (q_horizon_dedup, Q_HORIZON_DEDUP_SQL),
+    "ivf_topk_checksums": (q_ivf_topk_checksums, Q_IVF_TOPK_CHECKSUMS_SQL),
+    "leakage_safe_split": (q_leakage_safe_split, Q_LEAKAGE_SPLIT_SQL),
+    "opf_multihot": (q_opf_multihot, Q_OPF_MULTIHOT_SQL),
+    "pack_documents": (q_pack_documents, Q_PACK_DOCUMENTS_SQL),
+    "pagerank": (q_pagerank, Q_PAGERANK_SQL),
+    "patch_grid_checksums": (q_patch_grid_checksums, Q_PATCH_GRID_SQL),
+    "phash_clusters": (q_phash_clusters, Q_PHASH_CLUSTERS_SQL),
+    "phash_neardup": (q_phash_neardup, Q_PHASH_NEARDUP_SQL),
+    "pq_fixture": (q_pq_fixture, Q_PQ_FIXTURE_SQL),
+    "pq_topk": (q_pq_topk, Q_PQ_TOPK_SQL),
+    "psekraac_gap": (q_psekraac_gap, Q_PSEKRAAC_GAP_SQL),
+    "psekraac_gap3": (q_psekraac_gap3, Q_PSEKRAAC_GAP3_SQL),
+    "psekraac_lambda": (q_psekraac_lambda, Q_PSEKRAAC_LAMBDA_SQL),
+    "redact_pii": (q_redact_pii, Q_REDACT_PII_SQL),
+    "robust_quantiles": (q_robust_quantiles, Q_ROBUST_QUANTILES_SQL),
+    "sketch_accuracy": (q_sketch_accuracy, Q_SKETCH_ACCURACY_SQL),
+    "surface_depth_3d": (q_surface_depth_3d, Q_SURFACE_DEPTH_3D_SQL),
+    "target_encode": (q_target_encode, Q_TARGET_ENCODE_SQL),
+    "temperature_resample": (q_temperature_resample, Q_TEMPERATURE_RESAMPLE_SQL),
+    "top_terms": (q_top_terms, Q_TOP_TERMS_SQL),
+    "unigram_surprisal": (q_unigram_surprisal, Q_UNIGRAM_SURPRISAL_SQL),
+    "winsorize_stats": (q_winsorize_stats, Q_WINSORIZE_SQL),
+    "zorder_layout": (q_zorder_layout, Q_ZORDER_SQL),
+    "asdc": (q_asdc, Q_ASDC_SQL),
+    "auc_by_group": (q_auc_by_group, Q_AUC_BY_GROUP_SQL),
+    "autocorr": (q_autocorr, Q_AUTOCORR_SQL),
+    "backfill": (q_backfill, Q_BACKFILL_SQL),
+    "calibration_bins": (q_calibration_bins, Q_CALIBRATION_BINS_SQL),
+    "centroid_per_label": (q_centroid_per_label, Q_CENTROID_SQL),
+    "channel_correlation": (q_channel_correlation, Q_CHANNEL_CORRELATION_SQL),
+    "contact_graph_stats": (q_contact_graph_stats, Q_CONTACT_GRAPH_STATS_SQL),
+    "cosine_topk": (q_cosine_topk, Q_COSINE_TOPK_SQL),
+    "dbscan": (q_dbscan, Q_DBSCAN_SQL),
+    "dde": (q_dde, Q_DDE_SQL),
+    "dedup_exact": (q_dedup_exact, Q_DEDUP_EXACT_SQL),
+    "distance_pair": (q_distance_pair, Q_DISTANCE_PAIR_SQL),
+    "distribution": (q_distribution, Q_DISTRIBUTION_SQL),
+    "doc_fingerprint": (q_doc_fingerprint, Q_DOC_FINGERPRINT_SQL),
+    "eigen_centrality": (q_eigen_centrality, Q_EIGEN_CENTRALITY_SQL),
+    "equal_length_stats": (q_equal_length_stats, Q_EQUAL_LENGTH_STATS_SQL),
+    "graph_path_stats": (q_graph_path_stats, Q_GRAPH_PATH_STATS_SQL),
+    "grouped_composition": (q_grouped_composition, Q_GROUPED_COMPOSITION_SQL),
+    "grouped_kspaced_pairs": (q_grouped_kspaced_pairs, Q_GROUPED_KSPACED_PAIRS_SQL),
+    "knn_label_fractions": (q_knn_label_fractions, Q_KNN_LABEL_FRACTIONS_SQL),
+    "lag_lead": (q_lag_lead, Q_LAG_LEAD_SQL),
+    "lagk_pairs": (q_lagk_pairs, Q_LAGK_PAIRS_SQL),
+    "lang_id": (q_lang_id, Q_LANG_ID_SQL),
+    "mcl_clusters": (q_mcl_clusters, Q_MCL_CLUSTERS_SQL),
+    "mean_impute": (q_mean_impute, Q_MEAN_IMPUTE_SQL),
+    "ngram_jaccard": (q_ngram_jaccard, Q_NGRAM_JACCARD_SQL),
+    "positional_onehot": (q_positional_onehot, Q_POSITIONAL_ONEHOT_SQL),
+    "qso_order": (q_qso_order, Q_QSO_ORDER_SQL),
+    "resize_checksums": (q_resize_checksums, Q_RESIZE_CHECKSUMS_SQL),
+    "rolling_stats": (q_rolling_stats, Q_ROLLING_STATS_SQL),
+    "scd2_history": (q_scd2_history, Q_SCD2_HISTORY_SQL),
+    "sessionize": (q_sessionize, Q_SESSIONIZE_SQL),
+    "shell_composition": (q_shell_composition, Q_SHELL_COMPOSITION_SQL),
+    "simhash": (q_simhash, Q_SIMHASH_SQL),
+    "soc_number": (q_soc_number, Q_SOC_NUMBER_SQL),
+    "stride_pairs": (q_stride_pairs, Q_STRIDE_PAIRS_SQL),
+    "text_quality": (q_text_quality, Q_TEXT_QUALITY_SQL),
+    "time_rollup": (q_time_rollup, Q_TIME_ROLLUP_SQL),
+    "token_composition": (q_token_composition, Q_TOKEN_COMPOSITION_SQL),
+    "token_stats": (q_token_stats, Q_TOKEN_STATS_SQL),
+    "pr_auc_by_group": (q_pr_auc_by_group, Q_PR_AUC_BY_GROUP_SQL),
+    "negative_sample": (q_negative_sample, Q_NEGATIVE_SAMPLE_SQL),
+    "funnel_steps": (q_funnel_steps, Q_FUNNEL_STEPS_SQL),
+    # rows-only, no oracle (hash projectors, eigenvector signs, centroid
+    # inits and engine-internal hyperplanes are not SQL-reproducible);
+    # each is certified via a value-verified twin above
+    "ann_mllib_lsh": (q_ann_mllib_lsh, None),
+    "bisecting_kmeans": (q_bisecting_kmeans, None),
+    "embed_documents": (q_embed_documents, None),
+    "gmm_embeddings": (q_gmm_embeddings, None),
+    "image_pit": (q_image_pit, None),
+    "ivf_topk": (q_ivf_topk, None),
+    "kmeans_embeddings": (q_kmeans_embeddings, None),
+    "lda_topics": (q_lda_topics, None),
+    "pca_embeddings": (q_pca_embeddings, None),
+    "tsne_sample": (q_tsne_sample, None),
+}
 
-QUERIES = {k: QUERIES[k] for k in GATE_ORDER}
+GATE_ORDER: list[str] = list(REGISTRY)
+QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+    k: fn for k, (fn, _) in REGISTRY.items()
+}
+ORACLES: dict[str, str] = {k: sql for k, (_, sql) in REGISTRY.items() if sql is not None}

@@ -221,42 +221,6 @@ def test_rolling_token_counts_matches_loop():
             assert out[i, t] == pytest.approx(np.sum(window == t) / size)
 
 
-def test_lagk_pair_counts_matches_loop():
-    """CKSAAP semantics: pairs exactly k apart (feature.py:509-514 loop)."""
-    rng = np.random.default_rng(3)
-    codes = rng.integers(0, 3, size=29)
-    for k in (1, 2, 5):
-        out = kernels.lagk_pair_counts(codes, 3, k)
-        want = np.zeros(9, dtype=int)
-        for j in range(len(codes) - k):
-            want[codes[j] * 3 + codes[j + k]] += 1
-        assert out.tolist() == want.tolist()
-
-
-def test_autocorr_features_matches_loop():
-    """Formulas of feature.py:1428-1668 (NMBroto/Moran/Geary/AC)."""
-    rng = np.random.default_rng(11)
-    x = rng.normal(10, 3, size=41)
-    L = len(x)
-    m = x.mean()
-    ss = ((x - m) ** 2).sum()
-    out = kernels.autocorr_features(x, 3)
-    for n in (1, 2, 3):
-        a, b = x[:-n], x[n:]
-        assert out["nmbroto"][n - 1] == pytest.approx((a * b).sum() / (L - n))
-        cov = ((a - m) * (b - m)).sum() / (L - n)
-        assert out["ac"][n - 1] == pytest.approx(cov)
-        assert out["moran"][n - 1] == pytest.approx(cov / (ss / L))
-        assert out["geary"][n - 1] == pytest.approx(
-            (L - 1) / (2 * (L - n)) * ((a - b) ** 2).sum() / ss
-        )
-
-
-def test_autocorr_short_series_nan():
-    out = kernels.autocorr_features(np.array([1.0]), 3)
-    assert np.isnan(out["nmbroto"]).all()
-
-
 def test_cross_cov_matches_loop():
     rng = np.random.default_rng(13)
     x1 = rng.normal(size=30)

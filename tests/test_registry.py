@@ -1,9 +1,11 @@
 """Registry hygiene guards.
 
-Python dict literals silently keep the last value for a duplicated key, so a
-148-entry registry can shadow an entry without any visible failure.  These
-tests parse the source with `ast` to catch literal-level duplicates that the
-runtime dict can never reveal.
+Every query is declared once, in the ordered ``REGISTRY`` table of
+spark_pit/queries.py; QUERIES, ORACLES and GATE_ORDER are views of it.
+Python dict literals silently keep the last value for a duplicated key, so
+a 177-entry table can shadow an entry without any visible failure.  The
+duplicate-key test parses the source with `ast` to catch what the runtime
+dict can never reveal.
 """
 import ast
 import pathlib
@@ -23,39 +25,11 @@ def _literal_dict_keys(module_ast, name):
     raise AssertionError(f"dict literal {name} not found in queries.py")
 
 
-def test_queries_literal_has_no_duplicate_keys():
+def test_registry_literal_has_no_duplicate_keys():
     tree = ast.parse(QUERIES_PATH.read_text())
-    keys = _literal_dict_keys(tree, "QUERIES")
+    keys = _literal_dict_keys(tree, "REGISTRY")
     dupes = sorted({k for k in keys if keys.count(k) > 1})
-    assert not dupes, f"duplicate QUERIES keys shadow earlier entries: {dupes}"
-
-
-def test_oracles_literal_has_no_duplicate_keys():
-    tree = ast.parse(QUERIES_PATH.read_text())
-    keys = _literal_dict_keys(tree, "ORACLES")
-    dupes = sorted({k for k in keys if keys.count(k) > 1})
-    assert not dupes, f"duplicate ORACLES keys shadow earlier entries: {dupes}"
-
-
-def test_every_query_key_is_unique_and_oracles_subset():
-    from spark_pit.queries import ORACLES, QUERIES
-
-    missing = sorted(set(ORACLES) - set(QUERIES))
-    assert not missing, f"ORACLES entries without a QUERIES twin: {missing}"
-
-
-def test_gate_order_is_a_permutation_of_the_registry():
-    """GATE_ORDER rebuilds QUERIES; a key missing from it would silently
-    DROP that query from the driver contract (dict-comprehension rebuild),
-    so the permutation property is load-bearing."""
-    tree = ast.parse(QUERIES_PATH.read_text())
-    literal_keys = _literal_dict_keys(tree, "QUERIES")
-
-    from spark_pit.queries import GATE_ORDER, QUERIES
-
-    assert sorted(GATE_ORDER) == sorted(literal_keys)
-    assert list(QUERIES) == GATE_ORDER
-    assert len(GATE_ORDER) == len(set(GATE_ORDER))
+    assert not dupes, f"duplicate REGISTRY keys shadow earlier entries: {dupes}"
 
 
 def test_gate_window_is_oracle_backed():

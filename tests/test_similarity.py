@@ -93,15 +93,17 @@ def test_ivf_topk_exact_scores_and_planted_recall(spark):
 def test_embedding_neardup_lsh_matches_exact(spark):
     """The LSH-bucketed near-dup path must reproduce the brute-force result
     on data with planted near-duplicates (recall 1.0 at 16 bands × 4 bits
-    for cosine ≥ 0.9 pairs)."""
+    for cosine ≥ 0.9 pairs). All-zero vectors have no cosine and match
+    nothing on either path."""
     from spark_pit.operators.similarity import embedding_neardup, embedding_neardup_exact
 
     rng = np.random.default_rng(3)
-    n, d = 60, 16
+    n, d = 62, 16
     mat = rng.standard_normal((n, d))
     # plant near-dups: rows 40..59 are jittered copies of rows 0..19
     for i in range(20):
         mat[40 + i] = mat[i] + rng.standard_normal(d) * 0.02
+    mat[60:] = 0.0  # two all-zero vectors
     pdf = pd.DataFrame({"vec_id": range(n), "embedding": [list(map(float, v)) for v in mat]})
     df = spark.createDataFrame(pdf, schema="vec_id long, embedding array<float>")
     got = embedding_neardup(df, "vec_id", "embedding", threshold=0.9).toPandas()
@@ -109,6 +111,7 @@ def test_embedding_neardup_lsh_matches_exact(spark):
     g = got.sort_values("vec_id").reset_index(drop=True)
     w = want.sort_values("vec_id").reset_index(drop=True)
     assert g["is_dup"].sum() >= 20
+    assert g.loc[g["vec_id"] >= 60, "is_dup"].tolist() == [False, False]
     pd.testing.assert_frame_equal(g, w)
 
 

@@ -232,9 +232,10 @@ def test_countmin_never_underestimates(spark):
 
 
 def test_countmin_detector_default_no_exact_groupby(spark, monkeypatch):
-    """hot_detector defaults to "countmin": the exact full-key-space
-    groupBy (hot_entities) must never run, detection must still find the
-    hot key, and the routed output must equal the unsalted baseline."""
+    """``hot_threshold`` detection is the count-min sketch: the exact
+    full-key-space groupBy (hot_entities) must never run, detection must
+    still find the hot key, and the routed output must equal the unsalted
+    baseline."""
     import spark_pit.operators.skew as skew
 
     ev, snaps = _mk(spark)
