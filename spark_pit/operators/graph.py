@@ -19,7 +19,7 @@ hub-entity graphs). The non-iterative slice:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -181,7 +181,8 @@ def shortest_paths(
     contact graph per protein/user); across entities the work is fully
     data-parallel and shuffle-partitioned on the entity key. Each hop is
     one join + one anti-join (dedupe against settled pairs), lineage
-    truncated per hop; the loop exits when a frontier is empty (true BFS
+    truncated per hop; the frontier's size is an Observation on that hop's
+    checkpoint job, and the loop exits when a frontier is empty (true BFS
     distances, no cap on correctness — max_hops only bounds the worst case).
 
     ``sources``: optional (entity, src) frame restricting the BFS to those
@@ -210,10 +211,15 @@ def shortest_paths(
             .select(entity, "src", F.col("m").alias("node"), F.lit(hop).alias("dist"))
             .distinct()
         )
-        fresh = grown.join(
-            settled.select(entity, "src", "node"), [entity, "src", "node"], "left_anti"
-        ).localCheckpoint()
-        if fresh.limit(1).count() == 0:
+        obs = Observation()
+        fresh = (
+            grown.join(
+                settled.select(entity, "src", "node"), [entity, "src", "node"], "left_anti"
+            )
+            .observe(obs, F.count(F.lit(1)).alias("fresh"))
+            .localCheckpoint()
+        )
+        if obs.get["fresh"] == 0:
             break
         settled = settled.unionByName(fresh).localCheckpoint()
         frontier = fresh
@@ -457,19 +463,20 @@ def connected_components(
     fixpoint (component id = smallest node id in the component,
     deterministic). Integer-only → bit-exact against a recursive-CTE oracle.
 
-    The loop is driver-bounded with an early-exit count (one action per
-    iteration, the canonical Spark iterative shape); iterations needed =
-    graph diameter, ≤ max_iter for ε-graphs. At extreme scale swap for the
-    large-star/small-star variant; min-label keeps the per-step cost at one
-    join + one groupBy shuffle which is right for bounded-diameter graphs.
+    The loop is driver-bounded with an early exit: each round's count of
+    changed labels is an Observation on the round's eager localCheckpoint,
+    so the flag rides the checkpoint job and a round runs no extra Spark
+    job; iterations needed = graph diameter, ≤ max_iter for ε-graphs. At
+    extreme scale swap for the large-star/small-star variant; min-label
+    keeps the per-step cost at one join + one groupBy shuffle which is
+    right for bounded-diameter graphs.
 
     The undirected edge list is localCheckpointed ONCE at entry: callers
     like dedup_clusters feed an edge plan that is itself a multi-stage
     pipeline (MinHash signatures → band join → Jaccard verify), and
-    without the checkpoint every iteration's join AND the convergence
-    count re-plan that whole upstream lineage (stage-skipping via shuffle
-    reuse helps but still re-walks the plan and keeps the lineage growing
-    with the loop).
+    without the checkpoint every iteration's join re-plans that whole
+    upstream lineage (stage-skipping via shuffle reuse helps but still
+    re-walks the plan and keeps the lineage growing with the loop).
     """
     # round-7 iteration shape: the adjacency gets SELF-LOOPS once, so each
     # propagation round is one join + one min-aggregate — min over
@@ -478,8 +485,8 @@ def connected_components(
     # The self-loop row also delivers the node's OWN previous label
     # through the same join, so the convergence flag (labels are
     # monotonically non-increasing: changed ⟺ new < old) rides the same
-    # aggregate — the former join-compare-count job per round is gone and
-    # the check is one limit(1) scan of the checkpointed frame.
+    # aggregate. It is counted by an Observation on the checkpoint, so the
+    # flag rides the checkpoint job: no separate count job per round.
     und = _undirected(edges, entity)
     nodes = und.select(entity, "n").distinct()
     und2 = und.unionByName(nodes.withColumn("m", F.col("n"))).localCheckpoint()
@@ -490,6 +497,7 @@ def connected_components(
     # seed counts as round 1 → max_iter - 1 join rounds keeps the total
     # propagation bound identical to the pre-round-7 loop
     for _ in range(max_iter - 1):
+        obs = Observation()
         nxt = (
             und2.join(
                 lab.select(entity, F.col("n").alias("m"), F.col("c").alias("cm")),
@@ -500,11 +508,11 @@ def connected_components(
                 F.min("cm").alias("c"),
                 F.min(F.when(F.col("m") == F.col("n"), F.col("cm"))).alias("__c_old"),
             )
+            .observe(obs, F.count_if(F.col("c") != F.col("__c_old")).alias("changed"))
             .localCheckpoint()
         )
-        changed = nxt.where(F.col("c") != F.col("__c_old")).limit(1).count()
         lab = nxt.select(entity, "n", "c")
-        if changed == 0:
+        if obs.get["changed"] == 0:
             break
     return lab.select(entity, F.col("n").alias("node"), F.col("c").alias("component"))
 

@@ -24,6 +24,24 @@ def test_connected_components_two_chains(spark):
     assert comp[(1, 1)] == comp[(1, 2)] == comp[(1, 3)] == comp[(1, 4)] == 1
     assert comp[(1, 10)] == comp[(1, 11)] == 10
     assert comp[(2, 5)] == comp[(2, 6)] == comp[(2, 7)] == 5
+    # an empty edge list converges at once to no components
+    assert connected_components(_edges_df(spark, []), "g").count() == 0
+
+
+def test_connected_components_warm_rerun_compiles_nothing(spark):
+    """A second identical call reuses every generated class: the rounds'
+    convergence flag rides the checkpoint jobs, and the session's codegen
+    cache holds the working set, so no whole-stage class is compiled."""
+    from spark_pit.operators.graph import connected_components
+
+    rows = [(1, 1, 2), (1, 2, 3), (1, 3, 4), (1, 10, 11),
+            (2, 5, 6), (2, 6, 7), (2, 5, 7)]
+    cm = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    first = sorted(connected_components(_edges_df(spark, rows), "g").collect())
+    before = cm.METRIC_COMPILATION_TIME().getCount()
+    second = sorted(connected_components(_edges_df(spark, rows), "g").collect())
+    assert cm.METRIC_COMPILATION_TIME().getCount() - before == 0
+    assert second == first
 
 
 def test_connected_components_long_chain_converges(spark):
@@ -68,6 +86,8 @@ def test_shortest_paths_and_stats(spark):
     assert d[(1, 0, 3)] == 3 and d[(1, 0, 2)] == 2 and d[(1, 1, 3)] == 2
     assert d[(2, 0, 2)] == 1 and d[(2, 8, 9)] == 1
     assert (2, 0, 8) not in d  # disconnected pair never materializes
+    # an empty edge list has no sources: the first frontier is empty
+    assert shortest_paths(_edges_df(spark, []), "g").count() == 0
 
     st = path_stats(shortest_paths(_edges_df(spark, rows), "g"), "g").toPandas()
     st = st.set_index("g")
