@@ -1464,29 +1464,69 @@ FROM cnt
 """
 
 
+def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events table as a file stream. The glob matches events.parquet
+    alone: the bare directory would also scan every sibling table, and a
+    plain file path fails (the source's ``basePath`` must be a directory)."""
+    schema = _ev(spark, sf_dir).schema
+    return spark.readStream.schema(schema).parquet(f"{sf_dir}/events*.parquet")
+
+
+def _parity_counts(
+    stream: DataFrame,
+    batch: DataFrame,
+    on: list[str],
+    values: list[str],
+    how: str = "full_outer",
+) -> DataFrame:
+    """One row of stream-vs-batch diff counts over the ``on`` join:
+    ``n_only_stream`` and ``n_only_batch`` count the keys one side lacks,
+    ``n_value_diff`` the matched keys where any of ``values`` differs
+    (null-safe). All three are 0 when the streaming twin reproduces the
+    batch operator, which keeps one pinned oracle valid at every sf."""
+
+    def side(df: DataFrame, tag: str) -> DataFrame:
+        vals = [F.col(v).alias(v + tag) for v in values]
+        return df.select(*on, *vals, F.lit(1).alias(tag))
+
+    j = side(stream, "__s").join(side(batch, "__b"), on, how)
+    diff = F.lit(False)
+    for v in values:
+        diff = diff | ~F.col(v + "__s").eqNullSafe(F.col(v + "__b"))
+    zero = F.lit(0).cast("long")
+
+    def n(cond):
+        return F.coalesce(F.sum(F.when(cond, 1)), zero).cast("long")
+
+    s, b = F.col("__s").isNotNull(), F.col("__b").isNotNull()
+    return j.agg(
+        n(~b).alias("n_only_stream"),
+        n(~s).alias("n_only_batch"),
+        n(s & b & diff).alias("n_value_diff"),
+    )
+
+
+# the pinned oracle of every diff-count parity row
+Q_STREAMING_PARITY_SQL = """
+SELECT CAST(0 AS BIGINT) AS n_only_stream,
+       CAST(0 AS BIGINT) AS n_only_batch,
+       CAST(0 AS BIGINT) AS n_value_diff
+"""
+
+
 def q_streaming_asof_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming/batch parity as a DRIVER-GATE row (judge round-2 ask #6):
     runs the stateful streaming as-of join (applyInPandasWithState,
-    Trigger.AvailableNow over the parquet dir = ordered arrival, the
+    Trigger.AvailableNow over the events file = ordered arrival, the
     documented correctness regime) AND the batch strictly-before join on
     the same events, then full-outer-joins the two result sets. Output is
     one row of diff counts — all zero when the streaming operator
     reproduces batch semantics exactly — pinned by the oracle, so any
-    drift in the streaming state machine flips the gate red. The counts
-    are sf-independent (always 0), which keeps one pinned oracle valid at
-    every scale."""
-    import os
-    import tempfile
+    drift in the streaming state machine flips the gate red."""
+    from spark_pit.streaming import run_available_now, streaming_asof_features
 
-    from spark_pit.operators.asof import asof_join_window
-    from spark_pit.streaming import streaming_asof_features
-
-    ck = tempfile.mkdtemp(prefix="ck_asof_parity_")
-    name = "asof_parity_" + os.path.basename(ck).strip("_").replace("-", "_")[-12:]
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     raw = (
-        spark.readStream.schema(schema)
-        .parquet(sf_dir)  # directory scan; sibling tables filtered below
+        _event_stream(spark, sf_dir)
         .where(F.col("event_id").isNotNull() & F.col("event_type").isNotNull())
         .select(
             "user_id",
@@ -1497,19 +1537,8 @@ def q_streaming_asof_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("snapshot_id"),
         )
     )
-    stream_q = (
-        streaming_asof_features(raw, "user_id", "ts")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_stream(stream_q)
-    stream = spark.table(name).select(
-        "event_id", F.col("asof_snapshot_id").alias("sid_s"), F.lit(1).alias("__s")
-    )
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    stream = run_available_now(streaming_asof_features(raw, "user_id", "ts"), "update")
+    ev = _ev(spark, sf_dir)
     snaps = ev.where(F.col("event_type") == "purchase").select(
         "user_id", F.col("ts").alias("snapshot_ts"),
         F.col("event_id").alias("snapshot_id"),
@@ -1520,56 +1549,10 @@ def q_streaming_asof_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = asof_join_window(
         events, snaps, ["user_id"], "ts", "snapshot_ts",
         ["snapshot_id"], strict=True, right_order="snapshot_id",
-    ).select("event_id", F.col("asof_snapshot_id").alias("sid_b"), F.lit(1).alias("__b"))
-    j = stream.join(batch, "event_id", "full_outer")
-    zero = F.lit(0).cast("long")
-    return j.agg(
-        F.coalesce(F.sum(F.when(F.col("__b").isNull(), 1)), zero)
-        .cast("long").alias("n_only_stream"),
-        F.coalesce(F.sum(F.when(F.col("__s").isNull(), 1)), zero)
-        .cast("long").alias("n_only_batch"),
-        F.coalesce(
-            F.sum(
-                F.when(
-                    F.col("__s").isNotNull() & F.col("__b").isNotNull()
-                    & ~F.col("sid_s").eqNullSafe(F.col("sid_b")),
-                    1,
-                )
-            ),
-            zero,
-        ).cast("long").alias("n_value_diff"),
     )
+    return _parity_counts(stream, batch, ["event_id"], ["asof_snapshot_id"])
 
 
-Q_STREAMING_ASOF_PARITY_SQL = """
-SELECT CAST(0 AS BIGINT) AS n_only_stream,
-       CAST(0 AS BIGINT) AS n_only_batch,
-       CAST(0 AS BIGINT) AS n_value_diff
-"""
-
-
-def _await_stream(stream_q, default_timeout: int = 300) -> None:
-    """Wait for an availableNow streaming query and FAIL LOUDLY on timeout.
-
-    The parity twins compare the stream's memory table against the batch
-    operator; if awaitTermination times out the memory table is partial
-    (or empty) and the comparison would report a bogus value mismatch —
-    exactly what happened at the 10M-row scale tier, where the fixed
-    300 s budget was not enough under load (the gate recorded
-    n_only_batch = 10,000,000, i.e. "stream produced nothing", for a
-    query that passes at every smaller sf). A timeout is a harness
-    artifact, not an operator result, so it must surface as an ERROR,
-    never as a plausible-looking diff count. SPARK_PIT_STREAM_TIMEOUT
-    raises the budget for scale-tier runs."""
-    import os
-
-    timeout = int(os.environ.get("SPARK_PIT_STREAM_TIMEOUT", str(default_timeout)))
-    if not stream_q.awaitTermination(timeout):
-        stream_q.stop()
-        raise RuntimeError(
-            f"streaming query did not finish within {timeout}s; raise "
-            "SPARK_PIT_STREAM_TIMEOUT for scale-tier runs"
-        )
 
 
 def q_streaming_decay_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1580,19 +1563,12 @@ def q_streaming_decay_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     power-of-two terms, so no tolerance is needed and the diff counts
     are pinned zero at every sf. Exercises array-typed group state and
     the ordered-arrival regime end to end."""
-    import os
-    import tempfile
-
     from spark_pit.operators.windows import decayed_features
-    from spark_pit.streaming import streaming_decayed_features
+    from spark_pit.streaming import run_available_now, streaming_decayed_features
 
-    ck = tempfile.mkdtemp(prefix="ck_decay_parity_")
-    name = "decay_parity_" + os.path.basename(ck).strip("_").replace("-", "_")[-12:]
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     vq = F.pmod(F.floor(F.col("value") * 8).cast("long"), F.lit(1024)).alias("vq")
     raw = (
-        spark.readStream.schema(schema)
-        .parquet(sf_dir)  # directory scan; sibling tables filtered below
+        _event_stream(spark, sf_dir)
         .where(F.col("event_id").isNotNull() & F.col("event_type").isNotNull())
         .select(
             "user_id",
@@ -1601,56 +1577,16 @@ def q_streaming_decay_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             vq,
         )
     )
-    stream_q = (
-        streaming_decayed_features(raw, "user_id", "ts", "vq")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_stream(stream_q)
-    stream = spark.table(name).select(
-        "event_id",
-        F.col("decayed_count").alias("dc_s"),
-        F.col("decayed_sum").alias("ds_s"),
-        F.lit(1).alias("__s"),
+    stream = run_available_now(
+        streaming_decayed_features(raw, "user_id", "ts", "vq"), "update"
     )
     ev = _ev(spark, sf_dir).select("event_id", "user_id", "ts", vq)
-    batch = decayed_features(ev, "user_id", "ts", "vq").select(
-        "event_id",
-        F.col("decayed_count").alias("dc_b"),
-        F.col("decayed_sum").alias("ds_b"),
-        F.lit(1).alias("__b"),
-    )
-    j = stream.join(batch, "event_id", "full_outer")
-    zero = F.lit(0).cast("long")
-    return j.agg(
-        F.coalesce(F.sum(F.when(F.col("__b").isNull(), 1)), zero)
-        .cast("long").alias("n_only_stream"),
-        F.coalesce(F.sum(F.when(F.col("__s").isNull(), 1)), zero)
-        .cast("long").alias("n_only_batch"),
-        F.coalesce(
-            F.sum(
-                F.when(
-                    F.col("__s").isNotNull() & F.col("__b").isNotNull()
-                    & (
-                        ~F.col("dc_s").eqNullSafe(F.col("dc_b"))
-                        | ~F.col("ds_s").eqNullSafe(F.col("ds_b"))
-                    ),
-                    1,
-                )
-            ),
-            zero,
-        ).cast("long").alias("n_value_diff"),
+    batch = decayed_features(ev, "user_id", "ts", "vq")
+    return _parity_counts(
+        stream, batch, ["event_id"], ["decayed_count", "decayed_sum"]
     )
 
 
-Q_STREAMING_DECAY_PARITY_SQL = """
-SELECT CAST(0 AS BIGINT) AS n_only_stream,
-       CAST(0 AS BIGINT) AS n_only_batch,
-       CAST(0 AS BIGINT) AS n_value_diff
-"""
 
 
 def q_streaming_target_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1662,19 +1598,12 @@ def q_streaming_target_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 6 decimal places) so both engines sum the same exact integers;
     the sum comparison is string-vs-string on the scale-6 decimal form.
     Diff counts pinned zero at every sf."""
-    import os
-    import tempfile
-
     from spark_pit.operators.windows import target_encode_pit
-    from spark_pit.streaming import streaming_target_encode
+    from spark_pit.streaming import run_available_now, streaming_target_encode
 
-    ck = tempfile.mkdtemp(prefix="ck_te_parity_")
-    name = "te_parity_" + os.path.basename(ck).strip("_").replace("-", "_")[-12:]
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     vq = (F.floor(F.col("value") * 8).cast("double") / F.lit(8.0)).alias("vq")
     raw = (
-        spark.readStream.schema(schema)
-        .parquet(sf_dir)  # directory scan; sibling tables filtered below
+        _event_stream(spark, sf_dir)
         .where(
             F.col("event_id").isNotNull() & F.col("event_type").isNotNull()
             & F.col("value").isNotNull()
@@ -1686,20 +1615,9 @@ def q_streaming_target_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             vq,
         )
     )
-    stream_q = (
-        streaming_target_encode(raw, "event_type", "ts", "vq", tiebreak="event_id")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_stream(stream_q)
-    stream = spark.table(name).select(
-        "event_id",
-        F.col("te_count").alias("cnt_s"),
-        F.col("te_sum_str").alias("sum_s"),
-        F.lit(1).alias("__s"),
+    stream = run_available_now(
+        streaming_target_encode(raw, "event_type", "ts", "vq", tiebreak="event_id"),
+        "update",
     )
     ev = (
         _ev(spark, sf_dir)
@@ -1709,39 +1627,11 @@ def q_streaming_target_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = target_encode_pit(
         ev, "event_type", "ts", "vq", tiebreak="event_id"
     ).select(
-        "event_id",
-        F.col("te_count").alias("cnt_b"),
-        F.col("te_sum").cast("string").alias("sum_b"),
-        F.lit(1).alias("__b"),
+        "event_id", "te_count", F.col("te_sum").cast("string").alias("te_sum_str")
     )
-    j = stream.join(batch, "event_id", "full_outer")
-    zero = F.lit(0).cast("long")
-    return j.agg(
-        F.coalesce(F.sum(F.when(F.col("__b").isNull(), 1)), zero)
-        .cast("long").alias("n_only_stream"),
-        F.coalesce(F.sum(F.when(F.col("__s").isNull(), 1)), zero)
-        .cast("long").alias("n_only_batch"),
-        F.coalesce(
-            F.sum(
-                F.when(
-                    F.col("__s").isNotNull() & F.col("__b").isNotNull()
-                    & (
-                        ~F.col("cnt_s").eqNullSafe(F.col("cnt_b"))
-                        | ~F.col("sum_s").eqNullSafe(F.col("sum_b"))
-                    ),
-                    1,
-                )
-            ),
-            zero,
-        ).cast("long").alias("n_value_diff"),
-    )
+    return _parity_counts(stream, batch, ["event_id"], ["te_count", "te_sum_str"])
 
 
-Q_STREAMING_TARGET_PARITY_SQL = """
-SELECT CAST(0 AS BIGINT) AS n_only_stream,
-       CAST(0 AS BIGINT) AS n_only_batch,
-       CAST(0 AS BIGINT) AS n_value_diff
-"""
 
 
 def q_streaming_session_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1754,54 +1644,35 @@ def q_streaming_session_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins that the stream actually emitted (the subset isn't vacuous).
     Any watermark/state-machine drift in the streaming operator flips
     the gate red."""
-    import os
-    import tempfile
-
     from spark_pit.operators.windows import with_session_id
-    from spark_pit.streaming import streaming_session_stats
+    from spark_pit.streaming import run_available_now, streaming_session_stats
 
-    ck = tempfile.mkdtemp(prefix="ck_sess_parity_")
-    name = "sess_parity_" + os.path.basename(ck).strip("_").replace("-", "_")[-12:]
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     raw = (
-        spark.readStream.schema(schema)
-        .parquet(sf_dir)
+        _event_stream(spark, sf_dir)
         .where(F.col("event_id").isNotNull())
         .select(
             "user_id", F.col("ts").cast("timestamp_ltz").alias("ts"),
             "value", "event_id",
         )
     )
-    stream_q = (
-        streaming_session_stats(raw, "user_id", "ts", "value", gap="30 minutes")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
+    stream = run_available_now(
+        streaming_session_stats(raw, "user_id", "ts", "value", gap="30 minutes"),
+        "append",
     )
-    _await_stream(stream_q)
-    stream = spark.table(name).select(
-        "user_id",
-        F.col("session_start").alias("ss"),
-        F.col("n_events").alias("ne"),
-        F.lit(1).alias("__s"),
-    )
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = _ev(spark, sf_dir).select(
         "user_id", F.col("ts").cast("timestamp_ltz").alias("ts"), "value", "event_id"
     )
     batch = (
         with_session_id(ev, "user_id", "ts", 1800, tiebreak="event_id")
         .groupBy("user_id", "session_id")
-        .agg(F.min("ts").alias("ss"), F.count(F.lit(1)).alias("ne"))
-        .select("user_id", "ss", "ne", F.lit(1).alias("__b"))
+        .agg(F.min("ts").alias("session_start"), F.count(F.lit(1)).alias("n_events"))
     )
-    j = stream.join(batch, ["user_id", "ss", "ne"], "left")
-    return j.agg(
-        F.coalesce(F.sum(F.when(F.col("__b").isNull(), 1)), F.lit(0).cast("long"))
-        .cast("long").alias("n_unmatched_stream"),
-        (F.count(F.lit(1)) > 0).alias("has_sessions"),
-    )
+    keys = ["user_id", "session_start", "n_events"]
+    counts = _parity_counts(stream, batch, keys, [], how="left")
+    seen = stream.agg((F.count(F.lit(1)) > 0).alias("has_sessions"))
+    return counts.select(
+        F.col("n_only_stream").alias("n_unmatched_stream")
+    ).crossJoin(seen)
 
 
 Q_STREAMING_SESSION_PARITY_SQL = """
@@ -2720,18 +2591,13 @@ def q_streaming_funnel_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the windowed completion flag, all-integer compare, diff counts
     pinned zero. The sink is folded per entity with column max, exact
     because every emitted column is set-once/monotonic."""
-    import os
-    import tempfile
-
     from spark_pit.operators.windows import funnel_steps
-    from spark_pit.streaming import streaming_funnel
+    from spark_pit.streaming import run_available_now, streaming_funnel
 
-    ck = tempfile.mkdtemp(prefix="ck_funnel_parity_")
-    name = "funnel_parity_" + os.path.basename(ck).strip("_").replace("-", "_")[-12:]
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    steps = ["view", "add_to_cart", "purchase"]
+    values = ["step0_ts_us", "step1_ts_us", "step2_ts_us", "funnel_depth", "completed"]
     raw = (
-        spark.readStream.schema(schema)
-        .parquet(sf_dir)
+        _event_stream(spark, sf_dir)
         .where(F.col("event_id").isNotNull() & F.col("event_type").isNotNull())
         .select(
             "user_id",
@@ -2740,69 +2606,20 @@ def q_streaming_funnel_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
         )
     )
-    stream_q = (
+    emitted = run_available_now(
         streaming_funnel(
-            raw, "user_id", "ts", "event_type",
-            ["view", "add_to_cart", "purchase"], within_s=86400,
+            raw, "user_id", "ts", "event_type", steps, within_s=86400,
             tiebreak="event_id",
-        )
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        "update",
     )
-    _await_stream(stream_q)
-    stream = (
-        spark.table(name)
-        .groupBy("user_id")
-        .agg(
-            F.max("step0_ts_us").alias("t0_s"),
-            F.max("step1_ts_us").alias("t1_s"),
-            F.max("step2_ts_us").alias("t2_s"),
-            F.max("funnel_depth").alias("d_s"),
-            F.max("completed").alias("c_s"),
-        )
-        .withColumn("__s", F.lit(1))
-    )
+    stream = emitted.groupBy("user_id").agg(*[F.max(v).alias(v) for v in values])
     batch = funnel_steps(
-        _ev(spark, sf_dir), "user_id", "ts", "event_type",
-        ["view", "add_to_cart", "purchase"], within_s=86400,
-    ).select(
-        "user_id",
-        F.col("step0_ts_us").alias("t0_b"),
-        F.col("step1_ts_us").alias("t1_b"),
-        F.col("step2_ts_us").alias("t2_b"),
-        F.col("funnel_depth").alias("d_b"),
-        F.col("completed").alias("c_b"),
-        F.lit(1).alias("__b"),
+        _ev(spark, sf_dir), "user_id", "ts", "event_type", steps, within_s=86400,
     )
-    j = stream.join(batch, "user_id", "full_outer")
-    zero = F.lit(0).cast("long")
-    diff = (
-        ~F.col("t0_s").eqNullSafe(F.col("t0_b"))
-        | ~F.col("t1_s").eqNullSafe(F.col("t1_b"))
-        | ~F.col("t2_s").eqNullSafe(F.col("t2_b"))
-        | ~F.col("d_s").eqNullSafe(F.col("d_b"))
-        | ~F.col("c_s").eqNullSafe(F.col("c_b"))
-    )
-    return j.agg(
-        F.coalesce(F.sum(F.when(F.col("__b").isNull(), 1)), zero)
-        .cast("long").alias("n_only_stream"),
-        F.coalesce(F.sum(F.when(F.col("__s").isNull(), 1)), zero)
-        .cast("long").alias("n_only_batch"),
-        F.coalesce(
-            F.sum(F.when(F.col("__s").isNotNull() & F.col("__b").isNotNull() & diff, 1)),
-            zero,
-        ).cast("long").alias("n_value_diff"),
-    )
+    return _parity_counts(stream, batch, ["user_id"], values)
 
 
-Q_STREAMING_FUNNEL_PARITY_SQL = """
-SELECT CAST(0 AS BIGINT) AS n_only_stream,
-       CAST(0 AS BIGINT) AS n_only_batch,
-       CAST(0 AS BIGINT) AS n_value_diff
-"""
 
 
 def q_streaming_scd2_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2811,20 +2628,13 @@ def q_streaming_scd2_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXACTLY the batch scd2_intervals' closed rows — equal (entity,
     valid_from_us) keys, equal valid_to_us and attr values — while each
     entity's single open row stays in state (open_rows_match pins that
-    n_only_batch equals the distinct-entity count, so the subset isn't
-    vacuous). All-integer comparison, zero tolerance."""
-    import os
-    import tempfile
-
+    the batch's open-row count equals the distinct-entity count, so the
+    subset isn't vacuous). All-integer comparison, zero tolerance."""
     from spark_pit.operators.windows import scd2_intervals
-    from spark_pit.streaming import streaming_scd2
+    from spark_pit.streaming import run_available_now, streaming_scd2
 
-    ck = tempfile.mkdtemp(prefix="ck_scd2_parity_")
-    name = "scd2_parity_" + os.path.basename(ck).strip("_").replace("-", "_")[-12:]
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     raw = (
-        spark.readStream.schema(schema)
-        .parquet(sf_dir)
+        _event_stream(spark, sf_dir)
         .where(F.col("event_id").isNotNull() & F.col("event_type").isNotNull())
         .select(
             "user_id",
@@ -2833,55 +2643,24 @@ def q_streaming_scd2_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
         )
     )
-    stream_q = (
-        streaming_scd2(raw, "user_id", "ts", ["event_type"], tiebreak="event_id")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_stream(stream_q)
-    stream = spark.table(name).select(
-        "user_id",
-        F.col("event_type").alias("et_s"),
-        "valid_from_us",
-        F.col("valid_to_us").alias("to_s"),
-        F.lit(1).alias("__s"),
+    stream = run_available_now(
+        streaming_scd2(raw, "user_id", "ts", ["event_type"], tiebreak="event_id"),
+        "update",
     )
     ev = _ev(spark, sf_dir).select("user_id", "ts", "event_id", "event_type")
     batch = scd2_intervals(ev, "user_id", "ts", ["event_type"], tiebreak="event_id")
-    closed = batch.select(
-        "user_id",
-        F.col("event_type").alias("et_b"),
-        "valid_from_us",
-        F.col("valid_to_us").alias("to_b"),
-        F.lit(1).alias("__b"),
+    counts = _parity_counts(
+        stream, batch.where(F.col("valid_to_us").isNotNull()),
+        ["user_id", "valid_from_us"], ["event_type", "valid_to_us"],
     )
-    n_entities = ev.select("user_id").distinct().count()
-    n_open = batch.where(F.col("is_current")).count()
-    j = stream.join(closed.where(F.col("to_b").isNotNull()),
-                    ["user_id", "valid_from_us"], "full_outer")
-    zero = F.lit(0).cast("long")
-    return j.agg(
-        F.coalesce(F.sum(F.when(F.col("__b").isNull(), 1)), zero)
-        .cast("long").alias("n_only_stream"),
-        F.coalesce(F.sum(F.when(F.col("__s").isNull(), 1)), zero)
-        .cast("long").alias("n_only_batch"),
-        F.coalesce(
-            F.sum(
-                F.when(
-                    F.col("__s").isNotNull() & F.col("__b").isNotNull()
-                    & (
-                        ~F.col("to_s").eqNullSafe(F.col("to_b"))
-                        | ~F.col("et_s").eqNullSafe(F.col("et_b"))
-                    ),
-                    1,
-                )
-            ),
-            zero,
-        ).cast("long").alias("n_value_diff"),
-        F.lit(n_open == n_entities).alias("open_rows_match"),
+    n_open = batch.agg(F.count(F.when(F.col("is_current"), 1)).alias("n_open"))
+    # count(*) over the distinct keys counts a null user_id as an entity
+    n_entities = ev.select("user_id").distinct().agg(
+        F.count(F.lit(1)).alias("n_entities")
+    )
+    return counts.crossJoin(n_open).crossJoin(n_entities).select(
+        "n_only_stream", "n_only_batch", "n_value_diff",
+        (F.col("n_open") == F.col("n_entities")).alias("open_rows_match"),
     )
 
 
@@ -3876,17 +3655,11 @@ def q_streaming_drift_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     and must reproduce batch ``tv_drift_by_group`` over the same rows
     EXACTLY — integer TV arithmetic, so the diff counts are pinned
     zero, not approximately zero."""
-    import os
-    import tempfile
-
     from spark_pit.operators.drift import tv_drift_by_group, tv_from_counts
+    from spark_pit.streaming import run_available_now
 
-    ck = tempfile.mkdtemp(prefix="ck_drift_parity_")
-    name = "drift_parity_" + os.path.basename(ck).strip("_").replace("-", "_")[-12:]
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     raw = (
-        spark.readStream.schema(schema)
-        .parquet(sf_dir)  # directory scan; sibling tables filtered below
+        _event_stream(spark, sf_dir)
         .where(
             F.col("event_id").isNotNull() & F.col("user_id").isNotNull()
             & F.col("event_type").isNotNull()
@@ -3901,62 +3674,16 @@ def q_streaming_drift_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.lit(1) - F.col("__p")).alias("__cr"),
         F.sum("__p").alias("__cc"),
     )
-    stream_q = (
-        counts.writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_stream(stream_q)
-    stream = tv_from_counts(spark.table(name), "shard").select(
-        "shard",
-        F.col("n_ref").alias("nr_s"),
-        F.col("n_cur").alias("nc_s"),
-        F.col("tv_micro").alias("tv_s"),
-        F.lit(1).alias("__s"),
-    )
+    stream = tv_from_counts(run_available_now(counts, "complete"), "shard")
     base = _ev(spark, sf_dir).select(
         (F.col("user_id") % 10).alias("shard"),
         F.col("event_type"),
         (F.col("event_id") % 7 < 3).cast("int").alias("period"),
     )
-    batch = tv_drift_by_group(base, "shard", "event_type", "period").select(
-        "shard",
-        F.col("n_ref").alias("nr_b"),
-        F.col("n_cur").alias("nc_b"),
-        F.col("tv_micro").alias("tv_b"),
-        F.lit(1).alias("__b"),
-    )
-    j = stream.join(batch, "shard", "full_outer")
-    zero = F.lit(0).cast("long")
-    return j.agg(
-        F.coalesce(F.sum(F.when(F.col("__b").isNull(), 1)), zero)
-        .cast("long").alias("n_only_stream"),
-        F.coalesce(F.sum(F.when(F.col("__s").isNull(), 1)), zero)
-        .cast("long").alias("n_only_batch"),
-        F.coalesce(
-            F.sum(
-                F.when(
-                    F.col("__s").isNotNull() & F.col("__b").isNotNull()
-                    & (
-                        ~F.col("nr_s").eqNullSafe(F.col("nr_b"))
-                        | ~F.col("nc_s").eqNullSafe(F.col("nc_b"))
-                        | ~F.col("tv_s").eqNullSafe(F.col("tv_b"))
-                    ),
-                    1,
-                )
-            ),
-            zero,
-        ).cast("long").alias("n_value_diff"),
-    )
+    batch = tv_drift_by_group(base, "shard", "event_type", "period")
+    return _parity_counts(stream, batch, ["shard"], ["n_ref", "n_cur", "tv_micro"])
 
 
-Q_STREAMING_DRIFT_PARITY_SQL = """
-SELECT CAST(0 AS BIGINT) AS n_only_stream,
-       CAST(0 AS BIGINT) AS n_only_batch,
-       CAST(0 AS BIGINT) AS n_value_diff
-"""
 
 
 def q_negative_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6870,7 +6597,7 @@ REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]
     "gini_diversity": (q_gini_diversity, Q_GINI_DIVERSITY_SQL),
     "oof_target_encode": (q_oof_target_encode, Q_OOF_TARGET_ENCODE_SQL),
     "data_profile": (q_data_profile, Q_DATA_PROFILE_SQL),
-    "streaming_drift_parity": (q_streaming_drift_parity, Q_STREAMING_DRIFT_PARITY_SQL),
+    "streaming_drift_parity": (q_streaming_drift_parity, Q_STREAMING_PARITY_SQL),
     "mad_robust_scale": (q_mad, Q_MAD_SQL),
     "cohort_retention": (q_cohort_retention, Q_COHORT_RETENTION_SQL),
     "rfm_segments": (q_rfm_segments, Q_RFM_SEGMENTS_SQL),
@@ -6891,12 +6618,12 @@ REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]
     "pit_fused": (q_pit_fused, Q_PIT_FUSED_SQL),
     "image_pit_checksums": (q_image_pit_checksums, Q_IMAGE_PIT_CHECKSUMS_SQL),
     # 30-35: the six _whole_group-touched streaming parity twins
-    "streaming_decay_parity": (q_streaming_decay_parity, Q_STREAMING_DECAY_PARITY_SQL),
+    "streaming_decay_parity": (q_streaming_decay_parity, Q_STREAMING_PARITY_SQL),
     "streaming_session_parity": (q_streaming_session_parity, Q_STREAMING_SESSION_PARITY_SQL),
-    "streaming_funnel_parity": (q_streaming_funnel_parity, Q_STREAMING_FUNNEL_PARITY_SQL),
+    "streaming_funnel_parity": (q_streaming_funnel_parity, Q_STREAMING_PARITY_SQL),
     "streaming_scd2_parity": (q_streaming_scd2_parity, Q_STREAMING_SCD2_PARITY_SQL),
-    "streaming_target_parity": (q_streaming_target_parity, Q_STREAMING_TARGET_PARITY_SQL),
-    "streaming_asof_parity": (q_streaming_asof_parity, Q_STREAMING_ASOF_PARITY_SQL),
+    "streaming_target_parity": (q_streaming_target_parity, Q_STREAMING_PARITY_SQL),
+    "streaming_asof_parity": (q_streaming_asof_parity, Q_STREAMING_PARITY_SQL),
     # 36-50: oldest-cert-first (r02-era, then r03-era)
     "transitions": (q_transitions, Q_TRANSITIONS_SQL),
     "window_composition": (q_window_composition, Q_WINDOW_COMPOSITION_SQL),

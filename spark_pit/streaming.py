@@ -1,25 +1,36 @@
-"""Structured Streaming surface.
+"""Structured Streaming surface: streaming twins of the batch operators.
 
-The reference is batch-only (SURVEY.md §1.3: "no streaming"), but the
-engine's gap-sessionization and trailing-window features generalize to
-streams; this module provides the two idiomatic shapes:
+The reference is batch-only (SURVEY.md §1.3: "no streaming"). This module
+has nine streaming operators, most of them the twin of a batch operator:
 
-- ``streaming_session_stats`` — session windows via the built-in
-  ``F.session_window`` (gap-based, watermark-driven state eviction): the
-  streaming twin of ``operators.windows.with_session_id``. Pure SQL
-  operators, works with any sink/trigger.
-- ``streaming_pit_features`` — custom per-entity stateful features via
-  ``applyInPandasWithState``: running event count, last-event gap, and
-  backfilled last non-null value per entity — the stateful-cursor analogue
-  of the batch PIT kernel, with GroupStateTimeout-based state.
+- ``streaming_session_stats`` — gap-based session windows via the built-in
+  ``F.session_window`` (watermark-driven state eviction); the twin of
+  ``operators.windows.with_session_id``.
+- ``streaming_dedup`` and ``streaming_content_dedup`` — watermarked
+  first-arrival dedup on key columns or on a hash of the text, held in the
+  JVM state store.
+- Six custom stateful operators on ``applyInPandasWithState`` (one
+  pandas kernel per entity group, bounded state per entity):
+  ``streaming_asof_features`` (twin of ``asof.asof_join_window``, strictly
+  before), ``streaming_pit_features`` (running count, last gap and
+  backfilled value: the stateful-cursor analogue of the PIT kernel),
+  ``streaming_decayed_features``, ``streaming_target_encode``,
+  ``streaming_scd2`` and ``streaming_funnel`` (twins of ``windows``'
+  ``decayed_features``, ``target_encode_pit``, ``scd2_intervals`` and
+  ``funnel_steps``).
 
-Tested with a file source + ``Trigger.AvailableNow`` over the same parquet
-tables the batch path reads (tests/test_streaming.py), so batch and stream
-results are comparable.
+``run_available_now`` drains a streaming frame with
+``Trigger.AvailableNow`` into a batch frame and cleans up after itself;
+the stream-vs-batch parity queries and tests/test_streaming.py compare
+its output with the batch operators over the same parquet tables.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+import uuid
 from collections.abc import Iterator
 from typing import Any
 
@@ -626,3 +637,48 @@ def streaming_funnel(
     return events.groupBy(entity).applyInPandasWithState(
         fn, out_schema, state_schema, "Update", GroupStateTimeout.NoTimeout
     )
+
+
+def run_available_now(df: DataFrame, output_mode: str) -> DataFrame:
+    """Drain streaming ``df`` with ``Trigger.AvailableNow`` into a memory
+    sink and return the sink's rows as a batch frame (``localCheckpoint``).
+
+    The sink gets a unique name and its own checkpoint directory. Whatever
+    happens (success, timeout, stream failure), the query is stopped, the
+    sink's temp view dropped and the checkpoint removed, so no sink (and
+    its copy of the stream's rows in driver memory) outlives the call.
+
+    A timeout FAILS LOUDLY. The parity twins compare the sink against the
+    batch operator; if ``awaitTermination`` times out the sink is partial
+    (or empty) and the comparison would report a bogus value mismatch —
+    exactly what happened at the 10M-row scale tier, where the fixed
+    300 s budget was not enough under load (the gate recorded
+    n_only_batch = 10,000,000, i.e. "stream produced nothing", for a
+    query that passes at every smaller sf). A timeout is a harness
+    artifact, not an operator result, so it must surface as an ERROR,
+    never as a plausible-looking diff count. SPARK_PIT_STREAM_TIMEOUT
+    raises the budget for scale-tier runs."""
+    spark = df.sparkSession
+    name = f"sink_{uuid.uuid4().hex}"
+    ck = tempfile.mkdtemp(prefix="ck_")
+    query = None
+    try:
+        query = (
+            df.writeStream.format("memory").queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", ck)
+            .trigger(availableNow=True)
+            .start()
+        )
+        timeout = int(os.environ.get("SPARK_PIT_STREAM_TIMEOUT", "300"))
+        if not query.awaitTermination(timeout):
+            raise RuntimeError(
+                f"streaming query did not finish within {timeout}s; raise "
+                "SPARK_PIT_STREAM_TIMEOUT for scale-tier runs"
+            )
+        return spark.table(name).localCheckpoint()
+    finally:
+        if query is not None:
+            query.stop()
+        spark.catalog.dropTempView(name)
+        shutil.rmtree(ck, ignore_errors=True)

@@ -3,46 +3,46 @@ over a file source with Trigger.AvailableNow, compared against batch."""
 
 from __future__ import annotations
 
+import glob
+import os
+import tempfile
+
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from spark_pit.catalog import iceberg_available, read_table
-from spark_pit.streaming import streaming_pit_features, streaming_session_stats
+from spark_pit.streaming import (
+    run_available_now,
+    streaming_pit_features,
+    streaming_session_stats,
+)
+
+
+def _stream_table(spark, sf_dir, table):
+    """One sf table as a file stream. The glob matches that file alone; the
+    bare directory would scan every sibling table too."""
+    schema = spark.read.parquet(f"{sf_dir}/{table}.parquet").schema
+    return spark.readStream.schema(schema).parquet(f"{sf_dir}/{table}*.parquet")
 
 
 def _stream_events(spark, sf_dir):
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     return (
-        spark.readStream.schema(schema)
-        .parquet(f"{sf_dir}")  # directory containing events.parquet
+        _stream_table(spark, sf_dir, "events")
         .where(F.col("event_id").isNotNull())
         .select("user_id", F.col("ts").cast("timestamp_ltz").alias("ts"), "value", "event_id")
     )
 
 
-def _run_available_now(df, tmp_path, name):
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update" if name == "pitstate" else "append")
-        .option("checkpointLocation", str(tmp_path / f"ck_{name}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return q
-
-
-def test_streaming_session_stats_matches_batch(spark, sf_dir, tmp_path):
+def test_streaming_session_stats_matches_batch(spark, sf_dir):
     # stream side (append mode emits only watermark-closed sessions; with
     # AvailableNow over finite data the final watermark closes everything
     # except the tail sessions — compare on the common set)
     stream = streaming_session_stats(
         _stream_events(spark, sf_dir), "user_id", "ts", "value", gap="30 minutes"
     )
-    _run_available_now(stream, tmp_path, "sessions")
-    got = spark.sql("select * from sessions").toPandas()
+    got = run_available_now(stream, "append").toPandas()
     assert len(got) > 0
     # batch twin
     from spark_pit.operators.windows import with_session_id
@@ -62,12 +62,11 @@ def test_streaming_session_stats_matches_batch(spark, sf_dir, tmp_path):
     assert matched >= 0.9 * len(got)
 
 
-def test_streaming_stateful_backfill(spark, sf_dir, tmp_path):
+def test_streaming_stateful_backfill(spark, sf_dir):
     feats = streaming_pit_features(
         _stream_events(spark, sf_dir), "user_id", "ts", "value"
     )
-    _run_available_now(feats, tmp_path, "pitstate")
-    got = spark.sql("select * from pitstate").toPandas()
+    got = run_available_now(feats, "update").toPandas()
     n_events = spark.read.parquet(f"{sf_dir}/events.parquet").count()
     assert len(got) == n_events
     # running_count per entity is a permutation of 1..n
@@ -76,17 +75,15 @@ def test_streaming_stateful_backfill(spark, sf_dir, tmp_path):
         assert (rc == np.arange(1, len(g) + 1)).all()
 
 
-def test_streaming_asof_matches_batch(spark, sf_dir, tmp_path):
+def test_streaming_asof_matches_batch(spark, sf_dir):
     """The stateful streaming as-of join must reproduce the batch
     strictly-before join exactly (AvailableNow over one file = ordered
     arrival, the documented correctness regime)."""
     from spark_pit.operators.asof import asof_join_window
     from spark_pit.streaming import streaming_asof_features
 
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     raw = (
-        spark.readStream.schema(schema)
-        .parquet(f"{sf_dir}")  # directory scan picks up sibling tables
+        _stream_table(spark, sf_dir, "events")
         .where(F.col("event_id").isNotNull() & F.col("event_type").isNotNull())
         .select(
             "user_id",
@@ -98,16 +95,8 @@ def test_streaming_asof_matches_batch(spark, sf_dir, tmp_path):
         )
     )
     out = streaming_asof_features(raw, "user_id", "ts")
-    q = (
-        out.writeStream.format("memory").queryName("asofstate")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ck_asof"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
     got = (
-        spark.sql("select * from asofstate").toPandas()
+        run_available_now(out, "update").toPandas()
         .sort_values("event_id").reset_index(drop=True)
     )
 
@@ -138,13 +127,11 @@ def test_catalog_parquet_fallback(spark, sf_dir):
     assert not iceberg_available(spark)
     df = read_table(spark, f"{sf_dir}/events.parquet")
     assert df.count() > 0
-    import pytest
-
     with pytest.raises(ValueError):
         read_table(spark, f"{sf_dir}/events.parquet", snapshot_id=1)
 
 
-def test_streaming_dedup_drops_replayed_rows(spark, sf_dir, tmp_path):
+def test_streaming_dedup_drops_replayed_rows(spark, sf_dir):
     """A self-unioned stream (every event delivered twice) dedups back to
     the batch-distinct row set on the event_id key."""
     from spark_pit.streaming import streaming_dedup
@@ -152,8 +139,7 @@ def test_streaming_dedup_drops_replayed_rows(spark, sf_dir, tmp_path):
     src = _stream_events(spark, sf_dir)
     doubled = src.union(_stream_events(spark, sf_dir))
     out = streaming_dedup(doubled, ["event_id"], "ts", watermark="1 hour")
-    _run_available_now(out, tmp_path, "dedup")
-    got = spark.sql("select * from dedup").toPandas()
+    got = run_available_now(out, "append").toPandas()
     n_batch = (
         spark.read.parquet(f"{sf_dir}/events.parquet")
         .select("event_id").distinct().count()
@@ -162,22 +148,19 @@ def test_streaming_dedup_drops_replayed_rows(spark, sf_dir, tmp_path):
     assert got["event_id"].is_unique
 
 
-def test_streaming_content_dedup(spark, sf_dir, tmp_path):
+def test_streaming_content_dedup(spark, sf_dir):
     """Same-text rows collapse to one arrival; the helper hash column does
     not leak into the output schema."""
     from spark_pit.streaming import streaming_content_dedup
 
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     docs = (
-        spark.readStream.schema(schema)
-        .parquet(f"{sf_dir}")
+        _stream_table(spark, sf_dir, "documents")
         .where(F.col("doc_id").isNotNull())
         .select("doc_id", "text",
                 F.lit("2024-01-01 00:00:00").cast("timestamp_ltz").alias("ts"))
     )
     out = streaming_content_dedup(docs, "text", "ts", watermark="1 hour")
-    _run_available_now(out, tmp_path, "cdedup")
-    got = spark.sql("select * from cdedup").toPandas()
+    got = run_available_now(out, "append").toPandas()
     n_distinct = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .select("text").distinct().count()
@@ -212,15 +195,7 @@ def test_streaming_asof_entity_with_no_snapshots(spark, tmp_path):
     df.write.parquet(str(src_dir))
     raw = spark.readStream.schema(df.schema).parquet(str(src_dir))
     out = streaming_asof_features(raw, "user_id", "ts")
-    q = (
-        out.writeStream.format("memory").queryName("asofempty")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ck_asofempty"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("select * from asofempty").toPandas().set_index("event_id")
+    got = run_available_now(out, "update").toPandas().set_index("event_id")
     # entity with no snapshot at all: both events unmatched (and no crash)
     assert pd.isna(got.loc[1, "asof_snapshot_id"])
     assert pd.isna(got.loc[2, "asof_snapshot_id"])
@@ -228,7 +203,7 @@ def test_streaming_asof_entity_with_no_snapshots(spark, tmp_path):
     assert got.loc[4, "asof_snapshot_id"] == 99
 
 
-def test_streaming_decayed_features_matches_batch(spark, sf_dir, tmp_path):
+def test_streaming_decayed_features_matches_batch(spark, sf_dir):
     """The stateful streaming decay operator must reproduce the batch
     decayed_features doubles BIT-exactly (power-of-two weights make both
     sides exact, so == not approx), including across micro-batch splits
@@ -241,16 +216,8 @@ def test_streaming_decayed_features_matches_batch(spark, sf_dir, tmp_path):
         F.pmod(F.floor(F.col("value") * 8).cast("long"), F.lit(1024)).alias("vq"),
     )
     out = streaming_decayed_features(src, "user_id", "ts", "vq")
-    q = (
-        out.writeStream.format("memory").queryName("decaystate")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ck_decaystate"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
     got = (
-        spark.sql("select * from decaystate")
+        run_available_now(out, "update")
         .toPandas()
         .set_index("event_id")
         .sort_index()
@@ -273,7 +240,7 @@ def test_streaming_decayed_features_matches_batch(spark, sf_dir, tmp_path):
     assert (got["decayed_count"] > 0).any()
 
 
-def test_streaming_target_encode_matches_batch(spark, sf_dir, tmp_path):
+def test_streaming_target_encode_matches_batch(spark, sf_dir):
     """The stateful streaming target encoder's (count, exact micro-unit
     sum) state must reproduce the batch target_encode_pit per event:
     te_count == batch te_count and the scale-6 decimal sum string ==
@@ -282,11 +249,9 @@ def test_streaming_target_encode_matches_batch(spark, sf_dir, tmp_path):
     from spark_pit.operators.windows import target_encode_pit
     from spark_pit.streaming import streaming_target_encode
 
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     vq = (F.floor(F.col("value") * 8).cast("double") / F.lit(8.0)).alias("vq")
     src = (
-        spark.readStream.schema(schema)
-        .parquet(f"{sf_dir}")
+        _stream_table(spark, sf_dir, "events")
         .where(F.col("event_id").isNotNull() & F.col("value").isNotNull())
         .select(
             "event_type", F.col("ts").cast("timestamp_ltz").alias("ts"),
@@ -294,16 +259,8 @@ def test_streaming_target_encode_matches_batch(spark, sf_dir, tmp_path):
         )
     )
     out = streaming_target_encode(src, "event_type", "ts", "vq", tiebreak="event_id")
-    q = (
-        out.writeStream.format("memory").queryName("testate")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ck_testate"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
     got = (
-        spark.sql("select event_id, te_count, te_sum_str from testate")
+        run_available_now(out, "update").select("event_id", "te_count", "te_sum_str")
         .toPandas().set_index("event_id").sort_index()
     )
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").where(
@@ -366,18 +323,12 @@ def test_streaming_scd2_cross_batch_state(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src_dir / "b*"))
     )
-    q = (
-        streaming_scd2(stream_src, "u", "ts", ["c"], tiebreak="i")
-        .writeStream.format("memory").queryName("scd2state")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ck_scd2"))
-        .trigger(availableNow=True)
-        .start()
+    emitted = run_available_now(
+        streaming_scd2(stream_src, "u", "ts", ["c"], tiebreak="i"), "update"
     )
-    q.awaitTermination(120)
     got = {
         (r["u"], r["valid_from_us"]): (r["c"], r["valid_to_us"])
-        for r in spark.sql("select * from scd2state").collect()
+        for r in emitted.collect()
     }
     all_rows = [r for b in batches for r in b]
     batch_df = scd2_intervals(
@@ -424,18 +375,13 @@ def test_streaming_funnel_cross_batch_chain(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src_dir / "b*"))
     )
-    q = (
+    emitted = run_available_now(
         streaming_funnel(src, "u", "ts", "s", ["A", "B", "C"], within_s=10,
-                         tiebreak="i")
-        .writeStream.format("memory").queryName("funnelstate")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ck_funnel"))
-        .trigger(availableNow=True)
-        .start()
+                         tiebreak="i"),
+        "update",
     )
-    q.awaitTermination(120)
     folded = (
-        spark.sql("select * from funnelstate")
+        emitted
         .groupBy("u")
         .agg(
             F.max("step0_ts_us").alias("t0"), F.max("step1_ts_us").alias("t1"),
@@ -496,18 +442,12 @@ def test_streaming_scd2_multi_attr_order_across_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src_dir / "b*"))
     )
-    q = (
-        streaming_scd2(src, "u", "ts", ["c2", "c1"], tiebreak="i")
-        .writeStream.format("memory").queryName("scd2order")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ck_scd2order"))
-        .trigger(availableNow=True)
-        .start()
+    emitted = run_available_now(
+        streaming_scd2(src, "u", "ts", ["c2", "c1"], tiebreak="i"), "update"
     )
-    q.awaitTermination(120)
     got = {
         (r["u"], r["valid_from_us"]): (r["c2"], r["c1"], r["valid_to_us"])
-        for r in spark.sql("select * from scd2order").collect()
+        for r in emitted.collect()
     }
     all_rows = [r for b in batches for r in b]
     want = {
@@ -546,18 +486,12 @@ def test_streaming_target_encode_intra_batch_int64_overflow(spark, tmp_path):
         str(src_dir / "b0")
     )
     src = spark.readStream.schema(schema).parquet(str(src_dir / "b*"))
-    q = (
-        streaming_target_encode(src, "c", "ts", "v", tiebreak="i")
-        .writeStream.format("memory").queryName("teovf")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ck_teovf"))
-        .trigger(availableNow=True)
-        .start()
+    emitted = run_available_now(
+        streaming_target_encode(src, "c", "ts", "v", tiebreak="i"), "update"
     )
-    q.awaitTermination(120)
     got = {
         r["i"]: (r["te_count"], r["te_sum_str"])
-        for r in spark.sql("select * from teovf").collect()
+        for r in emitted.collect()
     }
     unit = 4_000_000_000_000_000_000  # µs per row, a Python int
     for k in range(1, 5):
@@ -605,20 +539,14 @@ def test_stateful_kernels_survive_multi_chunk_groups(spark, tmp_path):
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "25")
     try:
         src = spark.readStream.schema(schema).parquet(str(src_dir / "b*"))
-        q = (
-            streaming_target_encode(src, "c", "ts", "v", tiebreak="i")
-            .writeStream.format("memory").queryName("multichunk")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ck_multichunk"))
-            .trigger(availableNow=True)
-            .start()
+        emitted = run_available_now(
+            streaming_target_encode(src, "c", "ts", "v", tiebreak="i"), "update"
         )
-        q.awaitTermination(120)
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
     got = {
         r["i"]: (r["te_count"], r["te_sum_str"])
-        for r in spark.sql("select * from multichunk").collect()
+        for r in emitted.collect()
     }
     want = {
         r["i"]: (
@@ -660,17 +588,10 @@ def test_streaming_drift_counts_accumulate_across_batches(spark, tmp_path):
         F.sum(F.lit(1) - F.col("p")).alias("__cr"),
         F.sum("p").alias("__cc"),
     )
-    q = (
-        counts.writeStream.format("memory").queryName("driftstate")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ck_drift"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    final = run_available_now(counts, "complete")
     got = {
         r["shard"]: (r["n_ref"], r["n_cur"], r["tv_micro"])
-        for r in tv_from_counts(spark.table("driftstate"), "shard").collect()
+        for r in tv_from_counts(final, "shard").collect()
     }
     all_rows = [r for b in batches for r in b]
     want = {
@@ -682,3 +603,58 @@ def test_streaming_drift_counts_accumulate_across_batches(spark, tmp_path):
     assert got == want
     # sanity: shard 0 really drifted (b appears more, c appears, a drops)
     assert want[0][2] > 0
+
+
+def _leftovers(spark):
+    """What a drained stream could leave behind: temp views (memory sinks),
+    active queries and ck_* checkpoint directories."""
+    views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    cks = set(glob.glob(os.path.join(tempfile.gettempdir(), "ck_*")))
+    return views, cks
+
+
+def test_parity_queries_match_oracle_and_clean_up(spark, sf_dir):
+    """Two parity queries, twice each: every row equals its pinned oracle
+    row, and no sink view, active stream or checkpoint directory remains."""
+    from spark_pit.queries import ORACLES, QUERIES
+
+    views, cks = _leftovers(spark)
+    for name in ["streaming_asof_parity", "streaming_scd2_parity"]:
+        want = [r.asDict() for r in spark.sql(ORACLES[name]).collect()]
+        for _ in range(2):
+            got = [r.asDict() for r in QUERIES[name](spark, sf_dir).collect()]
+            assert got == want, name
+    assert _leftovers(spark) == (views, cks)
+    assert not spark.streams.active
+
+
+def test_run_available_now_cleans_up_on_stream_failure(spark, sf_dir):
+    """A stream that fails mid-batch raises out of run_available_now, and
+    its sink, query and checkpoint are gone all the same."""
+    views, cks = _leftovers(spark)
+    bad = _stream_events(spark, sf_dir).select(
+        "event_id", F.raise_error(F.lit("stream failure probe")).alias("boom")
+    )
+    with pytest.raises(Exception, match="stream failure probe"):
+        run_available_now(bad, "append")
+    assert _leftovers(spark) == (views, cks)
+    assert not spark.streams.active
+
+
+def test_run_available_now_cleans_up_on_timeout(spark, sf_dir, monkeypatch):
+    """A stream that outlives SPARK_PIT_STREAM_TIMEOUT fails loudly instead
+    of returning a partial sink, and is cleaned up like any other."""
+    import time
+
+    @F.pandas_udf("long")
+    def slow(ids: pd.Series) -> pd.Series:
+        time.sleep(5)
+        return ids
+
+    monkeypatch.setenv("SPARK_PIT_STREAM_TIMEOUT", "1")
+    views, cks = _leftovers(spark)
+    stalled = _stream_events(spark, sf_dir).select(slow("event_id").alias("event_id"))
+    with pytest.raises(RuntimeError, match="did not finish within 1s"):
+        run_available_now(stalled, "append")
+    assert _leftovers(spark) == (views, cks)
+    assert not spark.streams.active
