@@ -515,20 +515,23 @@ def dedup_clusters(
     O(k) star edges, NOT the O(k²) intra-bucket pairs the pair-emitting
     ``minhash_lsh_dedup`` generator materializes — a 10⁷-doc boilerplate
     cluster at 100 TB is 10⁷ candidate edges instead of 10¹⁴ pairs. The
-    verified edge graph is sparse, and min-label propagation costs one
+    verified edge graph is sparse and is one graph (``__g = 0``): up to
+    ``graph.CC_EDGE_BUDGET`` edges its components are one grouped NumPy
+    kernel in one task, with no Spark job but the edge list's entry
+    checkpoint; above it, min-label propagation keeps it distributed, one
     equi-join + one partial-agg shuffle per round, rounds = component
     diameter (≤ ~2× band count for star graphs: member → bucket min →
-    member). All keys hash on the node id, so a giant cluster spreads
-    across partitions; no all-pairs step anywhere. Trade vs the pair
-    generator: a member whose Jaccard to its bucket min is below threshold
-    is not linked through THAT bucket even if it clears threshold with a
-    sibling — the standard star-candidate trade (same as dedup_mark), and
-    near-identical duplicate clusters verify against the min anyway."""
+    member), all keys hashed on the node id. No all-pairs step anywhere.
+    Trade vs the pair generator: a member whose Jaccard to its bucket min
+    is below threshold is not linked through THAT bucket even if it clears
+    threshold with a sibling — the standard star-candidate trade (same as
+    dedup_mark), and near-identical duplicate clusters verify against the
+    min anyway."""
     from spark_pit.operators.graph import connected_components
 
     _check_banding(n_hashes, bands, rows_per_band)
     # shared join-free candidate+verify stage (see _star_verified_pairs);
-    # dedup the ≤bands-per-pair emissions before the iterative CC joins
+    # dedup the ≤bands-per-pair emissions before the components
     pairs = _star_verified_pairs(
         df, id_col, text_col, threshold, n_hashes, rows_per_band
     ).distinct()

@@ -4,10 +4,11 @@ The reference builds a residue ε-graph (edge iff 3-D distance <= cutoff,
 feature.py:4593-4598) and emits global stats + per-node degree/clustering
 plus networkx centralities (feature.py:4601-4609). Implemented here:
 degree/triangles/clustering (pure joins), eigenvector centrality (bounded
-power iteration of DataFrame joins), connected components (min-label
-propagation), level-synchronized BFS shortest paths, closeness, and
-Brandes betweenness (exact + Brandes–Pich sampled-source estimator for
-hub-entity graphs). The non-iterative slice:
+power iteration of DataFrame joins), connected components (one grouped
+NumPy kernel per entity graph, min-label propagation rounds above an edge
+budget), level-synchronized BFS shortest paths, closeness, and Brandes
+betweenness (exact + Brandes–Pich sampled-source estimator for hub-entity
+graphs). The non-iterative slice:
 
 - edge list: banded-range self-join on the 1-D coordinate (same
   bucketing trick as rangejoin.py — hash equi-join, no nested loop)
@@ -19,8 +20,11 @@ hub-entity graphs). The non-iterative slice:
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 
 def contact_edges(
@@ -267,7 +271,6 @@ def dbscan_clusters(
     nodes: DataFrame,
     entity: str,
     min_pts: int = 3,
-    max_iter: int = 25,
 ) -> DataFrame:
     """EXACT distributed DBSCAN given the ε-neighbor pair list (reference
     iAnalysis DBSCAN row, feature.py:4838-4850 — sklearn's is exact too;
@@ -279,7 +282,8 @@ def dbscan_clusters(
     NOISE (cluster NULL). ``edges`` is whatever ε-pair generator fits the
     space — the banded 1-D contact_edges here, the LSH candidates for
     embeddings — so the density scan itself is one degree aggregation, and
-    the only iteration is min-label propagation over core edges.
+    the clusters are ``connected_components`` of the core edges (the
+    grouped kernel; propagation rounds only above its edge budget).
 
     Returns (entity, node, is_core, cluster) for EVERY node in ``nodes``
     (isolated points included — noise)."""
@@ -303,7 +307,7 @@ def dbscan_clusters(
         .join(core.withColumnRenamed("n", "b"), [entity, "b"])
         .select(entity, "a", "b")
     )
-    cc = connected_components(core_edges, entity, max_iter).withColumnRenamed(
+    cc = connected_components(core_edges, entity).withColumnRenamed(
         "node", "n"
     )
     # isolated core points (no core neighbor) form singleton clusters
@@ -453,50 +457,110 @@ def betweenness_centrality(
     )
 
 
-def connected_components(
-    edges: DataFrame, entity: str, max_iter: int = 25
-) -> DataFrame:
+# The grouped kernel holds one entity graph in one Python worker. Its peak
+# memory per input edge, with int64 ids, is _CC_BYTES_PER_EDGE: the Arrow
+# table, its pandas copy, np.unique's sort and the label arrays, measured
+# as the peak-RSS growth of a process running the kernel on random sparse
+# graphs of 1M and 4M edges (135-137 bytes). The budget lets one graph use
+# _CC_KERNEL_BYTES; above it the edges stay distributed and the
+# propagation loop runs instead.
+_CC_BYTES_PER_EDGE = 137
+_CC_KERNEL_BYTES = 512 << 20
+CC_EDGE_BUDGET = _CC_KERNEL_BYTES // _CC_BYTES_PER_EDGE
+
+
+def min_label_components(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """``(nodes, component)`` of the undirected graph with edges ``a[i]-b[i]``:
+    every node touched by an edge, sorted, and the smallest node of its
+    component. Node ids map to dense ids with ``np.unique``, so ids of any
+    orderable dtype work and dense order is id order. Then a hook step and
+    pointer jumping repeat until a round changes nothing: each edge lowers
+    the label of one endpoint's root to the other endpoint's label
+    (``np.minimum.at(lab, lab[a], lab[b])``, both ways round), and
+    ``lab = lab[lab]`` runs until every label is a root. Labels only fall
+    and always name a node of the same component, so the fixpoint labels
+    each component with its smallest node."""
+    nodes, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+    ea, eb = inv[: len(a)], inv[len(a):]
+    lab = np.arange(len(nodes))
+    while True:
+        prev = lab.copy()
+        np.minimum.at(lab, lab[ea], lab[eb])
+        np.minimum.at(lab, lab[eb], lab[ea])
+        while True:
+            jumped = lab[lab]
+            if np.array_equal(jumped, lab):
+                break
+            lab = jumped
+        if np.array_equal(lab, prev):
+            return nodes, nodes[lab]
+
+
+def connected_components(edges: DataFrame, entity: str) -> DataFrame:
     """Connected components per entity graph (reference nx.connected_
-    components / global diameter prerequisites, feature.py:4601-4609):
-    min-label propagation — every node starts labeled with its own id and
-    repeatedly takes the min of its own and its neighbors' labels until a
-    fixpoint (component id = smallest node id in the component,
-    deterministic). Integer-only → bit-exact against a recursive-CTE oracle.
+    components / global diameter prerequisites, feature.py:4601-4609): the
+    component id is the smallest node id in the component (deterministic),
+    computed to the fixpoint. Integer-only, so bit-exact against the
+    unbounded recursive-CTE oracle.
 
-    The loop is driver-bounded with an early exit: each round's count of
-    changed labels is an Observation on the round's eager localCheckpoint,
-    so the flag rides the checkpoint job and a round runs no extra Spark
-    job; iterations needed = graph diameter, ≤ max_iter for ε-graphs. At
-    extreme scale swap for the large-star/small-star variant; min-label
-    keeps the per-step cost at one join + one groupBy shuffle which is
-    right for bounded-diameter graphs.
+    The edge list is localCheckpointed ONCE at entry: callers like
+    dedup_clusters feed an edge plan that is itself a multi-stage pipeline
+    (MinHash signatures → band join → Jaccard verify), and the checkpoint
+    keeps the components from re-planning that lineage. The edge count is
+    an Observation on that checkpoint job, so it costs no job of its own;
+    it counts every entity graph together, an upper bound on the largest.
 
-    The undirected edge list is localCheckpointed ONCE at entry: callers
-    like dedup_clusters feed an edge plan that is itself a multi-stage
-    pipeline (MinHash signatures → band join → Jaccard verify), and
-    without the checkpoint every iteration's join re-plans that whole
-    upstream lineage (stage-skipping via shuffle reuse helps but still
-    re-walks the plan and keeps the lineage growing with the loop).
+    Up to ``CC_EDGE_BUDGET`` edges, the components are one grouped NumPy
+    kernel (:func:`min_label_components`, ``groupBy(entity).applyInPandas``)
+    that runs with the rest of the plan, so no other job runs while the plan
+    is built. Above it, min-label propagation keeps the graph distributed:
+    every node starts labeled with its own id and each round takes the min
+    over its neighbors and itself, one join + one groupBy shuffle behind an
+    eager localCheckpoint, until a round changes no label (rounds = graph
+    diameter). Both paths return the same rows and types.
     """
-    # round-7 iteration shape: the adjacency gets SELF-LOOPS once, so each
-    # propagation round is one join + one min-aggregate — min over
-    # neighbors-including-self IS least(own, neighborhood min), which
-    # removes the former per-round left-join of new labels against old.
-    # The self-loop row also delivers the node's OWN previous label
-    # through the same join, so the convergence flag (labels are
-    # monotonically non-increasing: changed ⟺ new < old) rides the same
-    # aggregate. It is counted by an Observation on the checkpoint, so the
-    # flag rides the checkpoint job: no separate count job per round.
+    obs = Observation()
+    edges = (
+        edges.select(entity, "a", "b")
+        .observe(obs, F.count(F.lit(1)).alias("edges"))
+        .localCheckpoint()
+    )
+    if obs.get["edges"] <= CC_EDGE_BUDGET:
+        return _components_grouped(edges, entity)
+    return _components_propagated(edges, entity)
+
+
+def _components_grouped(edges: DataFrame, entity: str) -> DataFrame:
+    def kern(pdf: pd.DataFrame) -> pd.DataFrame:
+        nodes, comp = min_label_components(pdf["a"].to_numpy(), pdf["b"].to_numpy())
+        return pd.DataFrame(
+            {entity: np.repeat(pdf[entity].to_numpy()[:1], len(nodes)),
+             "node": nodes, "component": comp}
+        )
+
+    # both endpoints' common type, as the propagation loop's union gives it
+    node_type = _undirected(edges, entity).schema["n"].dataType
+    schema = StructType([
+        StructField(entity, edges.schema[entity].dataType),
+        StructField("node", node_type),
+        StructField("component", node_type),
+    ])
+    return edges.groupBy(entity).applyInPandas(kern, schema)
+
+
+def _components_propagated(edges: DataFrame, entity: str) -> DataFrame:
+    # the adjacency gets SELF-LOOPS once, so each round is one join + one
+    # min-aggregate: min over neighbors-including-self IS least(own,
+    # neighborhood min). The self-loop row also delivers the node's OWN
+    # previous label through the same join, so the convergence flag
+    # (labels only fall: changed ⟺ new < old) rides the same aggregate,
+    # counted by an Observation on the round's checkpoint job.
     und = _undirected(edges, entity)
     nodes = und.select(entity, "n").distinct()
     und2 = und.unionByName(nodes.withColumn("m", F.col("n"))).localCheckpoint()
     # seed = one aggregation: min over neighbors-including-self
-    lab = (
-        und2.groupBy(entity, "n").agg(F.min("m").alias("c")).localCheckpoint()
-    )
-    # seed counts as round 1 → max_iter - 1 join rounds keeps the total
-    # propagation bound identical to the pre-round-7 loop
-    for _ in range(max_iter - 1):
+    lab = und2.groupBy(entity, "n").agg(F.min("m").alias("c")).localCheckpoint()
+    while True:
         obs = Observation()
         nxt = (
             und2.join(

@@ -323,7 +323,7 @@ def phash_clusters(
     """Perceptual-hash near-duplicate CLUSTERS — the image-payload twin of
     :func:`spark_pit.operators.dedup.dedup_clusters`: the pigeonhole pair
     graph from :func:`phash_neardup_pairs` (exact recall for hamming ≤
-    chunks−1) fed to min-label connected components, so a re-encode chain
+    chunks−1) fed to connected components, so a re-encode chain
     a~b~c co-clusters even when hamming(a, c) exceeds the radius. Every
     image maps to ``canonical_id`` = the lexicographically-smallest image
     id in its component (itself when unique) plus the cluster size — the
@@ -332,9 +332,10 @@ def phash_clusters(
 
     Scale: candidates are the 16-bit-chunk equi-join (O(k) per re-encode
     cluster of size k after the bucket pairing — see phash_neardup_pairs),
-    the verified graph is sparse, and CC is one equi-join + one partial
-    agg per round with per-round localCheckpoint; rounds = component
-    diameter, tiny for re-encode chains. No all-pairs step anywhere."""
+    the verified graph is sparse, and its components are one grouped NumPy
+    kernel after the edge list's entry checkpoint (min-label propagation
+    rounds only above ``graph.CC_EDGE_BUDGET`` edges). No all-pairs step
+    anywhere."""
     from spark_pit.operators.graph import connected_components
 
     pairs = phash_neardup_pairs(

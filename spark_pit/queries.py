@@ -18,6 +18,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from spark_pit.catalog import read_table
 from spark_pit.operators import autocorr, pairs, windows
 from spark_pit.operators.asof import asof_join_window
 from spark_pit.util import ts_us
@@ -26,7 +27,7 @@ EVENT_VOCAB = ["click", "error", "purchase", "signup", "view"]
 
 
 def _ev(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
+    return read_table(spark, f"{sf_dir}/events.parquet")
 
 
 def _snaps(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -760,7 +761,7 @@ def _residue_stream(spark: SparkSession, sf_dir: str, alphabet: dict[str, str]):
     flatMap-shaped posexplode — linear, no shuffle until the count."""
     from spark_pit.alphabets import alphabet_map
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, f"{sf_dir}/documents.parquet")
     aa = sorted(alphabet)
     chars = docs.select(
         "doc_id",
@@ -921,7 +922,7 @@ def q_opf_multihot(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_pit.alphabets import OPF_TABLES
     from spark_pit.operators.encode import positional_multihot
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, f"{sf_dir}/documents.parquet")
     chars = docs.select(
         "doc_id",
         F.posexplode(F.split(F.upper("text"), "")).alias("pos", "ch"),
@@ -971,7 +972,7 @@ def q_aaindex_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tables = {k: v for k, v in property_tables(ZSCALE).items()
               if k in _AAINDEX_MANIFEST}
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, f"{sf_dir}/documents.parquet")
     chars = docs.select(
         "doc_id",
         F.posexplode(F.split(F.upper("text"), "")).alias("pos", "ch"),
@@ -1232,7 +1233,7 @@ FROM cnt
 def q_knn_label_fractions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_pit.operators.similarity import knn_label_fractions
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, f"{sf_dir}/embeddings.parquet")
     out = knn_label_fractions(
         emb, "vec_id", "embedding", "label",
         train_pred=lambda c: c % 2 == 0, k=5,
@@ -1287,8 +1288,8 @@ FROM lens
 def q_zip_label_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_pit.operators.ingest import zip_index_join
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "n_chars")
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select("vec_id", "label")
+    docs = read_table(spark, f"{sf_dir}/documents.parquet").select("doc_id", "n_chars")
+    emb = read_table(spark, f"{sf_dir}/embeddings.parquet").select("vec_id", "label")
     return zip_index_join(docs, emb, "doc_id", "vec_id").select(
         "doc_id", "n_chars", "vec_id", "label"
     )
@@ -1689,7 +1690,7 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     data while the plan stays scale-shaped."""
     from spark_pit.operators.similarity import embedding_neardup
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, f"{sf_dir}/embeddings.parquet")
     return embedding_neardup(emb, "vec_id", "embedding", threshold=0.9)
 
 
@@ -1775,7 +1776,7 @@ def q_ann_mllib_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (random projections not SQL-reproducible)."""
     from spark_pit.operators.similarity import ann_mllib_lsh
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, f"{sf_dir}/embeddings.parquet")
     return ann_mllib_lsh(emb, "vec_id", "embedding", threshold=1.2)
 
 
@@ -1965,7 +1966,7 @@ def q_embed_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     model-once-per-worker) — §2.10 notebook pipeline analogue."""
     from spark_pit.operators.embed import embed_documents
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, f"{sf_dir}/documents.parquet")
     out = embed_documents(docs, "doc_id", "text", dim=64)
     # scalar projection (driver canon cannot sort arrays): dim + norm + the
     # first 4 components; the full vector is exercised in tests/test_embed
@@ -1987,7 +1988,7 @@ def q_pca_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     PCA(100) second pass; sign-indeterminate → no value oracle)."""
     from spark_pit.operators.analysis import pca_embeddings
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, f"{sf_dir}/embeddings.parquet")
     out = pca_embeddings(emb, "vec_id", "embedding", k=8)
     # scalar projection (driver canon cannot sort arrays); components are
     # sign-indeterminate across platforms → emit |component| and the norm
@@ -2006,7 +2007,7 @@ def q_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     feature.py:4779-4792; centroid init is platform-dependent → no oracle)."""
     from spark_pit.operators.analysis import kmeans_clusters
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, f"{sf_dir}/embeddings.parquet")
     return kmeans_clusters(emb, "vec_id", "embedding", k=4, seed=42)
 
 
@@ -2175,7 +2176,7 @@ FROM pos GROUP BY user_id, event_type
 # ------------------------------------------------------------------- relational
 def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1-shaped pricing summary; DECIMAL sums for bit-exact parity."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, f"{sf_dir}/lineitem.parquet")
     d = lambda c: F.col(c).cast("decimal(18,2)")
     return (
         li.where(F.col("l_shipdate") <= F.lit("1998-09-02"))
@@ -2203,9 +2204,9 @@ def q_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Star join: fact × broadcast dims (customer→nation). Catalyst broadcasts
     the dimension side automatically below the threshold; F.broadcast makes
     the intent explicit for the 100 TB plan."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    orders = read_table(spark, f"{sf_dir}/orders.parquet")
+    customer = read_table(spark, f"{sf_dir}/customer.parquet")
+    nation = read_table(spark, f"{sf_dir}/nation.parquet")
     return (
         orders.join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
         .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
@@ -2231,7 +2232,7 @@ GROUP BY n_name
 def q_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 orders per customer by totalprice — the rank-filter shape that
     replaces the reference KNN's per-sample neighbor sort (feature.py:3853)."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, f"{sf_dir}/orders.parquet")
     w = Window.partitionBy("o_custkey").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
     )
@@ -2256,11 +2257,11 @@ WHERE rk <= 3
 
 # --------------------------------------------------------- text / dedup / ANN
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return read_table(spark, f"{sf_dir}/documents.parquet")
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    return read_table(spark, f"{sf_dir}/embeddings.parquet")
 
 
 def q_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3696,7 +3697,7 @@ def q_negative_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairing, reproducible across engines."""
     from spark_pit.operators.similarity import negative_sample
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, f"{sf_dir}/documents.parquet")
     return negative_sample(docs, "doc_id", "source", k=3)
 
 
@@ -5068,8 +5069,9 @@ Q_ZORDER_SQL = _zorder_sql(16, 16)
 def q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components (reference nx.connected_components prerequisite
     of the global graph stats, feature.py:4601-4609) on the per-user
-    ε-graph: min-label propagation to a fixpoint; component id = smallest
-    member node id (integer-exact against the recursive-CTE oracle)."""
+    ε-graph: one grouped NumPy kernel per user computes the fixpoint;
+    component id = smallest member node id (integer-exact against the
+    recursive-CTE oracle)."""
     from spark_pit.operators.graph import connected_components, contact_edges
 
     ev = _ev(spark, sf_dir).select("user_id", "event_id", "value")
@@ -5530,7 +5532,7 @@ def q_bisecting_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     feature.py:4824-4836)."""
     from spark_pit.operators.analysis import bisecting_kmeans_clusters
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, f"{sf_dir}/embeddings.parquet")
     return bisecting_kmeans_clusters(emb, "vec_id", "embedding", k=4, seed=42)
 
 
@@ -5580,7 +5582,7 @@ def q_gmm_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     feature.py:4809-4822; EM init is platform-dependent → no value oracle)."""
     from spark_pit.operators.analysis import gmm_clusters
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, f"{sf_dir}/embeddings.parquet")
     return gmm_clusters(emb, "vec_id", "embedding", k=3, seed=42)
 
 

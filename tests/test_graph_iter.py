@@ -1,10 +1,15 @@
 """Iterative graph operators: eigenvector centrality (power iteration) and
-connected components (min-label propagation) on graphs with known answers."""
+connected components (the grouped NumPy kernel and the min-label
+propagation loop) on graphs with known answers."""
 
 from __future__ import annotations
 
+from collections import deque
+
 import numpy as np
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 
 
 def _edges_df(spark, rows):
@@ -29,9 +34,9 @@ def test_connected_components_two_chains(spark):
 
 
 def test_connected_components_warm_rerun_compiles_nothing(spark):
-    """A second identical call reuses every generated class: the rounds'
-    convergence flag rides the checkpoint jobs, and the session's codegen
-    cache holds the working set, so no whole-stage class is compiled."""
+    """A second identical call reuses every generated class: the session's
+    codegen cache holds the working set of the entry checkpoint and the
+    grouped kernel's plan, so no whole-stage class is compiled."""
     from spark_pit.operators.graph import connected_components
 
     rows = [(1, 1, 2), (1, 2, 3), (1, 3, 4), (1, 10, 11),
@@ -44,14 +49,103 @@ def test_connected_components_warm_rerun_compiles_nothing(spark):
     assert second == first
 
 
-def test_connected_components_long_chain_converges(spark):
-    from spark_pit.operators.graph import connected_components
+def test_connected_components_long_chain_converges(spark, monkeypatch):
+    """A chain of diameter 40 reaches the fixpoint on both paths: the
+    oracle's recursive CTE is unbounded, so no round cap may truncate."""
+    from spark_pit.operators import graph
 
-    n = 20  # diameter 19 > naive per-step reach; min-label still converges
+    n = 40
     rows = [(1, i, i + 1) for i in range(n)]
-    out = connected_components(_edges_df(spark, rows), "g").toPandas()
-    assert set(out["component"]) == {0}
-    assert len(out) == n + 1
+    for budget in (graph.CC_EDGE_BUDGET, -1):
+        monkeypatch.setattr(graph, "CC_EDGE_BUDGET", budget)
+        out = graph.connected_components(_edges_df(spark, rows), "g").toPandas()
+        assert set(out["component"]) == {0}
+        assert len(out) == n + 1
+
+
+def _bfs_components(rows):
+    """Brute force: {(g, node): smallest node reachable from it}."""
+    adj = {}
+    for g, a, b in rows:
+        adj.setdefault((g, a), set()).add(b)
+        adj.setdefault((g, b), set()).add(a)
+    comp = {}
+    for (g, start) in adj:
+        if (g, start) in comp:
+            continue
+        seen, todo = {start}, deque([start])
+        while todo:
+            for m in adj[(g, todo.popleft())]:
+                if m not in seen:
+                    seen.add(m)
+                    todo.append(m)
+        for v in seen:
+            comp[(g, v)] = min(seen)
+    return comp
+
+
+@st.composite
+def _multi_entity_graphs(draw):
+    """Random edges in three entity graphs (self-loops, duplicate and
+    reversed edges arise at random over 31 node ids), plus sometimes a
+    chain of more than 25 edges, its node ids shuffled."""
+    rows = draw(st.lists(
+        st.tuples(st.integers(0, 2), st.integers(0, 30), st.integers(0, 30)),
+        max_size=40,
+    ))
+    n = draw(st.sampled_from([0, 27, 33]))
+    if n:
+        order = draw(st.permutations(range(100, 100 + n)))
+        rows += [(3, order[i], order[i + 1]) for i in range(n - 1)]
+    return rows
+
+
+@given(_multi_entity_graphs())
+@example([(1, 5, 5), (1, 6, 6), (1, 1, 2), (1, 2, 1), (1, 1, 2), (2, 7, 7)])
+@example([(1, 30 - i, 29 - i) for i in range(30)])
+@example([])
+@settings(max_examples=200, deadline=None)
+def test_min_label_components_matches_bfs(rows):
+    from spark_pit.operators.graph import min_label_components
+
+    want = _bfs_components(rows)
+    for g in {g for g, _, _ in rows}:
+        e = np.array([(a, b) for h, a, b in rows if h == g], dtype=np.int64)
+        nodes, comp = min_label_components(e[:, 0], e[:, 1])
+        assert dict(zip(nodes.tolist(), comp.tolist())) == {
+            v: c for (h, v), c in want.items() if h == g
+        }
+
+
+def test_connected_components_matches_bfs_on_both_paths(spark):
+    """The grouped kernel and the propagation loop (forced by a budget of
+    -1 edges) return the brute-force components, with equal rows and
+    column types, on random multi-entity graphs."""
+    from spark_pit.operators import graph
+
+    def both(rows):
+        out = []
+        for budget in (graph.CC_EDGE_BUDGET, -1):
+            with pytest.MonkeyPatch.context() as mp:
+                mp.setattr(graph, "CC_EDGE_BUDGET", budget)
+                df = graph.connected_components(_edges_df(spark, rows), "g")
+                out.append(([f.dataType for f in df.schema.fields], sorted(df.collect())))
+        return out
+
+    @given(_multi_entity_graphs())
+    @example([(1, 5, 5), (1, 6, 6), (1, 1, 2), (1, 2, 1), (1, 1, 2), (2, 7, 7)])
+    @example([(1, 40 - i, 39 - i) for i in range(40)] + [(2, 3, 3)])
+    @example([])
+    @settings(max_examples=4, deadline=None, derandomize=True)
+    def check(rows):
+        (k_types, k_rows), (p_types, p_rows) = both(rows)
+        assert k_types == p_types
+        assert k_rows == p_rows
+        want = _bfs_components(rows)
+        assert {(r.g, r.node): r.component for r in k_rows} == want
+        assert len(k_rows) == len(want)
+
+    check()
 
 
 def test_eigenvector_centrality_star(spark):

@@ -48,11 +48,13 @@ EXPECTED: dict[str, tuple] = {
     "pit_fused": (4, 0, 0, 0, 1, 0, 2, [EVV, EV]),
     "pit_salted": (10, 0, 0, 0, 1, 0, 6, [EVV, EVV, EV]),
     "image_pit_checksums": (8, 0, 0, 0, 0, 0, 4, []),  # fixture-gen input
-    # star-edge dedup (round-7 rework): candidates+verify are join-free
-    # (carried token arrays + window min(struct)), CC rounds run eagerly
-    # behind localCheckpoints, and cluster_size is a window count on the
-    # single canonical exchange — 3 physical shuffles in the visible plan
-    "dedup_clusters": (6, 0, 2, 0, 0, 0, 0, [["doc_id"]]),
+    # star-edge dedup: candidates+verify are join-free (carried token
+    # arrays + window min(struct)) behind one entry localCheckpoint; the
+    # components are one grouped NumPy kernel (the Arrow node) on an
+    # exchange keyed by the graph id, the small component table is
+    # broadcast into the doc join at this scale, and cluster_size is a
+    # window count on the single canonical exchange — 2 physical shuffles
+    "dedup_clusters": (4, 2, 0, 0, 0, 0, 2, [["doc_id"]]),
     # single-shuffle per-entity window family — ONE sort exchange each
     "autocorr": (2, 0, 0, 0, 0, 0, 0, [TSV]),
     "lag_lead": (2, 0, 0, 0, 0, 0, 0, [TSV]),

@@ -1,0 +1,73 @@
+"""Plan-time Spark jobs: building a query's DataFrame should launch none.
+
+A job launched while a plan is built is paid on every pass, before any of
+the query's own work. The two sources this pins are gone: a parquet read
+pins the schema it inferred (``catalog.read_table``), and connected
+components run as a grouped kernel inside the plan instead of one eager
+checkpoint job per round. What remains is the entry checkpoint of the
+components' edge list, which ``dedup_clusters`` runs on purpose.
+"""
+
+from __future__ import annotations
+
+import itertools
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+from perfbench.workloads import RegisteredQueries
+
+# the entry checkpoint of connected_components: one job per adaptive
+# query stage of the verified-pair plan it materializes
+DEDUP_CLUSTERS_JOBS = 4
+_GROUPS = itertools.count()
+
+
+def _plan_jobs(spark, build) -> tuple[int, object]:
+    """Jobs launched while ``build()`` runs, counted by job group."""
+    sc = spark.sparkContext
+    group = f"plan-jobs-{next(_GROUPS)}"
+    sc.setJobGroup(group, "plan-time job count")
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+@pytest.mark.parametrize("name", RegisteredQueries.queries)
+def test_workload_query_plans_without_jobs(spark, sf_dir, name):
+    from spark_pit.queries import QUERIES
+
+    _plan_jobs(spark, lambda: QUERIES[name](spark, sf_dir))  # cold build
+    jobs, _ = _plan_jobs(spark, lambda: QUERIES[name](spark, sf_dir))
+    if name == "dedup_clusters":
+        assert 0 < jobs <= DEDUP_CLUSTERS_JOBS
+    else:
+        assert jobs == 0
+
+
+def test_read_table_sees_a_file_rewritten_in_place(spark, tmp_path):
+    from spark_pit.catalog import read_table
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"x": [1, 2, 3]}), path)
+    first = read_table(spark, path)
+    assert first.columns == ["x"]
+    jobs, again = _plan_jobs(spark, lambda: read_table(spark, path))
+    assert jobs == 0  # the unchanged file reuses the pinned schema
+    assert sorted(r.x for r in again.collect()) == [1, 2, 3]
+
+    pq.write_table(pa.table({"y": ["a", "b"], "z": [1.5, 2.5]}), path)
+    after = read_table(spark, path)
+    assert after.columns == ["y", "z"]
+    assert sorted(tuple(r) for r in after.collect()) == [("a", 1.5), ("b", 2.5)]
+
+
+def test_read_table_unlistable_path_reads_plainly(spark, sf_dir):
+    from spark_pit.catalog import read_table
+
+    glob_df = read_table(spark, f"{sf_dir}/event*.parquet")
+    assert glob_df.schema == spark.read.parquet(f"{sf_dir}/events.parquet").schema
