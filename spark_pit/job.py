@@ -143,7 +143,8 @@ def run(spark: SparkSession, args: argparse.Namespace) -> dict:
             )
         n_buckets = args.num_buckets
         if n_buckets is None:
-            # parquet count() is metadata-only; ~50k-row buckets (BENCH.md)
+            # parquet count() is a footer-only scan, still run as Spark
+            # jobs; ~50k-row buckets (BENCH.md)
             n_buckets = max(256, ev.count() // 50_000)
         feats = pit_features_salted(
             ev, snaps,

@@ -23,7 +23,11 @@ Design
   The checksum is an order-independent ``sum(xxhash64(*cols))`` over what is
   actually durable on disk (decimal(38,0) sum — overflow-free), i.e. the
   manifest certifies the bytes a resumed reader will see, not the bytes the
-  writer intended.
+  writer intended. The read-back takes the schema the batch was written
+  with (``__part_id`` included), so it infers none and launches no
+  schema-inference job. ``n_files`` is the number of non-hidden
+  ``*.parquet`` files listed in the bucket's ``__part_id=<b>/`` directory.
+  Rows and checksum still come from the bytes on disk.
 - Manifest files are written atomically (tmp + rename) per batch, so a crash
   between data-write and manifest-write re-does at most one batch.
 - ``write_checkpointed`` with the same arguments *is* the resume operation:
@@ -34,6 +38,8 @@ At 100 TB scale: num_parts ≈ thousands; the driver loop is over
 num_parts/parts_per_batch batches (tens), each batch a full-parallelism
 distributed job, so checkpointing adds no serialization point beyond the
 batch barrier. The read-back metrics job touches only the batch's new files.
+The manifest is local-filesystem only (``os.listdir``, ``os.replace``), and
+so is the bucket listing behind ``n_files``.
 """
 
 from __future__ import annotations
@@ -44,6 +50,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 PART_COL = "__part_id"
 
@@ -93,20 +100,33 @@ def is_complete(out_dir: str, num_parts: int) -> bool:
     )
 
 
-def _batch_metrics(spark: SparkSession, out_dir: str, batch: list[int]) -> list[dict]:
-    """Read the just-written buckets back from disk; certify rows/checksum."""
+def _bucket_files(data_dir: str, part_id: int) -> int:
+    """Parquet files in one bucket's directory, hidden files excluded."""
+    bdir = os.path.join(data_dir, f"{PART_COL}={part_id}")
+    if not os.path.isdir(bdir):
+        return 0
+    return sum(
+        1 for name in os.listdir(bdir)
+        if name.endswith(".parquet") and not name.startswith((".", "_"))
+    )
+
+
+def _batch_metrics(
+    spark: SparkSession, out_dir: str, batch: list[int], schema: StructType
+) -> list[dict]:
+    """Read the just-written buckets back from disk with the ``schema``
+    they were written with; certify rows/checksum, count files per bucket."""
     data_dir = os.path.join(out_dir, "data")
-    df = spark.read.parquet(data_dir).where(F.col(PART_COL).isin([int(b) for b in batch]))
+    df = (
+        spark.read.schema(schema).parquet(data_dir)
+        .where(F.col(PART_COL).isin([int(b) for b in batch]))
+    )
     cols = [c for c in df.columns if c != PART_COL]
-    # input_file_name() is non-deterministic; materialize it as a column
-    # before aggregating (Spark 4 ANSI analyzer requirement).
-    df = df.withColumn("__file", F.input_file_name())
     agg = (
         df.groupBy(PART_COL)
         .agg(
             F.count(F.lit(1)).alias("rows"),
             F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("checksum"),
-            F.countDistinct("__file").alias("n_files"),
         )
         .collect()
     )
@@ -119,7 +139,7 @@ def _batch_metrics(spark: SparkSession, out_dir: str, batch: list[int]) -> list[
                 "part_id": int(b),
                 "rows": int(r["rows"]) if r else 0,
                 "checksum": str(r["checksum"]) if r else "0",
-                "n_files": int(r["n_files"]) if r else 0,
+                "n_files": _bucket_files(data_dir, int(b)),
             }
         )
     return out
@@ -178,7 +198,7 @@ def write_checkpointed(
             # so a retried half-written batch self-heals.
             sub.write.partitionBy(PART_COL).mode("overwrite").parquet(data_dir)
             wall = round(time.perf_counter() - t0, 3)
-            lines = _batch_metrics(spark, out_dir, batch)
+            lines = _batch_metrics(spark, out_dir, batch, keyed.schema)
             for ln in lines:
                 ln["input_snapshot"] = input_snapshot
                 ln["wall_s"] = wall

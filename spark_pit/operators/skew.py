@@ -54,6 +54,12 @@ Equivalence proof sketch per feature (tests assert it empirically):
   this chunk's snapshot slice or is the carried pre-chunk snapshot.
 - lead1: only the last body row needs the next chunk's first value,
   carried by the reverse pass.
+
+Hot-key detection (``hot_threshold``) is hot_entities_countmin: a
+count-min sketch probed on a hash sample of the rows while that sample
+keeps one row in ``threshold // oversample`` > 1, and otherwise, when
+the sample would keep every row, hot_entities' exact grouped count.
+Either way detection only routes keys; the output does not depend on it.
 """
 
 from __future__ import annotations
@@ -75,9 +81,11 @@ def hot_entities(
 ) -> list:
     """Entity keys whose event count exceeds ``threshold`` — EXACT
     detection via a full per-key groupBy (driver-side list; hot keys are
-    few by definition). At 10^9+ distinct keys the groupBy's hash state
-    is the bottleneck; prefer hot_entities_countmin, which is
-    constant-memory and never misses a hot key w.h.p."""
+    few by definition). hot_entities_countmin returns this count when its
+    sample would keep every row (``threshold // oversample <= 1``). At
+    10^9+ distinct keys the groupBy's hash state is the bottleneck; there
+    hot_entities_countmin, at a threshold of at least twice its
+    ``oversample``, is constant-memory and never misses a hot key w.h.p."""
     rows = (
         events.groupBy(entity)
         .agg(F.count(F.lit(1)).alias("n"))
@@ -99,7 +107,8 @@ def hot_entities_countmin(
 ) -> list:
     """Constant-memory hot-key detection: count-min estimates probed on a
     SAMPLE-derived candidate set — no exact full-key-space groupBy and no
-    full-key distinct anywhere in the plan.
+    full-key distinct anywhere in the plan, whenever the sample keeps
+    fewer than every row (otherwise see "Exact branch" below).
 
     Two bounded passes over the events:
     1. candidates — a per-physical-row hash sample at rate
@@ -119,7 +128,8 @@ def hot_entities_countmin(
     hang, vs 45 s for the kernel itself). ``w`` is therefore a FLOOR:
     the effective width is max(w, bias_factor·N/threshold), sizing the
     bias to ≤ threshold/bias_factor. N comes from ``events.count()`` —
-    metadata-only on parquet sources. Sketch rows stay bounded:
+    a footer-only scan on parquet sources, which still runs as Spark
+    jobs. Sketch rows stay bounded:
     d·bias_factor·N/T counters ≪ distinct keys whenever keys ≫ N/T, the
     regime this detector exists for (at N=10¹³, T=10⁷: w=8·10⁶ vs 10⁹
     keys).
@@ -129,12 +139,18 @@ def hot_entities_countmin(
     which is semantics-preserving by construction (asserted by
     tests/test_skew.py equivalence tests). Returns the hot-key list.
 
-    Caveat: with threshold <= oversample the sample rate clamps to 1 and
-    the candidate distinct degrades to the exact key space — at the
-    scales where this detector matters thresholds are >> 50."""
+    Exact branch: when ``threshold // oversample <= 1`` the sample rate
+    clamps to 1, the sample keeps every row and the candidate distinct
+    would already aggregate the whole key space, so the sketch saves no
+    memory and only adds passes. Then the result is hot_entities' exact
+    grouped count with the same ``> threshold`` rule: no ``count()``, no
+    sketch, no probe join. The sketch is the detector only when the
+    sample rate is below 1, the regime where thresholds are >> 50."""
+    rate_denom = max(1, threshold // oversample)
+    if rate_denom == 1:
+        return hot_entities(events, entity, threshold)
     n = events.count()
     w_eff = max(w, (bias_factor * n) // max(threshold, 1) + 1)
-    rate_denom = max(1, threshold // oversample)
     # Per-row sampling: hash every column PLUS a per-row distinguisher.
     # Hashing the values alone makes byte-identical rows sample
     # all-or-none — a hot key made of replayed duplicate events (the
@@ -191,8 +207,13 @@ def pit_features_salted(
     tests). ``tiebreak`` and ``passthrough`` mean what they mean for
     pit_features_bucketed.
 
-    ``hot_threshold`` detection is hot_entities_countmin (constant-memory
-    CMS + sampled candidates, the shape that survives 10^9 distinct keys).
+    ``hot_threshold`` detection is hot_entities_countmin. Its candidate
+    sample keeps one row in ``hot_threshold // 50`` (50 is its
+    ``oversample``). While that rate is below 1, the detector is the
+    constant-memory CMS over the sampled candidates, the shape that
+    survives 10^9 distinct keys. Below a threshold of 100 the sample
+    would keep every row, and one exact grouped count (hot_entities)
+    detects instead.
     Detection only ROUTES keys: a missed or spurious hot key changes the
     plan, never the output.
     """

@@ -91,3 +91,34 @@ def test_part_id_is_deterministic(spark, events):
     a = manifest.with_part_id(events, "user_id", 16).select("user_id", manifest.PART_COL)
     counts = a.groupBy("user_id").agg(F.countDistinct(manifest.PART_COL).alias("n"))
     assert counts.where(F.col("n") > 1).count() == 0
+
+
+def test_manifest_counts_files_and_certifies_what_a_plain_read_sees(spark, events, tmp_path):
+    """Four input tasks write into every bucket, so each bucket holds
+    several part files. ``n_files`` (the bucket's directory listing) equals
+    the distinct input files a read-back of that bucket touches, and rows
+    and checksum equal those of a plain read that infers its schema."""
+    out = str(tmp_path / "files")
+    manifest.write_checkpointed(
+        events.repartition(4), out, entity="user_id", num_parts=4, parts_per_batch=2,
+    )
+    back = spark.read.parquet(f"{out}/data")
+    cols = [c for c in back.columns if c != manifest.PART_COL]
+    plain = {
+        int(r[manifest.PART_COL]): r
+        for r in back.withColumn("__file", F.input_file_name())
+        .groupBy(manifest.PART_COL)
+        .agg(
+            F.count(F.lit(1)).alias("rows"),
+            F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("checksum"),
+            F.countDistinct("__file").alias("n_files"),
+        )
+        .collect()
+    }
+    lines = manifest.read_manifest(out)
+    assert sorted(ln["part_id"] for ln in lines) == [0, 1, 2, 3]
+    for ln in lines:
+        r = plain[ln["part_id"]]
+        assert ln["n_files"] >= 2
+        assert ln["n_files"] == r["n_files"]
+        assert (ln["rows"], ln["checksum"]) == (r["rows"], str(r["checksum"]))

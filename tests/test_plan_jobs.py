@@ -5,7 +5,9 @@ the query's own work. The two sources this pins are gone: a parquet read
 pins the schema it inferred (``catalog.read_table``), and connected
 components run as a grouped kernel inside the plan instead of one eager
 checkpoint job per round. What remains is the entry checkpoint of the
-components' edge list, which ``dedup_clusters`` runs on purpose.
+components' edge list, which ``dedup_clusters`` runs on purpose, and the
+image pipeline's hot-key detection, whose exact grouped count is how the
+plan learns which ids to salt.
 """
 
 from __future__ import annotations
@@ -21,6 +23,10 @@ from perfbench.workloads import RegisteredQueries
 # the entry checkpoint of connected_components: one job per adaptive
 # query stage of the verified-pair plan it materializes
 DEDUP_CLUSTERS_JOBS = 4
+# hot-key detection of image_pit_features(hot_threshold=28): one exact
+# grouped count, one job per adaptive query stage (its shuffle and its
+# result)
+IMAGE_PIPELINE_JOBS = 2
 _GROUPS = itertools.count()
 
 
@@ -71,3 +77,22 @@ def test_read_table_unlistable_path_reads_plainly(spark, sf_dir):
 
     glob_df = read_table(spark, f"{sf_dir}/event*.parquet")
     assert glob_df.schema == spark.read.parquet(f"{sf_dir}/events.parquet").schema
+
+
+def test_image_pipeline_plans_with_only_the_hot_key_count(spark, tmp_path):
+    from spark_pit.datagen import images_table, snapshots_table
+    from spark_pit.operators.skew import hot_entities
+    from spark_pit.pipeline import image_pit_features
+
+    img, snp = str(tmp_path / "images.parquet"), str(tmp_path / "snapshots.parquet")
+    images_table(spark, n_entities=20, n_rows=500, seed=42).write.parquet(img)
+    snapshots_table(spark, n_entities=20, seed=42).write.parquet(snp)
+    images, snaps = spark.read.parquet(img), spark.read.parquet(snp)
+    assert hot_entities(images, "image_id", 28)  # the salted path is planned
+
+    def build():
+        return image_pit_features(images, snaps, num_buckets=8, hot_threshold=28)
+
+    _plan_jobs(spark, build)  # cold build
+    jobs, _ = _plan_jobs(spark, build)
+    assert 0 < jobs <= IMAGE_PIPELINE_JOBS

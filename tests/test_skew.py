@@ -232,10 +232,11 @@ def test_countmin_never_underestimates(spark):
 
 
 def test_countmin_detector_default_no_exact_groupby(spark, monkeypatch):
-    """``hot_threshold`` detection is the count-min sketch: the exact
-    full-key-space groupBy (hot_entities) must never run, detection must
-    still find the hot key, and the routed output must equal the unsalted
-    baseline."""
+    """``hot_threshold`` detection is the count-min sketch while its
+    candidate sample rate is below 1 (here 1 row in 1000 // 50 = 20): the
+    exact full-key-space groupBy (hot_entities) must never run, detection
+    must still find the hot key, and the routed output must equal the
+    unsalted baseline."""
     import spark_pit.operators.skew as skew
 
     ev, snaps = _mk(spark)
@@ -253,6 +254,53 @@ def test_countmin_detector_default_no_exact_groupby(spark, monkeypatch):
         gap_seconds=1800, width=5, chunk_seconds=7200, hot_threshold=1000,
     ))
     _assert_same(base, mixed)
+
+
+def _at_and_over(spark, threshold: int):
+    """Key AT with exactly ``threshold`` events, OVER with one more, and
+    cold keys far below it."""
+    keys = ["AT"] * threshold + ["OVER"] * (threshold + 1) + [f"c{i % 40}" for i in range(200)]
+    return spark.createDataFrame(
+        pd.DataFrame({"k": keys, "payload": np.arange(len(keys), dtype=np.int64)})
+    )
+
+
+@pytest.mark.parametrize("threshold", [28, 99])
+def test_countmin_detector_counts_exactly_when_sample_keeps_every_row(
+    spark, monkeypatch, threshold
+):
+    """threshold // oversample <= 1: the sample would keep every row, so
+    detection is hot_entities' exact count with the same ``> threshold``
+    rule, and the sketch never runs."""
+    import spark_pit.operators.skew as skew
+
+    ev = _at_and_over(spark, threshold)
+    exact = skew.hot_entities(ev, "k", threshold)
+    assert exact == ["OVER"]
+
+    def boom(*a, **k):
+        raise AssertionError("the sketch ran although the sample keeps every row")
+
+    monkeypatch.setattr(skew, "countmin_estimates", boom)
+    assert sorted(skew.hot_entities_countmin(ev, "k", threshold)) == exact
+
+
+def test_countmin_detector_sketches_when_sample_rate_below_one(spark, monkeypatch):
+    """threshold 100, oversample 50: the sample keeps one row in 2, and the
+    sketch is the detector."""
+    import spark_pit.operators.skew as skew
+
+    calls = []
+    sketch = skew.countmin_estimates
+
+    def spy(*a, **k):
+        calls.append(k)
+        return sketch(*a, **k)
+
+    monkeypatch.setattr(skew, "countmin_estimates", spy)
+    got = skew.hot_entities_countmin(_at_and_over(spark, 100), "k", 100)
+    assert len(calls) == 1
+    assert sorted(got) == ["OVER"]
 
 
 def test_countmin_detector_recall_and_sampled_plan(spark):
