@@ -28,51 +28,6 @@ def asof_indices(event_ts: np.ndarray, snap_ts: np.ndarray, strict: bool = True)
     return idx
 
 
-def session_ids(ts_us: np.ndarray, gap_us: int) -> np.ndarray:
-    """Gap-based sessionization: new session when inter-arrival > gap.
-
-    Batch analogue of a session window (SURVEY.md §2.10): cumsum over the
-    gap indicator. Returns 0-based session ids per event.
-    """
-    if len(ts_us) == 0:
-        return np.zeros(0, dtype=np.int64)
-    brk = np.empty(len(ts_us), dtype=np.int64)
-    brk[0] = 0
-    brk[1:] = (np.diff(ts_us) > gap_us).astype(np.int64)
-    return np.cumsum(brk)
-
-
-def forward_fill(values: np.ndarray) -> np.ndarray:
-    """Backfill nulls with the most recent non-null value (last_value
-    IGNORE NULLS semantics); leading nulls stay NaN."""
-    mask = ~np.isnan(values)
-    idx = np.where(mask, np.arange(len(values)), -1)
-    np.maximum.accumulate(idx, out=idx)
-    out = np.where(idx >= 0, values[idx.clip(0)], np.nan)
-    return out
-
-
-def rolling_token_counts(codes: np.ndarray, n_tokens: int, width: int) -> np.ndarray:
-    """EAAC analogue (reference feature.py:456-485): for each event i, the
-    composition vector of token codes over the trailing window
-    [i-width+1, i], divided by the actual window size (short head windows
-    divide by their true length, not `width`).
-
-    Vectorized: one-hot cumsum; window count = cs[i] - cs[i-width].
-    Returns (n, n_tokens) float64.
-    """
-    n = len(codes)
-    onehot = np.zeros((n, n_tokens), dtype=np.int64)
-    valid = codes >= 0
-    onehot[np.arange(n)[valid], codes[valid]] = 1
-    cs = np.cumsum(onehot, axis=0)
-    out = cs.astype(np.float64)
-    if n > width:
-        out[width:] -= cs[:-width]
-    sizes = np.minimum(np.arange(1, n + 1), width).astype(np.float64)
-    return out / sizes[:, None]
-
-
 def segment_asof(
     seg: np.ndarray, ts: np.ndarray,
     snap_seg: np.ndarray, snap_ts: np.ndarray, snap_id: np.ndarray,
@@ -116,7 +71,10 @@ def segment_features(
 ) -> dict[str, np.ndarray]:
     """The fused point-in-time feature block over many segments at once:
     as-of match, lag-1/lead-1, gap sessions, backfill, trailing rolling
-    mean and trailing token composition.
+    mean and trailing token composition. The composition is the EAAC
+    analogue (reference feature.py:456-485): each row's token counts over
+    its trailing ``width`` rows, divided by the window's true length, so a
+    segment's first rows divide by fewer than ``width``.
 
     Rows arrive sorted by (segment, ts, tiebreak). ``seg`` holds integer
     segment codes, ``ts`` event microseconds, ``x`` the numeric channel

@@ -19,12 +19,11 @@ path (spark_pit.operators.skew) calls the same kernel through the same
 ``PitLayout``, after two NumPy passes that derive each time chunk's
 carries; its cold entities ride the same cogroup as whole timelines.
 
-Two independent references build the same columns: the per-entity
-``pit_features_cursor`` and the declarative ``pit_features_declarative``
-(window/asof operator library). Tests assert the production paths equal
-the cursor and the cursor equals the declarative plan; the DuckDB oracle
-checks the production paths themselves (queries ``pit_fused``, bucketed,
-and ``pit_salted``).
+One independent reference builds the same columns:
+``pit_features_declarative``, from the window and as-of operator library,
+which shares no code with the NumPy kernel. Tests assert the production
+paths equal it; the DuckDB oracle checks the production paths themselves
+(queries ``pit_fused``, bucketed, and ``pit_salted``).
 """
 
 from __future__ import annotations
@@ -37,116 +36,7 @@ from pyspark.sql import functions as F
 from spark_pit import kernels
 from spark_pit.operators import windows
 from spark_pit.operators.asof import asof_join_window
-
-
-def pit_features_cursor(
-    events: DataFrame,
-    snapshots: DataFrame,
-    entity: str,
-    ts: str,
-    numeric_col: str,
-    token_col: str,
-    vocab: list[str],
-    snap_ts: str = "snapshot_ts",
-    snap_id: str = "snapshot_id",
-    gap_seconds: int = 1800,
-    width: int = 5,
-    tiebreak: str | None = None,
-) -> DataFrame:
-    """Fused single-pass pipeline. Output one row per event."""
-    code = {t: i for i, t in enumerate(vocab)}
-    V = len(vocab)
-    ent_type = events.schema[entity].dataType.simpleString()
-    tb = [tiebreak] if tiebreak else []
-    tb_field = (
-        f"{tiebreak} {events.schema[tiebreak].dataType.simpleString()}, " if tiebreak else ""
-    )
-    out_schema = (
-        f"{entity} {ent_type}, {ts} timestamp_ntz, {tb_field}"
-        f"{numeric_col} double, {token_col} string, "
-        f"asof_snapshot_id long, asof_age_sec double, "
-        f"lag1_{numeric_col} double, lead1_{numeric_col} double, "
-        f"session_id long, session_pos long, "
-        f"{numeric_col}_bf double, roll_mean_{numeric_col} double, "
-        f"wc array<double>"
-    )
-    gap_us = gap_seconds * 1_000_000
-
-    def kern(ev: pd.DataFrame, sn: pd.DataFrame) -> pd.DataFrame:
-        if len(ev) == 0:
-            return pd.DataFrame(
-                columns=[f.strip().split(" ")[0] for f in out_schema.split(",")]
-            )
-        ev = ev.sort_values([ts, *tb], kind="stable").reset_index(drop=True)
-        ts_us = ev[ts].to_numpy().astype("datetime64[us]").astype(np.int64)
-        x = ev[numeric_col].to_numpy(dtype=np.float64)
-        codes = ev[token_col].map(code).fillna(-1).to_numpy(dtype=np.int64)
-        n = len(ev)
-
-        out = pd.DataFrame(
-            {
-                entity: ev[entity],
-                ts: ev[ts],
-                **({tiebreak: ev[tiebreak]} if tiebreak else {}),
-                numeric_col: ev[numeric_col],
-                token_col: ev[token_col],
-            }
-        )
-        # --- as-of (strictly before; latest snapshot_id wins ties) ---
-        if len(sn):
-            sn = sn.sort_values([snap_ts, snap_id], kind="stable").reset_index(drop=True)
-            sts = sn[snap_ts].to_numpy().astype("datetime64[us]").astype(np.int64)
-            idx = kernels.asof_indices(ts_us, sts, strict=True)
-            matched = idx >= 0
-            take = idx.clip(0)
-            sid = pd.Series(sn[snap_id].to_numpy(dtype=np.int64)[take], dtype="Int64")
-            sid[~matched] = pd.NA
-            age = (ts_us - sts[take]) / 1e6
-            age[~matched] = np.nan
-            out["asof_snapshot_id"] = sid
-            out["asof_age_sec"] = age
-        else:
-            out["asof_snapshot_id"] = pd.array([pd.NA] * n, dtype="Int64")
-            out["asof_age_sec"] = np.nan
-
-        # --- lag/lead ---
-        lag1 = np.roll(x, 1); lag1[0] = np.nan
-        lead1 = np.roll(x, -1); lead1[-1] = np.nan
-        out[f"lag1_{numeric_col}"] = lag1
-        out[f"lead1_{numeric_col}"] = lead1
-
-        # --- sessionization ---
-        sess = kernels.session_ids(ts_us, gap_us)
-        out["session_id"] = sess
-        # position within session: index - first index of session
-        first_idx = np.zeros(n, dtype=np.int64)
-        starts = np.flatnonzero(np.diff(sess, prepend=sess[0] - 1) > 0)
-        first_idx[starts] = starts
-        np.maximum.accumulate(first_idx, out=first_idx)
-        out["session_pos"] = np.arange(n) - first_idx
-
-        # --- backfill + rolling mean ---
-        out[f"{numeric_col}_bf"] = kernels.forward_fill(x)
-        cs = np.nancumsum(np.nan_to_num(x))
-        cnt = np.cumsum(~np.isnan(x))
-        roll_sum = cs.copy()
-        roll_cnt = cnt.astype(np.float64)
-        if n > width:
-            roll_sum[width:] -= cs[:-width]
-            roll_cnt[width:] -= cnt[:-width]
-        with np.errstate(invalid="ignore", divide="ignore"):
-            out[f"roll_mean_{numeric_col}"] = np.where(
-                roll_cnt > 0, roll_sum / roll_cnt, np.nan
-            )
-
-        # --- trailing window composition (EAAC analogue) ---
-        wc = kernels.rolling_token_counts(codes, V, width)
-        out["wc"] = list(wc)
-        return out
-
-    ev = events.select(entity, ts, *tb, numeric_col, token_col)
-    sn = snapshots.select(entity, snap_ts, snap_id)
-    return ev.groupBy(entity).cogroup(sn.groupBy(entity)).applyInPandas(kern, out_schema)
+from spark_pit.util import ts_us
 
 
 class PitLayout:
@@ -277,9 +167,9 @@ def pit_features_bucketed(
     num_buckets: int = 256,
     passthrough: list[str] | None = None,
 ) -> DataFrame:
-    """pit_features_cursor semantics at bucket granularity: entities are
-    hashed into ``num_buckets`` groups (``pmod(xxhash64(entity), B)``) and
-    each task processes a whole bucket with **segment-vectorized** NumPy —
+    """The fused PIT features at bucket granularity: entities are hashed
+    into ``num_buckets`` groups (``pmod(xxhash64(entity), B)``) and each
+    task processes a whole bucket with **segment-vectorized** NumPy —
     zero per-entity Python. This is the production path:
 
     - per-group overhead (Arrow batch, pandas construction, Python dispatch)
@@ -292,7 +182,7 @@ def pit_features_bucketed(
     Each entity is one segment of ``kernels.segment_features``: rows sort
     by (entity, ts, tiebreak) inside the bucket and every feature is a
     cumulative-array expression clipped at the entity's first row.
-    Equivalence with the per-entity cursor is asserted in tests.
+    Equivalence with pit_features_declarative is asserted in tests.
     """
     lay = PitLayout(events, entity, ts, numeric_col, token_col, vocab, tiebreak, passthrough)
     gap_us = gap_seconds * 1_000_000
@@ -337,20 +227,16 @@ def pit_features_declarative(
     width: int = 5,
     tiebreak: str | None = None,
 ) -> DataFrame:
-    """Same columns as pit_features_cursor, built from the declarative
-    operator library (window functions + union-based as-of). Used as the
-    in-engine cross-check and the DuckDB-oracle side."""
+    """Same columns as pit_features_bucketed, built from the declarative
+    operator library (window functions + union-based as-of). The
+    in-engine reference the production paths are tested against."""
     ev = events.select(entity, ts, *([tiebreak] if tiebreak else []), numeric_col, token_col)
     df = asof_join_window(
         ev, snapshots, [entity], ts, snap_ts, [snap_id],
         strict=True, prefix="asof_", right_order=snap_id,
     )
-    def _us(c: str):
-        # TIMESTAMP_NTZ → epoch micros; session tz is UTC so NTZ↔LTZ is identity
-        return F.unix_micros(F.col(c).cast("timestamp_ltz"))
-
     df = df.withColumn(
-        "asof_age_sec", (_us(ts) - _us("asof_ts")) / F.lit(1e6)
+        "asof_age_sec", (ts_us(ts) - ts_us("asof_ts")) / F.lit(1e6)
     ).withColumnRenamed(f"asof_{snap_id}", "asof_snapshot_id").drop("asof_ts")
     df = windows.with_lag_lead(df, entity, ts, [numeric_col], [1], tiebreak)
     df = windows.with_session_id(df, entity, ts, gap_seconds, tiebreak)

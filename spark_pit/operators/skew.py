@@ -4,11 +4,11 @@ skew-join hints").
 
 The reference is single-threaded so skew cannot exist there (SURVEY.md §4
 "skew handling: n/a"); at 10^12-row scale a hot entity whose timeline
-exceeds one task's memory/time budget is the dominant failure mode of the
-``groupBy(entity).applyInPandas`` cursor. This module splits hot entities
+exceeds one task's memory/time budget is the dominant failure mode of any
+plan that gives one task a whole entity. This module splits hot entities
 into **time chunks** (the salt = ``floor(ts / chunk_seconds)``) so one
 entity's timeline fans out over many tasks, while keeping the output
-*bit-identical* to the unsalted cursor:
+*bit-identical* to the unsalted path:
 
 1. **Chunk summaries** — per (entity, chunk): its trailing ``width-1``
    rows, each carrying the chunk's row count, first ts and value, last
@@ -197,7 +197,7 @@ def pit_features_salted(
     num_buckets: int = 256,
     passthrough: list[str] | None = None,
 ) -> DataFrame:
-    """pit_features_cursor semantics with hot entities salted by time chunk.
+    """pit_features_bucketed's features with hot entities salted by time chunk.
 
     ``hot_ids`` (explicit) or ``hot_threshold`` (count-based detection)
     select the salted population; every other entity is one whole-timeline
@@ -316,9 +316,9 @@ def _salted_path(
        feature.
 
     Per-batch Python cost is paid about B times per pass, independent of
-    how many (entity, chunk) groups exist. Bit-identical to
-    pit_features_cursor by the margin/carry algebra of the module
-    docstring; tests/test_skew.py asserts it.
+    how many (entity, chunk) groups exist. Bit-identical to the unsalted
+    features by the margin/carry algebra of the module docstring;
+    tests/test_skew.py asserts it against pit_features_declarative.
     """
     entity, ts, numeric_col, token_col = lay.entity, lay.ts, lay.numeric_col, lay.token_col
     chunk_us = chunk_seconds * 1_000_000

@@ -411,7 +411,7 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
 def _pit_fused_project(out: DataFrame) -> DataFrame:
     """Shared projection for the fused-pipeline queries: scalars only,
     aliased to match Q_PIT_FUSED_SQL (roll_mean excluded — float summation
-    order differs between the cursor's cumsum and SQL avg; it is covered
+    order differs between the kernel's cumsum and SQL avg; it is covered
     bit-exactly by the rolling_stats query via DECIMAL)."""
     cols = [
         F.col("event_id"),

@@ -1,4 +1,5 @@
-"""Bucketed (segment-vectorized) fused kernel == per-entity cursor."""
+"""Bucketed (segment-vectorized) fused kernel == the declarative
+window/as-of reference (pit_features_declarative)."""
 
 from __future__ import annotations
 
@@ -7,7 +8,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from spark_pit.operators.pit import pit_features_bucketed, pit_features_cursor
+from spark_pit.operators.pit import pit_features_bucketed, pit_features_declarative
 from spark_pit.operators.skew import pit_features_salted
 
 VOCAB = ["click", "error", "purchase", "signup", "view"]
@@ -54,14 +55,14 @@ def _cmp(a: pd.DataFrame, b: pd.DataFrame):
             assert a[c].astype(str).equals(b[c].astype(str)), c
 
 
-def test_bucketed_equals_cursor(spark, sf_dir):
+def test_bucketed_equals_declarative(spark, sf_dir):
     ev, snaps = _frames(spark, sf_dir)
     kw = dict(
         entity="user_id", ts="ts", numeric_col="value",
         token_col="event_type", vocab=VOCAB, gap_seconds=1800, width=5,
         tiebreak="event_id",
     )
-    a = _exact_ids(pit_features_cursor(ev, snaps, **kw))
+    a = _exact_ids(pit_features_declarative(ev, snaps, **kw))
     b = _exact_ids(pit_features_bucketed(ev, snaps, num_buckets=7, **kw))
     _cmp(a, b)
 
@@ -74,7 +75,7 @@ def test_bucketed_single_bucket(spark, sf_dir):
         token_col="event_type", vocab=VOCAB, gap_seconds=1800, width=5,
         tiebreak="event_id",
     )
-    a = _exact_ids(pit_features_cursor(ev, snaps, **kw))
+    a = _exact_ids(pit_features_declarative(ev, snaps, **kw))
     b = _exact_ids(pit_features_bucketed(ev, snaps, num_buckets=1, **kw))
     _cmp(a, b)
 

@@ -194,31 +194,45 @@ def test_chunk_carries_continue_a_timeline(t0, rows, snaps, width, data):
             np.testing.assert_allclose(got[k], v, rtol=1e-9, atol=1e-9, err_msg=k)
 
 
-def test_session_ids():
-    ts = np.array([0, 10, 2000, 2005, 9000], dtype=np.int64)
-    assert kernels.session_ids(ts, gap_us=1000).tolist() == [0, 0, 1, 1, 2]
-    assert kernels.session_ids(np.array([], dtype=np.int64), 10).tolist() == []
-    assert kernels.session_ids(np.array([5], dtype=np.int64), 10).tolist() == [0]
+def _features(seg, ts, x, codes, n_tokens, width, gap):
+    """``kernels.segment_features`` with no snapshots."""
+    none = np.zeros(0, dtype=np.int64)
+    seg = np.asarray(seg, dtype=np.int64)
+    return kernels.segment_features(
+        seg, np.asarray(ts, dtype=np.int64), x, codes, n_tokens, width, gap, none, none, none
+    )
 
 
-def test_forward_fill():
-    x = np.array([np.nan, 1.0, np.nan, np.nan, 2.0, np.nan])
-    out = kernels.forward_fill(x)
-    assert np.isnan(out[0])
-    assert out[1:].tolist() == [1.0, 1.0, 1.0, 2.0, 2.0]
+def test_segment_sessions():
+    # a step of exactly the gap stays in its session; every segment,
+    # even one starting inside the gap, restarts at session 0
+    seg = [0, 0, 0, 0, 0, 1, 1, 1, 2]
+    ts = [0, 10, 2000, 2005, 9000, 9500, 10500, 10501, 5]
+    f = _features(seg, ts, np.zeros(9), np.zeros(9, dtype=np.int64), 1, 1, gap=1000)
+    assert f["session_id"].tolist() == [0, 0, 1, 1, 2, 0, 0, 0, 0]
 
 
-def test_rolling_token_counts_matches_loop():
+def test_segment_backfill():
+    seg = [0] * 6 + [1] * 3
+    x = np.array([np.nan, 1.0, np.nan, np.nan, 2.0, np.nan, np.nan, 3.0, np.nan])
+    f = _features(seg, np.arange(9), x, np.zeros(9, dtype=np.int64), 1, 1, gap=10)
+    assert np.isnan(f["bf"][0]) and np.isnan(f["bf"][6])  # leading nulls per segment
+    assert f["bf"][1:6].tolist() == [1.0, 1.0, 1.0, 2.0, 2.0]
+    assert f["bf"][7:].tolist() == [3.0, 3.0]
+
+
+def test_segment_composition_matches_loop():
     rng = np.random.default_rng(7)
-    codes = rng.integers(0, 4, size=37)
+    seg = np.repeat([0, 1, 2], [3, 20, 14])  # the first is shorter than the window
+    codes = rng.integers(0, 4, size=len(seg))
     width = 5
-    out = kernels.rolling_token_counts(codes, 4, width)
+    f = _features(seg, np.arange(len(seg)), np.zeros(len(seg)), codes, 4, width, gap=10)
     for i in range(len(codes)):
-        lo = max(0, i - width + 1)
+        lo = max(np.flatnonzero(seg == seg[i])[0], i - width + 1)
         window = codes[lo : i + 1]
         size = len(window)
         for t in range(4):
-            assert out[i, t] == pytest.approx(np.sum(window == t) / size)
+            assert f["wc"][i, t] == pytest.approx(np.sum(window == t) / size)
 
 
 def test_cross_cov_matches_loop():

@@ -1,5 +1,5 @@
-"""Flagship pipeline: fused cursor == declarative plan, plus datagen
-determinism and the image-payload fidelity sweep."""
+"""Flagship pipeline: invariants of the production bucketed kernel's
+output, plus datagen determinism and the image-payload fidelity sweep."""
 
 from __future__ import annotations
 
@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from spark_pit.codecs import LOSSLESS_FMTS, decode_image, encode_image, psnr
 from spark_pit.datagen import images_table, snapshots_table
-from spark_pit.operators.pit import pit_features_cursor, pit_features_declarative
+from spark_pit.operators.pit import pit_features_bucketed
 
 VOCAB = ["click", "error", "purchase", "signup", "view"]
 
@@ -22,29 +22,9 @@ def _frames(spark, sf_dir):
     return ev, snaps
 
 
-def test_cursor_equals_declarative(spark, sf_dir):
-    ev, snaps = _frames(spark, sf_dir)
-    kw = dict(
-        entity="user_id", ts="ts", numeric_col="value",
-        token_col="event_type", vocab=VOCAB, gap_seconds=1800, width=5,
-    )
-    a = pit_features_cursor(ev, snaps, **kw).orderBy("user_id", "ts").toPandas()
-    b = pit_features_declarative(ev, snaps, **kw).orderBy("user_id", "ts").toPandas()
-    assert len(a) == len(b) == ev.count()
-    for c in a.columns:
-        if c == "wc":
-            assert all(np.allclose(x, y) for x, y in zip(a[c], b[c]))
-        elif a[c].dtype.kind == "f" or b[c].dtype.kind == "f":
-            va = a[c].to_numpy(dtype=float)
-            vb = b[c].to_numpy(dtype=float)
-            assert np.allclose(va, vb, equal_nan=True), c
-        else:
-            assert a[c].astype(str).equals(b[c].astype(str)), c
-
-
 def test_session_invariants(spark, sf_dir):
     ev, snaps = _frames(spark, sf_dir)
-    out = pit_features_cursor(
+    out = pit_features_bucketed(
         ev, snaps, entity="user_id", ts="ts", numeric_col="value",
         token_col="event_type", vocab=VOCAB,
     ).toPandas()
@@ -61,7 +41,7 @@ def test_session_invariants(spark, sf_dir):
 
 def test_asof_age_nonnegative_and_strict(spark, sf_dir):
     ev, snaps = _frames(spark, sf_dir)
-    out = pit_features_cursor(
+    out = pit_features_bucketed(
         ev, snaps, entity="user_id", ts="ts", numeric_col="value",
         token_col="event_type", vocab=VOCAB,
     ).toPandas()
@@ -119,7 +99,7 @@ def test_flagship_on_generated_images(spark):
         "image_id", "event_ts",
         F.col("w").cast("double").alias("w_d"), "fmt",
     )
-    out = pit_features_cursor(
+    out = pit_features_bucketed(
         ev, snaps, entity="image_id", ts="event_ts",
         numeric_col="w_d", token_col="fmt", vocab=["bmp", "jpeg", "png"],
         snap_ts="snapshot_ts", snap_id="snapshot_id",

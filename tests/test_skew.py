@@ -1,17 +1,19 @@
-"""Salted skew handling: the time-chunked (salted) PIT path must be
-bit-identical to the unsalted single-group cursor (north_rule: salted
-repartitioning for hot image_ids; SURVEY.md §7 step 5)."""
+"""Salted skew handling: the time-chunked (salted) PIT path must equal the
+declarative window/as-of reference, pit_features_declarative, which never
+chunks a timeline (north_rule: salted repartitioning for hot image_ids;
+SURVEY.md §7 step 5)."""
 
 from __future__ import annotations
 
 import datetime as dt
+import re
 
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from spark_pit.operators.pit import pit_features_cursor
+from spark_pit.operators.pit import pit_features_declarative
 from spark_pit.operators.skew import hot_entities, pit_features_salted
 
 VOCAB = ["view", "click", "purchase"]
@@ -86,7 +88,7 @@ def _assert_same(a: pd.DataFrame, b: pd.DataFrame):
 @pytest.mark.parametrize("chunk_seconds", [3600, 40000])
 def test_salted_equals_unsalted_all_entities(spark, chunk_seconds):
     ev, snaps = _mk(spark)
-    base = _collect(pit_features_cursor(
+    base = _collect(pit_features_declarative(
         ev, snaps, "user_id", "ts", "value", "event_type", VOCAB,
         gap_seconds=1800, width=5,
     ))
@@ -101,7 +103,7 @@ def test_hot_threshold_split_path(spark):
     ev, snaps = _mk(spark)
     hot = hot_entities(ev, "user_id", threshold=1000)
     assert hot == ["hot"]
-    base = _collect(pit_features_cursor(
+    base = _collect(pit_features_declarative(
         ev, snaps, "user_id", "ts", "value", "event_type", VOCAB,
         gap_seconds=1800, width=5,
     ))
@@ -126,7 +128,7 @@ def test_mixed_hot_cold_around_the_cold_chunk(spark):
         .agg(F.min("c"), F.max("c")).first()
     )
     assert lo < COLD_CHUNK < hi
-    base = _collect(pit_features_cursor(
+    base = _collect(pit_features_declarative(
         ev, snaps, "user_id", "ts", "value", "event_type", VOCAB,
         gap_seconds=1800, width=5,
     ))
@@ -140,7 +142,7 @@ def test_mixed_hot_cold_around_the_cold_chunk(spark):
 def test_hot_threshold_above_every_entity(spark):
     ev, snaps = _mk(spark)
     assert hot_entities(ev, "user_id", threshold=5000) == []
-    base = _collect(pit_features_cursor(
+    base = _collect(pit_features_declarative(
         ev, snaps, "user_id", "ts", "value", "event_type", VOCAB,
         gap_seconds=1800, width=5,
     ))
@@ -245,7 +247,7 @@ def test_countmin_detector_default_no_exact_groupby(spark, monkeypatch):
         raise AssertionError("exact hot_entities called on the countmin path")
 
     monkeypatch.setattr(skew, "hot_entities", boom)
-    base = _collect(pit_features_cursor(
+    base = _collect(pit_features_declarative(
         ev, snaps, "user_id", "ts", "value", "event_type", VOCAB,
         gap_seconds=1800, width=5,
     ))
@@ -303,28 +305,34 @@ def test_countmin_detector_sketches_when_sample_rate_below_one(spark, monkeypatc
     assert sorted(got) == ["OVER"]
 
 
-def test_countmin_detector_recall_and_sampled_plan(spark):
+def test_countmin_detector_recall_and_sampled_plan(spark, monkeypatch):
     """The CMS detector finds every truly hot key (never-underestimate +
-    ~e^-50 sample miss probability), and its candidate scan is the
-    SAMPLED plan (a Filter on the row hash), not a full-key distinct."""
-    from spark_pit.operators.skew import hot_entities_countmin
+    ~e^-50 sample miss probability), and the candidate keys it probes the
+    sketch with come from the SAMPLED plan (a Filter on the per-row hash),
+    not a full-key distinct."""
+    import spark_pit.operators.skew as skew
 
+    probes = []
+    sketch = skew.countmin_estimates
+
+    def spy(*a, **k):
+        probes.append(k["keys"])
+        return sketch(*a, **k)
+
+    monkeypatch.setattr(skew, "countmin_estimates", spy)
     ev, _ = _mk(spark)
-    hot = hot_entities_countmin(ev, "user_id", threshold=1000)
-    assert hot == ["hot"]
+    assert skew.hot_entities_countmin(ev, "user_id", threshold=1000) == ["hot"]
+    assert len(probes) == 1
 
     # threshold > oversample so the sample rate is real (denom=20): the
-    # candidate branch must filter on the deterministic row hash before
-    # any aggregate touches the key column.
-    rate_denom = 1000 // 50
-    row_hash = F.abs(F.xxhash64(*[F.col(c) for c in ev.columns]))
-    cand = ev.where(row_hash % rate_denom == 0).select("user_id").distinct()
-    # local-relation inputs get the filter constant-folded into the scan
+    # candidate branch must filter on the row hash, which takes a per-row
+    # distinguisher, before any aggregate touches the key column. Local-
+    # relation inputs get the filter constant-folded into the scan
     # (ConvertToLocalRelation), so assert on the analyzed plan where the
     # Filter node is still visible.
-    plan = cand._jdf.queryExecution().analyzed().toString()
-    assert "xxhash64" in plan and "Filter" in plan
-    n_cand = cand.count()
+    plan = probes[0]._jdf.queryExecution().analyzed().toString()
+    assert re.search(r"Filter .*xxhash64\(.*monotonically_increasing_id\(\)", plan), plan
+    n_cand = probes[0].count()
     n_keys = ev.select("user_id").distinct().count()
     assert n_cand <= n_keys  # candidates never exceed the key space
 

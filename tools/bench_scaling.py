@@ -228,7 +228,7 @@ def main() -> None:
             fh.write(
                 "# BENCH — scaling efficiency (north rule two-cluster-size criterion)\n\n"
                 "Sandbox stand-in for N vs 4N executors: same flagship job "
-                "(fused PIT cursor: as-of + lag/lead + sessionize + backfill + "
+                "(fused PIT kernel: as-of + lag/lead + sessionize + backfill + "
                 "trailing composition), same input, two parallelism levels in "
                 "fresh JVMs. Warm-run-then-measure (startup excluded).\n\n"
                 f"Input: `{args.sf_dir}` events x{args.repl} replicas = "
