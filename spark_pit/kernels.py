@@ -15,19 +15,6 @@ from __future__ import annotations
 import numpy as np
 
 
-def asof_indices(event_ts: np.ndarray, snap_ts: np.ndarray, strict: bool = True) -> np.ndarray:
-    """For each event timestamp, index of the latest snapshot with
-    snap_ts < event_ts (strict) or <= (non-strict); -1 when none.
-
-    Both inputs must be sorted ascending. This is the single-pass merge
-    cursor of the north rule, expressed as a binary search (O(n log m),
-    branch-free, vectorized).
-    """
-    side = "left" if strict else "right"
-    idx = np.searchsorted(snap_ts, event_ts, side=side) - 1
-    return idx
-
-
 def segment_asof(
     seg: np.ndarray, ts: np.ndarray,
     snap_seg: np.ndarray, snap_ts: np.ndarray, snap_id: np.ndarray,

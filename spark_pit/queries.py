@@ -1517,14 +1517,15 @@ SELECT CAST(0 AS BIGINT) AS n_only_stream,
 
 def q_streaming_asof_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming/batch parity as a DRIVER-GATE row (judge round-2 ask #6):
-    runs the stateful streaming as-of join (applyInPandasWithState,
-    Trigger.AvailableNow over the events file = ordered arrival, the
-    documented correctness regime) AND the batch strictly-before join on
-    the same events, then full-outer-joins the two result sets. Output is
-    one row of diff counts — all zero when the streaming operator
-    reproduces batch semantics exactly — pinned by the oracle, so any
-    drift in the streaming state machine flips the gate red."""
-    from spark_pit.streaming import run_available_now, streaming_asof_features
+    runs the streaming PIT operator (``segment_features`` under
+    applyInPandasWithState, Trigger.AvailableNow over the events file =
+    ordered arrival, the documented correctness regime) AND the batch
+    strictly-before join on the same events, then full-outer-joins the
+    two result sets on the as-of match. Output is one row of diff counts
+    — all zero when the streaming operator reproduces batch semantics
+    exactly — pinned by the oracle, so any drift in the streaming state
+    machine flips the gate red."""
+    from spark_pit.streaming import run_available_now, streaming_pit_features
 
     raw = (
         _event_stream(spark, sf_dir)
@@ -1533,12 +1534,19 @@ def q_streaming_asof_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
             F.col("ts").cast("timestamp_ltz").alias("ts"),
             "event_id",
+            "value",
+            "event_type",
             (F.col("event_type") == "purchase").alias("is_snap"),
             F.when(F.col("event_type") == "purchase", F.col("event_id"))
             .alias("snapshot_id"),
         )
     )
-    stream = run_available_now(streaming_asof_features(raw, "user_id", "ts"), "update")
+    stream = run_available_now(
+        streaming_pit_features(
+            raw, "user_id", "ts", "value", "event_type", EVENT_VOCAB, tiebreak="event_id"
+        ),
+        "update",
+    )
     ev = _ev(spark, sf_dir)
     snaps = ev.where(F.col("event_type") == "purchase").select(
         "user_id", F.col("ts").alias("snapshot_ts"),

@@ -1,7 +1,7 @@
 """Structured Streaming surface: streaming twins of the batch operators.
 
 The reference is batch-only (SURVEY.md §1.3: "no streaming"). This module
-has nine streaming operators, most of them the twin of a batch operator:
+has eight streaming operators, most of them the twin of a batch operator:
 
 - ``streaming_session_stats`` — gap-based session windows via the built-in
   ``F.session_window`` (watermark-driven state eviction); the twin of
@@ -9,11 +9,11 @@ has nine streaming operators, most of them the twin of a batch operator:
 - ``streaming_dedup`` and ``streaming_content_dedup`` — watermarked
   first-arrival dedup on key columns or on a hash of the text, held in the
   JVM state store.
-- Six custom stateful operators on ``applyInPandasWithState`` (one
+- Five custom stateful operators on ``applyInPandasWithState`` (one
   pandas kernel per entity group, bounded state per entity):
-  ``streaming_asof_features`` (twin of ``asof.asof_join_window``, strictly
-  before), ``streaming_pit_features`` (running count, last gap and
-  backfilled value: the stateful-cursor analogue of the PIT kernel),
+  ``streaming_pit_features`` (the fused PIT features of
+  ``pit.pit_features_bucketed``, computed by the same
+  ``kernels.segment_features`` with the carries held in group state),
   ``streaming_decayed_features``, ``streaming_target_encode``,
   ``streaming_scd2`` and ``streaming_funnel`` (twins of ``windows``'
   ``decayed_features``, ``target_encode_pit``, ``scd2_intervals`` and
@@ -34,10 +34,14 @@ import uuid
 from collections.abc import Iterator
 from typing import Any
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from spark_pit import kernels
+from spark_pit.operators.pit import PitLayout, to_us
 
 
 def _whole_group(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -91,159 +95,100 @@ def streaming_session_stats(
     )
 
 
-def streaming_asof_features(
+def streaming_pit_features(
     tagged: DataFrame,
     entity: str,
     ts: str,
-    event_id_col: str = "event_id",
-    snap_id_col: str = "snapshot_id",
-    is_snap_col: str = "is_snap",
+    numeric_col: str,
+    token_col: str,
+    vocab: list[str],
+    snap_id: str = "snapshot_id",
+    is_snap: str = "is_snap",
+    gap_seconds: int = 1800,
+    width: int = 5,
+    tiebreak: str | list[str] | None = None,
 ) -> DataFrame:
-    """Streaming as-of join — the stateful-streaming twin of the batch
-    engine's strictly-before PIT match (operators/asof.py). Input: ONE
-    tagged stream (events ∪ snapshots, ``is_snap`` boolean) keyed by
-    entity; state per entity = the latest snapshot (id, ts) seen. Within a
-    micro-batch rows are event-time sorted with events BEFORE snapshots on
-    ts ties (strictly-before semantics: a snapshot at t is invisible to an
-    event at t), and the match itself is one vectorized ``np.searchsorted``
-    backward cursor (side='left' − 1 == merge_asof with
-    allow_exact_matches=False) against the batch's snapshots with the
-    carried state prepended — identical kernel math to the batch path.
-    Snapshot ids stay int64 end to end with a position-validity mask (no
-    NaN-in-float64 id round-trip, which silently loses precision above
-    2^53 — judge round-2 advice).
+    """The fused PIT features of ``pit.pit_features_bucketed`` on a stream.
 
-    Cross-batch correctness holds when per-entity arrival is event-time
-    ordered across micro-batches (file sources / watermark-sorted
-    upstreams); within a batch arbitrary disorder is fine. The state is
-    O(1) per entity (latest snapshot only), so a 10⁹-entity stream holds
-    ~tens of GB of state across executors — the streaming-state shape that
-    scales."""
-    ent_type = tagged.schema[entity].dataType.simpleString()
-    ts_type = tagged.schema[ts].dataType.simpleString()
-    out_schema = (
-        f"{entity} {ent_type}, {ts} {ts_type}, {event_id_col} long, "
-        "asof_snapshot_id long, asof_age_sec double"
+    Input is ONE tagged stream keyed by entity: events and snapshots
+    together, ``is_snap`` marking the snapshot rows and ``snap_id`` their
+    ids. Each micro-batch of an entity is one time chunk of its timeline,
+    so ``kernels.segment_features`` computes its events' features exactly
+    as the salted path computes a chunk's: the carries come from
+    ``GroupState`` and the carried tail rows ride ahead of the batch as
+    ``margin`` rows. The output goes through the same ``PitLayout``, so its
+    columns are the batch kernel's, minus ``lead1_<numeric_col>``: an
+    event's lead needs the next event, which a later micro-batch may hold.
+
+    The state per entity is O(width): the kernel's ``last_sess``,
+    ``open_run`` and ``bf_seed``; the last ``max(width - 1, 1)`` rows (µs,
+    value, token code); and two snapshots, the latest (the largest id wins
+    a ts tie) and the latest with a strictly earlier ts. An event of a
+    later micro-batch at the latest snapshot's ts must skip it and match
+    the one before.
+
+    Correctness regime: per-entity arrival ordered by (ts, tiebreak) across
+    micro-batches (file sources over time-ordered files); within a batch
+    any order is fine."""
+    lay = PitLayout(tagged, entity, ts, numeric_col, token_col, vocab, tiebreak)
+    gap_us, keep = gap_seconds * 1_000_000, max(width - 1, 1)
+    state_schema = (
+        "last_sess long, open_run long, bf_seed double, tail_ts array<long>, "
+        "tail_x array<double>, tail_code array<long>, snap_ts array<long>, "
+        "snap_id array<long>"
     )
-    state_schema = "last_snap_id long, last_snap_ts long"
+    dtypes = (np.int64, np.float64, np.int64, np.int64, np.int64)
 
     def fn(
         key: Any,
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        last_id, last_ts = state.get if state.exists else (None, None)
-        for pdf in _whole_group(pdfs):
-            ts_us = pdf[ts].to_numpy().astype("datetime64[us]").astype("int64")
-            pdf = pdf.assign(__ts_us=ts_us)
-            is_snap = pdf[is_snap_col].to_numpy(dtype=bool)
-            ev = pdf[~is_snap].sort_values("__ts_us", kind="stable")
-            # max snapshot_id wins ts ties, matching the batch path's
-            # right_order="snapshot_id"
-            sn = pdf[is_snap].sort_values(["__ts_us", snap_id_col], kind="stable")
-            snap_ts = sn["__ts_us"].to_numpy(dtype="int64")
-            snap_id = sn[snap_id_col].to_numpy(dtype="int64")
-            if last_id is not None:  # carried state = snapshot before batch
-                snap_ts = np.concatenate([[last_ts], snap_ts])
-                snap_id = np.concatenate([[last_id], snap_id]).astype("int64")
-            if len(ev):
-                ev_ts = ev["__ts_us"].to_numpy(dtype="int64")
-                # strictly-before backward match: last snapshot with ts <
-                # event ts; pos -1 == no snapshot yet (validity mask, ids
-                # never pass through float)
-                pos = np.searchsorted(snap_ts, ev_ts, side="left") - 1
-                has = pos >= 0
-                sts = np.full(len(ev), np.nan)
-                sts[has] = snap_ts[pos[has]]
-                # all-NA init + masked assign: safe when snap_id is empty
-                # (first micro-batch with events but no snapshot and no
-                # carried state — pos[has] is empty then, so no indexing)
-                sid = pd.array([pd.NA] * len(ev), dtype="Int64")
-                sid[has] = snap_id[pos[has]]
-                yield pd.DataFrame(
-                    {
-                        entity: ev[entity],
-                        ts: ev[ts],
-                        event_id_col: ev[event_id_col],
-                        "asof_snapshot_id": sid,
-                        "asof_age_sec": (ev_ts - sts) / 1e6,
-                    }
-                )
-            if len(sn):
-                last_ts = int(sn["__ts_us"].iloc[-1])
-                last_id = int(sn[snap_id_col].iloc[-1])
-        if last_id is not None:
-            state.update((last_id, last_ts))
-
-    return tagged.groupBy(entity).applyInPandasWithState(
-        fn, out_schema, state_schema, "Update", GroupStateTimeout.NoTimeout
-    )
-
-
-def streaming_pit_features(
-    events: DataFrame,
-    entity: str,
-    ts: str,
-    value_col: str,
-) -> DataFrame:
-    """Custom stateful operator (applyInPandasWithState): per entity keeps
-    (event_count, last_ts_us, last_nonnull_value) across micro-batches and
-    emits per-row running features — the streaming analogue of the batch
-    kernel's sessionize/backfill state."""
-    # derive key/time field types from the input schema (string entity keys
-    # and timestamp_ntz event times must round-trip unchanged)
-    ent_type = events.schema[entity].dataType.simpleString()
-    ts_type = events.schema[ts].dataType.simpleString()
-    out_schema = (
-        f"{entity} {ent_type}, {ts} {ts_type}, {value_col} double, "
-        "running_count long, gap_sec double, value_bf double"
-    )
-    state_schema = "count long, last_ts long, last_val double"
-
-    def fn(
-        key: Any,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
         if state.exists:
-            count, last_ts, last_val = state.get
+            last_sess, open_run, bf_seed, *arrays = state.get
         else:
-            count, last_ts, last_val = 0, None, None
+            last_sess, open_run, bf_seed, arrays = -1, 0, np.nan, [[]] * 5
+        m_t, m_x, m_c, s_t, s_i = (np.asarray(a, d) for a, d in zip(arrays, dtypes))
         for pdf in _whole_group(pdfs):
-            pdf = pdf.sort_values(ts, kind="stable")
-            t = pdf[ts].to_numpy().astype("datetime64[us]").astype("int64")
-            x = pdf[value_col].to_numpy(dtype=float)
-            n = len(pdf)
-            prev = np.concatenate([[last_ts if last_ts is not None else -1], t[:-1]])
-            gap = np.where(prev >= 0, (t - prev) / 1e6, np.nan)
-            bf = pd.Series(x).ffill().to_numpy()
-            if last_val is not None and not pd.isna(last_val):
-                bf = np.where(np.isnan(bf), last_val, bf)
-            out = pd.DataFrame(
-                {
-                    entity: pdf[entity],
-                    ts: pdf[ts],
-                    value_col: pdf[value_col],
-                    "running_count": count + np.arange(1, n + 1),
-                    "gap_sec": gap,
-                    "value_bf": bf,
-                }
-            )
-            count += n
-            last_ts = int(t[-1])
-            nn = np.flatnonzero(~np.isnan(x))
-            if len(nn):
-                last_val = float(x[nn[-1]])
-            yield out
-        state.update((count, last_ts, last_val))
+            snap = pdf[is_snap].to_numpy(bool)
+            sn, ev = pdf[snap], pdf[~snap]
+            s_t = np.concatenate([s_t, to_us(sn[ts])])
+            s_i = np.concatenate([s_i, sn[snap_id].to_numpy(np.int64)])
+            if len(ev):
+                t = to_us(ev[ts])
+                order = np.lexsort((*lay.tiebreak_keys(ev), t))
+                t = np.concatenate([m_t, t[order]])
+                x = np.concatenate([m_x, ev[numeric_col].to_numpy(np.float64)[order]])
+                c = np.concatenate([m_c, lay.codes(ev[token_col])[order]])
+                f = kernels.segment_features(
+                    np.zeros(len(t), np.int64), t, x, c, len(lay.wc), width, gap_us,
+                    np.zeros(len(s_t), np.int64), s_t, s_i,
+                    last_sess=np.array([last_sess]), open_run=np.array([open_run]),
+                    bf_seed=np.array([bf_seed]), margin=np.arange(len(t)) < len(m_t),
+                )
+                yield lay.frame(ev.iloc[order], f)
+                last_sess, open_run = f["session_id"][-1], f["session_pos"][-1] + 1
+                bf_seed = f["bf"][-1]
+                m_t, m_x, m_c = t[-keep:], x[-keep:], c[-keep:]
+            if len(s_t):
+                o = np.lexsort((s_i, s_t))
+                s_t, s_i = s_t[o], s_i[o]
+                prev = np.searchsorted(s_t, s_t[-1]) - 1
+                pick = [prev, len(s_t) - 1] if prev >= 0 else [len(s_t) - 1]
+                s_t, s_i = s_t[pick], s_i[pick]
+        state.update((
+            int(last_sess), int(open_run), float(bf_seed),
+            *(a.tolist() for a in (m_t, m_x, m_c, s_t, s_i)),
+        ))
 
-    return events.groupBy(entity).applyInPandasWithState(
-        fn, out_schema, state_schema, "Update", GroupStateTimeout.NoTimeout
-    )
+    # events carry a null id, and pandas holds a nullable long as float64,
+    # which would round ids above 2^53
+    ids = tagged.withColumn(snap_id, F.coalesce(F.col(snap_id), F.lit(0)))
+    return lay.project(
+        ids.groupBy(entity).applyInPandasWithState(
+            fn, lay.schema, state_schema, "Update", GroupStateTimeout.NoTimeout
+        )
+    ).drop(f"lead1_{numeric_col}")
 
 
 def streaming_dedup(
@@ -300,7 +245,7 @@ def streaming_decayed_features(
 
     Correctness regime: ordered arrival (Trigger.AvailableNow over
     ts-ordered files — same documented regime as
-    streaming_asof_features); an event older than an already-closed
+    streaming_pit_features); an event older than an already-closed
     bucket would need the batch operator's global view.
     """
     period_us = int(halflife_s) * 1_000_000

@@ -1,17 +1,23 @@
-"""As-of join semantics: strict-vs-nonstrict ties, null matches, and the
-equality of the window-plan and merge-cursor implementations; plus the
-zero-temporal-leakage property the north rule requires."""
+"""As-of join semantics: strict-vs-nonstrict ties, null matches, the
+strict and inclusive joins against DuckDB's ASOF JOIN on real data, and
+the zero-temporal-leakage property the north rule requires."""
 
 from __future__ import annotations
 
 import datetime as dt
+import sys
+from pathlib import Path
 
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from spark_pit.operators.asof import asof_join_cursor, asof_join_window
+from spark_pit.operators.asof import asof_join_window
+
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
+
+from check_oracle import compare  # noqa: E402
 
 
 def _t(s: int) -> dt.datetime:
@@ -47,7 +53,7 @@ def _collect(df):
     return {r["eid"]: r["asof_sid"] for r in df.collect()}
 
 
-@pytest.mark.parametrize("impl", [asof_join_window, asof_join_cursor])
+@pytest.mark.parametrize("impl", [asof_join_window])
 def test_strict_excludes_equal_ts(tiny, impl):
     left, right = tiny
     out = impl(left, right, ["k"], "ts", "sts", ["sid"], strict=True, right_order="sid")
@@ -56,7 +62,7 @@ def test_strict_excludes_equal_ts(tiny, impl):
     assert got == {1: None, 2: None, 3: 101, 4: None, 5: None}
 
 
-@pytest.mark.parametrize("impl", [asof_join_window, asof_join_cursor])
+@pytest.mark.parametrize("impl", [asof_join_window])
 def test_nonstrict_includes_equal_ts(tiny, impl):
     left, right = tiny
     out = impl(left, right, ["k"], "ts", "sts", ["sid"], strict=False, right_order="sid")
@@ -64,30 +70,21 @@ def test_nonstrict_includes_equal_ts(tiny, impl):
     assert got == {1: None, 2: 100, 3: 101, 4: None, 5: None}
 
 
-def test_window_and_cursor_agree_on_real_data(spark, sf_dir):
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    snaps = ev.where("event_type = 'purchase'").selectExpr(
-        "user_id", "ts as snapshot_ts", "event_id as snapshot_id", "value as snap_value"
-    )
-    kw = dict(
-        on=["user_id"], left_ts="ts", right_ts="snapshot_ts",
-        value_cols=["snapshot_id", "snap_value"], strict=True, right_order="snapshot_id",
-    )
-    a = (
-        asof_join_window(ev, snaps, **kw)
-        .orderBy("event_id")
-        .toPandas()
-        .reset_index(drop=True)
-    )
-    b = (
-        asof_join_cursor(ev, snaps, **kw)
-        .orderBy("event_id")
-        .toPandas()
-        .reset_index(drop=True)
-    )
-    assert len(a) == len(b) == ev.count()
-    for c in ["asof_snapshot_id", "asof_snap_value", "asof_ts"]:
-        pd.testing.assert_series_equal(a[c], b[c], check_dtype=False)
+@pytest.mark.parametrize("name", ["asof_join", "asof_join_inclusive"])
+def test_window_join_matches_duckdb_on_real_data(spark, sf_dir, name):
+    """The strict and the inclusive ``asof_join_window`` equal DuckDB's
+    ASOF JOIN over the same events (the registry query and its pinned
+    oracle SQL), compared by the oracle harness."""
+    import duckdb
+
+    from spark_pit.queries import ORACLES, QUERIES
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{sf_dir}/events.parquet'")
+    got = QUERIES[name](spark, sf_dir).toPandas()
+    want = con.execute(ORACLES[name]).df()
+    assert len(got) == spark.read.parquet(f"{sf_dir}/events.parquet").count()
+    assert compare(name, got, want) == []
 
 
 def test_zero_temporal_leakage(spark, sf_dir):

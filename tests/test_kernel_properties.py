@@ -9,11 +9,6 @@ from hypothesis import strategies as st
 
 from spark_pit import kernels
 
-ts_arrays = st.lists(
-    st.integers(min_value=0, max_value=10**9), min_size=1, max_size=200
-).map(lambda xs: np.sort(np.array(xs, dtype=np.int64)))
-
-
 @st.composite
 def segments(draw, cell=st.none()):
     """2-4 segments of rows sorted by (segment, ts), as
@@ -55,25 +50,6 @@ def test_segment_sessions_monotone_and_bounded(drawn):
         assert ((d == 0) | (d == 1)).all()
         # a break happens exactly when the inter-arrival exceeds the gap
         assert (d == (np.diff(t) > gap)).all()
-
-
-@given(ts_arrays, ts_arrays, st.booleans())
-@settings(max_examples=200, deadline=None)
-def test_asof_indices_match_bruteforce(ev, sn, strict):
-    idx = kernels.asof_indices(ev, sn, strict=strict)
-    for e, i in zip(ev, idx):
-        if strict:
-            cand = np.flatnonzero(sn < e)
-        else:
-            cand = np.flatnonzero(sn <= e)
-        expect = cand[-1] if len(cand) else -1
-        assert i == expect
-    # zero leakage: the matched snapshot never sits after the event
-    matched = idx >= 0
-    if matched.any():
-        assert (sn[idx[matched]] <= ev[matched]).all()
-        if strict:
-            assert (sn[idx[matched]] < ev[matched]).all()
 
 
 @given(segments(st.integers(min_value=-1, max_value=4)), st.integers(min_value=1, max_value=12))

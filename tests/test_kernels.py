@@ -15,32 +15,6 @@ from hypothesis import strategies as st
 from spark_pit import kernels
 
 
-def test_asof_indices_strict_vs_nonstrict():
-    snap = np.array([10, 20, 20, 30])
-    ev = np.array([5, 10, 15, 20, 25, 30, 35])
-    strict = kernels.asof_indices(ev, snap, strict=True)
-    assert strict.tolist() == [-1, -1, 0, 0, 2, 2, 3]
-    nonstrict = kernels.asof_indices(ev, snap, strict=False)
-    assert nonstrict.tolist() == [-1, 0, 0, 2, 2, 3, 3]
-
-
-@given(
-    st.lists(st.integers(0, 1000), min_size=0, max_size=50),
-    st.lists(st.integers(0, 1000), min_size=0, max_size=50),
-)
-@settings(max_examples=100, deadline=None)
-def test_asof_indices_property(ev, snap):
-    ev = np.sort(np.array(ev, dtype=np.int64))
-    snap = np.sort(np.array(snap, dtype=np.int64))
-    idx = kernels.asof_indices(ev, snap, strict=True)
-    for i, t in enumerate(ev):
-        want = -1
-        for j, s in enumerate(snap):
-            if s < t:
-                want = j
-        assert idx[i] == want
-
-
 @given(
     st.lists(st.tuples(st.integers(0, 3), st.integers(0, 14)), min_size=1, max_size=40),
     st.lists(

@@ -11,6 +11,7 @@ import re
 import numpy as np
 import pandas as pd
 import pytest
+from conftest import BIG_ID, assert_same_pit, exact_ids
 from pyspark.sql import functions as F
 
 from spark_pit.operators.pit import pit_features_declarative
@@ -18,7 +19,6 @@ from spark_pit.operators.skew import hot_entities, pit_features_salted
 
 VOCAB = ["view", "click", "purchase"]
 EPOCH = dt.datetime(2024, 1, 1)
-BIG_ID = 2**53 + 1  # the first integer a float64 cannot hold
 
 
 def _mk(spark, seed=7, n_hot=4000, n_cold=60, epoch=EPOCH):
@@ -57,61 +57,33 @@ def _mk(spark, seed=7, n_hot=4000, n_cold=60, epoch=EPOCH):
     return ev, snaps.unionByName(big)
 
 
-def _collect(df) -> pd.DataFrame:
-    # the nullable id as a string: pandas holds a nullable long as
-    # float64, which would round ids above 2^53
-    pdf = df.withColumn(
-        "asof_snapshot_id", F.col("asof_snapshot_id").cast("string")
-    ).toPandas()
-    return pdf.sort_values(["user_id", "ts"], kind="stable").reset_index(drop=True)
-
-
-def _assert_same(a: pd.DataFrame, b: pd.DataFrame):
-    assert len(a) == len(b)
-    assert (a["asof_snapshot_id"] == str(BIG_ID)).any()
-    for col in a.columns:
-        av, bv = a[col], b[col]
-        if col == "wc":
-            am = np.vstack(av.to_numpy())
-            bm = np.vstack(bv.to_numpy())
-            np.testing.assert_allclose(am, bm, rtol=1e-12, atol=1e-12, err_msg=col)
-        elif av.dtype == object or str(av.dtype).startswith("datetime"):
-            assert av.equals(bv), col
-        else:
-            np.testing.assert_allclose(
-                av.to_numpy(dtype=np.float64),
-                bv.to_numpy(dtype=np.float64),
-                rtol=1e-12, atol=1e-12, equal_nan=True, err_msg=col,
-            )
-
-
 @pytest.mark.parametrize("chunk_seconds", [3600, 40000])
 def test_salted_equals_unsalted_all_entities(spark, chunk_seconds):
     ev, snaps = _mk(spark)
-    base = _collect(pit_features_declarative(
+    base = exact_ids(pit_features_declarative(
         ev, snaps, "user_id", "ts", "value", "event_type", VOCAB,
         gap_seconds=1800, width=5,
     ))
-    salted = _collect(pit_features_salted(
+    salted = exact_ids(pit_features_salted(
         ev, snaps, "user_id", "ts", "value", "event_type", VOCAB,
         gap_seconds=1800, width=5, chunk_seconds=chunk_seconds,
     ))
-    _assert_same(base, salted)
+    assert_same_pit(base, salted)
 
 
 def test_hot_threshold_split_path(spark):
     ev, snaps = _mk(spark)
     hot = hot_entities(ev, "user_id", threshold=1000)
     assert hot == ["hot"]
-    base = _collect(pit_features_declarative(
+    base = exact_ids(pit_features_declarative(
         ev, snaps, "user_id", "ts", "value", "event_type", VOCAB,
         gap_seconds=1800, width=5,
     ))
-    mixed = _collect(pit_features_salted(
+    mixed = exact_ids(pit_features_salted(
         ev, snaps, "user_id", "ts", "value", "event_type", VOCAB,
         gap_seconds=1800, width=5, chunk_seconds=7200, hot_threshold=1000,
     ))
-    _assert_same(base, mixed)
+    assert_same_pit(base, mixed)
 
 
 def test_mixed_hot_cold_around_the_cold_chunk(spark):
@@ -128,29 +100,29 @@ def test_mixed_hot_cold_around_the_cold_chunk(spark):
         .agg(F.min("c"), F.max("c")).first()
     )
     assert lo < COLD_CHUNK < hi
-    base = _collect(pit_features_declarative(
+    base = exact_ids(pit_features_declarative(
         ev, snaps, "user_id", "ts", "value", "event_type", VOCAB,
         gap_seconds=1800, width=5,
     ))
-    mixed = _collect(pit_features_salted(
+    mixed = exact_ids(pit_features_salted(
         ev, snaps, "user_id", "ts", "value", "event_type", VOCAB,
         gap_seconds=1800, width=5, chunk_seconds=3600, hot_ids=["hot"], num_buckets=4,
     ))
-    _assert_same(base, mixed)
+    assert_same_pit(base, mixed)
 
 
 def test_hot_threshold_above_every_entity(spark):
     ev, snaps = _mk(spark)
     assert hot_entities(ev, "user_id", threshold=5000) == []
-    base = _collect(pit_features_declarative(
+    base = exact_ids(pit_features_declarative(
         ev, snaps, "user_id", "ts", "value", "event_type", VOCAB,
         gap_seconds=1800, width=5,
     ))
-    none_hot = _collect(pit_features_salted(
+    none_hot = exact_ids(pit_features_salted(
         ev, snaps, "user_id", "ts", "value", "event_type", VOCAB,
         gap_seconds=1800, width=5, chunk_seconds=7200, hot_threshold=5000,
     ))
-    _assert_same(base, none_hot)
+    assert_same_pit(base, none_hot)
 
 
 def test_hot_and_cold_share_one_feature_cogroup(spark):
@@ -247,15 +219,15 @@ def test_countmin_detector_default_no_exact_groupby(spark, monkeypatch):
         raise AssertionError("exact hot_entities called on the countmin path")
 
     monkeypatch.setattr(skew, "hot_entities", boom)
-    base = _collect(pit_features_declarative(
+    base = exact_ids(pit_features_declarative(
         ev, snaps, "user_id", "ts", "value", "event_type", VOCAB,
         gap_seconds=1800, width=5,
     ))
-    mixed = _collect(skew.pit_features_salted(
+    mixed = exact_ids(skew.pit_features_salted(
         ev, snaps, "user_id", "ts", "value", "event_type", VOCAB,
         gap_seconds=1800, width=5, chunk_seconds=7200, hot_threshold=1000,
     ))
-    _assert_same(base, mixed)
+    assert_same_pit(base, mixed)
 
 
 def _at_and_over(spark, threshold: int):

@@ -1,5 +1,6 @@
-"""Structured Streaming surface: session windows + custom stateful operator
-over a file source with Trigger.AvailableNow, compared against batch."""
+"""Structured Streaming surface: session windows, the streaming PIT
+operator and the other stateful operators over file sources with
+Trigger.AvailableNow, compared against batch."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ import tempfile
 import numpy as np
 import pandas as pd
 import pytest
+from conftest import BIG_ID, assert_same_pit, exact_ids
 from pyspark.sql import functions as F
 
 from spark_pit.catalog import iceberg_available, read_table
@@ -62,25 +64,148 @@ def test_streaming_session_stats_matches_batch(spark, sf_dir):
     assert matched >= 0.9 * len(got)
 
 
-def test_streaming_stateful_backfill(spark, sf_dir):
-    feats = streaming_pit_features(
-        _stream_events(spark, sf_dir), "user_id", "ts", "value"
+VOCAB = ["click", "error", "purchase", "signup", "view"]
+TAGGED = (
+    "user_id long, ts timestamp_ntz, event_id long, value double, "
+    "event_type string, is_snap boolean, snapshot_id long"
+)
+
+
+def _pit_stream(spark, src_dir, **kw):
+    """``streaming_pit_features`` over the parquet subdirectories ``b*`` of
+    ``src_dir``, one file per micro-batch, drained into a batch frame."""
+    path = str(src_dir / "b*")
+    src = (
+        spark.readStream.schema(spark.read.parquet(path).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(path)
     )
-    got = run_available_now(feats, "update").toPandas()
-    n_events = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    assert len(got) == n_events
-    # running_count per entity is a permutation of 1..n
-    for _, g in got.groupby("user_id"):
-        rc = np.sort(g["running_count"].to_numpy())
-        assert (rc == np.arange(1, len(g) + 1)).all()
+    out = streaming_pit_features(
+        src, "user_id", "ts", "value", "event_type", VOCAB, tiebreak="event_id", **kw
+    )
+    return run_available_now(out, "update")
+
+
+def _write_files(spark, src_dir, pdfs, schema=TAGGED):
+    """One parquet file per frame, written in order, so the file source
+    takes them in that order."""
+    for k, pdf in enumerate(pdfs):
+        spark.createDataFrame(pdf, schema).coalesce(1).write.parquet(str(src_dir / f"b{k}"))
+
+
+def _tagged(events: pd.DataFrame, snaps: pd.DataFrame) -> pd.DataFrame:
+    """Events and (user_id, ts, snapshot_id) snapshots as one tagged frame,
+    sorted by (ts, event_id): the arrival order the operator needs."""
+    sn = snaps.assign(event_id=-1, value=np.nan, event_type=None, is_snap=True)
+    both = pd.concat([events.assign(is_snap=False, snapshot_id=None), sn], ignore_index=True)
+    both["snapshot_id"] = both["snapshot_id"].astype("Int64")
+    cols = ["user_id", "ts", "event_id", "value", "event_type", "is_snap", "snapshot_id"]
+    return both[cols].sort_values(["ts", "event_id"], kind="stable").reset_index(drop=True)
+
+
+def _crossing_1970(seed=3) -> tuple[pd.DataFrame, pd.DataFrame]:
+    """Three entities whose timelines cross 1970-01-01, with ts ties, null
+    values, null and out-of-vocab tokens, session gaps of exactly 1800 s
+    and 1801 s, and snapshots at event times."""
+    rng = np.random.default_rng(seed)
+    rows = []
+    for u in (-1, -2, -3):
+        t = pd.Timestamp("1969-12-31 20:00:00") + pd.Timedelta(seconds=int(u) * 7)
+        for _ in range(60):
+            t += pd.Timedelta(seconds=int(rng.choice([0, 1, 5, 600, 1800, 1801, 9000])))
+            tok = rng.choice(VOCAB + ["oov", None])
+            val = float(rng.normal()) if rng.random() > 0.25 else np.nan
+            rows.append((u, t, val, tok))
+    ev = pd.DataFrame(rows, columns=["user_id", "ts", "value", "event_type"])
+    ev["event_id"] = 10**6 + np.arange(len(ev))
+    sn = ev.sample(frac=0.2, random_state=seed)[["user_id", "ts"]]
+    sn["snapshot_id"] = 10**6 + np.arange(len(sn))
+    return ev, sn
+
+
+def test_streaming_pit_equals_declarative(spark, sf_dir, tmp_path):
+    """The streaming PIT operator equals ``pit_features_declarative`` on
+    every column it emits (rtol/atol 1e-12, snapshot ids exact), with its
+    carries crossing six micro-batches: sf0.001 events (purchases double
+    as snapshots, plus a 2^53+1 twin of the first) in four time-ordered
+    files behind two files of entities that cross 1970, cut inside a ts
+    tie of one entity."""
+    from spark_pit.operators.pit import pit_features_declarative
+
+    cols = ["user_id", "ts", "event_id", "value", "event_type"]
+    ev = pd.read_parquet(f"{sf_dir}/events.parquet")[cols]
+    snaps = ev[ev["event_type"] == "purchase"][["user_id", "ts", "event_id"]]
+    snaps = snaps.rename(columns={"event_id": "snapshot_id"})
+    # a twin of the first snapshot with an id above 2^53 wins its ts tie
+    snaps = pd.concat([snaps, snaps.iloc[:1].assign(snapshot_id=BIG_ID)])
+    sf = _tagged(ev, snaps)
+    old_ev, old_sn = _crossing_1970()
+    old = _tagged(old_ev, old_sn)
+    key = old[["user_id", "ts"]]
+    tie = np.flatnonzero(key.duplicated(keep="first").to_numpy())
+    cut = tie[len(tie) // 2]  # rows cut - 1 and cut share entity and ts
+    assert key.iloc[cut].equals(key.iloc[cut - 1])
+    _write_files(
+        spark, tmp_path,
+        [old.iloc[:cut], old.iloc[cut:],
+         *(sf.iloc[i] for i in np.array_split(np.arange(len(sf)), 4))],
+    )
+    got = exact_ids(_pit_stream(spark, tmp_path))
+
+    events = spark.createDataFrame(
+        pd.concat([old_ev[cols], ev]),
+        "user_id long, ts timestamp_ntz, event_id long, value double, event_type string",
+    )
+    snapshots = spark.createDataFrame(
+        pd.concat([old_sn, snaps]),
+        "user_id long, snapshot_ts timestamp_ntz, snapshot_id long",
+    )
+    want = exact_ids(pit_features_declarative(
+        events, snapshots, "user_id", "ts", "value", "event_type", VOCAB,
+        tiebreak="event_id",
+    ).drop("lead1_value"))
+    assert len(got) == len(ev) + len(old_ev)
+    assert_same_pit(got, want)
+
+
+def test_streaming_pit_carries_across_micro_batches(spark, tmp_path):
+    """Two files, two micro-batches. Entity 1: snapshot 2^53+1 at 23:59:50
+    and snapshot 7 at 23:59:55 arrive first; its event at 23:59:55 must
+    skip snapshot 7 (strictly before) and match 2^53+1, which only the
+    second carried snapshot holds. Entity 2: events at 1969-12-31 23:00:00,
+    23:00:05 and 1970-01-01 00:00:10 continue and then break a session
+    across the file boundary."""
+    t = pd.Timestamp
+    sn = pd.DataFrame({
+        "user_id": [1, 1], "ts": [t("1969-12-31 23:59:50"), t("1969-12-31 23:59:55")],
+        "snapshot_id": [BIG_ID, 7],
+    })
+    ev = pd.DataFrame({
+        "user_id": [2, 1, 1, 2, 2],
+        "ts": [t("1969-12-31 23:00:00"), t("1969-12-31 23:59:55"), t("1970-01-01 00:00:10"),
+               t("1969-12-31 23:00:05"), t("1970-01-01 00:00:10")],
+        "event_id": [1, 2, 3, 4, 5],
+        "value": [1.0, 2.0, 3.0, np.nan, 5.0],
+        "event_type": ["view", "click", "view", "view", "oov"],
+    })
+    tagged = _tagged(ev, sn)
+    first = tagged["snapshot_id"].notna() | (tagged["event_id"] == 1)
+    _write_files(spark, tmp_path, [tagged[first], tagged[~first]])
+    got = exact_ids(_pit_stream(spark, tmp_path)).set_index("event_id").sort_index()
+    assert got.loc[2, "asof_snapshot_id"] == str(BIG_ID)
+    assert got.loc[2, "asof_age_sec"] == 5.0
+    assert got.loc[3, "asof_snapshot_id"] == "7"
+    assert got.loc[[1, 4, 5], "session_id"].tolist() == [0, 0, 1]
+    assert got.loc[[1, 4, 5], "session_pos"].tolist() == [0, 1, 0]
+    assert got.loc[4, "lag1_value"] == 1.0 and got.loc[4, "value_bf"] == 1.0
 
 
 def test_streaming_asof_matches_batch(spark, sf_dir):
-    """The stateful streaming as-of join must reproduce the batch
-    strictly-before join exactly (AvailableNow over one file = ordered
-    arrival, the documented correctness regime)."""
+    """The streaming PIT operator's as-of match must reproduce the batch
+    strictly-before join exactly, ids compared as exact integers
+    (AvailableNow over one file = ordered arrival, the documented
+    correctness regime)."""
     from spark_pit.operators.asof import asof_join_window
-    from spark_pit.streaming import streaming_asof_features
 
     raw = (
         _stream_table(spark, sf_dir, "events")
@@ -89,16 +214,17 @@ def test_streaming_asof_matches_batch(spark, sf_dir):
             "user_id",
             F.col("ts").cast("timestamp_ltz").alias("ts"),
             "event_id",
+            "value",
+            "event_type",
             (F.col("event_type") == "purchase").alias("is_snap"),
             F.when(F.col("event_type") == "purchase", F.col("event_id"))
             .alias("snapshot_id"),
         )
     )
-    out = streaming_asof_features(raw, "user_id", "ts")
-    got = (
-        run_available_now(out, "update").toPandas()
-        .sort_values("event_id").reset_index(drop=True)
+    out = streaming_pit_features(
+        raw, "user_id", "ts", "value", "event_type", VOCAB, tiebreak="event_id"
     )
+    got = exact_ids(run_available_now(out, "update").select("event_id", "asof_snapshot_id"))
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     snaps = ev.where(F.col("event_type") == "purchase").select(
@@ -107,20 +233,18 @@ def test_streaming_asof_matches_batch(spark, sf_dir):
         F.col("event_id").alias("snapshot_id"),
     )
     events = ev.where(F.col("event_type") != "purchase").select("event_id", "user_id", "ts")
-    want = (
+    want = exact_ids(
         asof_join_window(
             events, snaps, ["user_id"], "ts", "snapshot_ts",
             ["snapshot_id"], strict=True, right_order="snapshot_id",
-        )
-        .select("event_id", F.col("asof_snapshot_id"))
-        .toPandas().sort_values("event_id").reset_index(drop=True)
+        ).select("event_id", "asof_snapshot_id")
     )
     # streaming emits only non-snapshot events
     assert len(got) == len(want)
-    ga = got["asof_snapshot_id"].astype("Int64")
-    wa = want["asof_snapshot_id"].astype("Int64")
-    assert (ga.isna() == wa.isna()).all()
-    assert (ga.dropna().to_numpy() == wa.dropna().to_numpy()).all()
+    got = got.sort_values("event_id").reset_index(drop=True)
+    want = want.sort_values("event_id").reset_index(drop=True)
+    assert got.equals(want)
+    assert got["asof_snapshot_id"].notna().any()
 
 
 def test_catalog_parquet_fallback(spark, sf_dir):
@@ -170,36 +294,32 @@ def test_streaming_content_dedup(spark, sf_dir):
 
 
 def test_streaming_asof_entity_with_no_snapshots(spark, tmp_path):
-    """Regression (round-4 advice, streaming.py:126): an entity whose first
-    micro-batch contains events but ZERO snapshots (and no carried state)
-    must yield all-NA matches, not IndexError on the empty snapshot array."""
-    from spark_pit.streaming import streaming_asof_features
-
-    src_dir = tmp_path / "src"
-    pdf = pd.DataFrame(
-        {
-            "user_id": ["nosnap", "nosnap", "hassnap", "hassnap"],
-            "ts": pd.to_datetime(
-                ["2024-01-01 00:01", "2024-01-01 00:02",
-                 "2024-01-01 00:01", "2024-01-01 00:02"]
-            ),
-            "event_id": [1, 2, 3, 4],
-            "is_snap": [False, False, True, False],
-            "snapshot_id": pd.array([pd.NA, pd.NA, 99, pd.NA], dtype="Int64"),
-        }
+    """Regression: an entity whose first micro-batch contains events but
+    ZERO snapshots (and no carried state) must yield all-NA matches, not
+    IndexError on the empty snapshot array. String entity keys round-trip
+    unchanged."""
+    t = pd.Timestamp
+    ev = pd.DataFrame({
+        "user_id": ["nosnap", "nosnap", "hassnap", "hassnap"],
+        "ts": [t("2024-01-01 00:01"), t("2024-01-01 00:02"),
+               t("2024-01-01 00:01"), t("2024-01-01 00:02")],
+        "event_id": [1, 2, 3, 4],
+        "value": [1.0, 2.0, 3.0, 4.0],
+        "event_type": ["view", "view", "click", "click"],
+    })
+    sn = pd.DataFrame(
+        {"user_id": ["hassnap"], "ts": [t("2024-01-01 00:01")], "snapshot_id": [99]}
     )
-    df = spark.createDataFrame(pdf).select(
-        "user_id", F.col("ts").cast("timestamp_ltz").alias("ts"),
-        "event_id", "is_snap", F.col("snapshot_id").cast("long").alias("snapshot_id"),
-    )
-    df.write.parquet(str(src_dir))
-    raw = spark.readStream.schema(df.schema).parquet(str(src_dir))
-    out = streaming_asof_features(raw, "user_id", "ts")
-    got = run_available_now(out, "update").toPandas().set_index("event_id")
+    schema = TAGGED.replace("user_id long", "user_id string")
+    _write_files(spark, tmp_path, [_tagged(ev, sn)], schema)
+    got = _pit_stream(spark, tmp_path).toPandas().set_index("event_id")
+    assert got.sort_index()["user_id"].tolist() == ev["user_id"].tolist()
     # entity with no snapshot at all: both events unmatched (and no crash)
     assert pd.isna(got.loc[1, "asof_snapshot_id"])
     assert pd.isna(got.loc[2, "asof_snapshot_id"])
-    # sibling entity unaffected: event after the snapshot matches it
+    # sibling entity: the same-instant snapshot is invisible (strict), the
+    # event after it matches it
+    assert pd.isna(got.loc[3, "asof_snapshot_id"])
     assert got.loc[4, "asof_snapshot_id"] == 99
 
 
