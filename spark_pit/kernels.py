@@ -288,36 +288,3 @@ def chunk_carries(
         "tail_chunk": dst,
         "tail_pos": pos,
     }
-
-
-def cross_cov(x1: np.ndarray, x2: np.ndarray, nlags: int) -> np.ndarray:
-    """CC analogue (feature.py:1670-1721): cross-covariance of two channels
-    at lags 1..nlags: sum((x1_j-m1)(x2_{j+n}-m2)) / (L-n)."""
-    L = len(x1)
-    m1, m2 = (x1.mean(), x2.mean()) if L else (np.nan, np.nan)
-    out = np.full(nlags, np.nan)
-    for n in range(1, nlags + 1):
-        if L <= n:
-            continue
-        out[n - 1] = float(((x1[:-n] - m1) * (x2[n:] - m2)).sum()) / (L - n)
-    return out
-
-
-def distribution_positions(codes: np.ndarray, n_tokens: int) -> np.ndarray:
-    """CTDD analogue (feature.py:1978-2050): for each token t, the 1-based
-    position (as % of L) where the running count of t first reaches
-    ceil(q * total_t) for q in (eps, .25, .5, .75, 1.0) — eps meaning the
-    first occurrence. Returns (n_tokens, 5), 0.0 where the token is absent
-    (reference emits 0, feature.py:1969-1970)."""
-    L = len(codes)
-    out = np.zeros((n_tokens, 5), dtype=np.float64)
-    qs = (0.0, 0.25, 0.5, 0.75, 1.0)
-    for t in range(n_tokens):
-        pos = np.flatnonzero(codes == t)
-        total = len(pos)
-        if total == 0:
-            continue
-        for qi, q in enumerate(qs):
-            k = 1 if q == 0.0 else int(np.ceil(q * total))
-            out[t, qi] = (pos[k - 1] + 1) * 100.0 / L
-    return out

@@ -68,18 +68,7 @@ def _manifest_dir(out_dir: str) -> str:
 
 def completed_parts(out_dir: str) -> set[int]:
     """Bucket ids already certified by a manifest line."""
-    mdir = _manifest_dir(out_dir)
-    done: set[int] = set()
-    if not os.path.isdir(mdir):
-        return done
-    for name in sorted(os.listdir(mdir)):
-        if not name.endswith(".jsonl"):
-            continue
-        with open(os.path.join(mdir, name)) as fh:
-            for line in fh:
-                if line.strip():
-                    done.add(int(json.loads(line)["part_id"]))
-    return done
+    return {int(r["part_id"]) for r in read_manifest(out_dir)}
 
 
 def read_manifest(out_dir: str) -> list[dict]:

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from spark_pit.operators.rangejoin import cell_join
+
 
 def _assemble(df: DataFrame, vec_col: str):
     from pyspark.ml.functions import array_to_vector
@@ -162,13 +164,13 @@ def mean_shift_1d(
     sf0.1, invisible at the smaller gate scales). Neighborhood sums stay
     exact DECIMAL(18,6); only sums and counts ever cross the
     double/decimal line, both correctly rounded. Per step: one banded
-    equi-join (the rangejoin trick, never a nested loop) + one
+    equi-join (rangejoin.cell_join, never a nested loop) + one
     partial-agg shuffle."""
     h = float(bandwidth)
     base = points.select(
         F.col(entity).alias("__e"),
         F.col(coord).cast("decimal(18,6)").alias("x"),
-    ).withColumn("__b2", F.floor(F.col("x").cast("double") / h).cast("long"))
+    )
     cur = points.select(
         entity,
         F.col(node_id).alias("node"),
@@ -177,24 +179,10 @@ def mean_shift_1d(
         ).cast("long").alias("qn"),
     ).localCheckpoint(eager=False)
     for _ in range(n_iter):
-        q = (F.col("qn").cast("double") / F.lit(1e9))
-        qb = cur.withColumn(
-            "__jb",
-            F.explode(
-                F.array(
-                    F.floor(q / h).cast("long") - 1,
-                    F.floor(q / h).cast("long"),
-                    F.floor(q / h).cast("long") + 1,
-                )
-            ),
-        )
-        near = qb.join(
-            base,
-            (F.col(entity) == F.col("__e")) & (F.col("__jb") == F.col("__b2")),
-        ).where(
-            F.abs(
-                F.col("x").cast("double") - F.col("qn").cast("double") / F.lit(1e9)
-            ) <= h
+        q = F.col("qn").cast("double") / F.lit(1e9)
+        x = F.col("x").cast("double")
+        near = cell_join(cur, base, [(entity, "__e")], [(q, x)], h).where(
+            F.abs(x - q) <= h
         )
         cur = (
             near.groupBy(entity, "node")

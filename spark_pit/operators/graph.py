@@ -10,8 +10,8 @@ budget), level-synchronized BFS shortest paths, closeness, and Brandes
 betweenness (exact + Brandes–Pich sampled-source estimator for hub-entity
 graphs). The non-iterative slice:
 
-- edge list: banded-range self-join on the 1-D coordinate (same
-  bucketing trick as rangejoin.py — hash equi-join, no nested loop)
+- edge list: banded-range self-join on the 1-D coordinate through
+  rangejoin.cell_join — hash equi-join, no nested loop
 - degree: groupBy(node) count
 - triangles: the standard edge-edge-edge join with id-ordered endpoints
   (each triangle counted once)
@@ -26,33 +26,26 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from spark_pit.operators.rangejoin import cell_join
+
 
 def contact_edges(
     df: DataFrame, entity: str, node_id: str, coord: str, cutoff: float
 ) -> DataFrame:
     """Undirected edge list (entity, a, b) with a < b and
-    |coord_a - coord_b| <= cutoff, via banded equi-join."""
-    band = cutoff
+    |coord_a - coord_b| <= cutoff, via rangejoin.cell_join."""
     pts = df.select(
         F.col(entity).alias("__e"),
         F.col(node_id).alias("a"),
         F.col(coord).alias("va"),
-        F.floor(F.col(coord) / band).cast("long").alias("__band"),
     )
     right = df.select(
         F.col(entity).alias("__e2"),
         F.col(node_id).alias("b"),
         F.col(coord).alias("vb"),
-        F.floor(F.col(coord) / band).cast("long").alias("__band2"),
-    )
-    expanded = pts.withColumn(
-        "__jband", F.explode(F.array(F.col("__band") - 1, F.col("__band"), F.col("__band") + 1))
     )
     return (
-        expanded.join(
-            right,
-            (F.col("__e") == F.col("__e2")) & (F.col("__jband") == F.col("__band2")),
-        )
+        cell_join(pts, right, [("__e", "__e2")], [("va", "vb")], cutoff)
         .where((F.col("a") < F.col("b")) & (F.abs(F.col("va") - F.col("vb")) <= cutoff))
         .select(F.col("__e").alias(entity), "a", "b")
         .distinct()

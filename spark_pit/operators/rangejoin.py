@@ -5,23 +5,50 @@ set of residues within annular distance shells and aggregate composition
 per shell (`AAC_type1` feature.py:4266-4290 over the per-probe distance
 frame built at feature.py:4107-4121 — a full O(N^2) rebuild per probe).
 
-Spark shape: a **banded equi-join**. A raw range predicate
+Spark shape: a **banded equi-join**, built once in ``cell_join`` for every
+range operator here and in graph.py/analysis.py. A raw range predicate
 ``abs(p.v - x.v) < max_dist`` would execute as BroadcastNestedLoopJoin
-(O(N*M)); instead each probe row is exploded into the fixed set of bands
-its radius can reach (``max_dist / band_width + 1`` copies), the join runs
-as a hash equi-join on (entity, band), and the true distance predicate
-filters the few candidates inside matching bands. This is the standard
-interval-bucketing trick (same as the minhash band join in dedup.py).
+(O(N*M)); instead each coordinate is cut into cells, each probe row is
+exploded into the cells its radius can reach, the join runs as a hash
+equi-join on (entity, cells), and the true distance predicate filters the
+few candidates inside matching cells (the grid partitioning of PBSM,
+Patel & DeWitt, SIGMOD 1996).
 
 Here the 1-D coordinate is a numeric channel of the event (the engine's
-analogue of the 3-D residue distance); the same plan generalizes to any
-monotone banding key.
+analogue of the 3-D residue distance); the 3-D operators use the same
+join with three cell ids.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def cell_join(
+    probes: DataFrame,
+    points: DataFrame,
+    keys: list[tuple[str, str]],
+    coords: list[tuple[str | Column, str | Column]],
+    cell: float,
+    reach: int = 1,
+) -> DataFrame:
+    """Candidate (probe, point) pairs of a banded range join: ONE hash
+    equi-join on the ``keys`` (probe column, point column) pairs plus one
+    cell id ``floor(coord / cell)`` per ``coords`` pair (probe, point; a
+    column name or an expression). Each probe is expanded to the
+    ``2·reach + 1`` cells around its own in every coordinate, so every
+    point within ``reach`` cells pairs with it exactly once; a NULL
+    coordinate pairs with nothing. The caller applies the exact predicate."""
+    on = [F.col(q) == F.col(p) for q, p in keys]
+    for i, (q, p) in enumerate(coords):
+        q, p = (F.col(c) if isinstance(c, str) else c for c in (q, p))
+        home = F.floor(q / cell).cast("long")
+        probes = probes.withColumn(f"__qc{i}", F.explode(F.sequence(home - reach, home + reach)))
+        points = points.withColumn(f"__pc{i}", F.floor(p / cell).cast("long"))
+        on.append(F.col(f"__qc{i}") == F.col(f"__pc{i}"))
+    cells = [f"__{side}c{i}" for i in range(len(coords)) for side in "qp"]
+    return probes.join(points, on).drop(*cells)
 
 
 def shell_composition(
@@ -43,30 +70,20 @@ def shell_composition(
     (probe, shell) ball like feature.py:4284-4287.
     """
     max_dist = shell_width * n_shells
-    band = shell_width  # band width = shell width keeps candidates tight
-
     pts = points.select(
         F.col(entity).alias("__pe"),
         F.col(coord).alias("__pv"),
         F.col(token_col).alias("__ptok"),
-        F.floor(F.col(coord) / band).cast("long").alias("__pband"),
     )
-    n_bands = int(max_dist / band) + 1
     prb = probes.select(
         F.col(entity).alias("__qe"),
         F.col(coord).alias("__qv"),
         F.col(probe_id).alias("probe_id"),
-    ).withColumn(
-        "__pband",
-        F.explode(
-            F.sequence(
-                (F.floor(F.col("__qv") / band) - n_bands).cast("long"),
-                (F.floor(F.col("__qv") / band) + n_bands).cast("long"),
-            )
-        ),
     )
-    joined = prb.join(
-        pts, (F.col("__qe") == F.col("__pe")) & (prb["__pband"] == pts["__pband"])
+    # cell = shell width keeps candidates tight
+    joined = cell_join(
+        prb, pts, [("__qe", "__pe")], [("__qv", "__pv")], shell_width,
+        reach=int(max_dist / shell_width) + 1,
     ).select(
         "probe_id",
         F.col("__qe").alias(entity),
@@ -131,11 +148,10 @@ def shell_composition_3d(
     """3-D euclidean annular shells — the EXACT reference geometry
     (feature.py:4115-4121 builds per-probe 3-D residue distances;
     AAC_type1 feature.py:4266-4290 aggregates per shell), generalizing
-    the 1-D banded join: the composite cell key is
-    ``(floor(x/c), floor(y/c), floor(z/c))`` with cell size c = reach =
-    shell_width·n_shells, each probe is expanded to its 27 neighboring
-    cells (3³ fixed copies — a constant, NOT data-dependent), and the
-    join runs as ONE hash equi-join on (entity, cx, cy, cz); the true
+    the 1-D banded join: ``cell_join`` with three cell ids of size
+    c = reach = shell_width·n_shells, each probe expanded to its 27
+    neighboring cells (3³ fixed copies — a constant, NOT data-dependent),
+    as ONE hash equi-join on (entity, cx, cy, cz); the true
     euclidean predicate (compared squared, sqrt only for the surviving
     rows' shell index) filters the candidates. No nested loop at any
     scale — the plan is the same single Exchange-on-key shape as every
@@ -144,33 +160,15 @@ def shell_composition_3d(
     normalization."""
     cx, cy, cz = coords
     max_dist = shell_width * n_shells
-    cell = max_dist
-    spark = points.sparkSession
-    offsets = spark.createDataFrame(
-        [(dx, dy, dz) for dx in (-1, 0, 1) for dy in (-1, 0, 1) for dz in (-1, 0, 1)],
-        "dx long, dy long, dz long",
-    )
     pts = points.select(
         F.col(entity).alias("__pe"),
         F.col(cx).alias("__px"), F.col(cy).alias("__py"), F.col(cz).alias("__pz"),
         F.col(token_col).alias("__ptok"),
-        F.floor(F.col(cx) / cell).cast("long").alias("__cx"),
-        F.floor(F.col(cy) / cell).cast("long").alias("__cy"),
-        F.floor(F.col(cz) / cell).cast("long").alias("__cz"),
     )
-    prb = (
-        probes.select(
-            F.col(entity).alias("__qe"),
-            F.col(cx).alias("__qx"), F.col(cy).alias("__qy"), F.col(cz).alias("__qz"),
-            F.col(probe_id).alias("probe_id"),
-        )
-        .crossJoin(F.broadcast(offsets))
-        .select(
-            "__qe", "__qx", "__qy", "__qz", "probe_id",
-            (F.floor(F.col("__qx") / cell).cast("long") + F.col("dx")).alias("__cx"),
-            (F.floor(F.col("__qy") / cell).cast("long") + F.col("dy")).alias("__cy"),
-            (F.floor(F.col("__qz") / cell).cast("long") + F.col("dz")).alias("__cz"),
-        )
+    prb = probes.select(
+        F.col(entity).alias("__qe"),
+        F.col(cx).alias("__qx"), F.col(cy).alias("__qy"), F.col(cz).alias("__qz"),
+        F.col(probe_id).alias("probe_id"),
     )
     d2 = (
         (F.col("__qx") - F.col("__px")) * (F.col("__qx") - F.col("__px"))
@@ -178,12 +176,9 @@ def shell_composition_3d(
         + (F.col("__qz") - F.col("__pz")) * (F.col("__qz") - F.col("__pz"))
     )
     joined = (
-        prb.join(
-            pts,
-            (F.col("__qe") == F.col("__pe"))
-            & (prb["__cx"] == pts["__cx"])
-            & (prb["__cy"] == pts["__cy"])
-            & (prb["__cz"] == pts["__cz"]),
+        cell_join(
+            prb, pts, [("__qe", "__pe")],
+            [("__qx", "__px"), ("__qy", "__py"), ("__qz", "__pz")], max_dist,
         )
         .withColumn("__d2", d2)
         .where(F.col("__d2") < F.lit(max_dist * max_dist))
@@ -229,29 +224,20 @@ def half_exposure(
     """Half-sphere-exposure analogue (reference get_HSE_CA/CB,
     feature.py:4510-4560, Bio.PDB HSExposure over 3-D half-spheres): per
     point, the neighbor counts within ``radius`` ABOVE vs BELOW it along
-    the coordinate — the 1-D half-spaces. Same banded equi-join as
-    contact_edges (hash join, never a nested loop), then one conditional
-    aggregation. Returns (entity, node, hse_up, hse_down)."""
+    the coordinate — the 1-D half-spaces. Candidates from ``cell_join``
+    (cell size = radius: a hash join, never a nested loop), then one
+    conditional aggregation. Returns (entity, node, hse_up, hse_down)."""
     pts = df.select(
         F.col(entity).alias("__e"),
         F.col(node_id).alias("n"),
         F.col(coord).alias("va"),
-        F.floor(F.col(coord) / radius).cast("long").alias("__band"),
     )
     right = df.select(
         F.col(entity).alias("__e2"),
         F.col(node_id).alias("m"),
         F.col(coord).alias("vb"),
-        F.floor(F.col(coord) / radius).cast("long").alias("__band2"),
     )
-    expanded = pts.withColumn(
-        "__jband",
-        F.explode(F.array(F.col("__band") - 1, F.col("__band"), F.col("__band") + 1)),
-    )
-    near = expanded.join(
-        right,
-        (F.col("__e") == F.col("__e2")) & (F.col("__jband") == F.col("__band2")),
-    ).where(
+    near = cell_join(pts, right, [("__e", "__e2")], [("va", "vb")], radius).where(
         (F.col("n") != F.col("m")) & (F.abs(F.col("va") - F.col("vb")) <= radius)
     )
     counted = near.groupBy(F.col("__e").alias(entity), "n").agg(
@@ -286,9 +272,9 @@ def half_exposure_3d(
     (HSExposureCA needs three consecutive CA positions).
 
     Spark shape: two lag/lead window functions for u (one entity-partition
-    sort), then the SAME 27-neighbor-cell composite-band hash equi-join as
-    shell_composition_3d (cell size = radius, 3³ fixed probe copies) with
-    the squared-distance predicate — never a nested loop, one Exchange on
+    sort), then the same 3-D ``cell_join`` as shell_composition_3d (cell
+    size = radius, 3³ fixed probe copies) with the squared-distance
+    predicate — never a nested loop, one Exchange on
     (entity, cell). All classification arithmetic is fixed-order IEEE
     double (subtract/multiply/add), so an O(N²) SQL oracle reproduces the
     counts bit-exactly.
@@ -306,25 +292,10 @@ def half_exposure_3d(
         (2 * F.col(cy) - F.lag(cy).over(w) - F.lead(cy).over(w)).alias("__uy"),
         (2 * F.col(cz) - F.lag(cz).over(w) - F.lead(cz).over(w)).alias("__uz"),
     ).where(F.col("__ux").isNotNull())
-    cell = float(radius)
-    spark = points.sparkSession
-    offsets = spark.createDataFrame(
-        [(dx, dy, dz) for dx in (-1, 0, 1) for dy in (-1, 0, 1) for dz in (-1, 0, 1)],
-        "dx long, dy long, dz long",
-    )
-    prb = oriented.crossJoin(F.broadcast(offsets)).select(
-        "__qe", "node", "__qx", "__qy", "__qz", "__ux", "__uy", "__uz",
-        (F.floor(F.col("__qx") / cell).cast("long") + F.col("dx")).alias("__cx"),
-        (F.floor(F.col("__qy") / cell).cast("long") + F.col("dy")).alias("__cy"),
-        (F.floor(F.col("__qz") / cell).cast("long") + F.col("dz")).alias("__cz"),
-    )
     pts = points.select(
         F.col(entity).alias("__pe"),
         F.col(node_id).alias("m"),
         F.col(cx).alias("__px"), F.col(cy).alias("__py"), F.col(cz).alias("__pz"),
-        F.floor(F.col(cx) / cell).cast("long").alias("__cx"),
-        F.floor(F.col(cy) / cell).cast("long").alias("__cy"),
-        F.floor(F.col(cz) / cell).cast("long").alias("__cz"),
     )
     d2 = (
         (F.col("__px") - F.col("__qx")) * (F.col("__px") - F.col("__qx"))
@@ -337,12 +308,9 @@ def half_exposure_3d(
         + (F.col("__pz") - F.col("__qz")) * F.col("__uz")
     )
     near = (
-        prb.join(
-            pts,
-            (F.col("__qe") == F.col("__pe"))
-            & (prb["__cx"] == pts["__cx"])
-            & (prb["__cy"] == pts["__cy"])
-            & (prb["__cz"] == pts["__cz"]),
+        cell_join(
+            oriented, pts, [("__qe", "__pe")],
+            [("__qx", "__px"), ("__qy", "__py"), ("__qz", "__pz")], float(radius),
         )
         .where(F.col("node") != F.col("m"))
         .withColumn("__d2", d2)

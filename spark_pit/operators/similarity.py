@@ -292,9 +292,9 @@ def embedding_neardup(
     theta join. A pair at cosine ≥ 0.9 (θ/π ≤ 0.144) misses one 4-bit band
     w.p. ≤ 1-0.537, so 16 bands leave a miss probability ≈ 4e-6 per pair;
     the exact-cosine verify runs only on bucket-colliding candidates.
-    Deterministic seeded planes → reproducible; ``embedding_neardup_exact``
-    below is the brute-force twin the tests cross-check recall against (and
-    it shares this oracle).
+    Deterministic seeded planes → reproducible; the tests and the oracle
+    check recall against the all-pairs cosine query
+    (``Q_EMBEDDING_NEARDUP_SQL``).
 
     Physical shape (round-7 rewrite, guide §2.3/§4.2): the former
     formulation MATERIALIZED the intra-bucket pair space as rows — an
@@ -373,8 +373,7 @@ def embedding_neardup(
         # exact normalized vectors: cos(i,j) = (v_i/|v_i|)·(v_j/|v_j|);
         # 0-norm rows (all-zero vectors) match nothing: an infinite norm
         # zeroes their row of cosines, the same outcome as the NULL
-        # cosine of embedding_neardup_exact (try_divide) and of the
-        # DuckDB oracle (0/0 is NULL there)
+        # cosine of the DuckDB oracle (0/0 is NULL there)
         norms = np.sqrt((m * m).sum(axis=1))
         norms[norms == 0.0] = np.inf
         v = m / norms[:, None]
@@ -405,33 +404,6 @@ def embedding_neardup(
         bucket_kernel, schema=f"qid {id_type}, cand {id_type}"
     )
     dup = per_bucket.groupBy("qid").agg(F.min("cand").alias("dup_of"))
-    return (
-        df.select(F.col(id_col).alias("qid"))
-        .join(dup, "qid", "left")
-        .select(
-            F.col("qid").alias(id_col),
-            F.col("dup_of").isNotNull().alias("is_dup"),
-            "dup_of",
-        )
-    )
-
-
-def embedding_neardup_exact(
-    df: DataFrame, id_col: str, vec_col: str, threshold: float = 0.95
-) -> DataFrame:
-    """Brute-force all-pairs twin of embedding_neardup — O(N²) BY DESIGN,
-    the small-N calibration baseline the LSH path's recall is tested
-    against (tests/test_similarity). Never the production path. An
-    all-zero vector has a NULL cosine (try_divide) and so matches nothing,
-    as in embedding_neardup."""
-    base = with_norm(df.select(id_col, vec_col), id_col, vec_col)
-    a = base.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"), F.col("norm").alias("qn"))
-    b = base.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("nv"), F.col("norm").alias("nn"))
-    pairs = a.join(b, F.col("nid") < F.col("qid")).select(
-        "qid", "nid",
-        F.try_divide(_dot(F.col("qv"), F.col("nv")), F.col("qn") * F.col("nn")).alias("cos"),
-    ).where(F.col("cos") >= threshold)
-    dup = pairs.groupBy("qid").agg(F.min("nid").alias("dup_of"))
     return (
         df.select(F.col(id_col).alias("qid"))
         .join(dup, "qid", "left")

@@ -1519,17 +1519,21 @@ def q_streaming_asof_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming/batch parity as a DRIVER-GATE row (judge round-2 ask #6):
     runs the streaming PIT operator (``segment_features`` under
     applyInPandasWithState, Trigger.AvailableNow over the events file =
-    ordered arrival, the documented correctness regime) AND the batch
-    strictly-before join on the same events, then full-outer-joins the
-    two result sets on the as-of match. Output is one row of diff counts
-    — all zero when the streaming operator reproduces batch semantics
-    exactly — pinned by the oracle, so any drift in the streaming state
-    machine flips the gate red."""
+    ordered arrival, the documented correctness regime) AND
+    ``pit_features_declarative`` on the same events (purchases as
+    snapshots), then full-outer-joins the two on event_id and compares
+    every column the stream emits, floats and ``wc`` elements rounded to
+    6 decimals. Output is one row of diff counts — all zero when the
+    streaming operator reproduces batch semantics exactly — pinned by the
+    oracle, so any drift in the streaming state machine flips the gate
+    red."""
+    from spark_pit.operators.pit import pit_features_declarative
     from spark_pit.streaming import run_available_now, streaming_pit_features
 
+    tagged = F.col("event_id").isNotNull() & F.col("event_type").isNotNull()
     raw = (
         _event_stream(spark, sf_dir)
-        .where(F.col("event_id").isNotNull() & F.col("event_type").isNotNull())
+        .where(tagged)
         .select(
             "user_id",
             F.col("ts").cast("timestamp_ltz").alias("ts"),
@@ -1547,19 +1551,27 @@ def q_streaming_asof_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "update",
     )
-    ev = _ev(spark, sf_dir)
+    ev = _ev(spark, sf_dir).where(tagged)
     snaps = ev.where(F.col("event_type") == "purchase").select(
         "user_id", F.col("ts").alias("snapshot_ts"),
         F.col("event_id").alias("snapshot_id"),
     )
-    events = ev.where(F.col("event_type") != "purchase").select(
-        "event_id", "user_id", "ts"
+    batch = pit_features_declarative(
+        ev.where(F.col("event_type") != "purchase"), snaps, "user_id", "ts", "value",
+        "event_type", EVENT_VOCAB, tiebreak="event_id",
     )
-    batch = asof_join_window(
-        events, snaps, ["user_id"], "ts", "snapshot_ts",
-        ["snapshot_id"], strict=True, right_order="snapshot_id",
+    exact = ["asof_snapshot_id", "session_id", "session_pos"]
+    floats = ["asof_age_sec", "lag1_value", "value_bf", "roll_mean_value"]
+
+    def rounded(df: DataFrame) -> DataFrame:
+        return df.select(
+            "event_id", *exact, *[F.round(c, 6).alias(c) for c in floats],
+            F.transform("wc", lambda x: F.round(x, 6)).alias("wc"),
+        )
+
+    return _parity_counts(
+        rounded(stream), rounded(batch), ["event_id"], [*exact, *floats, "wc"]
     )
-    return _parity_counts(stream, batch, ["event_id"], ["asof_snapshot_id"])
 
 
 

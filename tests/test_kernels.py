@@ -209,32 +209,6 @@ def test_segment_composition_matches_loop():
             assert f["wc"][i, t] == pytest.approx(np.sum(window == t) / size)
 
 
-def test_cross_cov_matches_loop():
-    rng = np.random.default_rng(13)
-    x1 = rng.normal(size=30)
-    x2 = rng.normal(size=30)
-    out = kernels.cross_cov(x1, x2, 2)
-    m1, m2 = x1.mean(), x2.mean()
-    for n in (1, 2):
-        want = ((x1[:-n] - m1) * (x2[n:] - m2)).sum() / (30 - n)
-        assert out[n - 1] == pytest.approx(want)
-
-
-def test_distribution_positions_matches_loop():
-    """CTDD semantics (feature.py:1957-1976 Count1 helper)."""
-    rng = np.random.default_rng(17)
-    codes = rng.integers(0, 3, size=40)
-    out = kernels.distribution_positions(codes, 3)
-    L = len(codes)
-    for t in range(3):
-        pos = [i for i, c in enumerate(codes) if c == t]
-        total = len(pos)
-        for qi, q in enumerate((0.0, 0.25, 0.5, 0.75, 1.0)):
-            k = 1 if q == 0.0 else int(np.ceil(q * total))
-            want = (pos[k - 1] + 1) * 100.0 / L if total else 0.0
-            assert out[t, qi] == pytest.approx(want)
-
-
 def test_target_encode_pit_no_leakage(spark):
     """Expanding target encoding: each row's mean covers strictly-earlier
     same-category rows only (pandas expanding().mean().shift() twin), the

@@ -2,11 +2,18 @@
 
 from __future__ import annotations
 
+import sys
+from pathlib import Path
+
 import numpy as np
 import pandas as pd
 import pytest
 
 from spark_pit.operators.similarity import ann_lsh_topk, cosine_topk
+
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
+
+from check_oracle import compare  # noqa: E402
 
 
 @pytest.fixture(scope="module")
@@ -90,12 +97,16 @@ def test_ivf_topk_exact_scores_and_planted_recall(spark):
     assert hits >= 9  # jittered twins share a cell; near-total recall
 
 
-def test_embedding_neardup_lsh_matches_exact(spark):
-    """The LSH-bucketed near-dup path must reproduce the brute-force result
-    on data with planted near-duplicates (recall 1.0 at 16 bands × 4 bits
-    for cosine ≥ 0.9 pairs). All-zero vectors have no cosine and match
-    nothing on either path."""
-    from spark_pit.operators.similarity import embedding_neardup, embedding_neardup_exact
+def test_embedding_neardup_lsh_matches_exact(spark, tmp_path):
+    """The LSH-bucketed near-dup path must reproduce the all-pairs cosine
+    oracle (``Q_EMBEDDING_NEARDUP_SQL`` on DuckDB) on data with planted
+    near-duplicates (recall 1.0 at 16 bands × 4 bits for cosine ≥ 0.9
+    pairs). All-zero vectors have no cosine (0/0 is NULL in DuckDB) and
+    match nothing on either side."""
+    import duckdb
+
+    from spark_pit.operators.similarity import embedding_neardup
+    from spark_pit.queries import Q_EMBEDDING_NEARDUP_SQL
 
     rng = np.random.default_rng(3)
     n, d = 62, 16
@@ -105,14 +116,20 @@ def test_embedding_neardup_lsh_matches_exact(spark):
         mat[40 + i] = mat[i] + rng.standard_normal(d) * 0.02
     mat[60:] = 0.0  # two all-zero vectors
     pdf = pd.DataFrame({"vec_id": range(n), "embedding": [list(map(float, v)) for v in mat]})
-    df = spark.createDataFrame(pdf, schema="vec_id long, embedding array<float>")
-    got = embedding_neardup(df, "vec_id", "embedding", threshold=0.9).toPandas()
-    want = embedding_neardup_exact(df, "vec_id", "embedding", threshold=0.9).toPandas()
+    # both engines read the same parquet file, so both see the float32
+    # values Spark holds
+    path = str(tmp_path / "embeddings")
+    spark.createDataFrame(pdf, schema="vec_id long, embedding array<float>").write.parquet(path)
+    got = embedding_neardup(
+        spark.read.parquet(path), "vec_id", "embedding", threshold=0.9
+    ).toPandas()
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{path}/*.parquet'")
+    want = con.execute(Q_EMBEDDING_NEARDUP_SQL).df()
     g = got.sort_values("vec_id").reset_index(drop=True)
-    w = want.sort_values("vec_id").reset_index(drop=True)
     assert g["is_dup"].sum() >= 20
     assert g.loc[g["vec_id"] >= 60, "is_dup"].tolist() == [False, False]
-    pd.testing.assert_frame_equal(g, w)
+    assert compare("embedding_neardup", got, want) == []
 
 
 def test_knn_ann_recall_vs_exact(spark, sf_dir):
