@@ -11,7 +11,7 @@ affinity_propagation_grouped (APC)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from spark_pit.operators.rangejoin import cell_join
@@ -216,19 +216,19 @@ def mean_shift_1d(
     )
 
 
-def affinity_propagation_1d(
+def affinity_propagation_grouped(
     points: DataFrame,
     entity: str,
     node_id: str,
     coord: str,
-    n_iter: int = 10,
+    n_iter: int = 60,
 ) -> DataFrame:
     """Affinity Propagation analogue (the reference's last sklearn-only
     clusterer row, feature.py:4838-4864 family) on the 1-D coordinate:
-    similarity s(i,k) = −(xᵢ−x_k)², preference = the LOWER MEDIAN of the
-    off-diagonal similarities (sklearn's default is the median; the lower
-    median is the deterministic order statistic both engines compute
-    identically — no two-middle averaging), K damped message-passing
+    similarity s(i,k) = −(xᵢ−x_k)² on coordinates quantized to scale 6,
+    preference = the LOWER MEDIAN of the off-diagonal similarities
+    (sklearn's default is the median; the lower median is a deterministic
+    order statistic, no two-middle averaging), K damped message-passing
     rounds (λ=1/2):
 
       r(i,k) ← s(i,k) − max_{k'≠k}(a(i,k') + s(i,k'))
@@ -239,167 +239,22 @@ def affinity_propagation_1d(
     max-similarity exemplar (ties → smallest k; no exemplar → the entity's
     min node id, one cluster).
 
-    EVERY quantity stays exact DECIMAL: squared diffs, sums, maxes, and the
-    λ=1/2 damping are closed under decimal arithmetic, and the one place a
-    digit must be dropped — requantizing the halved messages back to scale
-    9 — uses ``round(x, 9)``, which BOTH engines define as half away from
-    zero on decimals. (A plain CAST rescale would NOT work: Spark casts
-    round half-up but DuckDB casts round half-EVEN, and λ=1/2 manufactures
-    exact .5 ties constantly — measured divergence.) The message matrix is
-    O(N²) per entity (AP is inherently quadratic — the reference's own
-    per-graph regime); each round is two join+window passes
-    shuffle-partitioned on the entity key.
-
-    ROLE: cross-engine exactness witness, not the production path. AP
-    state is entity-local, so global rounds buy nothing but K shuffles and
-    K Catalyst re-plans (measured: ~2 s/round on a trivial fixture, and
-    driver-side planning grows superlinearly past ~20 rounds even with
-    per-round ``localCheckpoint``). Use
-    :func:`affinity_propagation_grouped` — the same recurrence in scaled
-    int64 inside one ``applyInPandas`` — for converged clustering;
-    test_pairs_r2 proves the two agree row-for-row at equal n_iter."""
-    def tight(s: int) -> str:
-        return f"decimal({s + 13},{s})"
-
-    x = points.select(
-        F.col(entity).alias("e"),
-        F.col(node_id).alias("i"),
-        F.col(coord).cast("decimal(18,6)").alias("xi"),
-    )
-    y = x.select(F.col("e"), F.col("i").alias("k"), F.col("xi").alias("xk"))
-    d = F.col("xi") - F.col("xk")
-    sim = x.join(y, "e").select(
-        "e", "i", "k", (-(d * d)).cast("decimal(16,9)").alias("s")
-    )
-    # lower median of off-diagonal similarities: rank the exact decimals
-    # (ties broken by (i,k) for full determinism) and take row ⌈n/2⌉
-    off = sim.where(F.col("i") != F.col("k"))
-    wrank = Window.partitionBy("e").orderBy("s", "i", "k")
-    ranked = off.withColumn("__rn", F.row_number().over(wrank)).withColumn(
-        "__n", F.count(F.lit(1)).over(Window.partitionBy("e"))
-    )
-    pref = ranked.where(
-        F.col("__rn") == F.ceil(F.col("__n") / 2).cast("int")
-    ).select("e", F.col("s").alias("p"))
-    s_df = (
-        sim.join(F.broadcast(pref), "e")
-        .select(
-            "e", "i", "k",
-            F.when(F.col("i") == F.col("k"), F.col("p")).otherwise(F.col("s"))
-            .cast("decimal(16,9)").alias("s"),
-        )
-        .localCheckpoint()
-    )
-    msgs = s_df.select(
-        "e", "i", "k",
-        F.lit(0).cast(tight(9)).alias("r"),
-        F.lit(0).cast(tight(9)).alias("a"),
-    )
-    half = F.lit("0.5").cast("decimal(2,1)")
-    zero = F.lit(0).cast(tight(9))
-    wi = Window.partitionBy("e", "i")
-    for _ in range(n_iter):
-        cur = msgs.join(s_df, ["e", "i", "k"])
-        # argmax_k of a+s with smallest-k tie-break, plus the runner-up value
-        cur = cur.withColumn("__v", (F.col("a") + F.col("s")).cast(tight(9)))
-        cur = cur.withColumn(
-            "__m1",
-            F.max(F.struct(F.col("__v").alias("v"), (-F.col("k")).alias("nk"))).over(wi),
-        )
-        arg1 = -F.col("__m1.nk")
-        max1 = F.col("__m1.v")
-        cur = cur.withColumn(
-            "__m2",
-            F.max(F.when(F.col("k") != arg1, F.col("__v"))).over(wi),
-        )
-        rnew = (
-            F.col("s") - F.when(F.col("k") == arg1, F.col("__m2")).otherwise(max1)
-        ).cast(tight(9))
-        rsum = (F.col("r") + rnew).cast(tight(9))
-        # damping + the ONLY digit drop: round(x, 9) = half away from zero
-        # in BOTH engines (cast rescale would tie-break differently)
-        cur = cur.withColumn("r", F.round(rsum * half, 9).cast(tight(9)))
-        # availability: per k, the positive-responsibility pool
-        rp = F.when(
-            (F.col("i") != F.col("k")) & (F.col("r") > 0), F.col("r")
-        ).otherwise(zero)
-        cur = cur.withColumn("__rp", rp)
-        pool = cur.groupBy("e", "k").agg(
-            F.sum("__rp").cast(tight(9)).alias("__pool")
-        )
-        rkk = cur.where(F.col("i") == F.col("k")).select(
-            "e", "k", F.col("r").alias("__rkk")
-        )
-        cur = cur.join(pool, ["e", "k"]).join(rkk, ["e", "k"])
-        inner = (F.col("__rkk") + F.col("__pool") - F.col("__rp")).cast(tight(9))
-        anew = F.when(F.col("i") == F.col("k"), F.col("__pool")).otherwise(
-            F.least(zero, inner)
-        )
-        asum = (F.col("a") + anew).cast(tight(9))
-        msgs = cur.select(
-            "e", "i", "k", "r",
-            F.round(asum * half, 9).cast(tight(9)).alias("a"),
-        ).localCheckpoint()
-    diag = msgs.where(F.col("i") == F.col("k"))
-    exemplars = diag.where((F.col("r") + F.col("a")) > 0).select(
-        "e", F.col("k").alias("ex")
-    )
-    cand = (
-        s_df.join(exemplars.withColumnRenamed("ex", "k"), ["e", "k"])
-        .groupBy("e", "i")
-        .agg(F.max(F.struct(F.col("s").alias("v"), (-F.col("k")).alias("nk"))).alias("__b"))
-        .select("e", "i", (-F.col("__b.nk")).alias("cluster"))
-    )
-    fallback = x.groupBy("e").agg(F.min("i").alias("__fb"))
-    out = (
-        x.select("e", "i")
-        .join(cand, ["e", "i"], "left")
-        .join(F.broadcast(fallback), "e")
-        .select(
-            F.col("e").alias(entity),
-            F.col("i").alias("node"),
-            F.coalesce("cluster", F.col("__fb")).alias("cluster"),
-        )
-    )
-    # exemplars label themselves even if a non-self similarity ties
-    return out.join(
-        exemplars.select(F.col("e").alias(entity), F.col("ex").alias("node"),
-                         F.lit(True).alias("__isx")),
-        [entity, "node"], "left",
-    ).select(
-        entity, "node",
-        F.when(F.col("__isx"), F.col("node")).otherwise(F.col("cluster"))
-        .alias("cluster"),
-    )
-
-
-def affinity_propagation_grouped(
-    points: DataFrame,
-    entity: str,
-    node_id: str,
-    coord: str,
-    n_iter: int = 60,
-) -> DataFrame:
-    """The SCALE path for Affinity Propagation: identical semantics to
-    :func:`affinity_propagation_1d` (same similarities, lower-median
-    preference, λ=1/2 damping, round-half-away-from-zero requantization to
-    scale 9, same tie-breaks), but the message matrix never leaves the
-    entity's task. AP is per-entity-quadratic with entity-local state, so
-    the right 100 TB plan is ONE shuffle (``groupBy(entity)``) and the full
-    K-round message loop inside an Arrow batch — not K global shuffle
-    rounds. The kernel runs the exact decimal recurrence in scaled int64
-    (scale-9 fixed point): add/sub/max/sum are closed, and the single
-    halving digit-drop is ``(|v|+1)//2`` with the sign restored — bit-equal
-    to ``round(x*0.5, 9)`` on decimals. test_analysis cross-checks this
-    kernel against the global decimal-DataFrame variant row-for-row.
+    AP is per-entity-quadratic with entity-local state, so the plan is ONE
+    shuffle (``groupBy(entity)``) and the full K-round message loop inside
+    an Arrow batch, not K global shuffle rounds. The kernel runs the
+    recurrence exactly in scaled int64 (scale-9 fixed point, i.e. decimal
+    arithmetic): add/sub/max/sum are closed, and the single halving
+    digit-drop is ``(|v|+1)//2`` with the sign restored, which is
+    ``round(x*0.5, 9)`` on decimals (half away from zero). test_pairs_r2
+    pins the assignments at mid-oscillation horizons; the
+    ``affinity_clusters`` oracle checks the converged ones.
 
     ``n_iter=60``: λ=1/2 message passing oscillates through a
     many-exemplar phase for the first few dozen rounds (a float reference
     run shows the same trajectory — every near-centre point self-exemplar
     at round 30, converged two-exemplar state from round ~60; sklearn's
     own default is max_iter=200 with a 15-round convergence window).
-    Iterations are entity-local NumPy, so extra rounds cost microseconds,
-    unlike the global variant where each round is a shuffle.
+    Iterations are entity-local NumPy, so extra rounds cost microseconds.
 
     Scaled-int64 bounds: coords quantize at scale 6, so |s|·10⁹ < 10¹⁶ for
     coordinate spreads below ~3·10³, and per-round sums stay under 2⁶³ for

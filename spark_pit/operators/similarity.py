@@ -1,15 +1,16 @@
 """Similarity search over embedding columns (array<float>).
 
-- cosine_topk: exact brute-force baseline. Pairwise cross join + a JVM-side
-  sequential fold (zip_with + aggregate) for the dot product — deterministic
-  summation order, so the DuckDB oracle (zip-unnest + sum) is bit-comparable
-  after rounding. O(N²·d): correct at test scale, the calibration baseline
-  at real scale.
-- ann_lsh_topk: the scale path — random-hyperplane LSH. Deterministic
-  hyperplanes (seeded, driver-side, broadcast), sign-bit bucket key, exact
-  cosine only within bucket. Sub-quadratic when buckets are balanced;
-  recall/probe trade-off via n_planes. (An IVF variant would swap the
-  bucket key for a k-means cell id — same plan shape.)
+Five cosine top-k operators share one ranking stage, ``_cosine_topk``:
+candidate pairs, an exact cosine, then ``row_number() <= k`` per query
+(cosine DESC, neighbor id ASC). Each brings only its candidates and its
+output: cosine_topk (exact, all pairs), ann_lsh_topk (sign-bit bucket of
+seeded driver-side hyperplanes), ivf_topk (k-means cells, ``nprobe``
+probes), knn_label_fractions (per-label fractions of the top-k training
+neighbors, training side broadcast) and knn_label_fractions_ann (the same
+from multi-probe LSH). Dot products are JVM-side sequential folds
+(zip_with + aggregate), so the DuckDB oracles (zip-unnest + sum) are
+bit-comparable after rounding. A pair with an all-zero vector has a NULL
+cosine (``try_divide``; 0/0 is NULL in DuckDB too) and ranks last.
 """
 
 from __future__ import annotations
@@ -27,36 +28,49 @@ def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v)
 
 
-def with_norm(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+def with_norm(df: DataFrame, id_col: str, vec_col: str, *keep) -> DataFrame:
+    """(id, the vector as array<double>, its L2 ``norm``, *keep)."""
     v = _as_double(vec_col)
     return df.select(
-        F.col(id_col), v.alias(vec_col), F.sqrt(_dot(v, v)).alias("norm")
+        F.col(id_col), v.alias(vec_col), F.sqrt(_dot(v, v)).alias("norm"), *keep
+    )
+
+
+def _side(base: DataFrame, id_col: str, vec_col: str, s: str, *extra) -> DataFrame:
+    """A :func:`with_norm` frame as (qid, qv, qn) for ``s="q"`` or (nid,
+    nv, nn) for ``s="n"``, plus ``extra`` columns."""
+    return base.select(
+        F.col(id_col).alias(f"{s}id"), F.col(vec_col).alias(f"{s}v"),
+        F.col("norm").alias(f"{s}n"), *extra,
+    )
+
+
+def _cosine_topk(q: DataFrame, t: DataFrame, k: int, on: str | None = None) -> DataFrame:
+    """The ranking stage: ``q`` holds (qid, qv, qn), ``t`` holds (nid, nv,
+    nn) plus columns to keep, and both hold the candidate key ``on`` if
+    there is one (else every pair is a candidate). Drops self pairs, ranks
+    by (cos DESC, nid ASC) per qid and returns (qid, nid, *kept, rk, cos)
+    for rk ≤ k, cos rounded to 6 decimals."""
+    keep = [c for c in t.columns if c not in ("nid", "nv", "nn", on)]
+    ne = F.col("qid") != F.col("nid")
+    pairs = (q.join(t, ne) if on is None else q.join(t, on).where(ne)).select(
+        "qid", "nid", *keep,
+        F.try_divide(_dot(F.col("qv"), F.col("nv")), F.col("qn") * F.col("nn")).alias("cos"),
+    )
+    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid").asc())
+    return pairs.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k).select(
+        "qid", "nid", *keep, "rk", F.round("cos", 6).alias("cos")
     )
 
 
 def cosine_topk(
     df: DataFrame, id_col: str, vec_col: str, k: int = 5
 ) -> DataFrame:
-    """Exact top-k cosine neighbors per vector (self excluded). Ties broken
-    by neighbor id ascending for determinism."""
+    """Exact top-k cosine neighbors per vector (self excluded), over all
+    pairs. Ties broken by neighbor id ascending for determinism."""
     base = with_norm(df, id_col, vec_col)
-    a = base.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"), F.col("norm").alias("qn")
-    )
-    b = base.select(
-        F.col(id_col).alias("nid"), F.col(vec_col).alias("nv"), F.col("norm").alias("nn")
-    )
-    pairs = a.join(b, F.col("qid") != F.col("nid")).select(
-        "qid",
-        "nid",
-        (_dot(F.col("qv"), F.col("nv")) / (F.col("qn") * F.col("nn"))).alias("cos"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid").asc())
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select("qid", "nid", "rk", F.round("cos", 6).alias("cos"))
-    )
+    q, t = _side(base, id_col, vec_col, "q"), _side(base, id_col, vec_col, "n")
+    return _cosine_topk(q, t, k)
 
 
 def _hyperplanes(n_planes: int, dim: int, seed: int = 42) -> list[list[float]]:
@@ -64,8 +78,9 @@ def _hyperplanes(n_planes: int, dim: int, seed: int = 42) -> list[list[float]]:
     return rng.standard_normal((n_planes, dim)).round(6).tolist()
 
 
-def lsh_bucket(df: DataFrame, id_col: str, vec_col: str, n_planes: int = 8, seed: int = 42) -> DataFrame:
-    """Sign-bit bucket id from n_planes seeded hyperplanes."""
+def lsh_bucket(df: DataFrame, vec_col: str, n_planes: int = 8, seed: int = 42) -> DataFrame:
+    """``df`` with the vector as array<double> and its sign-bit ``bucket``
+    from n_planes seeded hyperplanes."""
     dim = len(df.select(vec_col).first()[0])
     planes = _hyperplanes(n_planes, dim, seed)
     v = _as_double(vec_col)
@@ -73,7 +88,7 @@ def lsh_bucket(df: DataFrame, id_col: str, vec_col: str, n_planes: int = 8, seed
     for j, p in enumerate(planes):
         proj = _dot(v, F.array(*[F.lit(float(x)) for x in p]))
         bucket = bucket + F.when(proj > 0, F.lit(2**j).cast("long")).otherwise(0)
-    return df.select(F.col(id_col), v.alias(vec_col), bucket.alias("bucket"))
+    return df.withColumns({vec_col: v, "bucket": bucket})
 
 
 def ann_lsh_topk(
@@ -81,29 +96,10 @@ def ann_lsh_topk(
 ) -> DataFrame:
     """Approximate top-k: exact cosine within LSH bucket only. The join is an
     equi-join on bucket (shuffle on a small key) instead of a cross join."""
-    bucketed = lsh_bucket(df, id_col, vec_col, n_planes, seed)
-    base = bucketed.withColumn(
-        "norm", F.sqrt(_dot(F.col(vec_col), F.col(vec_col)))
-    )
-    a = base.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"),
-        F.col("norm").alias("qn"), "bucket",
-    )
-    b = base.select(
-        F.col(id_col).alias("nid"), F.col(vec_col).alias("nv"),
-        F.col("norm").alias("nn"), "bucket",
-    )
-    pairs = a.join(b, "bucket").where(F.col("qid") != F.col("nid")).select(
-        "qid",
-        "nid",
-        (_dot(F.col("qv"), F.col("nv")) / (F.col("qn") * F.col("nn"))).alias("cos"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid").asc())
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select("qid", "nid", "rk", F.round("cos", 6).alias("cos"))
-    )
+    base = with_norm(lsh_bucket(df, vec_col, n_planes, seed), id_col, vec_col, "bucket")
+    q = _side(base, id_col, vec_col, "q", "bucket")
+    t = _side(base, id_col, vec_col, "n", "bucket")
+    return _cosine_topk(q, t, k, on="bucket")
 
 
 def ivf_topk(
@@ -157,29 +153,14 @@ def ivf_topk(
     # home cell = nearest centroid (probe rank 1); probe list for the query
     # side — __home reads the materialized __probe column so the centroid
     # distance expression is evaluated once per row
-    base = feats.select(
-        id_col, vec_col, F.sqrt(_dot(v, v)).alias("norm")
-    ).withColumn("__probe", probed).withColumn("__home", F.col("__probe")[0])
-    q = base.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"),
-        F.col("norm").alias("qn"), F.explode("__probe").alias("cell"),
-    )
-    t = base.select(
-        F.col(id_col).alias("nid"), F.col(vec_col).alias("nv"),
-        F.col("norm").alias("nn"), F.col("__home").alias("cell"),
-    )
+    base = with_norm(feats, id_col, vec_col).withColumn(
+        "__probe", probed
+    ).withColumn("__home", F.col("__probe")[0])
+    q = _side(base, id_col, vec_col, "q", F.explode("__probe").alias("cell"))
+    t = _side(base, id_col, vec_col, "n", F.col("__home").alias("cell"))
     # each neighbor has exactly ONE home cell, so a (q, n) pair matches at
     # most one probed cell — no dedup shuffle needed
-    pairs = q.join(t, "cell").where(F.col("qid") != F.col("nid")).select(
-        "qid", "nid",
-        (_dot(F.col("qv"), F.col("nv")) / (F.col("qn") * F.col("nn"))).alias("cos"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid").asc())
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select("qid", "nid", "rk", F.round("cos", 6).alias("cos"))
-    )
+    return _cosine_topk(q, t, k, on="cell")
 
 
 def centroid_per_label(df: DataFrame, label_col: str, vec_col: str) -> DataFrame:
@@ -211,26 +192,15 @@ def knn_label_fractions(
     per-label neighbor fraction (`CalculateContent` feature.py:3791-3800).
 
     Plan: query x train join with the train side broadcast (training sets
-    are the small dimension at scale), rank-filter via row_number over the
-    per-query window (ties by neighbor id, mirroring the reference's
-    deterministic lexsort at feature.py:3853), conditional-mean aggregate.
+    are the small dimension at scale) and carrying the label, rank-filter
+    via row_number over the per-query window (ties by neighbor id,
+    mirroring the reference's deterministic lexsort at feature.py:3853),
+    conditional-mean aggregate.
     """
-    base = with_norm(df.select(id_col, vec_col), id_col, vec_col)
-    labels = df.select(F.col(id_col).alias("nid"), F.col(label_col).alias("nlabel"))
-    q = base.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"), F.col("norm").alias("qn")
-    )
-    t = (
-        base.where(train_pred(F.col(id_col)))
-        .select(F.col(id_col).alias("nid"), F.col(vec_col).alias("nv"), F.col("norm").alias("nn"))
-        .join(labels, "nid")
-    )
-    pairs = q.join(F.broadcast(t), F.col("qid") != F.col("nid")).select(
-        "qid", "nid", "nlabel",
-        (_dot(F.col("qv"), F.col("nv")) / (F.col("qn") * F.col("nn"))).alias("cos"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid").asc())
-    topk = pairs.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k)
+    base = with_norm(df, id_col, vec_col, F.col(label_col).alias("nlabel"))
+    q = _side(base, id_col, vec_col, "q")
+    t = _side(base.where(train_pred(F.col(id_col))), id_col, vec_col, "n", "nlabel")
+    topk = _cosine_topk(q, F.broadcast(t), k)
     return topk.groupBy("qid", "nlabel").agg(
         (F.count(F.lit(1)) / F.lit(float(k))).alias("frac")
     )
@@ -437,31 +407,19 @@ def knn_label_fractions_ann(
     denominator, so a query whose probes recover fewer than k true
     neighbors reports lower mass — the standard ANN recall trade,
     measured in tests against the exact operator."""
-    bucketed = lsh_bucket(df.select(id_col, vec_col), id_col, vec_col, n_planes, seed)
-    base = bucketed.withColumn("norm", F.sqrt(_dot(F.col(vec_col), F.col(vec_col))))
-    labels = df.select(F.col(id_col).alias("nid"), F.col(label_col).alias("nlabel"))
+    base = with_norm(
+        lsh_bucket(df, vec_col, n_planes, seed), id_col, vec_col,
+        "bucket", F.col(label_col).alias("nlabel"),
+    )
     probes = F.array(
         F.col("bucket"),
         *[F.col("bucket").bitwiseXOR(F.lit(2 ** j)) for j in range(n_planes)],
     )
-    q = base.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"),
-        F.col("norm").alias("qn"), F.explode(probes).alias("bucket"),
+    q = _side(base, id_col, vec_col, "q", F.explode(probes).alias("bucket"))
+    t = _side(
+        base.where(train_pred(F.col(id_col))), id_col, vec_col, "n", "bucket", "nlabel"
     )
-    t = (
-        base.where(train_pred(F.col(id_col)))
-        .select(
-            F.col(id_col).alias("nid"), F.col(vec_col).alias("nv"),
-            F.col("norm").alias("nn"), "bucket",
-        )
-        .join(labels, "nid")
-    )
-    pairs = q.join(t, "bucket").where(F.col("qid") != F.col("nid")).select(
-        "qid", "nid", "nlabel",
-        (_dot(F.col("qv"), F.col("nv")) / (F.col("qn") * F.col("nn"))).alias("cos"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid").asc())
-    topk = pairs.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k)
+    topk = _cosine_topk(q, t, k, on="bucket")
     return topk.groupBy("qid", "nlabel").agg(
         (F.count(F.lit(1)) / F.lit(float(k))).alias("frac")
     )

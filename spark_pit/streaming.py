@@ -381,8 +381,6 @@ def streaming_target_encode(
             cnt, total = 0, 0
         order = [ts] + ([tiebreak] if tiebreak else [])
         for pdf in _whole_group(pdfs):
-            if not len(pdf):
-                continue
             pdf = pdf.sort_values(order, kind="stable")
             v = pdf[target_col].to_numpy(dtype="float64")
             us = np.rint(v * 1e6).astype("int64")
@@ -473,8 +471,6 @@ def streaming_scd2(
         order = [ts] + ([tiebreak] if tiebreak else [])
         ent = key[0]
         for pdf in _whole_group(pdfs):
-            if not len(pdf):
-                continue
             pdf = pdf.sort_values(order, kind="stable")
             t_us = pdf[ts].to_numpy().astype("datetime64[us]").astype("int64")
             closed = []
@@ -546,8 +542,6 @@ def streaming_funnel(
         ent = key[0]
         touched = False
         for pdf in _whole_group(pdfs):
-            if not len(pdf):
-                continue
             pdf = pdf.sort_values(order, kind="stable")
             t_us = pdf[ts].to_numpy().astype("datetime64[us]").astype("int64")
             for s, tu in zip(pdf[step_col].to_numpy(), t_us):

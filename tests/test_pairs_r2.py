@@ -234,25 +234,34 @@ def test_affinity_grouped_converges_per_blob(spark):
     assert out[out["g"] == 3]["cluster"].tolist() == [7]
 
 
-def test_affinity_decimal_matches_kernel_bitwise(spark):
-    """The global decimal-DataFrame variant and the scaled-int64 grouped
-    kernel implement the SAME recurrence: identical assignments at
-    mid-oscillation horizons (odd counts exercise the half-away-from-zero
-    requantization; the 1/64-grid coords are exact at both engines'
-    scale-6 quantization)."""
-    from spark_pit.operators.analysis import (
-        affinity_propagation_1d,
-        affinity_propagation_grouped,
-    )
+# (g, node, cluster) of affinity_propagation_grouped at two
+# mid-oscillation horizons, taken where a decimal-DataFrame evaluation of
+# the same recurrence agreed with the kernel row for row. Entity 4 (1/64-grid
+# coordinates, exact at scale 6) tells the halving's rounding apart: rounding
+# half toward zero instead of away from it leaves it without an exemplar at
+# n_iter=3 (every node -> 0).
+_AP_PIN_FIXTURE = _AP_FIXTURE + [
+    (4, 0, 0.140625), (4, 1, 0.25), (4, 2, 0.453125), (4, 3, 0.515625)
+]
+_AP_PINS = {
+    3: [0] * 12 + [0, 0, 0] + [7] + [1, 1, 1, 1],
+    7: [0] * 12 + [0, 1, 1] + [7] + [1, 1, 2, 2],
+}
 
-    df = spark.createDataFrame(_AP_FIXTURE, "g long, node long, v double")
-    for it in (3, 7):
-        a = (affinity_propagation_1d(df, "g", "node", "v", n_iter=it)
-             .toPandas().sort_values(["g", "node"]).reset_index(drop=True))
-        b = (affinity_propagation_grouped(df, "g", "node", "v", n_iter=it)
-             .toPandas().sort_values(["g", "node"]).reset_index(drop=True))
-        assert a[["g", "node", "cluster"]].astype("int64").equals(
-            b[["g", "node", "cluster"]].astype("int64")), f"n_iter={it}"
+
+@pytest.mark.parametrize("n_iter", sorted(_AP_PINS))
+def test_affinity_grouped_pinned_mid_oscillation(spark, n_iter):
+    """The scaled-int64 kernel reproduces the exact decimal recurrence at
+    horizons where it has not converged (odd round counts exercise the
+    half-away-from-zero requantization)."""
+    from spark_pit.operators.analysis import affinity_propagation_grouped
+
+    df = spark.createDataFrame(_AP_PIN_FIXTURE, "g long, node long, v double")
+    out = (affinity_propagation_grouped(df, "g", "node", "v", n_iter=n_iter)
+           .toPandas().sort_values(["g", "node"]))
+    got = [tuple(map(int, r)) for r in out[["g", "node", "cluster"]].itertuples(index=False)]
+    want = [(g, node, c) for (g, node, _), c in zip(_AP_PIN_FIXTURE, _AP_PINS[n_iter])]
+    assert got == want
 
 
 def test_tsne_sample_separates_blobs(spark):

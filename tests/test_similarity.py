@@ -132,6 +132,48 @@ def test_embedding_neardup_lsh_matches_exact(spark, tmp_path):
     assert compare("embedding_neardup", got, want) == []
 
 
+@pytest.mark.parametrize(
+    "name", ["cosine_topk", "ann_lsh", "knn_label_fractions", "knn_ann"]
+)
+def test_cosine_topk_zero_vectors_match_oracle(spark, tmp_path, name):
+    """All-zero vectors and an exact-duplicate pair through the registered
+    cosine top-k queries: a pair with a zero vector has no cosine (0/0 is
+    NULL in DuckDB), ranks last and breaks ties by neighbor id, so Spark
+    must match the oracle SQL instead of raising DIVIDE_BY_ZERO under
+    ANSI mode. Both engines read one planted 64-dim parquet file."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from spark_pit.queries import ORACLES, QUERIES
+
+    rng = np.random.default_rng(11)
+    n, d = 40, 64
+    mat = rng.standard_normal((n, d)).astype(np.float32)
+    mat[[10, 11]] = 0.0  # all-zero: a training (even) and a query-only id
+    mat[22] = mat[20]  # exact duplicates: tied cosines to every query
+    pq.write_table(
+        pa.table({
+            "vec_id": pa.array(range(n), pa.int64()),
+            "embedding": pa.array(mat.tolist(), pa.list_(pa.float32())),
+            "label": pa.array([i % 3 for i in range(n)], pa.int32()),
+        }),
+        tmp_path / "embeddings.parquet",
+    )
+    got = QUERIES[name](spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM '{tmp_path}/embeddings.parquet'"
+    )
+    want = con.execute(ORACLES[name]).df()
+    assert compare(name, got, want) == []
+    if name == "cosine_topk":
+        zero_q = got[got["qid"] == 11].sort_values("rk")
+        assert zero_q["cos"].isna().all() and zero_q["nid"].tolist() == [0, 1, 2, 3, 4]
+        twins = got[(got["qid"] == 20) & (got["rk"] == 1)]
+        assert twins["nid"].tolist() == [22] and twins["cos"].iloc[0] == pytest.approx(1.0)
+
+
 def test_knn_ann_recall_vs_exact(spark, sf_dir):
     """Multi-probe LSH KNN: every emitted neighbor is a true training
     vector, fractions are k-denominated, and probe recall recovers most
