@@ -2,9 +2,17 @@
 application.
 
     python tools/build_pyfiles.py                      # → dist/spark_pit.zip
-    spark-submit --py-files dist/spark_pit.zip tools/run_job.py \
+    JIT="$(python -c 'from spark_pit.session import DRIVER_JIT_OPTIONS as o; print(o)')"
+    spark-submit --py-files dist/spark_pit.zip \
+        --driver-java-options "$JIT" tools/run_job.py \
         --events /root/testdata/sf0.01/events.parquet \
         --out /tmp/pit_out --hot-threshold 50000 --num-parts 64
+
+``spark_pit.session.DRIVER_JIT_OPTIONS`` is the one source of the driver's
+JVM flags. Under spark-submit the driver JVM is running before the job calls
+``get_spark``, so the session factory cannot set them;
+``--driver-java-options`` (``spark.driver.extraJavaOptions``) does, and a
+site's ``spark.driver.defaultJavaOptions`` still applies ahead of it.
 
 Composes the engine end-to-end:
   events → (hot-entity detection) → salted/unsalted fused PIT kernel

@@ -26,7 +26,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
 
-from explain_audit import audit  # noqa: E402
+from explain_audit import audit, scan_schemas  # noqa: E402
 
 EV = ["event_id", "event_type", "ts", "user_id"]
 EVV = ["event_id", "event_type", "ts", "user_id", "value"]
@@ -169,3 +169,17 @@ def test_no_row_udf_no_cartesian_no_bytes_scan(spark, sf_dir):
             assert a["nested_loop"] == 0, name
         for fields in a["scan_fields"]:
             assert "bytes" not in fields, (name, fields)
+
+
+def test_scan_schema_fields_past_complex_types():
+    """A complex-typed field neither ends the schema nor splits in two, so
+    a column read after an array (a `bytes` leak, say) still shows up."""
+    plan = (
+        "ReadSchema: struct<vec_id:bigint,embedding:array<float>,label:int>\n"
+        "ReadSchema: struct<m:map<string,string>,d:decimal(10,2),"
+        "s:struct<x:int,y:array<int>>,bytes:binary>\n"
+        "ReadSchema: struct<>\n"
+    )
+    assert scan_schemas(plan) == [
+        ["vec_id", "embedding", "label"], ["m", "d", "s", "bytes"], [],
+    ]

@@ -24,9 +24,32 @@ def plan_text(df) -> str:
     return buf.getvalue()
 
 
+def scan_schemas(plan: str) -> list[list[str]]:
+    """Top-level field names of each ``ReadSchema: struct<…>`` in a plan.
+    Fields split on commas at bracket depth 0, so a complex-typed field
+    (``array<…>``, ``map<…>``, ``struct<…>``, ``decimal(p,s)``) neither ends
+    the schema nor splits in two."""
+    schemas = []
+    for m in re.finditer(r"ReadSchema: struct<", plan):
+        fields, depth, start = [], 0, m.end()
+        for i in range(m.end(), len(plan)):
+            ch = plan[i]
+            if ch in "<(":
+                depth += 1
+            elif ch in ">)" and depth:
+                depth -= 1
+            elif ch == ">" or (ch == "," and depth == 0):
+                fields.append(plan[start:i].split(":")[0])
+                start = i + 1
+                if ch == ">":
+                    break
+        schemas.append([f for f in fields if f])
+    return schemas
+
+
 def audit(name: str, df) -> dict:
     p = plan_text(df)
-    read_schemas = re.findall(r"ReadSchema: struct<([^>]*)>", p)
+    read_schemas = scan_schemas(p)
     return {
         "query": name,
         "exchanges": len(re.findall(r"\bExchange\b", p)),
@@ -37,12 +60,10 @@ def audit(name: str, df) -> dict:
         "python_row_udf": len(re.findall(r"BatchEvalPython", p)),
         "arrow_udf": len(re.findall(r"ArrowEvalPython|FlatMapGroupsInPandas|FlatMapCoGroupsInPandas|MapInPandas", p)),
         "wscg": len(re.findall(r"WholeStageCodegen", p)),
-        "scan_cols": [len(s.split(",")) if s else 0 for s in read_schemas],
+        "scan_cols": [len(s) for s in read_schemas],
         # field NAMES per scan (schema-level: 'bytes' leaking into a scan
         # is invisible in the count alone) — consumed by the plan guard
-        "scan_fields": [
-            sorted(f.split(":")[0] for f in s.split(",") if f) for s in read_schemas
-        ],
+        "scan_fields": [sorted(s) for s in read_schemas],
     }
 
 

@@ -1,10 +1,16 @@
 """spark-submit entry script. Usage:
 
-    spark-submit --py-files dist/spark_pit.zip tools/run_job.py \
-        --events <parquet> --out <dir> [...]
+    JIT="$(python -c 'from spark_pit.session import DRIVER_JIT_OPTIONS as o; print(o)')"
+    spark-submit --py-files dist/spark_pit.zip \
+        --driver-java-options "$JIT" \
+        tools/run_job.py --events <parquet> --out <dir> [...]
 
 The zip from tools/build_pyfiles.py puts spark_pit on every executor's
-PYTHONPATH; this script is driver-side plumbing only.
+PYTHONPATH; this script is driver-side plumbing only. The driver JVM is
+already running when the job calls ``get_spark``, so its JVM flags
+(``spark_pit.session.DRIVER_JIT_OPTIONS``, the one source of ``$JIT``)
+must come from ``--driver-java-options``; append your own flags after
+``$JIT`` to keep both.
 """
 
 import os
