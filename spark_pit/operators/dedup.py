@@ -7,8 +7,20 @@ Scale shapes (the reason each exists):
   is k mins over a seeded affine family; banding turns "similar" into
   "equal band signature", so candidates come from an equi-join (shuffle on
   band key), and only candidates pay the exact-Jaccard verify.
-- simhash: one 16-bit sketch per doc; hamming-adjacent buckets → candidates.
+- simhash: one ≤30-bit sketch per doc; hamming-adjacent buckets → candidates.
 - ngram_jaccard: exact verify primitive (also standalone for small N).
+
+Every near-dup operator here, in ``images`` (pHash) and in ``similarity``
+(embedding cosine) brings only its own sketch and parameters; the pair
+plumbing is four shared stages, each written once:
+
+- ``bucket_pairs``: the self equi-join on bucket keys, each unordered pair
+  as ``id_a < id_b`` with carried columns as ``<c>_a``/``<c>_b``;
+- ``hamming_pairs``: pigeonhole chunk keys of a hash column, then
+  ``bucket_pairs``, then the exact xor-popcount verify;
+- ``mark_duplicates``: (id, is_dup, dup_of = min ``id_a`` per ``id_b``);
+- ``cluster_duplicates``: connected components of the pair graph →
+  (id, canonical_id, cluster_size).
 
 Everything is JVM-side DataFrame ops (no Python UDF) and built on the
 portable md5-based token hash (textstats.tok_hash), so every stage has a
@@ -20,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from spark_pit.operators.graph import connected_components
 from spark_pit.operators.textstats import HASH_MOD, tok_hash, tokens
 
 # deterministic affine MinHash family (a, b) — small coefficients so
@@ -118,15 +131,91 @@ def minhash_signatures(
     return wide.select(id_col, F.expr(stack))
 
 
-def _band_join(banded: DataFrame, id_col: str) -> DataFrame:
-    a = banded.select(F.col(id_col).alias("id_a"), "band", "band_sig")
-    b = banded.select(F.col(id_col).alias("id_b"), "band", "band_sig")
+def bucket_pairs(keyed: DataFrame, id_col: str, keys: list[str], *carry: str) -> DataFrame:
+    """Near-dup candidates: the self equi-join of ``keyed`` on ``keys``.
+    Each unordered pair comes out once per bucket it shares, as
+    (keys…, id_a, <c>_a…, id_b, <c>_b…) with ``id_a < id_b``, every
+    ``carry`` column once per side. A pair sharing several buckets repeats;
+    callers that need a set add their own ``distinct``."""
+
+    def side(s: str) -> DataFrame:
+        return keyed.select(
+            F.col(id_col).alias(f"id_{s}"), *keys,
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+        )
+
+    return side("a").join(side("b"), keys).where(F.col("id_a") < F.col("id_b"))
+
+
+def hamming_pairs(
+    df: DataFrame, id_col: str, hash_col: str, bits: int, chunks: int, max_hamming: int
+) -> DataFrame:
+    """(id_a, id_b, hamming) for every pair whose ``bits``-bit ``hash_col``
+    values differ in at most ``max_hamming`` bits. The hash is split into
+    ``chunks`` chunks of ``bits // chunks`` bits (an UNSIGNED shift plus a
+    mask, so negative, high-bit-set hashes key correctly); by pigeonhole,
+    a pair at hamming distance ≤ chunks−1 agrees on at least one whole
+    chunk, so :func:`bucket_pairs` on (chunk, val) yields candidates with
+    EXACT recall for ``max_hamming ≤ chunks−1`` — no probabilistic miss,
+    unlike minhash banding. Exact hamming (xor + popcount, JVM-side)
+    verifies candidates, and ``distinct`` folds pairs found in several
+    chunks."""
+    if max_hamming > chunks - 1:
+        raise ValueError("exact recall needs max_hamming <= chunks - 1")
+    cw = bits // chunks
+    mask = (1 << cw) - 1
+    h = F.col(hash_col)
+    chunk_cols = [
+        (F.shiftrightunsigned(h, c * cw).bitwiseAND(F.lit(mask))).alias(f"__c{c}")
+        for c in range(chunks)
+    ]
+    stack = "stack({n}, {args}) as (chunk, val)".format(
+        n=chunks, args=", ".join(f"{c}, __c{c}" for c in range(chunks))
+    )
+    keyed = df.select(F.col(id_col), h, *chunk_cols).select(id_col, hash_col, F.expr(stack))
+    ham = F.bit_count(F.col(f"{hash_col}_a").bitwiseXOR(F.col(f"{hash_col}_b")))
     return (
-        a.join(b, ["band", "band_sig"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
+        bucket_pairs(keyed, id_col, ["chunk", "val"], hash_col)
+        .select("id_a", "id_b", ham.alias("hamming"))
+        .where(F.col("hamming") <= max_hamming)
         .distinct()
     )
+
+
+def mark_duplicates(ids: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
+    """Per-row dup marking from verified (id_a < id_b) pairs: every id of
+    ``ids`` with ``is_dup`` and ``dup_of`` = the smallest ``id_a`` paired
+    with it (NULL when it is nobody's ``id_b``). One partial-agg min and
+    one left join; repeated pairs are harmless."""
+    dup = pairs.groupBy("id_b").agg(F.min("id_a").alias("dup_of"))
+    return (
+        ids.select(F.col(id_col))
+        .join(dup.withColumnRenamed("id_b", id_col), id_col, "left")
+        .select(id_col, F.col("dup_of").isNotNull().alias("is_dup"), "dup_of")
+    )
+
+
+def cluster_duplicates(ids: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
+    """Duplicate CLUSTERS from verified (id_a, id_b) pairs: the pair list is
+    one graph (``__g = 0``) for :func:`graph.connected_components`; every
+    id of ``ids`` maps to ``canonical_id`` = the smallest id in its
+    component (itself when it has no pair) plus ``cluster_size``. Up to
+    ``graph.CC_EDGE_BUDGET`` edges the components are one grouped NumPy
+    kernel after the edge list's entry checkpoint; above it, min-label
+    propagation rounds (one equi-join + one partial-agg shuffle each).
+    The size is a window count on the one canonical exchange, not a
+    groupBy plus join-back."""
+    edges = pairs.select(
+        F.lit(0).alias("__g"), F.col("id_a").alias("a"), F.col("id_b").alias("b")
+    )
+    comp = connected_components(edges, "__g").select(
+        F.col("node").alias(id_col), "component"
+    )
+    canon = ids.select(id_col).join(comp, id_col, "left").select(
+        id_col, F.coalesce("component", F.col(id_col)).alias("canonical_id")
+    )
+    size = F.count(F.lit(1)).over(Window.partitionBy("canonical_id"))
+    return canon.select(id_col, "canonical_id", size.alias("cluster_size"))
 
 
 def minhash_band_sigs(
@@ -139,7 +228,12 @@ def minhash_band_sigs(
     The fast path minhash_lsh_dedup uses (2 shuffles total to candidates:
     the token agg and the band equi-join). With ``carry_toks`` the
     distinct-token array column ``__toks`` is carried along for join-free
-    downstream verification."""
+    downstream verification. ``n_hashes`` must be a multiple of
+    ``rows_per_band``: a remainder would be hashes that no band uses."""
+    if n_hashes % rows_per_band != 0:
+        raise ValueError(
+            f"n_hashes={n_hashes} must be a multiple of rows_per_band={rows_per_band}"
+        )
     wide = _minhash_wide(df, id_col, text_col, n_hashes, carry_toks)
     bands = n_hashes // rows_per_band
     band_cols = [
@@ -202,11 +296,8 @@ def jaccard_for_pairs(
 
 def _check_banding(n_hashes: int, bands: int, rows_per_band: int) -> None:
     """Banding always derives from (n_hashes, rows_per_band); an explicit
-    ``bands`` that disagrees would silently change recall, so reject it."""
-    if n_hashes % rows_per_band != 0:
-        raise ValueError(
-            f"n_hashes={n_hashes} must be a multiple of rows_per_band={rows_per_band}"
-        )
+    ``bands`` that disagrees would silently change recall, so reject it.
+    (Divisibility is checked where banding happens, minhash_band_sigs.)"""
     if bands != n_hashes // rows_per_band:
         raise ValueError(
             f"bands={bands} inconsistent: n_hashes={n_hashes} / "
@@ -259,7 +350,7 @@ def minhash_lsh_dedup(
                 "are linear in bucket size — or pass max_pairs_per_bucket=None "
                 "to force pair emission."
             )
-    pairs = _band_join(banded, id_col)
+    pairs = bucket_pairs(banded, id_col, ["band", "band_sig"]).select("id_a", "id_b").distinct()
     return jaccard_for_pairs(pairs, df, id_col, text_col).where(
         F.col("jaccard") >= threshold
     )
@@ -286,16 +377,7 @@ def minhash_dedup_mark(
     verified = _star_verified_pairs(
         df, id_col, text_col, threshold, n_hashes, rows_per_band
     )
-    dup = verified.groupBy("id_b").agg(F.min("id_a").alias("dup_of"))
-    return (
-        df.select(F.col(id_col))
-        .join(dup.withColumnRenamed("id_b", id_col), id_col, "left")
-        .select(
-            id_col,
-            F.col("dup_of").isNotNull().alias("is_dup"),
-            "dup_of",
-        )
-    )
+    return mark_duplicates(df, verified, id_col)
 
 
 def _star_verified_pairs(
@@ -343,7 +425,19 @@ def _star_verified_pairs(
 def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 16) -> DataFrame:
     """SimHash sketch: for each bit j, sign of Σ_tokens (2·bit_j(h) − 1);
     packed to one integer. Plan: distinct-token rows × tiny bit table →
-    groupBy(doc, bit) sum → groupBy(doc) pack. Two partial-agg shuffles."""
+    groupBy(doc, bit) sum → groupBy(doc) pack. Two partial-agg shuffles.
+
+    ``bits`` is at most 30: ``tok_hash`` is reduced mod HASH_MOD < 2^30,
+    so bit 30 and up of every token hash is 0, and those sketch bits would
+    be 0 for every document (one bucket holding the whole corpus in
+    :func:`simhash_neardup_pairs`)."""
+    width = HASH_MOD.bit_length()
+    if bits > width:
+        raise ValueError(
+            f"simhash bits={bits} > {width}: token hashes are reduced mod "
+            f"{HASH_MOD} < 2^{width}, so sketch bits {width} and up would be 0 "
+            "for every document"
+        )
     spark = df.sparkSession
     bit_tbl = spark.createDataFrame([(j,) for j in range(bits)], "bit int")
     toks = _distinct_tokens(df, id_col, text_col).withColumn("th", tok_hash(F.col("tok")))
@@ -374,40 +468,12 @@ def simhash_neardup_pairs(
     chunks: int = 4,
     max_hamming: int = 2,
 ) -> DataFrame:
-    """SimHash bucket-pairing (the candidate stage the sketch exists for):
-    split each ``bits``-bit sketch into ``chunks`` equal chunks; by
-    pigeonhole, any pair at hamming distance ≤ chunks-1 agrees on at least
-    one whole chunk, so an equi-join on (chunk_idx, chunk_value) generates
-    candidates with EXACT recall for max_hamming ≤ chunks-1 — no
-    probabilistic miss, unlike minhash banding. Exact hamming (xor +
-    popcount, JVM-side) verifies candidates. Returns (id_a, id_b, hamming)
-    with hamming ≤ max_hamming."""
-    if max_hamming > chunks - 1:
-        raise ValueError("exact recall needs max_hamming <= chunks - 1")
-    sk = simhash(df, id_col, text_col, bits)
-    cw = bits // chunks
-    mask = (1 << cw) - 1
-    chunk_cols = [
-        (F.shiftright(F.col("simhash"), c * cw).bitwiseAND(F.lit(mask))).alias(f"__c{c}")
-        for c in range(chunks)
-    ]
-    stack = "stack({n}, {args}) as (chunk, val)".format(
-        n=chunks, args=", ".join(f"{c}, __c{c}" for c in range(chunks))
-    )
-    keyed = sk.select(id_col, "simhash", *chunk_cols).select(
-        id_col, "simhash", F.expr(stack)
-    )
-    a = keyed.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("sk_a"), "chunk", "val")
-    b = keyed.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("sk_b"), "chunk", "val")
-    return (
-        a.join(b, ["chunk", "val"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a", "id_b",
-            F.bit_count(F.col("sk_a").bitwiseXOR(F.col("sk_b"))).alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
+    """SimHash near-dup pairs: :func:`hamming_pairs` over the ``bits``-bit
+    :func:`simhash` sketch, split into ``chunks`` pigeonhole chunks (exact
+    recall for max_hamming ≤ chunks-1). Returns (id_a, id_b, hamming) with
+    hamming ≤ max_hamming."""
+    return hamming_pairs(
+        simhash(df, id_col, text_col, bits), id_col, "simhash", bits, chunks, max_hamming
     )
 
 
@@ -454,29 +520,21 @@ def ngram_jaccard_pairs(
             .select("shingle")
         )
         cand_sh = sh.join(keep, "shingle")
-    a = cand_sh.select(F.col(id_col).alias("id_a"), "shingle")
-    b = cand_sh.select(F.col(id_col).alias("id_b"), "shingle")
+    cand = bucket_pairs(cand_sh, id_col, ["shingle"])
     if max_df is None:
         # uncapped: the join's match count IS the exact intersection size
         inter = (
-            a.join(b, "shingle")
-            .where(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b")
+            cand.groupBy("id_a", "id_b")
             .agg(F.count(F.lit(1)).alias("n_inter"))
         )
     else:
         # capped: candidates from the capped join, exact intersection from
         # a second equi-join over the FULL shingle sets
-        cand = (
-            a.join(b, "shingle")
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
         ta = sh.select(F.col(id_col).alias("id_a"), "shingle")
         tb = sh.select(F.col(id_col).alias("id_b"), "shingle")
         inter = (
-            cand.join(ta, "id_a")
+            cand.select("id_a", "id_b").distinct()
+            .join(ta, "id_a")
             .join(tb, ["id_b", "shingle"])
             .groupBy("id_a", "id_b")
             .agg(F.count(F.lit(1)).alias("n_inter"))
@@ -515,44 +573,22 @@ def dedup_clusters(
     O(k) star edges, NOT the O(k²) intra-bucket pairs the pair-emitting
     ``minhash_lsh_dedup`` generator materializes — a 10⁷-doc boilerplate
     cluster at 100 TB is 10⁷ candidate edges instead of 10¹⁴ pairs. The
-    verified edge graph is sparse and is one graph (``__g = 0``): up to
-    ``graph.CC_EDGE_BUDGET`` edges its components are one grouped NumPy
-    kernel in one task, with no Spark job but the edge list's entry
-    checkpoint; above it, min-label propagation keeps it distributed, one
-    equi-join + one partial-agg shuffle per round, rounds = component
-    diameter (≤ ~2× band count for star graphs: member → bucket min →
-    member), all keys hashed on the node id. No all-pairs step anywhere.
+    verified edge graph is sparse; :func:`cluster_duplicates` takes its
+    components (above ``graph.CC_EDGE_BUDGET`` edges, in rounds = component
+    diameter, ≤ ~2× band count for star graphs: member → bucket min →
+    member). No all-pairs step anywhere.
     Trade vs the pair generator: a member whose Jaccard to its bucket min
     is below threshold is not linked through THAT bucket even if it clears
     threshold with a sibling — the standard star-candidate trade (same as
     dedup_mark), and near-identical duplicate clusters verify against the
     min anyway."""
-    from spark_pit.operators.graph import connected_components
-
     _check_banding(n_hashes, bands, rows_per_band)
     # shared join-free candidate+verify stage (see _star_verified_pairs);
     # dedup the ≤bands-per-pair emissions before the components
     pairs = _star_verified_pairs(
         df, id_col, text_col, threshold, n_hashes, rows_per_band
     ).distinct()
-    edges = pairs.select(
-        F.lit(0).alias("__g"), F.col("id_a").alias("a"), F.col("id_b").alias("b")
-    )
-    comp = connected_components(edges, "__g").select(
-        F.col("node").alias(id_col), "component"
-    )
-    canon = df.select(id_col).join(comp, id_col, "left").select(
-        id_col, F.coalesce("component", F.col(id_col)).alias("canonical_id")
-    )
-    # cluster size as a whole-partition window count: one exchange on
-    # canonical_id instead of the former groupBy + join-back (round 7)
-    return canon.select(
-        id_col,
-        "canonical_id",
-        F.count(F.lit(1))
-        .over(Window.partitionBy("canonical_id"))
-        .alias("cluster_size"),
-    )
+    return cluster_duplicates(df, pairs, id_col)
 
 
 def leakage_safe_split(

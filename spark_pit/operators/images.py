@@ -13,6 +13,12 @@ codec-per-executor, token budget becomes Arrow maxRecordsPerBatch.
 
 phash-derived features are pure JVM expressions (bit_count, shifts) — the
 numeric lag/autocorrelation channels of the north rule.
+
+Near-duplicate images reuse the shared near-dup stages of
+:mod:`spark_pit.operators.dedup` (``bucket_pairs``, ``hamming_pairs``,
+``mark_duplicates``, ``cluster_duplicates``): the perceptual hash IS the
+sketch, so ``phash_neardup_pairs`` is ``hamming_pairs`` on the ``phash``
+column and ``phash_clusters`` is ``cluster_duplicates`` over those pairs.
 """
 
 from __future__ import annotations
@@ -25,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from spark_pit.codecs import decode_image
+from spark_pit.operators.dedup import cluster_duplicates, hamming_pairs
 
 DECODE_STATS_SCHEMA = (
     "image_id string, fmt string, w int, h int, "
@@ -267,49 +274,15 @@ def phash_neardup_pairs(
     max_hamming: int = 3,
     bits: int = 64,
 ) -> DataFrame:
-    """Perceptual-hash near-duplicate IMAGE pairs — the image-payload twin
-    of :func:`spark_pit.operators.dedup.simhash_neardup_pairs`, applied to
-    the input_hint's 64-bit ``phash`` column directly (no sketch step:
-    the perceptual hash IS the sketch). Pigeonhole banding: the hash is
-    split into ``chunks`` equal chunks; any pair at hamming distance
-    ≤ chunks−1 agrees on at least one whole chunk, so an equi-join on
-    (chunk_idx, chunk_value) yields candidates with EXACT recall for
-    ``max_hamming ≤ chunks−1``; exact hamming (xor + popcount, JVM-side)
-    verifies. 64-bit/4-chunk default finds everything within hamming 3 —
-    the usual "same image, re-encoded/resized" pHash radius.
-
-    Scale: candidates are an equi-join on 16-bit chunk values — bucket
-    sizes are corpus_size/65536 per chunk under a uniform hash, and a
+    """Perceptual-hash near-duplicate IMAGE pairs: :func:`dedup.hamming_pairs`
+    on the 64-bit ``phash`` column directly (no sketch step: the perceptual
+    hash IS the sketch). The 64-bit/4-chunk default finds everything within
+    hamming 3 — the usual "same image, re-encoded/resized" pHash radius —
+    with exact recall. Scale: 16-bit chunk values give buckets of
+    corpus_size/65536 rows per chunk under a uniform hash, and a
     re-encoded-duplicate cluster of size k contributes O(k) rows per
-    bucket, pairing only within buckets. The top chunk uses an UNSIGNED
-    shift so negative (high-bit-set) hashes band correctly."""
-    if max_hamming > chunks - 1:
-        raise ValueError("exact recall needs max_hamming <= chunks - 1")
-    cw = bits // chunks
-    mask = (1 << cw) - 1
-    p = F.col(phash_col)
-    chunk_cols = [
-        (F.shiftrightunsigned(p, c * cw).bitwiseAND(F.lit(mask))).alias(f"__c{c}")
-        for c in range(chunks)
-    ]
-    stack = "stack({n}, {args}) as (chunk, val)".format(
-        n=chunks, args=", ".join(f"{c}, __c{c}" for c in range(chunks))
-    )
-    keyed = images.select(
-        F.col(id_col), p.alias("__ph"), *chunk_cols
-    ).select(id_col, "__ph", F.expr(stack))
-    a = keyed.select(F.col(id_col).alias("id_a"), F.col("__ph").alias("ph_a"), "chunk", "val")
-    b = keyed.select(F.col(id_col).alias("id_b"), F.col("__ph").alias("ph_b"), "chunk", "val")
-    return (
-        a.join(b, ["chunk", "val"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a", "id_b",
-            F.bit_count(F.col("ph_a").bitwiseXOR(F.col("ph_b"))).alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
+    bucket, pairing only within buckets."""
+    return hamming_pairs(images, id_col, phash_col, bits, chunks, max_hamming)
 
 
 def phash_clusters(
@@ -320,42 +293,17 @@ def phash_clusters(
     max_hamming: int = 3,
     bits: int = 64,
 ) -> DataFrame:
-    """Perceptual-hash near-duplicate CLUSTERS — the image-payload twin of
-    :func:`spark_pit.operators.dedup.dedup_clusters`: the pigeonhole pair
-    graph from :func:`phash_neardup_pairs` (exact recall for hamming ≤
-    chunks−1) fed to connected components, so a re-encode chain
-    a~b~c co-clusters even when hamming(a, c) exceeds the radius. Every
-    image maps to ``canonical_id`` = the lexicographically-smallest image
-    id in its component (itself when unique) plus the cluster size — the
-    exact shape a dedup-before-training pass consumes (keep canonical,
-    drop the rest, or hand the cluster key to leakage_safe_split).
-
-    Scale: candidates are the 16-bit-chunk equi-join (O(k) per re-encode
-    cluster of size k after the bucket pairing — see phash_neardup_pairs),
-    the verified graph is sparse, and its components are one grouped NumPy
-    kernel after the edge list's entry checkpoint (min-label propagation
-    rounds only above ``graph.CC_EDGE_BUDGET`` edges). No all-pairs step
+    """Perceptual-hash near-duplicate CLUSTERS: :func:`dedup.cluster_duplicates`
+    over the :func:`phash_neardup_pairs` graph (exact recall for hamming ≤
+    chunks−1), so a re-encode chain a~b~c co-clusters even when
+    hamming(a, c) exceeds the radius. Every image maps to ``canonical_id``
+    = the lexicographically-smallest image id in its component (itself
+    when unique) plus the cluster size — the exact shape a
+    dedup-before-training pass consumes (keep canonical, drop the rest, or
+    hand the cluster key to leakage_safe_split). No all-pairs step
     anywhere."""
-    from spark_pit.operators.graph import connected_components
-
-    pairs = phash_neardup_pairs(
-        images, id_col, phash_col, chunks, max_hamming, bits
-    )
-    edges = pairs.select(
-        F.lit(0).alias("__g"), F.col("id_a").alias("a"), F.col("id_b").alias("b")
-    )
-    comp = connected_components(edges, "__g").select(
-        F.col("node").alias(id_col), "component"
-    )
-    canon = images.select(id_col).join(comp, id_col, "left").select(
-        id_col, F.coalesce("component", F.col(id_col)).alias("canonical_id")
-    )
-    sizes = canon.groupBy("canonical_id").agg(
-        F.count(F.lit(1)).alias("cluster_size")
-    )
-    return canon.join(sizes, "canonical_id").select(
-        id_col, "canonical_id", "cluster_size"
-    )
+    pairs = phash_neardup_pairs(images, id_col, phash_col, chunks, max_hamming, bits)
+    return cluster_duplicates(images, pairs, id_col)
 
 
 # (bucket_w, bucket_h) targets; ratios must be pairwise distinct.

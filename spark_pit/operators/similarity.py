@@ -19,6 +19,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from spark_pit.operators.dedup import mark_duplicates
+
 
 def _as_double(col):
     return F.col(col).cast("array<double>")
@@ -253,8 +255,7 @@ def embedding_neardup(
     """Embedding-cosine near-duplicate marking: a vector is a duplicate iff
     some smaller-id vector has cosine >= threshold; dup_of = the smallest
     such id (one-hop marking; full transitive clustering =
-    connected_components in graph.py). Returns every id with
-    (is_dup, dup_of).
+    dedup.cluster_duplicates). Returns every id with (is_dup, dup_of).
 
     Scale path (judge round-1 item 3): candidates come from LSH bucket
     CO-MEMBERSHIP on (band, signature) — random-hyperplane LSH, OR'd over
@@ -279,7 +280,8 @@ def embedding_neardup(
     stay inside the task, zero pair rows cross an exchange, and the
     duplicated work the old ``distinct()`` existed to remove is free (a
     pair colliding in k bands costs k fused multiply-adds, not a shuffle
-    row). Per-bucket minima then take one tiny groupBy(qid) min. The
+    row). The kernel emits each bucket minimum as an (id_a, id_b) pair, and
+    :func:`dedup.mark_duplicates` takes the min ``id_a`` per id. The
     candidate SET is identical to the join formulation by construction, so
     output equality holds wherever the old path was oracle-certified."""
     import pandas as pd
@@ -334,7 +336,7 @@ def embedding_neardup(
     def bucket_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         n = len(pdf)
         if n < 2:
-            return pd.DataFrame({"qid": pdf[id_col].to_numpy()[:0], "cand": pdf[id_col].to_numpy()[:0]})
+            return pd.DataFrame({"id_a": pdf[id_col].to_numpy()[:0], "id_b": pdf[id_col].to_numpy()[:0]})
         order = np.argsort(pdf[id_col].to_numpy(), kind="stable")
         ids = pdf[id_col].to_numpy()[order]
         m = np.frombuffer(
@@ -365,24 +367,15 @@ def embedding_neardup(
                 q_out.append(ids[i0:i1][rows])
                 c_out.append(ids[firsts])
         if not q_out:
-            return pd.DataFrame({"qid": ids[:0], "cand": ids[:0]})
+            return pd.DataFrame({"id_a": ids[:0], "id_b": ids[:0]})
         return pd.DataFrame(
-            {"qid": np.concatenate(q_out), "cand": np.concatenate(c_out)}
+            {"id_a": np.concatenate(c_out), "id_b": np.concatenate(q_out)}
         )
 
     per_bucket = sigs.groupBy("band", "sig").applyInPandas(
-        bucket_kernel, schema=f"qid {id_type}, cand {id_type}"
+        bucket_kernel, schema=f"id_a {id_type}, id_b {id_type}"
     )
-    dup = per_bucket.groupBy("qid").agg(F.min("cand").alias("dup_of"))
-    return (
-        df.select(F.col(id_col).alias("qid"))
-        .join(dup, "qid", "left")
-        .select(
-            F.col("qid").alias(id_col),
-            F.col("dup_of").isNotNull().alias("is_dup"),
-            "dup_of",
-        )
-    )
+    return mark_duplicates(df, per_bucket, id_col)
 
 
 def knn_label_fractions_ann(

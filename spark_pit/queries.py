@@ -707,11 +707,11 @@ FROM g GROUP BY user_id, grp
 
 
 def q_stride_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spark_pit.operators.pairs import stride_pair_freq
+    from spark_pit.operators.pairs import stride_tuple_freq
 
-    return stride_pair_freq(
+    return stride_tuple_freq(
         _ev(spark, sf_dir), "user_id", "ts", "event_type", stride=2, tiebreak="event_id"
-    )
+    ).withColumnRenamed("tuple_n", "pair_n")
 
 
 Q_STRIDE_PAIRS_SQL = """
@@ -785,10 +785,12 @@ def q_psekraac_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shipped cluster tables (judge round-3 ask #2). Residues = the
     document text's AA-alphabet characters."""
     from spark_pit.alphabets import psekraac_alphabet
-    from spark_pit.operators.pairs import stride_pair_freq
+    from spark_pit.operators.pairs import stride_tuple_freq
 
     seq = _residue_stream(spark, sf_dir, psekraac_alphabet("5", 8))
-    return stride_pair_freq(seq, "doc_id", "pos", "grp", stride=3)
+    return stride_tuple_freq(seq, "doc_id", "pos", "grp", stride=3).withColumnRenamed(
+        "tuple_n", "pair_n"
+    )
 
 
 def _psekraac_gap_sql() -> str:
@@ -870,8 +872,7 @@ Q_PSEKRAAC_LAMBDA_SQL = _psekraac_lambda_sql()
 def q_psekraac_gap3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PseKRAAC 'type 6C, 5 clusters' in g-gap mode with ktuple=3
     (feature.py:2753-2769: anchor + two IMMEDIATE successors at each
-    stride anchor) — the gapModel branch stride_pair_freq (k=2) didn't
-    cover, via the generalized stride_tuple_freq."""
+    stride anchor) — the ktuple=3 branch of stride_tuple_freq."""
     from spark_pit.alphabets import psekraac_alphabet
     from spark_pit.operators.pairs import stride_tuple_freq
 
@@ -1022,10 +1023,11 @@ Q_AAINDEX_MULTI_SQL = _aaindex_multi_sql()
 
 
 def q_ctriad_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spark_pit.operators.pairs import ctriad_minmax
+    """CTriad (feature.py:2070-2105): KSCTriad's g=0 block."""
+    from spark_pit.operators.pairs import ksctriad
 
-    out = ctriad_minmax(_ev(spark, sf_dir), "user_id", "ts", "event_type", tiebreak="event_id")
-    return out.select("user_id", "g_a", "g_b", "g_c", F.round("ctriad", 6).alias("ctriad"))
+    out = ksctriad(_ev(spark, sf_dir), "user_id", "ts", "event_type", gap=0, tiebreak="event_id")
+    return out.select("user_id", "g_a", "g_b", "g_c", F.round("ksctriad", 6).alias("ctriad"))
 
 
 Q_CTRIAD_SQL = f"""

@@ -67,6 +67,24 @@ def test_minhash_dedup_mark_linear_in_cluster(spark):
     assert set(out[out["is_dup"]]["dup_of"]) == {0}
 
 
+def test_minhash_dedup_mark_rejects_unbanded_hashes(docs):
+    """16 hashes in bands of 5 would leave one hash in no band."""
+    with pytest.raises(ValueError, match="multiple of rows_per_band"):
+        dedup.minhash_dedup_mark(docs, "doc_id", "text", n_hashes=16, rows_per_band=5)
+
+
+def test_simhash_rejects_bits_above_token_hash_width(docs):
+    """Token hashes are < 2^30, so a sketch bit 30 or higher would be 0 for
+    every document; 64-bit chunks 2 and 3 would then bucket the whole
+    corpus together."""
+    with pytest.raises(ValueError, match="bits=31"):
+        dedup.simhash(docs, "doc_id", "text", bits=31)
+    with pytest.raises(ValueError, match="bits=64"):
+        dedup.simhash_neardup_pairs(docs, "doc_id", "text", bits=64, chunks=4, max_hamming=3)
+    sk = dedup.simhash(docs, "doc_id", "text", bits=30).toPandas()
+    assert (sk["simhash"] < 2**30).all()
+
+
 def test_simhash_neardup_exact_recall(spark):
     """Chunked candidates must equal the exhaustive hamming<=2 pair set."""
     import itertools

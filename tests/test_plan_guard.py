@@ -55,6 +55,12 @@ EXPECTED: dict[str, tuple] = {
     # broadcast into the doc join at this scale, and cluster_size is a
     # window count on the single canonical exchange — 2 physical shuffles
     "dedup_clusters": (4, 2, 0, 0, 0, 0, 2, [["doc_id"]]),
+    # the image twin through the same cluster_duplicates stage: the
+    # pigeonhole pair join (one sort-merge join), the components kernel on
+    # its graph-id exchange, the doc join and the cluster_size window. A
+    # groupBy + join-back for the size would list the kernel subtree twice
+    # (16 exchange mentions, 6 smj, 4 arrow)
+    "phash_clusters": (8, 0, 2, 0, 0, 0, 2, []),
     # single-shuffle per-entity window family — ONE sort exchange each
     "autocorr": (2, 0, 0, 0, 0, 0, 0, [TSV]),
     "lag_lead": (2, 0, 0, 0, 0, 0, 0, [TSV]),

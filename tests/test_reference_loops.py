@@ -167,13 +167,13 @@ def test_psekraac_gap_model_matches_reference_loop(spark):
     """gapModel ktuple=2 (feature.py:2739-2751): for j in range(0, L, g+1)
     with j+1 < L, count the pair (s_j, s_{j+1}) — anchor + IMMEDIATE
     successor, not the next sampled token (the round-3 fidelity fix)."""
-    from spark_pit.operators.pairs import stride_pair_freq
+    from spark_pit.operators.pairs import stride_tuple_freq
 
     stride = 3  # = glValue + 1
-    out = stride_pair_freq(
+    out = stride_tuple_freq(
         _seq_df(spark), "user_id", "ts", "event_type", stride=stride,
         tiebreak="event_id",
-    ).toPandas()
+    ).withColumnRenamed("tuple_n", "pair_n").toPandas()
     for ent, s in SEQS.items():
         toks = s.split()
         cnt: dict[tuple, int] = {}
