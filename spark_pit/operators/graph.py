@@ -1,30 +1,33 @@
 """Contact-graph statistics (SURVEY.md §2.8 network descriptor).
 
 The reference builds a residue ε-graph (edge iff 3-D distance <= cutoff,
-feature.py:4593-4598) and emits global stats + per-node degree/clustering
-plus networkx centralities (feature.py:4601-4609). Implemented here:
-degree/triangles/clustering (pure joins), eigenvector centrality (bounded
-power iteration of DataFrame joins), connected components (one grouped
-NumPy kernel per entity graph, min-label propagation rounds above an edge
-budget), level-synchronized BFS shortest paths, closeness, and Brandes
-betweenness (exact + Brandes–Pich sampled-source estimator for hub-entity
-graphs). The non-iterative slice:
-
-- edge list: banded-range self-join on the 1-D coordinate through
-  rangejoin.cell_join — hash equi-join, no nested loop
-- degree: groupBy(node) count
-- triangles: the standard edge-edge-edge join with id-ordered endpoints
-  (each triangle counted once)
-- global clustering coefficient = 3*triangles / open+closed triads
+feature.py:4593-4598) and emits global stats, per-node degree/clustering
+and networkx centralities (feature.py:4601-4609): one bounded graph per
+protein, so many small graphs, one per entity. Edge list (banded
+rangejoin.cell_join), degrees, triangles (edge-edge-edge join on id-ordered
+endpoints), clustering coefficient, diameter and closeness are DataFrame
+joins and aggregations. Everything iterative — BFS, Brandes betweenness,
+PageRank, eigenvector, DBSCAN, components — is one NumPy function on one
+entity's CSR (:class:`Graph`), run by one grouped kernel per entity graph
+(:func:`_per_entity`) inside the plan, so building it launches no job. A
+graph above ``CC_EDGE_BUDGET`` edges or ``CELL_BUDGET`` all-pairs cells
+raises ``ValueError`` naming the entity; only ``connected_components``
+keeps a distributed path above the edge budget, as ``dedup_clusters``
+sends a whole corpus through it as one graph.
 """
 
 from __future__ import annotations
+
+from decimal import ROUND_HALF_UP, Decimal
+from typing import Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import (
+    BooleanType, DataType, DoubleType, IntegerType, LongType, StructField, StructType,
+)
 
 from spark_pit.operators.rangejoin import cell_join
 
@@ -52,13 +55,18 @@ def contact_edges(
     )
 
 
+def _undirected(edges: DataFrame, entity: str) -> DataFrame:
+    return edges.select(entity, F.col("a").alias("n"), F.col("b").alias("m")).unionByName(
+        edges.select(entity, F.col("b").alias("n"), F.col("a").alias("m"))
+    )
+
+
 def graph_stats(edges: DataFrame, entity: str) -> DataFrame:
     """Per entity: node count (touched by an edge), edge count, max/avg
     degree, triangle count, global clustering coefficient."""
-    und = edges.select(entity, F.col("a").alias("n"), F.col("b").alias("m")).unionByName(
-        edges.select(entity, F.col("b").alias("n"), F.col("a").alias("m"))
+    deg = _undirected(edges, entity).groupBy(entity, "n").agg(
+        F.count(F.lit(1)).alias("deg")
     )
-    deg = und.groupBy(entity, "n").agg(F.count(F.lit(1)).alias("deg"))
     per_entity_deg = deg.groupBy(entity).agg(
         F.count(F.lit(1)).alias("n_nodes"),
         F.max("deg").alias("max_degree"),
@@ -103,124 +111,286 @@ def graph_stats(edges: DataFrame, entity: str) -> DataFrame:
     )
 
 
-def _undirected(edges: DataFrame, entity: str) -> DataFrame:
-    return edges.select(entity, F.col("a").alias("n"), F.col("b").alias("m")).unionByName(
-        edges.select(entity, F.col("b").alias("n"), F.col("a").alias("m"))
-    )
+# The grouped kernel holds one entity graph in one Python worker, within
+# _CC_KERNEL_BYTES. Peak memory per input edge (int64 ids: the Arrow table,
+# its pandas copy, np.unique's sort, the label arrays) is _CC_BYTES_PER_EDGE,
+# the peak-RSS growth of the kernel on random graphs of 1M and 4M edges
+# (135-137 bytes). BFS and Brandes hold per source a row of distances, σ
+# and δ, and each level gathers one entry per (source, frontier node,
+# neighbour): per source x (node + CSR entry) cell, 17-43 bytes with the
+# output rows, measured likewise at 1.4k-2.8k nodes and average degree
+# 2-10. Budgets are read when a plan is built and travel with its kernel.
+_CC_BYTES_PER_EDGE = 137
+_CC_KERNEL_BYTES = 512 << 20
+CC_EDGE_BUDGET = _CC_KERNEL_BYTES // _CC_BYTES_PER_EDGE
+_BYTES_PER_CELL = 48
+CELL_BUDGET = _CC_KERNEL_BYTES // _BYTES_PER_CELL
 
 
-def eigenvector_centrality(
-    edges: DataFrame, entity: str, n_iter: int = 8
+class Graph(NamedTuple):
+    """One entity's graph in dense ids: ``ids[k]`` is dense id k's node id
+    (sorted, so dense order is id order), ``ea``/``eb`` each input edge's
+    dense endpoints, ``indptr``/``nbr`` the CSR holding every edge both ways
+    (duplicates and self-loops kept, as the union of both directions)."""
+
+    ids: np.ndarray
+    ea: np.ndarray
+    eb: np.ndarray
+    indptr: np.ndarray
+    nbr: np.ndarray
+
+
+def to_graph(a: np.ndarray, b: np.ndarray, *extra_ids: np.ndarray) -> Graph:
+    """The :class:`Graph` of the edges ``a[i]-b[i]``; ``extra_ids`` adds
+    nodes that may have no edge."""
+    ids, inv = np.unique(np.concatenate([a, b, *extra_ids]), return_inverse=True)
+    ea, eb = inv[: len(a)], inv[len(a): 2 * len(a)]
+    src, dst = np.concatenate([ea, eb]), np.concatenate([eb, ea])
+    indptr = np.zeros(len(ids) + 1, np.int64)
+    np.cumsum(np.bincount(src, minlength=len(ids)), out=indptr[1:])
+    return Graph(ids, ea, eb, indptr, dst[np.argsort(src, kind="stable")])
+
+
+def _all_pairs_cells(g: Graph, sources: int | None = None) -> int:
+    """State cells of :func:`bfs_levels` from ``sources`` sources (all
+    nodes by default): per source, one per node and one per CSR entry."""
+    n = len(g.ids)
+    return min(n, sources or n) * (n + len(g.nbr))
+
+
+def _per_entity(
+    edges: DataFrame,
+    entity: str,
+    fields: list[tuple[str, DataType | None]],
+    algo: Callable[..., dict],
+    carry: tuple = (),
+    nodes: DataFrame | None = None,
+    cells: Callable[[Graph], int] | None = None,
+    hint: str = "",
 ) -> DataFrame:
-    """Eigenvector centrality per entity graph (reference nx.eigenvector_
-    centrality, feature.py:4605) as a FIXED-K power iteration of DataFrame
-    joins: v ← ((A+I)·v) / max(·), K times, then L2-normalize. The +I
-    (self-loop) term is networkx's own convergence device — it shifts the
-    spectrum so bipartite-ish graphs (stars, chains) cannot oscillate,
-    while leaving the eigenvectors unchanged.
+    """Run ``algo`` once per entity graph inside the plan:
+    ``edges.groupBy(entity).applyInPandas``, or, given a ``nodes`` frame
+    (entity, node id), a cogroup of ``nodes`` and ``edges`` whose node ids
+    join the graph even without an edge. ``algo(g, pdf)`` — or
+    ``algo(g, pdf, npdf)`` with ``nodes`` — gets the :class:`Graph` and the
+    group's edge rows (entity, a, b and the ``carry`` columns) and returns
+    the output columns named by ``fields``, whose type ``None`` stands for
+    the node ids' type; the entity column is prepended.
 
-    Cross-engine determinism (the same discipline as autocorr.py): each
-    iterate is quantized to DECIMAL(18,9), so the neighbor-sum is an EXACT
-    decimal aggregation (order-independent), the max is exact, and the only
-    float ops are one correctly-rounded IEEE divide + sqrt per step — both
-    engines produce bit-identical iterates, so a DuckDB oracle unrolling
-    the same K stages hash-matches. Fixed K (not convergence-tested) keeps
-    the oracle expressible; K=8 is plenty for ε-graph spectral gaps and the
-    semantics are "K-step power iteration" on both sides by construction.
+    A graph above ``CC_EDGE_BUDGET`` edges, or whose all-pairs state
+    ``cells(g)`` exceeds ``CELL_BUDGET``, raises ``ValueError``
+    naming the entity, its node and edge counts and the budget, plus
+    ``hint``."""
+    edge_budget, cell_budget = CC_EDGE_BUDGET, CELL_BUDGET
 
-    Scale: each step is one shuffle (groupBy on the node key) + one tiny
-    per-entity max broadcast-join; lineage is truncated per step with
-    localCheckpoint. 100 TB graphs pay K·(1 join + 1 agg) — the canonical
-    Spark iterative shape, no driver collect of node data.
-    """
-    und = _undirected(edges, entity)
-    nodes = und.select(entity, "n").distinct()
-    # A + I: self-loop rows alongside the undirected adjacency
-    adj = und.unionByName(nodes.withColumn("m", F.col("n")))
-    v = nodes.withColumn("v", F.lit(1).cast("decimal(18,9)"))
-    for _ in range(n_iter):
-        s = (
-            adj.join(v.select(entity, F.col("n").alias("m"), "v"), [entity, "m"])
-            .groupBy(entity, "n")
-            .agg(F.sum("v").alias("s"))  # exact decimal sum
-        )
-        mx = s.groupBy(entity).agg(F.max("s").alias("mx"))
-        v = (
-            s.join(F.broadcast(mx), entity)
-            .select(
-                entity, "n",
-                (F.col("s").cast("double") / F.col("mx").cast("double"))
-                .cast("decimal(18,9)").alias("v"),
+    def run(key, pdf: pd.DataFrame, *npdf: pd.DataFrame) -> pd.DataFrame:
+        g = to_graph(pdf["a"].to_numpy(), pdf["b"].to_numpy(),
+                     *(f.iloc[:, 1].to_numpy() for f in npdf))
+        n_cells = 0 if cells is None else cells(g)
+        if len(pdf) > edge_budget or n_cells > cell_budget:
+            raise ValueError(
+                f"{entity}={key[0]}: graph of {len(g.ids)} nodes and {len(pdf)} edges"
+                f" ({n_cells} state cells) is over the per-entity kernel budget"
+                f" of {edge_budget} edges and {cell_budget} cells{hint}"
             )
-            .localCheckpoint(eager=False)
-        )
-    norm = v.groupBy(entity).agg(
-        F.sum(F.col("v") * F.col("v")).alias("ss")  # exact decimal(38,18) sum
+        cols = algo(g, pdf, *npdf)
+        n = len(next(iter(cols.values())))
+        return pd.DataFrame({entity: np.repeat(key, n), **cols})
+
+    nt = _undirected(edges, entity).schema["n"].dataType  # as the union types it
+    schema = StructType(
+        [StructField(entity, edges.schema[entity].dataType)]
+        + [StructField(name, dtype or nt) for name, dtype in fields]
     )
-    return v.join(F.broadcast(norm), entity).select(
-        entity,
-        F.col("n").alias("node"),
-        F.round(
-            F.col("v").cast("double") / F.sqrt(F.col("ss").cast("double")), 6
-        ).alias("centrality"),
-    )
+    edges = edges.select(entity, "a", "b", *carry)
+    if nodes is None:
+        def kern(pdf: pd.DataFrame) -> pd.DataFrame:
+            return run(pdf[entity].to_numpy()[:1], pdf)
+
+        return edges.groupBy(entity).applyInPandas(kern, schema)
+
+    def kern(key, npdf: pd.DataFrame, pdf: pd.DataFrame) -> pd.DataFrame:
+        return run(key, pdf, npdf)
+
+    return nodes.groupBy(entity).cogroup(edges.groupBy(entity)).applyInPandas(kern, schema)
 
 
-def shortest_paths(
-    edges: DataFrame, entity: str, max_hops: int = 30,
-    sources: DataFrame | None = None,
-) -> DataFrame:
+def _expand(indptr, nbr, nodes):
+    """One CSR gather for a whole frontier: ``(k, m)`` holds one entry per
+    neighbour ``m`` of ``nodes[k]``, for every ``k``."""
+    cnt = indptr[nodes + 1] - indptr[nodes]
+    k = np.repeat(np.arange(len(nodes)), cnt)
+    pos = np.arange(len(k)) + np.repeat(indptr[nodes] - (np.cumsum(cnt) - cnt), cnt)
+    return k, nbr[pos]
+
+
+def bfs_levels(indptr, nbr, sources, max_hops: int = 30):
+    """Level-synchronous BFS from every source at once. Returns ``dist``
+    (sources × nodes, int32, -1 where unreached), ``sigma`` (float64, the
+    number of shortest paths) and ``levels``: per BFS level ``d``, the
+    (source row, node) pairs at distance ``d``. Each level is one gather
+    over the CSR across every (source, frontier node) pair, so the Python
+    steps number the BFS depth, not the sources. Distances stop at
+    ``max_hops`` (the oracle's ``p.d < 30`` recursion bound)."""
+    n, sources = len(indptr) - 1, np.asarray(sources, np.int64)
+    rows = np.arange(len(sources))
+    dist = np.full((len(sources), n), -1, np.int32)
+    sigma = np.zeros((len(sources), n))
+    dist[rows, sources] = 0
+    sigma[rows, sources] = 1.0
+    levels = [(rows, sources)]
+    for d in range(1, max_hops + 1):
+        fr, fn = levels[-1]
+        k, m = _expand(indptr, nbr, fn)
+        r = fr[k]
+        fresh = dist[r, m] < 0
+        dist[r[fresh], m[fresh]] = d
+        on = dist[r, m] == d
+        if not on.any():
+            break
+        k, r, m = k[on], r[on], m[on]
+        np.add.at(sigma, (r, m), sigma[r, fn[k]])
+        cell = np.unique(r * n + m)
+        levels.append((cell // n, cell % n))
+    return dist, sigma, levels
+
+
+def brandes_betweenness(indptr, nbr, sources=None, max_hops: int = 30) -> np.ndarray:
+    """networkx-normalized betweenness per node (undirected: raw/2 scaled by
+    2/((n-1)(n-2)), 0 for n <= 2) by Brandes over :func:`bfs_levels`: the
+    dependencies δ(s,v) = Σ_{w: v pred of w} σ(s,v)/σ(s,w)·(1+δ(s,w))
+    accumulate deepest level first, one CSR gather per level. Given
+    ``sources`` (Brandes–Pich sampling), only those drive the sweeps and the
+    sums scale by n/len(sources)."""
+    n = len(indptr) - 1
+    src = np.arange(n) if sources is None else np.asarray(sources, np.int64)
+    dist, sigma, levels = bfs_levels(indptr, nbr, src, max_hops)
+    delta = np.zeros_like(sigma)
+    for d in range(len(levels) - 1, 0, -1):
+        fr, fn = levels[d]
+        coef = (1.0 + delta[fr, fn]) / sigma[fr, fn]
+        k, m = _expand(indptr, nbr, fn)
+        r = fr[k]
+        up = dist[r, m] == d - 1
+        k, r, m = k[up], r[up], m[up]
+        np.add.at(delta, (r, m), sigma[r, m] * coef[k])
+    delta[np.arange(len(src)), src] = 0.0
+    raw = delta.sum(axis=0) / 2.0
+    if sources is not None:
+        raw = raw * n / len(src)
+    if n <= 2:
+        return np.zeros(n)
+    return raw * 2.0 / ((n - 1) * (n - 2))
+
+
+def pagerank_nanos(indptr, nbr, n_iter: int = 6, damping: float = 0.85) -> np.ndarray:
+    """K-step undirected PageRank in int64 nano-units, the steps of the
+    oracle's SQL: pr_0 = floor(1e9/N + 0.5); per step each node sends
+    floor(q/deg + 0.5) along every edge, the sums are exact int64, and
+    q = floor((1-d)·1e9/N + d·S + 0.5)."""
+    n = len(indptr) - 1
+    deg = np.diff(indptr).astype(np.float64)
+    q = np.full(n, np.floor(1e9 / float(n) + 0.5)).astype(np.int64)
+    tele = (1.0 - damping) * 1e9
+    for _ in range(n_iter):
+        c = np.floor(q.astype(np.float64) / deg + 0.5).astype(np.int64)
+        s = np.add.reduceat(c[nbr], indptr[:-1])  # exact; every node has an edge
+        q = np.floor(tele / float(n) + damping * s.astype(np.float64) + 0.5).astype(np.int64)
+    return q
+
+
+def decimal_nanos(x: np.ndarray) -> np.ndarray:
+    """Spark's ``CAST(double AS DECIMAL(18,9))`` as int64 nano-units: the
+    double's shortest decimal string rounded HALF_UP. For |x| <= 1, as every
+    iterate s/max is, ``floor(x·1e9 + 0.5)`` (rounding error below 1.2e-7)
+    gives that more than 1e-6 from a half; nearer one, the string is rounded."""
+    y = np.asarray(x, np.float64) * 1e9
+    q = np.floor(y + 0.5)
+    for i in np.flatnonzero(np.abs(y - np.floor(y) - 0.5) < 1e-6):
+        q[i] = int(Decimal(repr(float(x[i]))).scaleb(9).quantize(Decimal(1), ROUND_HALF_UP))
+    return q.astype(np.int64)
+
+
+def eigenvector_nanos(indptr, nbr, n_iter: int = 8) -> np.ndarray:
+    """K-step power iteration v ← ((A+I)·v) / max(·) from v = 1, each
+    iterate quantized to DECIMAL(18,9) as Spark casts it, held as int64
+    nanos: the sums and the max are exact, the ratio is one IEEE divide of
+    the correctly rounded doubles s/1e9 and max/1e9."""
+    v = np.full(len(indptr) - 1, 10**9, np.int64)
+    for _ in range(n_iter):
+        s = (v + np.add.reduceat(v[nbr], indptr[:-1])).astype(np.float64) / 1e9
+        v = decimal_nanos(s / s.max())
+    return v
+
+
+def _min_labels(ea: np.ndarray, eb: np.ndarray, n: int) -> np.ndarray:
+    """Per dense node, the smallest dense node of its component over the
+    edges ``ea[i]-eb[i]`` (see :func:`min_label_components`)."""
+    lab = np.arange(n)
+    while True:
+        prev = lab.copy()
+        np.minimum.at(lab, lab[ea], lab[eb])
+        np.minimum.at(lab, lab[eb], lab[ea])
+        while True:
+            jumped = lab[lab]
+            if np.array_equal(jumped, lab):
+                break
+            lab = jumped
+        if np.array_equal(lab, prev):
+            return lab
+
+
+def min_label_components(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """``(nodes, component)`` of the undirected graph with edges ``a[i]-b[i]``:
+    every node touched by an edge, sorted, and the smallest node of its
+    component. Node ids map to dense ids with ``np.unique``, so ids of any
+    orderable dtype work and dense order is id order. Then a hook step and
+    pointer jumping repeat until a round changes nothing: each edge lowers
+    the label of one endpoint's root to the other endpoint's label
+    (``np.minimum.at(lab, lab[a], lab[b])``, both ways round), and
+    ``lab = lab[lab]`` runs until every label is a root. Labels only fall
+    and always name a node of the same component, so the fixpoint labels
+    each component with its smallest node."""
+    nodes, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+    return nodes, nodes[_min_labels(inv[: len(a)], inv[len(a):], len(nodes))]
+
+
+def dbscan_labels(g: Graph, listed: np.ndarray, min_pts: int) -> tuple[np.ndarray, np.ndarray]:
+    """``(is_core, cluster)`` per dense node; ``cluster`` is a dense id, -1
+    for noise. Only ``listed`` nodes can be core or border. A node is core
+    iff its ε-neighbourhood, itself included, has >= ``min_pts`` members;
+    core clusters are the components of the core-core edges, labelled by
+    their smallest node; a non-core node adjacent to a core takes the
+    smallest adjacent core cluster."""
+    n = len(g.ids)
+    deg = np.diff(g.indptr)
+    core = listed & (deg + 1 >= min_pts)
+    both = core[g.ea] & core[g.eb]
+    cluster = np.where(core, _min_labels(g.ea[both], g.eb[both], n), -1)
+    node = np.repeat(np.arange(n), deg)
+    att = core[g.nbr] & listed[node] & ~core[node]
+    border = np.full(n, n)
+    np.minimum.at(border, node[att], cluster[g.nbr[att]])
+    return core, np.where(border < n, border, cluster)
+
+
+def shortest_paths(edges: DataFrame, entity: str, max_hops: int = 30) -> DataFrame:
     """All-pairs hop distances per entity graph (the prerequisite for the
     reference's nx.diameter / nx.average_shortest_path_length /
-    nx.closeness_centrality, feature.py:4602-4608): multi-source BFS as
-    frontier-expansion DataFrame joins. State is (entity, src, node, dist)
-    — O(V²) PER ENTITY, which is the reference's own regime (one bounded
-    contact graph per protein/user); across entities the work is fully
-    data-parallel and shuffle-partitioned on the entity key. Each hop is
-    one join + one anti-join (dedupe against settled pairs), lineage
-    truncated per hop; the frontier's size is an Observation on that hop's
-    checkpoint job, and the loop exits when a frontier is empty (true BFS
-    distances, no cap on correctness — max_hops only bounds the worst case).
+    nx.closeness_centrality, feature.py:4602-4608): rows (entity, src,
+    node, dist int) for every connected ordered pair, (v, v, 0) included,
+    from :func:`bfs_levels` over all sources at once. State is O(V²) per
+    entity (``CELL_BUDGET``), the reference's own regime; ``max_hops``
+    caps the distances."""
+    def algo(g: Graph, _pdf) -> dict:
+        dist = bfs_levels(g.indptr, g.nbr, np.arange(len(g.ids)), max_hops)[0]
+        s, n = np.nonzero(dist >= 0)
+        return {"src": g.ids[s], "node": g.ids[n], "dist": dist[s, n]}
 
-    ``sources``: optional (entity, src) frame restricting the BFS to those
-    seed sources only — state drops to O(s·V) per entity for s seeds (the
-    Brandes–Pich sampling path in betweenness_centrality; round-4 advice:
-    sampling must shrink the FORWARD stage, not just the σ/δ sweeps).
-    """
-    und = _undirected(edges, entity)
-    nodes = und.select(entity, "n").distinct()
-    if sources is not None:
-        # intersect with real nodes so a stray seed can't invent a vertex
-        nodes = nodes.join(
-            sources.select(entity, F.col("src").alias("n")), [entity, "n"]
-        )
-    settled = nodes.select(
-        entity, F.col("n").alias("src"), F.col("n").alias("node"),
-        F.lit(0).alias("dist"),
-    ).localCheckpoint()
-    frontier = settled
-    for hop in range(1, max_hops + 1):
-        grown = (
-            frontier.join(
-                und.select(entity, F.col("n").alias("node"), F.col("m")),
-                [entity, "node"],
-            )
-            .select(entity, "src", F.col("m").alias("node"), F.lit(hop).alias("dist"))
-            .distinct()
-        )
-        obs = Observation()
-        fresh = (
-            grown.join(
-                settled.select(entity, "src", "node"), [entity, "src", "node"], "left_anti"
-            )
-            .observe(obs, F.count(F.lit(1)).alias("fresh"))
-            .localCheckpoint()
-        )
-        if obs.get["fresh"] == 0:
-            break
-        settled = settled.unionByName(fresh).localCheckpoint()
-        frontier = fresh
-    return settled
+    return _per_entity(
+        edges, entity, [("src", None), ("node", None), ("dist", IntegerType())], algo,
+        cells=_all_pairs_cells,
+    )
 
 
 def path_stats(sp: DataFrame, entity: str) -> DataFrame:
@@ -259,234 +429,125 @@ def closeness_centrality(sp: DataFrame, entity: str) -> DataFrame:
     )
 
 
-def dbscan_clusters(
-    edges: DataFrame,
-    nodes: DataFrame,
-    entity: str,
-    min_pts: int = 3,
-) -> DataFrame:
-    """EXACT distributed DBSCAN given the ε-neighbor pair list (reference
-    iAnalysis DBSCAN row, feature.py:4838-4850 — sklearn's is exact too;
-    the distributed re-expression): a node is CORE iff its ε-neighborhood
-    (itself included) has ≥ min_pts members; clusters are the connected
-    components of the core-core subgraph; a non-core node adjacent to a
-    core joins that core's cluster (smallest cluster id on ties, the
-    deterministic choice sklearn leaves unspecified); everything else is
-    NOISE (cluster NULL). ``edges`` is whatever ε-pair generator fits the
-    space — the banded 1-D contact_edges here, the LSH candidates for
-    embeddings — so the density scan itself is one degree aggregation, and
-    the clusters are ``connected_components`` of the core edges (the
-    grouped kernel; propagation rounds only above its edge budget).
-
-    Returns (entity, node, is_core, cluster) for EVERY node in ``nodes``
-    (isolated points included — noise)."""
-    # the pair list feeds four branches (degree scan, core filter ×2,
-    # border attach) — materialize it once instead of recomputing the
-    # upstream ε-join per branch (at scale: cache/checkpoint the edges)
-    edges = edges.localCheckpoint()
-    und = _undirected(edges, entity)
-    deg = und.groupBy(entity, "n").agg(F.count(F.lit(1)).alias("deg"))
-    base = nodes.select(entity, F.col(nodes.columns[1]).alias("n")).distinct()
-    marked = (
-        base.join(deg, [entity, "n"], "left")
-        .na.fill({"deg": 0})
-        .withColumn("is_core", F.col("deg") + 1 >= min_pts)
-        .select(entity, "n", "is_core")
-        .localCheckpoint()
-    )
-    core = marked.where("is_core").select(entity, "n")
-    core_edges = (
-        edges.join(core.withColumnRenamed("n", "a"), [entity, "a"])
-        .join(core.withColumnRenamed("n", "b"), [entity, "b"])
-        .select(entity, "a", "b")
-    )
-    cc = connected_components(core_edges, entity).withColumnRenamed(
-        "node", "n"
-    )
-    # isolated core points (no core neighbor) form singleton clusters
-    core_cl = core.join(cc, [entity, "n"], "left").select(
-        entity, "n", F.coalesce("component", F.col("n")).alias("cluster")
-    )
-    # border: non-core adjacent to ≥1 core — smallest adjacent core cluster
-    border = (
-        und.join(core_cl.select(entity, F.col("n").alias("m"), "cluster"), [entity, "m"])
-        .join(marked.where(~F.col("is_core")).select(entity, "n"), [entity, "n"])
-        .groupBy(entity, "n")
-        .agg(F.min("cluster").alias("cluster"))
-    )
-    assign = core_cl.unionByName(border)
-    return (
-        marked.join(assign, [entity, "n"], "left")
-        .select(entity, F.col("n").alias("node"), "is_core", "cluster")
-    )
-
-
 def betweenness_centrality(
-    edges: DataFrame,
-    entity: str,
-    max_hops: int = 30,
-    sample_sources: int | None = None,
-    seed: int = 42,
+    edges: DataFrame, entity: str, max_hops: int = 30,
+    sample_sources: int | None = None, seed: int = 42,
 ) -> DataFrame:
     """Betweenness centrality (reference nx.betweenness_centrality,
-    feature.py:4606; networkx-default NORMALIZED form, undirected:
-    raw/((n-1)(n-2)/2... scaled by 2/((n-1)(n-2)))) via Brandes' algorithm
-    as level-synchronized DataFrame sweeps over the BFS distances:
-
-    - forward: σ(src,v) = Σ_{u∈preds(v)} σ(src,u), one join + partial-agg
-      groupBy per BFS level (σ = number of shortest src→v paths)
-    - backward: δ(src,v) = Σ_{w∈succs(v)} σ_v/σ_w · (1+δ(src,w)), one join +
-      groupBy per level, deepest level first
-    - betweenness(v) = Σ_{src≠v} δ(src,v) / 2 (undirected double-count),
-      then the networkx normalization 2/((n-1)(n-2)).
-
-    Per-entity state is O(V²) like shortest_paths — the reference's own
-    per-graph regime (protein contact graphs, V ≈ sequence length).
+    feature.py:4606; the networkx-default NORMALIZED undirected form) per
+    entity graph: (entity, node, betweenness) from
+    :func:`brandes_betweenness`. Exact Brandes holds every source's state
+    per entity and raises above ``CELL_BUDGET``.
 
     ``sample_sources=s`` switches to the Brandes–Pich sampled estimator:
-    per entity, only s seeded sources (xxhash64 rank — deterministic,
-    partitioning-invariant) drive the sweeps and every contribution is
-    scaled by V/s, so state drops to O(s·V) per entity. This removes the
-    100×-scale hazard of one hub entity with a 10⁵-node graph stalling
-    the stage (exact Brandes holds 10¹⁰ (src, node) rows for it; s=64
-    sampled holds 6.4M). Exact (sample_sources=None) stays the default
-    and the oracle path; sampled ≈ exact is asserted on the fixture
-    graphs in tests/test_graph_iter.
+    per entity, only s sources drive the sweeps and every contribution is
+    scaled by V/s, so the state is s sources'. The sources are the first s
+    nodes by (xxhash64(cast(node as string), seed), node) — deterministic
+    and partitioning-invariant; the hashes are computed in the JVM as two
+    columns on the edges. With s >= V it equals exact Brandes."""
+    ranks = () if sample_sources is None else tuple(
+        F.xxhash64(F.col(c).cast("string"), F.lit(seed)).alias(f"h{c}") for c in "ab"
+    )
+
+    def algo(g: Graph, pdf: pd.DataFrame) -> dict:
+        src = None
+        if sample_sources is not None:
+            h = np.empty(len(g.ids), np.int64)
+            h[g.ea], h[g.eb] = pdf["ha"].to_numpy(), pdf["hb"].to_numpy()
+            src = np.lexsort((np.arange(len(h)), h))[:sample_sources]
+        return {"node": g.ids,
+                "betweenness": brandes_betweenness(g.indptr, g.nbr, src, max_hops)}
+
+    return _per_entity(
+        edges, entity, [("node", None), ("betweenness", DoubleType())], algo, carry=ranks,
+        cells=lambda g: _all_pairs_cells(g, sample_sources),
+        hint="; sample_sources=s bounds the state to s sources",
+    )
+
+
+def pagerank(edges: DataFrame, entity: str, n_iter: int = 6, damping: float = 0.85) -> DataFrame:
+    """PageRank per entity graph (undirected: each edge contributes both
+    directions, networkx's nx.pagerank convention for Graph inputs), a
+    fixed K steps of pr_k(n) = (1-d)/N + d·Σ_{m∈nbrs(n)} pr_{k-1}(m)/deg(m).
+
+    Cross-engine determinism (the mean_shift round-3 discipline, NOT the
+    double->decimal cast): iterates live as INT64 NANO-UNITS
+    (:func:`pagerank_nanos`). Every float step is one correctly-rounded
+    IEEE op sequence both engines share and everything between is exact
+    integer arithmetic, so it matches a DuckDB oracle unrolling the same K
+    stages bit-for-bit. The output rank stays INTEGER nanos
+    (pagerank_nano) — no float ever leaves the operator."""
+    def algo(g: Graph, _pdf) -> dict:
+        return {"node": g.ids, "pagerank_nano": pagerank_nanos(g.indptr, g.nbr, n_iter, damping)}
+
+    return _per_entity(edges, entity, [("node", None), ("pagerank_nano", LongType())], algo)
+
+
+def eigenvector_centrality(edges: DataFrame, entity: str, n_iter: int = 8) -> DataFrame:
+    """Eigenvector centrality per entity graph (reference nx.eigenvector_
+    centrality, feature.py:4605) as a FIXED-K power iteration: v ←
+    ((A+I)·v) / max(·), K times, then L2-normalize. The +I (self-loop) term
+    is networkx's own convergence device — it shifts the spectrum so
+    bipartite-ish graphs (stars, chains) cannot oscillate, while leaving
+    the eigenvectors unchanged. Fixed K (not convergence-tested) keeps the
+    oracle expressible; K=8 is plenty for ε-graph spectral gaps.
+
+    Each iterate is quantized as Spark's ``CAST(double AS DECIMAL(18,9))``
+    rounds it, HALF_UP on the double's shortest decimal string
+    (:func:`eigenvector_nanos`); DuckDB's cast rounds half-to-even, so the
+    iterates are NOT bit-identical across engines: a replica of Spark's rule
+    disagreed with the oracle's ``v8`` in 62 of 30,853 rows at sf0.1 and 2
+    of 3,053 at sf0.01. Only the 6-decimal output, normalized in the JVM by
+    the exact decimal sum of squares, matches the oracle."""
+    v = _per_entity(
+        edges, entity, [("n", None), ("v", LongType())],
+        lambda g, _pdf: {"n": g.ids, "v": eigenvector_nanos(g.indptr, g.nbr, n_iter)},
+    ).withColumn("v", (F.col("v").cast("decimal(18,0)") / 10**9).cast("decimal(18,9)"))
+    norm = v.groupBy(entity).agg(
+        F.sum(F.col("v") * F.col("v")).alias("ss")  # exact decimal(38,18) sum
+    )
+    return v.join(F.broadcast(norm), entity).select(
+        entity,
+        F.col("n").alias("node"),
+        F.round(
+            F.col("v").cast("double") / F.sqrt(F.col("ss").cast("double")), 6
+        ).alias("centrality"),
+    )
+
+
+def dbscan_clusters(
+    edges: DataFrame, nodes: DataFrame, entity: str, min_pts: int = 3
+) -> DataFrame:
+    """EXACT DBSCAN given the ε-neighbor pair list (reference iAnalysis
+    DBSCAN row, feature.py:4838-4850 — sklearn's is exact too): a node is
+    CORE iff its ε-neighborhood (itself included) has ≥ min_pts members;
+    clusters are the connected components of the core-core subgraph,
+    labelled by their smallest node; a non-core node adjacent to a core
+    joins that core's cluster (smallest cluster id on ties, the
+    deterministic choice sklearn leaves unspecified); everything else is
+    NOISE (cluster NULL), isolated points included. ``edges`` is whatever
+    ε-pair generator fits the space (the banded 1-D contact_edges here).
+    :func:`dbscan_labels` runs per entity over a cogroup of nodes and edges.
+
+    Returns (entity, node, is_core, cluster) for EVERY node in ``nodes``.
     """
-    from pyspark.sql import Window
+    node_col = nodes.columns[1]
 
-    und = _undirected(edges, entity)
-    n_src = None
-    if sample_sources is not None:
-        # sample from the NODE LIST first, then seed the BFS at only the
-        # sampled sources — the forward stage itself is O(s·V), not a
-        # post-filter over an already-materialized all-pairs BFS
-        # (round-4 advice, graph.py:362)
-        srcs = (
-            und.select(entity, F.col("n").alias("src")).distinct()
-            .withColumn(
-                "__r",
-                F.row_number().over(
-                    Window.partitionBy(entity).orderBy(
-                        F.xxhash64(F.col("src").cast("string"), F.lit(seed)), "src"
-                    )
-                ),
-            )
-            .where(F.col("__r") <= sample_sources)
-            .select(entity, "src")
-            .localCheckpoint()
-        )
-        sp = shortest_paths(edges, entity, max_hops, sources=srcs)
-        n_src = srcs.groupBy(entity).agg(F.count(F.lit(1)).alias("__s"))
-    else:
-        sp = shortest_paths(edges, entity, max_hops)
-    d_max = sp.agg(F.max("dist")).first()[0] or 0
-    # ---- forward sweep: path counts σ per (src, node), level by level
-    sigma = sp.where(F.col("dist") == 0).select(
-        entity, "src", "node", F.lit(1).cast("double").alias("sigma")
-    ).localCheckpoint()
-    sig_levels = {0: sigma}
-    for d in range(1, d_max + 1):
-        lvl = sp.where(F.col("dist") == d).select(entity, "src", "node")
-        s = (
-            sig_levels[d - 1]
-            .join(und.select(entity, F.col("n").alias("node"), "m"), [entity, "node"])
-            .select(entity, "src", F.col("m").alias("node"), "sigma")
-            .join(lvl, [entity, "src", "node"])  # only true level-d nodes
-            .groupBy(entity, "src", "node")
-            .agg(F.sum("sigma").alias("sigma"))
-            .localCheckpoint()
-        )
-        sig_levels[d] = s
-    # ---- backward sweep: dependencies δ, deepest level first
-    delta_acc = None  # accumulated betweenness contributions per (entity, node)
-    delta_lvl = sig_levels[d_max].select(
-        entity, "src", "node", F.lit(0.0).alias("delta")
-    ) if d_max > 0 else None
-    for d in range(d_max, 0, -1):
-        w = sig_levels[d].join(
-            delta_lvl.select(entity, "src", "node", "delta"),
-            [entity, "src", "node"], "left",
-        ).na.fill({"delta": 0.0}).select(
-            entity, "src", F.col("node").alias("w"),
-            ((F.lit(1.0) + F.col("delta")) / F.col("sigma")).alias("__coef"),  # (1+δw)/σw
-        )
-        contrib = (
-            w.join(und.select(entity, F.col("n").alias("w"), "m"), [entity, "w"])
-            .select(entity, "src", F.col("m").alias("node"), "__coef")
-            .join(sig_levels[d - 1], [entity, "src", "node"])  # preds only
-            .select(entity, "src", "node", (F.col("sigma") * F.col("__coef")).alias("c"))
-            .groupBy(entity, "src", "node")
-            .agg(F.sum("c").alias("delta"))
-            .localCheckpoint()
-        )
-        delta_lvl = contrib
-        part = contrib.where(F.col("src") != F.col("node")).groupBy(entity, "node").agg(
-            F.sum("delta").alias("b")
-        )
-        delta_acc = part if delta_acc is None else delta_acc.unionByName(part)
-    nodes = und.select(entity, "n").distinct()
-    n_nodes = nodes.groupBy(entity).agg(F.count(F.lit(1)).alias("__n"))
-    if delta_acc is None:
-        return nodes.select(entity, F.col("n").alias("node"), F.lit(0.0).alias("betweenness"))
-    raw = delta_acc.groupBy(entity, "node").agg((F.sum("b") / 2.0).alias("raw"))
-    out = (
-        nodes.select(entity, F.col("n").alias("node"))
-        .join(raw, [entity, "node"], "left")
-        .na.fill({"raw": 0.0})
-        .join(F.broadcast(n_nodes), entity)
+    def algo(g: Graph, _pdf, npdf: pd.DataFrame) -> dict:
+        listed = np.isin(g.ids, npdf[node_col].to_numpy())
+        core, cluster = dbscan_labels(g, listed, min_pts)
+        cluster = cluster[listed]
+        return {
+            "node": g.ids[listed],
+            "is_core": core[listed],
+            "cluster": pd.arrays.IntegerArray(g.ids[np.maximum(cluster, 0)], cluster < 0),
+        }
+
+    nt = nodes.schema[node_col].dataType
+    return _per_entity(
+        edges, entity, [("node", nt), ("is_core", BooleanType()), ("cluster", nt)], algo,
+        nodes=nodes.select(entity, node_col),
     )
-    if n_src is not None:
-        # Brandes–Pich extrapolation: scale sampled-source sums by V/s
-        out = out.join(F.broadcast(n_src), entity).withColumn(
-            "raw", F.col("raw") * F.col("__n") / F.col("__s")
-        )
-    return out.select(
-        entity, "node",
-        F.when(
-            F.col("__n") > 2,
-            F.col("raw") * 2.0 / ((F.col("__n") - 1) * (F.col("__n") - 2)),
-        ).otherwise(F.lit(0.0)).alias("betweenness"),
-    )
-
-
-# The grouped kernel holds one entity graph in one Python worker. Its peak
-# memory per input edge, with int64 ids, is _CC_BYTES_PER_EDGE: the Arrow
-# table, its pandas copy, np.unique's sort and the label arrays, measured
-# as the peak-RSS growth of a process running the kernel on random sparse
-# graphs of 1M and 4M edges (135-137 bytes). The budget lets one graph use
-# _CC_KERNEL_BYTES; above it the edges stay distributed and the
-# propagation loop runs instead.
-_CC_BYTES_PER_EDGE = 137
-_CC_KERNEL_BYTES = 512 << 20
-CC_EDGE_BUDGET = _CC_KERNEL_BYTES // _CC_BYTES_PER_EDGE
-
-
-def min_label_components(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """``(nodes, component)`` of the undirected graph with edges ``a[i]-b[i]``:
-    every node touched by an edge, sorted, and the smallest node of its
-    component. Node ids map to dense ids with ``np.unique``, so ids of any
-    orderable dtype work and dense order is id order. Then a hook step and
-    pointer jumping repeat until a round changes nothing: each edge lowers
-    the label of one endpoint's root to the other endpoint's label
-    (``np.minimum.at(lab, lab[a], lab[b])``, both ways round), and
-    ``lab = lab[lab]`` runs until every label is a root. Labels only fall
-    and always name a node of the same component, so the fixpoint labels
-    each component with its smallest node."""
-    nodes, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
-    ea, eb = inv[: len(a)], inv[len(a):]
-    lab = np.arange(len(nodes))
-    while True:
-        prev = lab.copy()
-        np.minimum.at(lab, lab[ea], lab[eb])
-        np.minimum.at(lab, lab[eb], lab[ea])
-        while True:
-            jumped = lab[lab]
-            if np.array_equal(jumped, lab):
-                break
-            lab = jumped
-        if np.array_equal(lab, prev):
-            return nodes, nodes[lab]
 
 
 def connected_components(edges: DataFrame, entity: str) -> DataFrame:
@@ -499,19 +560,14 @@ def connected_components(edges: DataFrame, entity: str) -> DataFrame:
     The edge list is localCheckpointed ONCE at entry: callers like
     dedup_clusters feed an edge plan that is itself a multi-stage pipeline
     (MinHash signatures → band join → Jaccard verify), and the checkpoint
-    keeps the components from re-planning that lineage. The edge count is
-    an Observation on that checkpoint job, so it costs no job of its own;
-    it counts every entity graph together, an upper bound on the largest.
-
-    Up to ``CC_EDGE_BUDGET`` edges, the components are one grouped NumPy
-    kernel (:func:`min_label_components`, ``groupBy(entity).applyInPandas``)
-    that runs with the rest of the plan, so no other job runs while the plan
-    is built. Above it, min-label propagation keeps the graph distributed:
-    every node starts labeled with its own id and each round takes the min
-    over its neighbors and itself, one join + one groupBy shuffle behind an
-    eager localCheckpoint, until a round changes no label (rounds = graph
-    diameter). Both paths return the same rows and types.
-    """
+    keeps the components from re-planning that lineage. Its job observes
+    the edge count of every entity graph together, a bound on the largest.
+    Up to ``CC_EDGE_BUDGET`` edges the components are the per-entity kernel
+    (:func:`_min_labels` through :func:`_per_entity`). Above it, min-label
+    propagation keeps the graph distributed: each round takes the min label
+    over a node's neighbors and itself, one join + one groupBy shuffle
+    behind an eager localCheckpoint, until no label changes (rounds = graph
+    diameter). Both paths return the same rows and types."""
     obs = Observation()
     edges = (
         edges.select(entity, "a", "b")
@@ -524,21 +580,10 @@ def connected_components(edges: DataFrame, entity: str) -> DataFrame:
 
 
 def _components_grouped(edges: DataFrame, entity: str) -> DataFrame:
-    def kern(pdf: pd.DataFrame) -> pd.DataFrame:
-        nodes, comp = min_label_components(pdf["a"].to_numpy(), pdf["b"].to_numpy())
-        return pd.DataFrame(
-            {entity: np.repeat(pdf[entity].to_numpy()[:1], len(nodes)),
-             "node": nodes, "component": comp}
-        )
+    def algo(g: Graph, _pdf) -> dict:
+        return {"node": g.ids, "component": g.ids[_min_labels(g.ea, g.eb, len(g.ids))]}
 
-    # both endpoints' common type, as the propagation loop's union gives it
-    node_type = _undirected(edges, entity).schema["n"].dataType
-    schema = StructType([
-        StructField(entity, edges.schema[entity].dataType),
-        StructField("node", node_type),
-        StructField("component", node_type),
-    ])
-    return edges.groupBy(entity).applyInPandas(kern, schema)
+    return _per_entity(edges, entity, [("node", None), ("component", None)], algo)
 
 
 def _components_propagated(edges: DataFrame, entity: str) -> DataFrame:
@@ -572,65 +617,3 @@ def _components_propagated(edges: DataFrame, entity: str) -> DataFrame:
         if obs.get["changed"] == 0:
             break
     return lab.select(entity, F.col("n").alias("node"), F.col("c").alias("component"))
-
-
-def pagerank(
-    edges: DataFrame, entity: str, n_iter: int = 6, damping: float = 0.85
-) -> DataFrame:
-    """PageRank per entity graph (undirected: each edge contributes both
-    directions, networkx's nx.pagerank convention for Graph inputs) as a
-    fixed-K iteration of DataFrame joins:
-
-        pr_k(n) = (1-d)/N + d * sum_{m in nbrs(n)} pr_{k-1}(m) / deg(m)
-
-    Cross-engine determinism (the mean_shift round-3 discipline, NOT the
-    double->decimal cast): iterates live as INT64 NANO-UNITS. Every
-    float step is a single correctly-rounded IEEE op sequence both
-    engines share — per-edge contribution floor(q/deg + 0.5), per-node
-    mix floor((1-d)*1e9/N + d*S + 0.5) — and everything between is exact
-    integer arithmetic, so a DuckDB oracle unrolling the identical K
-    stages matches bit-for-bit. Output keeps the rank as INTEGER nanos
-    (pagerank_nano) — no float ever leaves the operator.
-
-    Scale: per step one groupBy(node) shuffle + lineage truncation via
-    localCheckpoint — the same K*(join + partial agg) shape as
-    eigenvector_centrality; degrees computed once.
-    """
-    d = float(damping)
-    und = _undirected(edges, entity)
-    deg = und.groupBy(entity, "n").agg(F.count(F.lit(1)).alias("deg"))
-    n_nodes = deg.groupBy(entity).agg(F.count(F.lit(1)).alias("nn"))
-    base = deg.join(F.broadcast(n_nodes), entity)
-    # pr_0 = 1/N in nanos: one IEEE divide + floor, identical cross-engine
-    pr = base.select(
-        entity, "n", "deg", "nn",
-        F.floor(F.lit(1e9) / F.col("nn").cast("double") + F.lit(0.5))
-        .cast("long").alias("q"),
-    )
-    teleport_nano = (1.0 - d) * 1e9
-    for _ in range(n_iter):
-        contrib = pr.select(
-            entity,
-            F.col("n").alias("m"),
-            F.floor(
-                F.col("q").cast("double") / F.col("deg").cast("double") + F.lit(0.5)
-            ).cast("long").alias("c"),
-        )
-        s = (
-            und.join(contrib, [entity, "m"])
-            .groupBy(entity, "n")
-            .agg(F.sum("c").alias("s"))  # exact integer sum
-        )
-        pr = (
-            base.join(s, [entity, "n"], "left")
-            .select(
-                entity, "n", "deg", "nn",
-                F.floor(
-                    F.lit(teleport_nano) / F.col("nn").cast("double")
-                    + F.lit(d) * F.coalesce(F.col("s"), F.lit(0)).cast("double")
-                    + F.lit(0.5)
-                ).cast("long").alias("q"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return pr.select(entity, F.col("n").alias("node"), F.col("q").alias("pagerank_nano"))

@@ -4877,8 +4877,11 @@ edges AS (
 def q_eigen_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Eigenvector centrality (reference nx.eigenvector_centrality,
     feature.py:4605) on the same per-user ε-graph as contact_graph_stats:
-    K=8 decimal-quantized power iteration — the oracle unrolls the
-    identical K stages, so the match is bit-exact by construction."""
+    K=8 decimal-quantized power iteration; the oracle unrolls the same K
+    stages, but its CAST(DOUBLE AS DECIMAL(18,9)) rounds half-to-even where
+    Spark's is HALF_UP on the shortest string: the iterates differ (v8 in 62
+    of 30,853 rows at sf0.1, 2 of 3,053 at sf0.01), the 6-decimal output
+    matches."""
     from spark_pit.operators.graph import contact_edges, eigenvector_centrality
 
     ev = _ev(spark, sf_dir).select("user_id", "event_id", "value")
@@ -5133,7 +5136,7 @@ sp AS (
 def q_graph_path_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Diameter + average shortest path length per ε-graph (reference
     nx.diameter / nx.average_shortest_path_length, feature.py:4602-4603)
-    via the multi-source BFS operator; stats over connected pairs."""
+    over the per-user all-sources BFS kernel; stats over connected pairs."""
     from spark_pit.operators.graph import contact_edges, path_stats, shortest_paths
 
     ev = _ev(spark, sf_dir).select("user_id", "event_id", "value")
@@ -5178,9 +5181,9 @@ FROM per_src p JOIN nn ON p.user_id = nn.user_id
 
 
 def q_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact distributed DBSCAN (reference iAnalysis DBSCAN,
-    feature.py:4838-4850) over each user's 1-D value space: ε=0.05
-    neighbor pairs from the banded equi-join, min_pts=3, clusters = core
+    """Exact DBSCAN (reference iAnalysis DBSCAN, feature.py:4838-4850)
+    over each user's 1-D value space: ε=0.05 neighbor pairs from the banded
+    equi-join, min_pts=3, then one per-user kernel: clusters = core
     connected components + border attachment, noise = NULL cluster."""
     from spark_pit.operators.graph import contact_edges, dbscan_clusters
 

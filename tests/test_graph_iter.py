@@ -1,15 +1,20 @@
-"""Iterative graph operators: eigenvector centrality (power iteration) and
-connected components (the grouped NumPy kernel and the min-label
-propagation loop) on graphs with known answers."""
+"""Iterative graph operators through Spark: the per-entity kernels
+(components, BFS paths, betweenness, PageRank, eigenvector, DBSCAN) and the
+min-label propagation loop on graphs with known answers, their budget
+errors, and the graph queries against their DuckDB oracles."""
 
 from __future__ import annotations
 
+import sys
 from collections import deque
+from pathlib import Path
 
 import numpy as np
 import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
+
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
 
 
 def _edges_df(spark, rows):
@@ -255,48 +260,12 @@ def pd_isna(x):
     return pd.isna(x)
 
 
-def _brandes_brute(edges):
-    """Reference Brandes on one small graph, networkx-normalized."""
-    from collections import deque
+def test_betweenness_random_graphs_match_networkx(spark):
+    """Five seeded random graphs (one entity each, ONE Spark job) vs
+    networkx.betweenness_centrality(normalized=True) — covers branching,
+    multiple shortest paths, and disconnected remainders."""
+    import networkx as nx
 
-    adj = {}
-    for a, b in edges:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    nodes = sorted(adj)
-    bet = {v: 0.0 for v in nodes}
-    for s in nodes:
-        stack, pred = [], {v: [] for v in nodes}
-        sigma = {v: 0 for v in nodes}
-        dist = {v: -1 for v in nodes}
-        sigma[s], dist[s] = 1, 0
-        q = deque([s])
-        while q:
-            v = q.popleft()
-            stack.append(v)
-            for w in adj[v]:
-                if dist[w] < 0:
-                    dist[w] = dist[v] + 1
-                    q.append(w)
-                if dist[w] == dist[v] + 1:
-                    sigma[w] += sigma[v]
-                    pred[w].append(v)
-        delta = {v: 0.0 for v in nodes}
-        while stack:
-            w = stack.pop()
-            for v in pred[w]:
-                delta[v] += sigma[v] / sigma[w] * (1 + delta[w])
-            if w != s:
-                bet[w] += delta[w]
-    n = len(nodes)
-    scale = 1.0 / ((n - 1) * (n - 2)) if n > 2 else 0.0  # /2 undirected * 2/((n-1)(n-2))
-    return {v: bet[v] * scale for v in nodes}
-
-
-def test_betweenness_random_graphs_match_brute(spark):
-    """Five seeded random graphs (one entity each, ONE Spark job) vs the
-    pure-Python Brandes reference — covers branching, multiple shortest
-    paths, and disconnected remainders."""
     rng = np.random.default_rng(123)
     from spark_pit.operators.graph import betweenness_centrality
 
@@ -308,7 +277,7 @@ def test_betweenness_random_graphs_match_brute(spark):
         idx = rng.choice(len(cand), size=m, replace=False)
         edges = [cand[i] for i in idx]
         all_rows += [(g, a, b) for a, b in edges]
-        for v, x in _brandes_brute(edges).items():
+        for v, x in nx.betweenness_centrality(nx.Graph(edges), normalized=True).items():
             want[(g, v)] = x
     out = betweenness_centrality(_edges_df(spark, all_rows), "g").toPandas()
     got = {(r.g, r.node): r.betweenness for r in out.itertuples()}
@@ -396,3 +365,70 @@ def test_pagerank_properties(spark):
         got = out[out["g"] == g].set_index("node")["pagerank_nano"]
         for n in nodes:
             assert int(got[n]) == q[n], (g, n, int(got[n]), q[n])
+
+
+def test_graph_kernels_over_budget_name_the_entity(spark, monkeypatch):
+    """Above the cell budget the all-pairs operators raise, naming the
+    entity and its node and edge counts, while sampled betweenness on the
+    same graph still runs when its s sources' state fits; above the edge
+    budget PageRank, eigenvector and DBSCAN raise the same way."""
+    from spark_pit.operators import graph
+
+    # entity 7: a path of 6 nodes, 5 edges; entity 8: one edge
+    rows = [(7, i, i + 1) for i in range(5)] + [(8, 0, 1)]
+    df = _edges_df(spark, rows)
+    nodes = spark.createDataFrame(
+        [(7, i) for i in range(6)] + [(8, 0), (8, 1)], "g long, node long"
+    )
+    # the path's all-pairs state: 6 sources x (6 nodes + 10 CSR entries)
+    monkeypatch.setattr(graph, "CELL_BUDGET", 6 * 16 - 1)
+    for build in (
+        lambda: graph.path_stats(graph.shortest_paths(df, "g"), "g"),
+        lambda: graph.closeness_centrality(graph.shortest_paths(df, "g"), "g"),
+        lambda: graph.betweenness_centrality(df, "g"),
+    ):
+        with pytest.raises(Exception, match=r"g=7: graph of 6 nodes and 5 edges"):
+            build().collect()
+    sampled = graph.betweenness_centrality(df, "g", sample_sources=3).collect()
+    assert sorted((r.g, r.node) for r in sampled) == sorted(
+        [(7, i) for i in range(6)] + [(8, 0), (8, 1)]
+    )
+
+    monkeypatch.setattr(graph, "CC_EDGE_BUDGET", 4)
+    for build in (
+        lambda: graph.pagerank(df, "g"),
+        lambda: graph.eigenvector_centrality(df, "g"),
+        lambda: graph.dbscan_clusters(df, nodes, "g"),
+    ):
+        with pytest.raises(Exception, match=r"g=7: graph of 6 nodes and 5 edges"):
+            build().collect()
+
+
+GRAPH_ORACLE_QUERIES = [
+    "graph_path_stats", "closeness_centrality", "betweenness", "pagerank",
+    "eigen_centrality", "dbscan", "connected_components", "contact_graph_stats",
+]
+
+
+@pytest.fixture(scope="module")
+def duck(sf_dir):
+    import duckdb
+    from check_oracle import TABLES
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize("name", GRAPH_ORACLE_QUERIES)
+def test_graph_query_matches_oracle(spark, sf_dir, duck, name):
+    """The graph queries hash-match their DuckDB oracle at sf0.001, with
+    the gate's own dtype-strict comparison."""
+    from check_oracle import compare
+
+    from spark_pit.queries import ORACLES, QUERIES
+
+    got = QUERIES[name](spark, sf_dir).toPandas()
+    assert compare(name, got, duck.execute(ORACLES[name]).df()) == []

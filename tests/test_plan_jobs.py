@@ -1,10 +1,11 @@
 """Plan-time Spark jobs: building a query's DataFrame should launch none.
 
 A job launched while a plan is built is paid on every pass, before any of
-the query's own work. The two sources this pins are gone: a parquet read
-pins the schema it inferred (``catalog.read_table``), and connected
-components run as a grouped kernel inside the plan instead of one eager
-checkpoint job per round. What remains is the entry checkpoint of the
+the query's own work. The sources this pins are gone: a parquet read pins
+the schema it inferred (``catalog.read_table``), and the iterative graph
+operators (components, BFS paths, betweenness, PageRank, eigenvector,
+DBSCAN) run as one grouped kernel per entity graph inside the plan instead
+of checkpoint jobs per round. What remains is the entry checkpoint of the
 components' edge list, which ``dedup_clusters`` runs on purpose, and the
 image pipeline's hot-key detection, whose exact grouped count is how the
 plan learns which ids to salt.
@@ -53,6 +54,18 @@ def test_workload_query_plans_without_jobs(spark, sf_dir, name):
         assert 0 < jobs <= DEDUP_CLUSTERS_JOBS
     else:
         assert jobs == 0
+
+
+@pytest.mark.parametrize("name", [
+    "graph_path_stats", "closeness_centrality", "betweenness", "pagerank",
+    "eigen_centrality", "dbscan",
+])
+def test_graph_query_plans_without_jobs(spark, sf_dir, name):
+    from spark_pit.queries import QUERIES
+
+    _plan_jobs(spark, lambda: QUERIES[name](spark, sf_dir))  # cold build
+    jobs, _ = _plan_jobs(spark, lambda: QUERIES[name](spark, sf_dir))
+    assert jobs == 0
 
 
 def test_read_table_sees_a_file_rewritten_in_place(spark, tmp_path):
