@@ -1,20 +1,23 @@
 """Analysis plane (SURVEY.md §2.9: iAnalysis / MarkvCluster → MLlib).
 
 The reference wraps sklearn eagerly per call (`iAnalysis.kmeans`
-feature.py:4779-4807, PCA feature.py:4952-4960, correlation matrix for MCL
-feature.py:5083-5094). Spark-first mapping: ``pyspark.ml`` estimators over
-an assembled vector column, and plain ``corr`` aggregates for the
-correlation plane. The sklearn-only clusterer rows each get a distributed
-analogue: BisectingKMeans (Agglomerative), PIC (Spectral),
-graph.dbscan_clusters (DBSCAN), mean_shift_1d (MeanShift) and
-affinity_propagation_grouped (APC)."""
+feature.py:4779-4807, PCA feature.py:4952-4960) and runs MCL as a dense
+NumPy loop (feature.py:5083-5154). Spark-first mapping: ``pyspark.ml``
+estimators over an assembled vector column, and plain ``corr`` aggregates
+for the correlation plane. The sklearn-only clusterer rows get
+BisectingKMeans (Agglomerative), PIC (Spectral) and graph.dbscan_clusters
+(DBSCAN); MeanShift, AffinityPropagation and MCL are NumPy functions run by
+one grouped kernel per entity (MCL's: the whole graph) inside the plan, so
+building them launches no job."""
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from spark_pit.operators.rangejoin import cell_join
+from spark_pit.operators.graph import Graph, _per_entity, kernel_budget
 
 
 def _assemble(df: DataFrame, vec_col: str):
@@ -137,83 +140,88 @@ def lda_topics(
     )
 
 
+def _first_fit(xf: np.ndarray, q: np.ndarray, fits, i: np.ndarray) -> np.ndarray:
+    """Move each guess ``i`` to the first index whose ``fits(xf[i] − q)``
+    holds; ``fits`` is false then true along the sorted ``xf``."""
+    top = len(xf) - 1
+    while True:
+        dn = (i > 0) & fits(xf[np.maximum(i - 1, 0)] - q)
+        up = (i <= top) & ~fits(xf[np.minimum(i, top)] - q)
+        if not (dn.any() or up.any()):
+            return i
+        i = i - dn + up
+
+
+def mean_shift_nanos(xm: np.ndarray, n_iter: int, h: float) -> tuple[np.ndarray, np.ndarray]:
+    """One entity's flat-kernel mean shift in int64 nano-units. ``xm`` holds
+    the coordinates as exact DECIMAL(18,6) micros, ``x = xm/1e6``; from
+    ``qn = floor(x·1e9 + 0.5)``, each step moves every point to the mean of
+    the ORIGINAL points with ``abs(x − qn/1e9) <= h``: ``qn = floor(s/1e6 /
+    c · 1e9 + 0.5)`` for their micro sum ``s`` and count ``c``, each float
+    op correctly rounded as in the oracle's SQL (bit-exact while ``|s| <
+    2^53``). A window is a ``searchsorted`` range, its edges moved onto the
+    exact predicate (``fl(x − q)`` is monotone in x), summed from prefix
+    sums; a point whose window is empty drops. Returns ``(idx, qn)``."""
+    xs = np.sort(xm)
+    xf, cs = xs / 1e6, np.concatenate([[0], np.cumsum(xs)])
+    idx = np.arange(len(xm))
+    qn = np.floor(xm / 1e6 * 1e9 + 0.5).astype(np.int64)
+    for _ in range(n_iter):
+        q = qn / 1e9
+        lo = _first_fit(xf, q, lambda d: d >= -h, np.searchsorted(xf, q - h))
+        hi = _first_fit(xf, q, lambda d: d > h, np.searchsorted(xf, q + h, "right"))
+        keep = hi > lo
+        idx, s, c = idx[keep], (cs[hi] - cs[lo])[keep], (hi - lo)[keep]
+        qn = np.floor(s.astype(np.float64) / 1e6 / c * 1e9 + 0.5).astype(np.int64)
+    return idx, qn
+
+
+def mean_shift_labels(nodes: np.ndarray, qn: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """``(mode, cluster)`` of one entity's final iterates: the iterate
+    rounded half up to micro units, and the smallest node whose iterate
+    rounds half up to the same milli unit, with the oracle's double ops."""
+    mb = np.floor((qn + 500_000).astype(np.float64) / 1e6).astype(np.int64)
+    mode = np.floor((qn + 500).astype(np.float64) / 1000.0) / 1e6
+    return mode, pd.Series(nodes).groupby(mb).transform("min").to_numpy()
+
+
 def mean_shift_1d(
-    points: DataFrame,
-    entity: str,
-    node_id: str,
-    coord: str,
-    bandwidth: float,
-    n_iter: int = 8,
+    points: DataFrame, entity: str, node_id: str, coord: str, bandwidth: float, n_iter: int = 8,
 ) -> DataFrame:
     """MeanShift analogue (reference iAnalysis MeanShift, sklearn row
     feature.py:4838-4864 family) on the engine's 1-D coordinate space:
     every point's position iterates to the mean of the ORIGINAL points
     within ``bandwidth`` (flat kernel), K fixed steps; points whose modes
     land in the same bandwidth-scale decimal bucket form a cluster
-    (min node id = label).
+    (min node id = label). Returns (entity, node, mode, cluster).
 
-    Cross-engine determinism (round-3 hardening): iterates are quantized
-    to INT64 NANO-UNITS — ``qn = floor(mean·10⁹ + 0.5)`` — built only
-    from IEEE double ops (multiply, add, floor) that are correctly
-    rounded identically in Spark and DuckDB, and exact integer
-    arithmetic. The previous DECIMAL(18,9) requantization relied on
-    double→decimal CASTs, which Spark performs on the double's SHORTEST
-    DECIMAL REPR (BigDecimal.valueOf) while DuckDB rounds the exact
-    binary value — divergent whenever a quotient's shortest repr ends on
-    a rounding boundary (~1e-7 of divisions; 29 hits out of 800k at
-    sf0.1, invisible at the smaller gate scales). Neighborhood sums stay
-    exact DECIMAL(18,6); only sums and counts ever cross the
-    double/decimal line, both correctly rounded. Per step: one banded
-    equi-join (rangejoin.cell_join, never a nested loop) + one
-    partial-agg shuffle."""
+    The iterates are int64 nano-units (:func:`mean_shift_nanos`). The one
+    double→decimal cast, to DECIMAL(18,6), runs in the JVM, as Spark rounds
+    the double's SHORTEST DECIMAL REPR where DuckDB rounds its binary value;
+    the kernel gets the exact unscaled micros. As in
+    :func:`affinity_propagation_grouped`, the plan is one ``groupBy(entity)``
+    into one NumPy kernel per entity. A point with a NULL coordinate or
+    entity is neither a node nor a neighbour. An entity above
+    ``graph.CC_EDGE_BUDGET`` points (113 bytes each at the NumPy peak)
+    raises ``ValueError`` naming it."""
     h = float(bandwidth)
-    base = points.select(
-        F.col(entity).alias("__e"),
-        F.col(coord).cast("decimal(18,6)").alias("x"),
+    check = kernel_budget(entity, "points")
+    xm = (F.col(coord).cast("decimal(18,6)") * F.lit(10**6)).cast("long")
+    src = points.select(entity, F.col(node_id).alias("node"), xm.alias("xm")).where(
+        F.col(entity).isNotNull() & F.col("xm").isNotNull()
     )
-    cur = points.select(
-        entity,
-        F.col(node_id).alias("node"),
-        F.floor(
-            F.col(coord).cast("decimal(18,6)").cast("double") * F.lit(1e9) + F.lit(0.5)
-        ).cast("long").alias("qn"),
-    ).localCheckpoint(eager=False)
-    for _ in range(n_iter):
-        q = F.col("qn").cast("double") / F.lit(1e9)
-        x = F.col("x").cast("double")
-        near = cell_join(cur, base, [(entity, "__e")], [(q, x)], h).where(
-            F.abs(x - q) <= h
-        )
-        cur = (
-            near.groupBy(entity, "node")
-            .agg(F.sum("x").alias("__s"), F.count(F.lit(1)).alias("__c"))
-            .select(
-                entity, "node",
-                F.floor(
-                    F.col("__s").cast("double") / F.col("__c") * F.lit(1e9) + F.lit(0.5)
-                ).cast("long").alias("qn"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    # cluster bucket = nano units rounded half-up to MILLI units; mode =
-    # nano rounded half-up to MICRO units — pure integer arithmetic, the
-    # final /1e6 is one correctly-rounded IEEE divide of an exact integer
-    labeled = cur.withColumn(
-        "__mb",
-        F.floor((F.col("qn") + F.lit(500_000)) / F.lit(1_000_000.0)).cast("long"),
-    )
-    lab = labeled.groupBy(entity, "__mb").agg(F.min("node").alias("cluster"))
-    return (
-        labeled.join(lab, [entity, "__mb"])
-        .select(
-            entity, "node",
-            (
-                F.floor((F.col("qn") + F.lit(500)) / F.lit(1_000.0)).cast("double")
-                / F.lit(1e6)
-            ).alias("mode"),
-            "cluster",
-        )
-    )
+
+    def kern(key, pdf):
+        check(key[0], f"{len(pdf)} points", len(pdf))
+        idx, qn = mean_shift_nanos(pdf["xm"].to_numpy(np.int64), n_iter, h)
+        nodes = pdf["node"].to_numpy()[idx]
+        mode, cluster = mean_shift_labels(nodes, qn)
+        return pd.DataFrame({entity: np.repeat(key[0], len(idx)), "node": nodes,
+                             "mode": mode, "cluster": cluster})
+
+    et, nt = (points.schema[c].dataType.simpleString() for c in (entity, node_id))
+    schema = f"{entity} {et}, node {nt}, mode double, cluster {nt}"
+    return src.groupBy(entity).applyInPandas(kern, schema)
 
 
 def affinity_propagation_grouped(
@@ -261,9 +269,6 @@ def affinity_propagation_grouped(
     entities below ~400 points — the reference's own per-protein regime
     (feature.py:4838-4864 runs sklearn AP on one feature matrix in memory).
     """
-    import numpy as np
-    import pandas as pd
-
     def _halve(v):
         # round(v*0.5, 9) at scale 9 == half away from zero on odd ints
         a = np.abs(v)
@@ -353,72 +358,70 @@ def channel_correlation(df: DataFrame, cols: list[str]) -> DataFrame:
     return pairs
 
 
-def mcl_clusters(
-    edges: DataFrame,
-    src: str = "i",
-    dst: str = "j",
-    weight: str = "v",
-    inflation: float = 2.0,
-    max_iter: int = 12,
-    prune: float = 1e-4,
-    tol: float = 1e-5,
-) -> DataFrame:
-    """Markov clustering (MarkvCluster, feature.py:5083-5154) as sparse COO
-    DataFrame iterations — the distributed re-expression of the reference's
-    dense numpy expand/inflate loop:
+def mcl(
+    n: int, rows: np.ndarray, cols: np.ndarray, v: np.ndarray,
+    inflation: float = 2.0, max_iter: int = 12, prune: float = 1e-4, tol: float = 1e-5,
+) -> np.ndarray:
+    """Markov clustering on the dense n×n matrix with entries
+    ``M[rows[k], cols[k]] = v[k]``, the reference's own dense NumPy loop
+    (MarkvCluster, feature.py:5083-5154). Entries with ``v <= 0`` drop,
+    duplicates keep the largest ``v``, and every diagonal entry is
+    ``max(v, 1)`` (MCL's self-loops). After a column normalization, each
+    step squares the matrix (expand), raises it to ``inflation``,
+    normalizes the columns, drops entries ``<= prune`` and normalizes again;
+    the loop stops once no entry moved by ``tol`` or after ``max_iter``
+    steps. Returns per column the smallest row with a nonzero entry (its
+    attractor), or -1 where pruning emptied the column."""
+    def colnorm(x):  # in place; a column pruned empty stays empty
+        tot = x.sum(axis=0)
+        x /= np.where(tot > 0, tot, 1.0)
 
-    - expand  = M @ M  → join on the contraction index + groupBy sum
-      (shuffle-partitioned on the key; pruning keeps the matrix sparse so
-      the join stays far below the dense N^3)
-    - inflate = elementwise v^r then column re-normalization (groupBy sum +
-      join-divide)
-    - converge on max |delta| (full-outer join) or max_iter; each iteration
-      localCheckpoints to truncate lineage (driver loop over a bounded
-      iteration count — the canonical Spark shape for iterative algorithms)
-
-    Input: symmetric weighted edge list (i, j, v>=0); self-loops are added
-    (MCL requirement). Output: (node, cluster) with cluster = min attractor
-    row over the node's column — deterministic.
-    """
-    spark = edges.sparkSession
-    m = edges.select(
-        F.col(src).alias("i"), F.col(dst).alias("j"), F.col(weight).cast("double").alias("v")
-    )
-    nodes = m.select(F.col("i").alias("n")).union(m.select("j")).distinct()
-    loops = nodes.select(F.col("n").alias("i"), F.col("n").alias("j"), F.lit(1.0).alias("v"))
-    m = m.where(F.col("v") > 0).unionByName(loops).groupBy("i", "j").agg(F.max("v").alias("v"))
-
-    def colnorm(mm: DataFrame) -> DataFrame:
-        tot = mm.groupBy("j").agg(F.sum("v").alias("__t"))
-        return mm.join(tot, "j").select("i", "j", (F.col("v") / F.col("__t")).alias("v"))
-
-    cur = colnorm(m).localCheckpoint()
+    m, keep, d = np.zeros((n, n)), v > 0, np.arange(n)
+    np.maximum.at(m, (rows[keep], cols[keep]), v[keep])
+    m[d, d] = np.maximum(m[d, d], 1.0)
+    colnorm(m)
     for _ in range(max_iter):
-        a = cur.select(F.col("i"), F.col("j").alias("k"), F.col("v").alias("va"))
-        b = cur.select(F.col("i").alias("k"), F.col("j"), F.col("v").alias("vb"))
-        sq = (
-            a.join(b, "k")
-            .groupBy("i", "j")
-            .agg(F.sum(F.col("va") * F.col("vb")).alias("v"))
-        )
-        infl = sq.select("i", "j", F.pow("v", inflation).alias("v"))
-        nxt = colnorm(infl).where(F.col("v") > prune)
-        nxt = colnorm(nxt).localCheckpoint()  # renormalize after pruning
-        delta = (
-            nxt.select("i", "j", F.col("v").alias("vn"))
-            .join(cur.select("i", "j", F.col("v").alias("vo")), ["i", "j"], "full_outer")
-            .select(
-                F.abs(F.coalesce("vn", F.lit(0.0)) - F.coalesce("vo", F.lit(0.0))).alias("d")
-            )
-            .agg(F.max("d"))
-            .first()[0]
-        )
-        cur = nxt
-        if delta is not None and delta < tol:
+        nxt = m @ m
+        np.power(nxt, inflation, out=nxt)
+        colnorm(nxt)
+        nxt[nxt <= prune] = 0.0
+        colnorm(nxt)
+        m -= nxt  # the old matrix becomes |Δ|, no third n×n array
+        delta = np.abs(m, out=m).max(initial=0.0)
+        m = nxt
+        if delta < tol:
             break
-    return cur.groupBy("j").agg(F.min("i").alias("cluster")).select(
-        F.col("j").alias("node"), "cluster"
+    nz = m != 0
+    return np.where(nz.any(axis=0), nz.argmax(axis=0), -1)
+
+
+def mcl_clusters(
+    edges: DataFrame, src: str = "i", dst: str = "j", weight: str = "v",
+    inflation: float = 2.0, max_iter: int = 12, prune: float = 1e-4, tol: float = 1e-5,
+) -> DataFrame:
+    """Markov clustering (MarkvCluster, feature.py:5083-5154) of the
+    weighted edge list (src, dst, weight) read as the matrix M[src, dst]:
+    :func:`mcl` on the whole graph in one grouped kernel
+    (``graph._per_entity`` over a constant entity ``__g``), the
+    reference's dense in-memory regime. Every node of an edge is a node,
+    also when its edges all have weight <= 0. Returns (node, cluster) with
+    cluster = the smallest attractor row of the node's column. A graph above
+    ``graph.CELL_BUDGET`` n² cells (17 bytes each at peak) raises ``ValueError``."""
+    m = edges.select(
+        F.lit(0).alias("__g"), F.col(src).alias("a"), F.col(dst).alias("b"),
+        F.col(weight).cast("double").alias("v"),
     )
+
+    def algo(g: Graph, pdf: pd.DataFrame) -> dict:
+        att = mcl(len(g.ids), g.ea, g.eb, pdf["v"].to_numpy(np.float64),
+                  inflation, max_iter, prune, tol)
+        kept = att >= 0
+        return {"node": g.ids[kept], "cluster": g.ids[att[kept]]}
+
+    return _per_entity(
+        m, "__g", [("node", None), ("cluster", None)], algo, carry=("v",),
+        cells=lambda g: len(g.ids) ** 2,
+    ).drop("__g")
 
 
 def agglomerative_sample(
@@ -445,8 +448,6 @@ def agglomerative_sample(
     Returns (id, cluster) with cluster = the MIN member id of the merged
     cluster (canonical labels, same convention as the fixture pins); id
     dtype passes through unchanged."""
-    import numpy as np
-
     ranked = (
         df.select(id_col, vec_col)
         .orderBy(F.xxhash64(F.col(id_col).cast("string"), F.lit(seed)), F.col(id_col))
@@ -517,8 +518,6 @@ def tsne_sample(
     in every branch (the output schema is `{id_col} string` — a plot
     legend key, not a join key); pass pre-cast string ids to keep dtypes
     round-trippable."""
-    import numpy as np
-
     ranked = (
         df.select(id_col, vec_col)
         .orderBy(F.xxhash64(F.col(id_col).cast("string"), F.lit(seed)), F.col(id_col))
@@ -616,9 +615,6 @@ def gmm_clusters_em(
     The at-scale single-mixture path over unbounded rows remains MLlib
     ``gmm_clusters``.
     """
-    import numpy as np
-    import pandas as pd
-
     gcols = [group_col] if group_col else []
     out_schema = ", ".join(
         [f"{c} string" for c in gcols]

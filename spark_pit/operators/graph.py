@@ -23,7 +23,7 @@ from typing import Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType, DataType, DoubleType, IntegerType, LongType, StructField, StructType,
@@ -158,6 +158,22 @@ def _all_pairs_cells(g: Graph, sources: int | None = None) -> int:
     return min(n, sources or n) * (n + len(g.nbr))
 
 
+def kernel_budget(entity: str, unit: str = "edges", hint: str = "") -> Callable[..., None]:
+    """The per-entity kernels' one scale guard, its budgets read at plan time:
+    ``check(key, what, size, cells)`` raises ``ValueError`` naming entity
+    ``key`` above ``CC_EDGE_BUDGET`` ``unit`` or ``CELL_BUDGET`` cells."""
+    size_budget, cell_budget = CC_EDGE_BUDGET, CELL_BUDGET
+
+    def check(key, what: str, size: int, cells: int = 0) -> None:
+        if size > size_budget or cells > cell_budget:
+            raise ValueError(
+                f"{entity}={key}: {what} ({cells} state cells) is over the per-entity"
+                f" kernel budget of {size_budget} {unit} and {cell_budget} cells{hint}"
+            )
+
+    return check
+
+
 def _per_entity(
     edges: DataFrame,
     entity: str,
@@ -179,20 +195,15 @@ def _per_entity(
 
     A graph above ``CC_EDGE_BUDGET`` edges, or whose all-pairs state
     ``cells(g)`` exceeds ``CELL_BUDGET``, raises ``ValueError``
-    naming the entity, its node and edge counts and the budget, plus
-    ``hint``."""
-    edge_budget, cell_budget = CC_EDGE_BUDGET, CELL_BUDGET
+    (:func:`kernel_budget`) naming the entity, its node and edge counts and
+    the budget, plus ``hint``."""
+    check = kernel_budget(entity, hint=hint)
 
     def run(key, pdf: pd.DataFrame, *npdf: pd.DataFrame) -> pd.DataFrame:
         g = to_graph(pdf["a"].to_numpy(), pdf["b"].to_numpy(),
                      *(f.iloc[:, 1].to_numpy() for f in npdf))
-        n_cells = 0 if cells is None else cells(g)
-        if len(pdf) > edge_budget or n_cells > cell_budget:
-            raise ValueError(
-                f"{entity}={key[0]}: graph of {len(g.ids)} nodes and {len(pdf)} edges"
-                f" ({n_cells} state cells) is over the per-entity kernel budget"
-                f" of {edge_budget} edges and {cell_budget} cells{hint}"
-            )
+        check(key[0], f"graph of {len(g.ids)} nodes and {len(pdf)} edges", len(pdf),
+              0 if cells is None else cells(g))
         cols = algo(g, pdf, *npdf)
         n = len(next(iter(cols.values())))
         return pd.DataFrame({entity: np.repeat(key, n), **cols})
@@ -410,22 +421,17 @@ def closeness_centrality(sp: DataFrame, entity: str) -> DataFrame:
     feature.py:4607), Wasserman–Faust form for disconnected graphs exactly
     as networkx computes it: with r = nodes reachable from u (incl. u) and
     n = nodes in the entity graph,  C(u) = ((r-1)/Σdist) · ((r-1)/(n-1))."""
-    n_nodes = sp.where(F.col("dist") == 0).groupBy(entity).agg(
-        F.count(F.lit(1)).alias("n")
-    )
     per_src = sp.groupBy(entity, "src").agg(
         F.count(F.lit(1)).alias("r"), F.sum("dist").alias("sd")
     )
-    return (
-        per_src.join(F.broadcast(n_nodes), entity)
-        .select(
-            entity,
-            F.col("src").alias("node"),
-            F.when(
-                (F.col("sd") > 0) & (F.col("n") > 1),
-                ((F.col("r") - 1) / F.col("sd")) * ((F.col("r") - 1) / (F.col("n") - 1)),
-            ).otherwise(F.lit(0.0)).alias("closeness"),
-        )
+    n = F.count(F.lit(1)).over(Window.partitionBy(entity))  # every node is a source
+    return per_src.select(
+        entity,
+        F.col("src").alias("node"),
+        F.when(
+            (F.col("sd") > 0) & (n > 1),
+            ((F.col("r") - 1) / F.col("sd")) * ((F.col("r") - 1) / (n - 1)),
+        ).otherwise(F.lit(0.0)).alias("closeness"),
     )
 
 
@@ -503,15 +509,12 @@ def eigenvector_centrality(edges: DataFrame, entity: str, n_iter: int = 8) -> Da
         edges, entity, [("n", None), ("v", LongType())],
         lambda g, _pdf: {"n": g.ids, "v": eigenvector_nanos(g.indptr, g.nbr, n_iter)},
     ).withColumn("v", (F.col("v").cast("decimal(18,0)") / 10**9).cast("decimal(18,9)"))
-    norm = v.groupBy(entity).agg(
-        F.sum(F.col("v") * F.col("v")).alias("ss")  # exact decimal(38,18) sum
-    )
-    return v.join(F.broadcast(norm), entity).select(
+    # exact decimal(38,18) sum of squares over the entity's nodes
+    ss = F.sum(F.col("v") * F.col("v")).over(Window.partitionBy(entity))
+    return v.select(
         entity,
         F.col("n").alias("node"),
-        F.round(
-            F.col("v").cast("double") / F.sqrt(F.col("ss").cast("double")), 6
-        ).alias("centrality"),
+        F.round(F.col("v").cast("double") / F.sqrt(ss.cast("double")), 6).alias("centrality"),
     )
 
 

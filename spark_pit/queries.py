@@ -5393,8 +5393,8 @@ FROM d
 
 def q_mean_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MeanShift analogue (sklearn-clusterer row): 8-step flat-kernel mode
-    seeking over each user's value axis, bandwidth 20 — decimal-quantized
-    per step so the unrolled SQL oracle is bit-exact (the eigen discipline)."""
+    seeking over each user's value axis, bandwidth 20, in one per-user NumPy
+    kernel with int64 nano-unit iterates, bit-exact to the unrolled oracle."""
     from spark_pit.operators.analysis import mean_shift_1d
 
     ev = _ev(spark, sf_dir).select("user_id", "event_id", "value")

@@ -1,7 +1,8 @@
 """Iterative graph operators through Spark: the per-entity kernels
 (components, BFS paths, betweenness, PageRank, eigenvector, DBSCAN) and the
 min-label propagation loop on graphs with known answers, their budget
-errors, and the graph queries against their DuckDB oracles."""
+errors and those of mean shift and MCL, and the graph and clustering
+queries against their DuckDB oracles."""
 
 from __future__ import annotations
 
@@ -368,11 +369,14 @@ def test_pagerank_properties(spark):
 
 
 def test_graph_kernels_over_budget_name_the_entity(spark, monkeypatch):
-    """Above the cell budget the all-pairs operators raise, naming the
-    entity and its node and edge counts, while sampled betweenness on the
-    same graph still runs when its s sources' state fits; above the edge
-    budget PageRank, eigenvector and DBSCAN raise the same way."""
-    from spark_pit.operators import graph
+    """Above the cell budget the all-pairs operators and MCL's n² matrix
+    raise, naming the entity and its node and edge counts, while sampled
+    betweenness on the same graph still runs when its s sources' state
+    fits; above the edge budget PageRank, eigenvector and DBSCAN raise the
+    same way, and mean shift above it in points."""
+    from pyspark.sql import functions as F
+
+    from spark_pit.operators import analysis, graph
 
     # entity 7: a path of 6 nodes, 5 edges; entity 8: one edge
     rows = [(7, i, i + 1) for i in range(5)] + [(8, 0, 1)]
@@ -389,6 +393,10 @@ def test_graph_kernels_over_budget_name_the_entity(spark, monkeypatch):
     ):
         with pytest.raises(Exception, match=r"g=7: graph of 6 nodes and 5 edges"):
             build().collect()
+    # MCL runs the whole graph as one entity: a 10-node path is 100 cells
+    path = spark.createDataFrame([(i, i + 1, 1.0) for i in range(9)], "i long, j long, v double")
+    with pytest.raises(Exception, match=r"__g=0: graph of 10 nodes and 9 edges \(100 state"):
+        analysis.mcl_clusters(path).collect()
     sampled = graph.betweenness_centrality(df, "g", sample_sources=3).collect()
     assert sorted((r.g, r.node) for r in sampled) == sorted(
         [(7, i) for i in range(6)] + [(8, 0), (8, 1)]
@@ -402,11 +410,15 @@ def test_graph_kernels_over_budget_name_the_entity(spark, monkeypatch):
     ):
         with pytest.raises(Exception, match=r"g=7: graph of 6 nodes and 5 edges"):
             build().collect()
+    points = nodes.withColumn("x", F.col("node") * 0.5)
+    with pytest.raises(Exception, match=r"g=7: 6 points .* budget of 4 points"):
+        analysis.mean_shift_1d(points, "g", "node", "x", bandwidth=1.0).collect()
 
 
 GRAPH_ORACLE_QUERIES = [
     "graph_path_stats", "closeness_centrality", "betweenness", "pagerank",
     "eigen_centrality", "dbscan", "connected_components", "contact_graph_stats",
+    "mean_shift", "mcl_clusters",
 ]
 
 
@@ -424,8 +436,8 @@ def duck(sf_dir):
 
 @pytest.mark.parametrize("name", GRAPH_ORACLE_QUERIES)
 def test_graph_query_matches_oracle(spark, sf_dir, duck, name):
-    """The graph queries hash-match their DuckDB oracle at sf0.001, with
-    the gate's own dtype-strict comparison."""
+    """The graph and clustering queries hash-match their DuckDB oracle at
+    sf0.001, with the gate's own dtype-strict comparison."""
     from check_oracle import compare
 
     from spark_pit.queries import ORACLES, QUERIES

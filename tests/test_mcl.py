@@ -1,5 +1,5 @@
-"""Distributed MCL (MarkvCluster analogue): three disconnected cliques must
-come back as exactly three clusters matching membership."""
+"""MCL (MarkvCluster analogue) through Spark: three disconnected cliques
+must come back as exactly three clusters matching membership."""
 
 from __future__ import annotations
 

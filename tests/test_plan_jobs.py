@@ -3,9 +3,9 @@
 A job launched while a plan is built is paid on every pass, before any of
 the query's own work. The sources this pins are gone: a parquet read pins
 the schema it inferred (``catalog.read_table``), and the iterative graph
-operators (components, BFS paths, betweenness, PageRank, eigenvector,
-DBSCAN) run as one grouped kernel per entity graph inside the plan instead
-of checkpoint jobs per round. What remains is the entry checkpoint of the
+and clustering operators (components, BFS paths, betweenness, PageRank,
+eigenvector, DBSCAN, mean shift, MCL) run as one grouped kernel per entity
+inside the plan instead of checkpoint jobs per round. What remains is the entry checkpoint of the
 components' edge list, which ``dedup_clusters`` runs on purpose, and the
 image pipeline's hot-key detection, whose exact grouped count is how the
 plan learns which ids to salt.
@@ -58,7 +58,7 @@ def test_workload_query_plans_without_jobs(spark, sf_dir, name):
 
 @pytest.mark.parametrize("name", [
     "graph_path_stats", "closeness_centrality", "betweenness", "pagerank",
-    "eigen_centrality", "dbscan",
+    "eigen_centrality", "dbscan", "mean_shift", "mcl_clusters",
 ])
 def test_graph_query_plans_without_jobs(spark, sf_dir, name):
     from spark_pit.queries import QUERIES
