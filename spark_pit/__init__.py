@@ -22,4 +22,5 @@ dimension/lookup tables.
 
 __version__ = "0.1.0"
 
+from spark_pit import _zipimport  # noqa: F401  (zip importers re-read only changed archives)
 from spark_pit.session import get_spark  # noqa: F401

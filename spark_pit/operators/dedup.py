@@ -70,6 +70,26 @@ def _distinct_tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
+def _split_count(plan) -> int:
+    """Partitions the pipeline on top of a physical ``plan`` runs in, read
+    off the plan without running it: the count its output partitioning
+    declares (an exchange's, before adaptive coalescing), else the splits
+    of its file scans; raises for any other leaf. An adaptive plan is read
+    through its initial plan; asking it for its RDD would run its shuffle
+    stages."""
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()  # the initial plan: no stage has run
+    n = plan.outputPartitioning().numPartitions()
+    if n:
+        return n
+    leaves = plan.collectLeaves()
+    scans = [leaves.apply(i) for i in range(leaves.size())]
+    if not scans or any(s.getClass().getSimpleName() != "FileSourceScanExec" for s in scans):
+        raise ValueError("split count unknown")
+    # a file scan's RDD is its split list, built from the file listing
+    return sum(s.inputRDD().getNumPartitions() for s in scans)
+
+
 def _minhash_wide(
     df: DataFrame, id_col: str, text_col: str, n_hashes: int, carry_toks: bool = False
 ) -> DataFrame:
@@ -98,12 +118,14 @@ def _minhash_wide(
     par = df.sparkSession.sparkContext.defaultParallelism
     slim = df.select(F.col(id_col), F.col(text_col))
     try:
-        est_bytes = int(
-            slim._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        qe = slim._jdf.queryExecution()
+        narrow = (
+            int(qe.optimizedPlan().stats().sizeInBytes()) >= (4 << 20)
+            and _split_count(qe.executedPlan()) < par
         )
     except Exception:  # pragma: no cover - estimation is best-effort
-        est_bytes = 0
-    if est_bytes >= (4 << 20) and slim.rdd.getNumPartitions() < par:
+        narrow = False
+    if narrow:
         slim = slim.repartition(par)
     toks = _distinct_tokens(slim, id_col, text_col).withColumn("th", tok_hash(F.col("tok")))
     aggs = [

@@ -5466,7 +5466,7 @@ def q_mcl_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     edges = spark.createDataFrame(_MCL_EDGES, "i long, j long, v double")
     sym = edges.union(edges.select(F.col("j"), F.col("i"), F.col("v")))
-    return mcl_clusters(sym, "i", "j", "v").orderBy("node")
+    return mcl_clusters(sym, "i", "j", "v")
 
 
 Q_MCL_CLUSTERS_SQL = """

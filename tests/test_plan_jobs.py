@@ -109,3 +109,32 @@ def test_image_pipeline_plans_with_only_the_hot_key_count(spark, tmp_path):
     _plan_jobs(spark, build)  # cold build
     jobs, _ = _plan_jobs(spark, build)
     assert 0 < jobs <= IMAGE_PIPELINE_JOBS
+
+
+def test_minhash_over_a_shuffled_input_plans_without_jobs(spark, tmp_path):
+    """``_minhash_wide`` reads its input's split count off the physical
+    plan: an input above its 4 MB fan-out floor that arrives through a
+    ``groupBy`` is an adaptive plan, whose RDD would run the shuffle."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from spark_pit.operators.dedup import minhash_signatures
+
+    rng = np.random.default_rng(0)
+    words = np.array(["".join(map(chr, 97 + rng.integers(0, 26, 7))) for _ in range(20_000)])
+    n = 6_000
+    texts = [" ".join(words[rng.integers(0, len(words), 120)]) for _ in range(n)]
+    path = str(tmp_path / "docs.parquet")
+    pq.write_table(pa.table({"doc_id": np.arange(n), "text": texts}), path, compression="none")
+    docs = spark.read.parquet(path)
+    grouped = docs.groupBy("doc_id").agg(F.max("text").alias("text"))
+    est = grouped._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    assert int(est) >= 4 << 20  # the fan-out check runs
+
+    jobs, sig = _plan_jobs(spark, lambda: minhash_signatures(grouped, "doc_id", "text"))
+    assert jobs == 0
+    assert "RoundRobinPartitioning" not in sig._jdf.queryExecution().executedPlan().toString()
+    # a single-file scan still fans out to the cluster's slots
+    jobs, sig = _plan_jobs(spark, lambda: minhash_signatures(docs, "doc_id", "text"))
+    assert jobs == 0
+    assert "RoundRobinPartitioning" in sig._jdf.queryExecution().executedPlan().toString()
