@@ -1,9 +1,12 @@
-"""Multimodal (image) payload operators.
+"""Multimodal (image, video, audio) payload operators.
 
-The Spark-side plumbing is the point (schema, Arrow batching, partition
-hygiene): binary payloads stream executor-side through mapInPandas in Arrow
-batches; the `bytes` column is consumed HERE and never survives into any
-shuffle (SURVEY.md §7 hard-point 3 — project it away, join stats back by key).
+Every binary mapper here is one per-item function behind
+:func:`map_payloads`, the single executor-side decode stage: the payload
+column streams through iterator mapInPandas in Arrow batches, is consumed
+inside the batch, and never survives into any shuffle (SURVEY.md §7
+hard-point 3 — project it away, join stats back by key). The stage owns
+the batch loop, the pass-through of the kept columns, the failure rows and
+the output frame; a mapper says only what one payload yields.
 
 Decoding uses the self-contained codecs (spark_pit.codecs). In production
 the decode call is the only line that changes (swap for libjpeg/Pillow);
@@ -23,7 +26,7 @@ column and ``phash_clusters`` is ``cluster_duplicates`` over those pairs.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -33,6 +36,56 @@ from pyspark.sql import functions as F
 from spark_pit.codecs import decode_image
 from spark_pit.operators.dedup import cluster_duplicates, hamming_pairs
 
+def map_payloads(
+    df: DataFrame,
+    keep: list[str],
+    payload: str,
+    fn: Callable[..., dict | list[dict]],
+    schema: str,
+    failed: dict | list[dict],
+    fan_out: bool = False,
+    reads: tuple[str, ...] = (),
+) -> DataFrame:
+    """The one executor-side decode stage: ``keep``, ``reads`` and
+    ``payload`` selected from ``df`` and streamed through iterator
+    mapInPandas, one output frame per Arrow batch.
+
+    Per row, ``fn(payload_bytes, **row)`` (``row`` holds the values of the
+    kept columns and of ``reads``, columns ``fn`` needs but the output does
+    not carry) returns the computed columns as one dict — or, with
+    ``fan_out``, a list of dicts, one output row each, so a row may yield
+    none. An exception from ``fn`` yields ``failed`` instead: the caller's
+    literal failure row (a list of rows with ``fan_out``). Kept columns
+    pass through as the batch's own columns (repeated per output row when
+    fanning out), so their dtypes and values are untouched. ``schema``
+    names the kept columns first, then the computed ones. The payload is
+    consumed inside the batch and is not among the outputs."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for batch in batches:
+            kept = batch[keep].reset_index(drop=True)
+            rows, src = [], []
+            for i, (data, row) in enumerate(
+                zip(batch[payload], batch[[*keep, *reads]].to_dict("records"))
+            ):
+                try:
+                    got = fn(bytes(data), **row)
+                except Exception:
+                    got = failed
+                if fan_out:
+                    rows.extend(got)
+                    src.extend([i] * len(got))
+                else:
+                    rows.append(got)
+            if not rows:
+                continue
+            if fan_out:
+                kept = kept.iloc[src].reset_index(drop=True)
+            yield pd.concat([kept, pd.DataFrame.from_records(rows)], axis=1)
+
+    return df.select(*keep, *reads, payload).mapInPandas(run, schema=schema)
+
+
 DECODE_STATS_SCHEMA = (
     "image_id string, fmt string, w int, h int, "
     "mean_r double, mean_g double, mean_b double, std_gray double, decode_ok boolean"
@@ -40,40 +93,22 @@ DECODE_STATS_SCHEMA = (
 
 
 def decode_stats(images: DataFrame) -> DataFrame:
-    """Per-image channel means + gray std from the decoded pixels.
+    """Per-image channel means + gray std from the decoded pixels. Output
+    carries no binary — downstream shuffles stay light."""
 
-    mapInPandas (iterator form): the codec table is bound once per Python
-    worker; each Arrow batch of (id, fmt, bytes) yields one stats batch.
-    Output carries no binary — downstream shuffles stay light.
-    """
-    cols = images.select("image_id", "fmt", "w", "h", "bytes")
+    def stats(data: bytes, fmt: str, **_) -> dict:
+        img = decode_image(data, fmt).astype(np.float64)
+        means = np.round(img.mean(axis=(0, 1)), 6)
+        return dict(
+            mean_r=means[0], mean_g=means[1], mean_b=means[2],
+            std_gray=np.round(float(img.mean(axis=2).std()), 6), decode_ok=True,
+        )
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {
-                "image_id": batch["image_id"],
-                "fmt": batch["fmt"],
-                "w": batch["w"],
-                "h": batch["h"],
-            }
-            mr, mg, mb, sg, ok = [], [], [], [], []
-            for data, fmt in zip(batch["bytes"], batch["fmt"]):
-                try:
-                    img = decode_image(bytes(data), fmt).astype(np.float64)
-                    means = img.mean(axis=(0, 1))
-                    mr.append(means[0]); mg.append(means[1]); mb.append(means[2])
-                    sg.append(float(img.mean(axis=2).std()))
-                    ok.append(True)
-                except Exception:
-                    mr.append(np.nan); mg.append(np.nan); mb.append(np.nan)
-                    sg.append(np.nan); ok.append(False)
-            out.update(
-                mean_r=np.round(mr, 6), mean_g=np.round(mg, 6),
-                mean_b=np.round(mb, 6), std_gray=np.round(sg, 6), decode_ok=ok,
-            )
-            yield pd.DataFrame(out)
-
-    return cols.mapInPandas(extract, schema=DECODE_STATS_SCHEMA)
+    nan = np.nan
+    failed = dict(mean_r=nan, mean_g=nan, mean_b=nan, std_gray=nan, decode_ok=False)
+    return map_payloads(
+        images, ["image_id", "fmt", "w", "h"], "bytes", stats, DECODE_STATS_SCHEMA, failed
+    )
 
 
 def phash_features(images: DataFrame, id_col: str = "image_id", phash_col: str = "phash") -> DataFrame:
@@ -96,32 +131,18 @@ def fidelity_check(images: DataFrame) -> DataFrame:
     idempotent re-encode for the lossy stand-in. The PSNR-vs-original gate
     lives in tests (original pixels known there); at pipeline level this is
     the per-row integrity audit written to the manifest."""
-    cols = images.select("image_id", "fmt", "bytes")
+    from spark_pit.codecs import encode_image
 
-    def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from spark_pit.codecs import encode_image
+    def roundtrip(data: bytes, fmt: str, **_) -> dict:
+        img = decode_image(data, fmt)
+        # lossless must round-trip exactly; the lossy stand-in is
+        # quantization-idempotent so it round-trips exactly too
+        return dict(decode_ok=True, reencode_exact=encode_image(img, fmt) == data)
 
-        for batch in batches:
-            ids, fmts, ok, exact = [], [], [], []
-            for image_id, fmt, data in zip(batch["image_id"], batch["fmt"], batch["bytes"]):
-                ids.append(image_id)
-                fmts.append(fmt)
-                try:
-                    img = decode_image(bytes(data), fmt)
-                    re = encode_image(img, fmt)
-                    ok.append(True)
-                    # lossless must round-trip exactly; the lossy stand-in is
-                    # quantization-idempotent so it round-trips exactly too
-                    exact.append(re == bytes(data))
-                except Exception:
-                    ok.append(False)
-                    exact.append(False)
-            yield pd.DataFrame(
-                {"image_id": ids, "fmt": fmts, "decode_ok": ok, "reencode_exact": exact}
-            )
-
-    return cols.mapInPandas(
-        check, schema="image_id string, fmt string, decode_ok boolean, reencode_exact boolean"
+    return map_payloads(
+        images, ["image_id", "fmt"], "bytes", roundtrip,
+        "image_id string, fmt string, decode_ok boolean, reencode_exact boolean",
+        dict(decode_ok=False, reencode_exact=False),
     )
 
 
@@ -135,48 +156,40 @@ def resize_images(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
     """Deterministic area-average resize (the multimodal-pipeline resize
     step): decode → integer-edge box pooling onto the (out_h, out_w) grid
     (same pooling rule as datagen's aHash, so an exact-factor downsample of
-    a blocky image is bit-exact) → lossless PNG re-encode. Same plumbing
-    contract as decode_stats: iterator mapInPandas, input bytes consumed in
-    the batch, output binary is the SMALL resized payload. At 100 TB the
-    decode+resize runs where the scan runs; nothing wide ever shuffles."""
+    a blocky image is bit-exact) → lossless PNG re-encode, one
+    :func:`map_payloads` row per image; the only binary it emits is the
+    SMALL resized payload. At 100 TB the decode+resize runs where the scan
+    runs; nothing wide ever shuffles."""
     from spark_pit.codecs import encode_png
 
-    cols = images.select("image_id", "fmt", "bytes")
+    edge_cache: dict = {}  # per-(h,w) pooling edges, bound once per worker
 
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        edge_cache: dict = {}  # per-(h,w) pooling edges, bound once per worker
-        for batch in batches:
-            ob, mg, ok = [], [], []
-            for data, fmt in zip(batch["bytes"], batch["fmt"]):
-                try:
-                    img = decode_image(bytes(data), fmt).astype(np.float64)
-                    h, w = img.shape[:2]
-                    key = (h, w)
-                    if key not in edge_cache:
-                        edge_cache[key] = (
-                            (np.arange(out_h + 1) * h) // out_h,
-                            (np.arange(out_w + 1) * w) // out_w,
-                        )
-                    ye, xe = edge_cache[key]
-                    out = np.empty((out_h, out_w, 3), np.float64)
-                    for i in range(out_h):
-                        y0, y1 = ye[i], max(ye[i + 1], ye[i] + 1)
-                        for j in range(out_w):
-                            x0, x1 = xe[j], max(xe[j + 1], xe[j] + 1)
-                            out[i, j] = img[y0:y1, x0:x1].mean(axis=(0, 1))
-                    q = np.round(out).clip(0, 255).astype(np.uint8)
-                    ob.append(encode_png(q))
-                    mg.append(round(float(q.astype(np.float64).mean()), 6))
-                    ok.append(True)
-                except Exception:
-                    ob.append(None); mg.append(np.nan); ok.append(False)
-            yield pd.DataFrame({
-                "image_id": batch["image_id"], "fmt": batch["fmt"],
-                "out_w": out_w, "out_h": out_h,
-                "out_bytes": ob, "mean_gray_out": mg, "resize_ok": ok,
-            })
+    def resize(data: bytes, fmt: str, **_) -> dict:
+        img = decode_image(data, fmt).astype(np.float64)
+        h, w = img.shape[:2]
+        key = (h, w)
+        if key not in edge_cache:
+            edge_cache[key] = (
+                (np.arange(out_h + 1) * h) // out_h,
+                (np.arange(out_w + 1) * w) // out_w,
+            )
+        ye, xe = edge_cache[key]
+        out = np.empty((out_h, out_w, 3), np.float64)
+        for i in range(out_h):
+            y0, y1 = ye[i], max(ye[i + 1], ye[i] + 1)
+            for j in range(out_w):
+                x0, x1 = xe[j], max(xe[j + 1], xe[j] + 1)
+                out[i, j] = img[y0:y1, x0:x1].mean(axis=(0, 1))
+        q = np.round(out).clip(0, 255).astype(np.uint8)
+        return dict(
+            out_w=out_w, out_h=out_h, out_bytes=encode_png(q),
+            mean_gray_out=round(float(q.astype(np.float64).mean()), 6), resize_ok=True,
+        )
 
-    return cols.mapInPandas(kern, schema=RESIZE_SCHEMA)
+    failed = dict(
+        out_w=out_w, out_h=out_h, out_bytes=None, mean_gray_out=np.nan, resize_ok=False
+    )
+    return map_payloads(images, ["image_id", "fmt"], "bytes", resize, RESIZE_SCHEMA, failed)
 
 
 FRAME_SAMPLE_SCHEMA = (
@@ -190,41 +203,30 @@ def sample_frames(videos: DataFrame, stride: int, max_frames: int = 8) -> DataFr
     spark_pit.codecs): for each container pick frames 0, stride, 2·stride…
     (≤ max_frames) and decode ONLY those — the container's offset table
     gives O(frame) seeks, the analogue of keyframe-seek sampling in a real
-    video pipeline. Iterator mapInPandas over (video_id, bytes); one input
-    row fans out to its sampled-frame rows; container bytes never leave
-    the batch."""
+    video pipeline. One input row fans out to its sampled-frame rows; a
+    frame that fails to decode keeps its row (at its index, ``frame_ok``
+    false), and a container that cannot be read gives one row at
+    ``frame_idx`` −1."""
     from spark_pit.codecs import container_frame_count, decode_container_frame
 
-    cols = videos.select("video_id", "bytes")
+    def frame(data: bytes, k: int) -> dict:
+        try:
+            img = decode_container_frame(data, k)
+        except Exception:
+            return dict(frame_idx=k, w=0, h=0, mean_gray=np.nan, frame_ok=False)
+        return dict(
+            frame_idx=k, w=img.shape[1], h=img.shape[0],
+            mean_gray=round(float(img.astype(np.float64).mean()), 6), frame_ok=True,
+        )
 
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            vid, idx, ws, hs, mg, ok = [], [], [], [], [], []
-            for v, data in zip(batch["video_id"], batch["bytes"]):
-                try:
-                    data = bytes(data)
-                    n = container_frame_count(data)
-                    picks = list(range(0, n, stride))[:max_frames]
-                except Exception:
-                    vid.append(v); idx.append(-1); ws.append(0); hs.append(0)
-                    mg.append(np.nan); ok.append(False)
-                    continue
-                for k in picks:
-                    try:
-                        img = decode_container_frame(data, k)
-                        vid.append(v); idx.append(k)
-                        hs.append(img.shape[0]); ws.append(img.shape[1])
-                        mg.append(round(float(img.astype(np.float64).mean()), 6))
-                        ok.append(True)
-                    except Exception:
-                        vid.append(v); idx.append(k); ws.append(0); hs.append(0)
-                        mg.append(np.nan); ok.append(False)
-            yield pd.DataFrame({
-                "video_id": vid, "frame_idx": idx, "w": ws, "h": hs,
-                "mean_gray": mg, "frame_ok": ok,
-            })
+    def frames(data: bytes, **_) -> list[dict]:
+        picks = range(0, container_frame_count(data), stride)[:max_frames]
+        return [frame(data, k) for k in picks]
 
-    return cols.mapInPandas(kern, schema=FRAME_SAMPLE_SCHEMA)
+    failed = [dict(frame_idx=-1, w=0, h=0, mean_gray=np.nan, frame_ok=False)]
+    return map_payloads(
+        videos, ["video_id"], "bytes", frames, FRAME_SAMPLE_SCHEMA, failed, fan_out=True
+    )
 
 
 AUDIO_FEATURES_SCHEMA = (
@@ -237,33 +239,24 @@ def audio_features(audio: DataFrame) -> DataFrame:
     """Audio feature extraction over raw PCM16-LE payloads (the audio leg
     of the multimodal contract): per-clip sample count, RMS, zero-crossing
     rate, and integer peak. Pure NumPy over the byte buffer — a stand-in
-    for a real acoustic featurizer with identical plumbing (iterator
-    mapInPandas, bytes consumed in-batch)."""
-    cols = audio.select("clip_id", "bytes")
+    for a real acoustic featurizer behind the same :func:`map_payloads`
+    stage."""
 
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ns, rms, zcr, pk, ok = [], [], [], [], []
-            for data in batch["bytes"]:
-                try:
-                    x = np.frombuffer(bytes(data), dtype="<i2").astype(np.float64)
-                    if len(x) == 0:
-                        raise ValueError("empty clip")
-                    ns.append(len(x))
-                    rms.append(round(float(np.sqrt(np.mean(x * x))), 6))
-                    sgn = np.signbit(x)
-                    zcr.append(round(float(np.mean(sgn[1:] != sgn[:-1])), 6))
-                    pk.append(int(np.abs(x).max()))
-                    ok.append(True)
-                except Exception:
-                    ns.append(0); rms.append(np.nan); zcr.append(np.nan)
-                    pk.append(0); ok.append(False)
-            yield pd.DataFrame({
-                "clip_id": batch["clip_id"], "n_samples": ns, "rms": rms,
-                "zcr": zcr, "peak": pk, "audio_ok": ok,
-            })
+    def features(data: bytes, **_) -> dict:
+        x = np.frombuffer(data, dtype="<i2").astype(np.float64)
+        if len(x) == 0:
+            raise ValueError("empty clip")
+        sgn = np.signbit(x)
+        return dict(
+            n_samples=len(x),
+            rms=round(float(np.sqrt(np.mean(x * x))), 6),
+            zcr=round(float(np.mean(sgn[1:] != sgn[:-1])), 6),
+            peak=int(np.abs(x).max()),
+            audio_ok=True,
+        )
 
-    return cols.mapInPandas(kern, schema=AUDIO_FEATURES_SCHEMA)
+    failed = dict(n_samples=0, rms=np.nan, zcr=np.nan, peak=0, audio_ok=False)
+    return map_payloads(audio, ["clip_id"], "bytes", features, AUDIO_FEATURES_SCHEMA, failed)
 
 
 def phash_neardup_pairs(
@@ -459,48 +452,27 @@ def patch_grid(images: DataFrame, patch: int = 8) -> DataFrame:
     emitted long-format — the tokenization step of a vision-transformer
     training pipeline, with the embedding projection left to the model.
 
-    Same plumbing contract as decode_stats: iterator mapInPandas, the
-    ``bytes`` column is consumed executor-side inside the Arrow batch and
-    never enters a shuffle; the per-image reshape
-    (H,W) -> (H//p, p, W//p, p) computes every tile's stats in one
-    vectorized numpy pass (no per-tile Python). Output fans out ~(w*h/p^2)
-    rows per image of 4 scalars each — the downstream shuffle carries
-    stats, not pixels.
+    A fan-out :func:`map_payloads` stage: an image yields one row per
+    tile, and one that fails to decode or is smaller than a tile yields
+    none. The per-image reshape (H,W) -> (H//p, p, W//p, p) computes
+    every tile's stats in one vectorized numpy pass. Output fans out
+    ~(w*h/p^2) rows per image of 4 scalars each — the downstream shuffle
+    carries stats, not pixels.
     """
-    cols = images.select("image_id", "fmt", "bytes")
     p = int(patch)
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids, pys, pxs, means, stds = [], [], [], [], []
-            for image_id, fmt, data in zip(
-                batch["image_id"], batch["fmt"], batch["bytes"]
-            ):
-                try:
-                    img = decode_image(bytes(data), fmt).astype(np.float64)
-                except Exception:
-                    continue
-                gray = img.mean(axis=2)
-                ph, pw = gray.shape[0] // p, gray.shape[1] // p
-                if ph == 0 or pw == 0:
-                    continue
-                tiles = gray[: ph * p, : pw * p].reshape(ph, p, pw, p)
-                m = tiles.mean(axis=(1, 3))
-                s = tiles.std(axis=(1, 3))
-                yy, xx = np.meshgrid(np.arange(ph), np.arange(pw), indexing="ij")
-                ids.append(np.repeat(image_id, ph * pw))
-                pys.append(yy.ravel()); pxs.append(xx.ravel())
-                means.append(np.round(m.ravel(), 6))
-                stds.append(np.round(s.ravel(), 6))
-            if ids:
-                yield pd.DataFrame(
-                    {
-                        "image_id": np.concatenate(ids),
-                        "py": np.concatenate(pys).astype(np.int32),
-                        "px": np.concatenate(pxs).astype(np.int32),
-                        "patch_mean": np.concatenate(means),
-                        "patch_std": np.concatenate(stds),
-                    }
-                )
+    def tiles(data: bytes, fmt: str, **_) -> list[dict]:
+        gray = decode_image(data, fmt).astype(np.float64).mean(axis=2)
+        ph, pw = gray.shape[0] // p, gray.shape[1] // p
+        t = gray[: ph * p, : pw * p].reshape(ph, p, pw, p)
+        m = np.round(t.mean(axis=(1, 3)), 6)
+        s = np.round(t.std(axis=(1, 3)), 6)
+        return [
+            dict(py=y, px=x, patch_mean=m[y, x], patch_std=s[y, x])
+            for y in range(ph) for x in range(pw)
+        ]
 
-    return cols.mapInPandas(extract, schema=PATCH_GRID_SCHEMA)
+    return map_payloads(
+        images, ["image_id"], "bytes", tiles, PATCH_GRID_SCHEMA, [],
+        fan_out=True, reads=("fmt",),
+    )

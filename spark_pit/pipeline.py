@@ -30,63 +30,44 @@ FMT_VOCAB = ["gif", "jpeg", "png", "webp"]
 def image_channels(images: DataFrame, with_pixel_stats: bool = False) -> DataFrame:
     """Derive numeric/token channels; `bytes` is pruned here, pre-shuffle.
 
-    ``with_pixel_stats=True`` additionally decodes the payload executor-side
-    (iterator mapInPandas, Arrow-batched) and emits mean luminance + gray
-    std — the decode happens BEFORE any exchange, so the binary column
-    never rides a shuffle either way."""
+    The channels are JVM expressions, computed once on both branches.
+    ``with_pixel_stats=True`` passes them, with the payload, through the
+    executor-side decode stage (``images.map_payloads``), which appends
+    mean luminance + gray std — the decode happens BEFORE any exchange, so
+    the binary column never rides a shuffle either way."""
+    channels = [
+        "image_id",
+        "event_ts",
+        F.bit_count("phash").cast("double").alias("phash_pop"),
+        F.length("caption").cast("double").alias("caption_len"),
+        (F.col("w") / F.col("h")).alias("aspect"),
+        "fmt",
+    ]
+    plain = images.select(*channels)
     if not with_pixel_stats:
-        return images.select(
-            "image_id",
-            "event_ts",
-            F.bit_count("phash").cast("double").alias("phash_pop"),
-            F.length("caption").cast("double").alias("caption_len"),
-            (F.col("w") / F.col("h")).alias("aspect"),
-            "fmt",
-        )
-
-    from collections.abc import Iterator
+        return plain
 
     import numpy as np
-    import pandas as pd
+
+    from spark_pit.codecs import decode_image
+    from spark_pit.operators.images import map_payloads
+
+    def pixel_stats(data: bytes, fmt: str, **_) -> dict:
+        img = decode_image(data, fmt).astype(np.float64)
+        return dict(
+            mean_lum=np.round(float(img.mean()), 6),
+            std_gray=np.round(float(img.mean(axis=2).std()), 6),
+        )
 
     schema = (
         "image_id string, event_ts timestamp_ntz, phash_pop double, "
         "caption_len double, aspect double, fmt string, "
         "mean_lum double, std_gray double"
     )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from spark_pit.codecs import decode_image
-
-        for b in batches:
-            lum, sg = [], []
-            for data, fmt in zip(b["bytes"], b["fmt"]):
-                try:
-                    img = decode_image(bytes(data), fmt).astype(np.float64)
-                    lum.append(float(img.mean()))
-                    sg.append(float(img.mean(axis=2).std()))
-                except Exception:
-                    lum.append(np.nan)
-                    sg.append(np.nan)
-            yield pd.DataFrame(
-                {
-                    "image_id": b["image_id"],
-                    "event_ts": b["event_ts"],
-                    "phash_pop": np.array(
-                        [bin(int(p) & ((1 << 64) - 1)).count("1") for p in b["phash"]],
-                        dtype=np.float64,
-                    ),
-                    "caption_len": b["caption"].str.len().astype(float),
-                    "aspect": b["w"].astype(float) / b["h"].astype(float),
-                    "fmt": b["fmt"],
-                    "mean_lum": np.round(lum, 6),
-                    "std_gray": np.round(sg, 6),
-                }
-            )
-
-    return images.select(
-        "image_id", "event_ts", "bytes", "w", "h", "fmt", "caption", "phash"
-    ).mapInPandas(extract, schema=schema)
+    return map_payloads(
+        images.select(*channels, "bytes"), plain.columns, "bytes", pixel_stats,
+        schema, dict(mean_lum=np.nan, std_gray=np.nan),
+    )
 
 
 def image_pit_features(

@@ -54,3 +54,37 @@ def test_image_pipeline_with_pixel_stats(spark):
     a = out.sort_values(["image_id", "event_ts", "phash_pop"]).reset_index(drop=True)
     b = cheap.sort_values(["image_id", "event_ts", "phash_pop"]).reset_index(drop=True)
     np.testing.assert_allclose(a["phash_pop"], b["phash_pop"])
+
+    # the channels come from one definition: on rows keyed one image each,
+    # with a null phash and a null caption planted, the pixel-stats branch
+    # gives the default branch's phash_pop, caption_len and aspect, nulls
+    # included, and its pixel stats agree with decode_stats on the rows
+    from pyspark.sql import functions as F
+
+    from spark_pit.operators.images import decode_stats
+    from spark_pit.pipeline import image_channels
+
+    pdf = images.toPandas()
+    pdf["image_id"] = [f"{i}#{k}" for k, i in enumerate(pdf["image_id"])]
+    null_phash, null_caption = pdf["image_id"].iloc[0], pdf["image_id"].iloc[1]
+    keyed = spark.createDataFrame(pdf, schema=images.schema).select(
+        *(c for c in images.columns if c not in ("phash", "caption")),
+        F.when(F.col("image_id") == null_phash, None)
+        .otherwise(F.col("phash")).alias("phash"),
+        F.when(F.col("image_id") == null_caption, None)
+        .otherwise(F.col("caption")).alias("caption"),
+    )
+    px = image_channels(keyed, with_pixel_stats=True).toPandas().set_index("image_id")
+    base = image_channels(keyed).toPandas().set_index("image_id").loc[px.index]
+    assert len(px) == len(pdf)
+    assert np.isnan(px.loc[null_phash, "phash_pop"])
+    assert np.isnan(px.loc[null_caption, "caption_len"])
+    for c in ("phash_pop", "caption_len", "aspect"):
+        np.testing.assert_array_equal(px[c].to_numpy(), base[c].to_numpy(), err_msg=c)
+    stats = decode_stats(keyed).toPandas().set_index("image_id").loc[px.index]
+    np.testing.assert_array_equal(px["std_gray"].to_numpy(), stats["std_gray"].to_numpy())
+    np.testing.assert_allclose(
+        px["mean_lum"].to_numpy(),
+        stats[["mean_r", "mean_g", "mean_b"]].mean(axis=1).to_numpy(),
+        rtol=0, atol=1e-6,
+    )

@@ -189,3 +189,142 @@ def test_phash_clusters_transitive_chain(spark):
     assert out.loc["c", "canonical_id"] == "a"
     assert out.loc["z", "canonical_id"] == "z"
     assert out.loc["b", "cluster_size"] == 3 and out.loc["z", "cluster_size"] == 1
+
+
+# ----------------------------------------------------------- failure rows
+# One planted undecodable payload and one empty payload per mapper (plus a
+# decodable constant image, so a failure row cannot slide onto its
+# neighbour). Each case pins the mapper's whole output: Spark dtypes, row
+# count, values, and null (Spark NULL) apart from NaN.
+_GOOD = np.full((4, 4, 3), 77, np.uint8)
+_BAD, _EMPTY = b"garbage", b""
+
+
+def _frames_with_corrupt_middle() -> bytes:
+    from spark_pit.codecs import encode_container
+
+    frames = [np.full((3, 3, 3), v, np.uint8) for v in (10, 20, 30)]
+    data = bytearray(encode_container(frames))
+    n = len(frames)
+    offs = np.frombuffer(bytes(data[12 : 12 + 4 * (n + 1)]), dtype=">u4")
+    start = 12 + 4 * (n + 1) + int(offs[1])
+    data[start : start + 8] = b"XXXXXXXX"  # frame 1 loses its PNG signature
+    return bytes(data)
+
+
+def _images_df(spark, payloads):
+    rows = [(i, "png", 4, 4, bytearray(p)) for i, p in payloads]
+    return spark.createDataFrame(
+        rows, "image_id string, fmt string, w int, h int, bytes binary"
+    )
+
+
+def _failure_case(spark, name):
+    """(output DataFrame, expected dtypes, expected rows sorted)."""
+    from datetime import datetime
+
+    from spark_pit.codecs import encode_png
+    from spark_pit.operators import images as im
+
+    good = encode_image(_GOOD, "png")
+    trio = [("bad", _BAD), ("empty", _EMPTY), ("good", good)]
+    if name == "decode_stats":
+        out = im.decode_stats(_images_df(spark, trio))
+        dtypes = [("image_id", "string"), ("fmt", "string"), ("w", "int"),
+                  ("h", "int"), ("mean_r", "double"), ("mean_g", "double"),
+                  ("mean_b", "double"), ("std_gray", "double"),
+                  ("decode_ok", "boolean")]
+        rows = [("bad", "png", 4, 4, None, None, None, None, False),
+                ("empty", "png", 4, 4, None, None, None, None, False),
+                ("good", "png", 4, 4, 77.0, 77.0, 77.0, 0.0, True)]
+    elif name == "fidelity_check":
+        out = im.fidelity_check(_images_df(spark, trio))
+        dtypes = [("image_id", "string"), ("fmt", "string"),
+                  ("decode_ok", "boolean"), ("reencode_exact", "boolean")]
+        rows = [("bad", "png", False, False), ("empty", "png", False, False),
+                ("good", "png", True, True)]
+    elif name == "resize_images":
+        out = im.resize_images(_images_df(spark, trio), 2, 2)
+        dtypes = [("image_id", "string"), ("fmt", "string"), ("out_w", "int"),
+                  ("out_h", "int"), ("out_bytes", "binary"),
+                  ("mean_gray_out", "double"), ("resize_ok", "boolean")]
+        small = encode_png(np.full((2, 2, 3), 77, np.uint8))
+        rows = [("bad", "png", 2, 2, None, None, False),
+                ("empty", "png", 2, 2, None, None, False),
+                ("good", "png", 2, 2, small, 77.0, True)]
+    elif name == "sample_frames":
+        from spark_pit.codecs import encode_container
+
+        vids = [("broken", b"xx"), ("empty", _EMPTY),
+                ("one_bad_frame", _frames_with_corrupt_middle()),
+                ("ok", encode_container([np.full((2, 5, 3), 40, np.uint8)]))]
+        df = spark.createDataFrame(
+            [(v, bytearray(p)) for v, p in vids], "video_id string, bytes binary"
+        )
+        out = im.sample_frames(df, stride=1)
+        dtypes = [("video_id", "string"), ("frame_idx", "int"), ("w", "int"),
+                  ("h", "int"), ("mean_gray", "double"), ("frame_ok", "boolean")]
+        rows = [("broken", -1, 0, 0, None, False),
+                ("empty", -1, 0, 0, None, False),
+                ("ok", 0, 5, 2, 40.0, True),
+                ("one_bad_frame", 0, 3, 3, 10.0, True),
+                ("one_bad_frame", 1, 0, 0, None, False),
+                ("one_bad_frame", 2, 3, 3, 30.0, True)]
+    elif name == "audio_features":
+        pcm = np.array([3, -4], "<i2").tobytes()
+        clips = [("bad", b"\x01\x02\x03"), ("empty", _EMPTY), ("good", pcm)]
+        df = spark.createDataFrame(
+            [(c, bytearray(p)) for c, p in clips], "clip_id string, bytes binary"
+        )
+        out = im.audio_features(df)
+        dtypes = [("clip_id", "string"), ("n_samples", "bigint"), ("rms", "double"),
+                  ("zcr", "double"), ("peak", "int"), ("audio_ok", "boolean")]
+        rows = [("bad", 0, None, None, 0, False),
+                ("empty", 0, None, None, 0, False),
+                ("good", 2, round(float(np.sqrt(12.5)), 6), 1.0, 4, True)]
+    elif name == "patch_grid":
+        tiny = encode_image(np.full((4, 4, 3), 9, np.uint8), "png")
+        one = encode_image(np.full((8, 8, 3), 77, np.uint8), "png")
+        out = im.patch_grid(_images_df(spark, trio[:2] + [("tiny", tiny), ("one", one)]))
+        dtypes = [("image_id", "string"), ("py", "int"), ("px", "int"),
+                  ("patch_mean", "double"), ("patch_std", "double")]
+        rows = [("one", 0, 0, 77.0, 0.0)]
+    else:
+        from spark_pit.pipeline import image_channels
+
+        ts = datetime(2024, 1, 2, 3, 4, 5)
+        df = spark.createDataFrame(
+            [(i, ts, bytearray(p), w, h, "png", cap, ph)
+             for i, p, w, h, cap, ph in [("bad", _BAD, 3, 2, "xyz", -1),
+                                         ("empty", _EMPTY, 1, 4, "", 0),
+                                         ("good", good, 4, 4, "ab", 7)]],
+            "image_id string, event_ts timestamp_ntz, bytes binary, w int, h int, "
+            "fmt string, caption string, phash long",
+        )
+        out = image_channels(df, with_pixel_stats=True)
+        dtypes = [("image_id", "string"), ("event_ts", "timestamp_ntz"),
+                  ("phash_pop", "double"), ("caption_len", "double"),
+                  ("aspect", "double"), ("fmt", "string"),
+                  ("mean_lum", "double"), ("std_gray", "double")]
+        rows = [("bad", ts, 64.0, 3.0, 1.5, "png", None, None),
+                ("empty", ts, 0.0, 0.0, 0.25, "png", None, None),
+                ("good", ts, 3.0, 2.0, 1.0, "png", 77.0, 0.0)]
+    return out, dtypes, rows
+
+
+def _cell(v):
+    """NaN as a comparable marker (NaN != NaN); binary as bytes."""
+    if isinstance(v, float) and np.isnan(v):
+        return "NaN"
+    return bytes(v) if isinstance(v, (bytes, bytearray)) else v
+
+
+@pytest.mark.parametrize("name", [
+    "decode_stats", "fidelity_check", "resize_images", "sample_frames",
+    "audio_features", "patch_grid", "image_channels_pixel_stats",
+])
+def test_mapper_failure_rows(spark, name):
+    out, dtypes, rows = _failure_case(spark, name)
+    assert out.dtypes == dtypes
+    got = sorted(tuple(_cell(v) for v in r) for r in out.collect())
+    assert got == rows

@@ -323,16 +323,44 @@ def test_streaming_asof_entity_with_no_snapshots(spark, tmp_path):
     assert got.loc[4, "asof_snapshot_id"] == 99
 
 
-def test_streaming_decayed_features_matches_batch(spark, sf_dir):
+def _split_stream(spark, sf_dir, tmp_path, entity, n_files=3, bucket_s=3600):
+    """The sf ``events`` table as ``n_files`` time-ordered parquet files
+    streamed one per micro-batch. Each cut falls just before an event
+    whose predecessor of the same ``entity`` shares its ``bucket_s``
+    bucket (and not its ts), nearest an even split, so the state carried
+    across the cut holds a partly filled bucket; ts ties never straddle a
+    cut."""
+    ev = pd.read_parquet(f"{sf_dir}/events.parquet")
+    t = ev["ts"].to_numpy().astype("datetime64[us]").astype("int64")
+    by = ev.assign(__t=t, __b=t // (bucket_s * 1_000_000)).sort_values([entity, "__t"])
+    prev = by.shift()
+    inside = (by[entity] == prev[entity]) & (by["__b"] == prev["__b"]) & (by["__t"] > prev["__t"])
+    starts = np.sort(by.loc[inside, "__t"].to_numpy())
+    cuts = [starts[np.searchsorted(starts, np.quantile(t, q / n_files))]
+            for q in range(1, n_files)]
+    edges = [t.min(), *cuts, t.max() + 1]
+    parts = [ev[(t >= lo) & (t < hi)] for lo, hi in zip(edges, edges[1:])]
+    assert len(set(cuts)) == n_files - 1 and all(len(p) for p in parts)
+    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    _write_files(spark, tmp_path, parts, schema)
+    return (
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+        .parquet(str(tmp_path / "b*"))
+    )
+
+
+def test_streaming_decayed_features_matches_batch(spark, sf_dir, tmp_path):
     """The stateful streaming decay operator must reproduce the batch
     decayed_features doubles BIT-exactly (power-of-two weights make both
     sides exact, so == not approx), including across micro-batch splits
-    that land inside a half-life bucket."""
+    that land inside a half-life bucket (three files, one per batch)."""
     from spark_pit.operators.windows import decayed_features
     from spark_pit.streaming import streaming_decayed_features
 
-    src = _stream_events(spark, sf_dir).select(
-        "user_id", "ts", "event_id",
+    src = _split_stream(spark, sf_dir, tmp_path, "user_id").where(
+        F.col("event_id").isNotNull()
+    ).select(
+        "user_id", F.col("ts").cast("timestamp_ltz").alias("ts"), "event_id",
         F.pmod(F.floor(F.col("value") * 8).cast("long"), F.lit(1024)).alias("vq"),
     )
     out = streaming_decayed_features(src, "user_id", "ts", "vq")
@@ -360,9 +388,10 @@ def test_streaming_decayed_features_matches_batch(spark, sf_dir):
     assert (got["decayed_count"] > 0).any()
 
 
-def test_streaming_target_encode_matches_batch(spark, sf_dir):
+def test_streaming_target_encode_matches_batch(spark, sf_dir, tmp_path):
     """The stateful streaming target encoder's (count, exact micro-unit
-    sum) state must reproduce the batch target_encode_pit per event:
+    sum) state, carried across three time-ordered micro-batches, must
+    reproduce the batch target_encode_pit per event:
     te_count == batch te_count and the scale-6 decimal sum string ==
     Spark's decimal(38,6)->string of the batch running sum. Targets are
     eighth-quantized so both sides sum exact integers — == not approx."""
@@ -371,7 +400,7 @@ def test_streaming_target_encode_matches_batch(spark, sf_dir):
 
     vq = (F.floor(F.col("value") * 8).cast("double") / F.lit(8.0)).alias("vq")
     src = (
-        _stream_table(spark, sf_dir, "events")
+        _split_stream(spark, sf_dir, tmp_path, "event_type")
         .where(F.col("event_id").isNotNull() & F.col("value").isNotNull())
         .select(
             "event_type", F.col("ts").cast("timestamp_ltz").alias("ts"),
